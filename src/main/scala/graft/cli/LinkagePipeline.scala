@@ -1,5 +1,6 @@
 package graft.cli
 
+import scala.collection.immutable.SeqMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Derivations
@@ -26,6 +27,19 @@ import graft.sources.Readers
   * only shuffles are the dedup groupBy, the linkage joins' key
   * exchanges, and the report aggregations — all keyed on the stay id,
   * so at cluster scale the stages between them stay co-partitioned.
+  *
+  * The stages stay lazy. The composed E1 runner [[runLinkage]]
+  * materializes the three frames that several outputs read (`philips`,
+  * `icustays`, `cohort`) once per call with an eager local checkpoint,
+  * so the nine E1+E2 outputs share one run of the E1 lineage instead
+  * of re-running it per write. It is not `cache()`: the cache manager
+  * matches plans by file root path, so a later call over the same
+  * directory would be served the earlier call's data after the files
+  * changed, and nothing would unpersist the blocks. A local checkpoint
+  * is a fresh RDD per call, freed by the context cleaner once its
+  * frames are dropped. On a cluster its blocks live on the executors
+  * without replication: losing an executor fails the job instead of
+  * recomputing the lost partitions.
   */
 object LinkagePipeline {
 
@@ -139,15 +153,24 @@ object LinkagePipeline {
         when(col("Sex") === "F", "Female").otherwise("Male"))
   }
 
-  /** E1 composed: returns the linked cohort plus report tables. */
-  def runLinkage(spark: SparkSession, dir: String): Map[String, DataFrame] = {
+  /** E1 composed: returns the linked cohort plus report tables, in
+    * output order.
+    *
+    * `philips`, `icustays` and `cohort` are each read by more than one
+    * output, so each is materialized here by an eager
+    * `localCheckpoint()` and the later frames build on the
+    * materialized ones: the E1 lineage runs once per call, before any
+    * write, and each call reads the files afresh. The object doc says
+    * why this is not `cache()` and gives the cluster caveat. */
+  def runLinkage(spark: SparkSession, dir: String): SeqMap[String, DataFrame] = {
     val icnarc = cleanIcnarcIds(spark, s"$dir/icnarc_ids.csv", s"$dir/issue_list.ww.csv")
     val philips = dedupEncounters(cleanPhilipsEncounters(
       spark, s"$dir/encounter_summary.tsv", s"$dir/issue_list.encounterId.csv"))
-    val icustays = joinIcnarcToPhilips(icnarc, philips)
+      .localCheckpoint()
+    val icustays = joinIcnarcToPhilips(icnarc, philips).localCheckpoint()
     val cmp = parseCmp(spark, s"$dir/icnarc_cmp.xml", s"$dir/cmp_dictionary.csv")
-    val cohort = deriveClinical(icustays, cmp)
-    Map(
+    val cohort = deriveClinical(icustays, cmp).localCheckpoint()
+    SeqMap(
       "philips" -> philips,
       "icustays" -> icustays,
       "cohort" -> cohort,
@@ -180,8 +203,10 @@ object LinkagePipeline {
   }
 
   /** E2 composed: labeled chartevents plus the analysis report tables
-    * (A6 completeness, A7 per-stay stats, A8 frequency moments). */
-  def runChartevents(spark: SparkSession, dir: String, cohort: DataFrame): Map[String, DataFrame] = {
+    * (A6 completeness, A7 per-stay stats, A8 frequency moments), in
+    * output order. */
+  def runChartevents(spark: SparkSession, dir: String,
+                     cohort: DataFrame): SeqMap[String, DataFrame] = {
     val events = buildChartevents(spark, dir, cohort)
     val perStay = events.filter(col("Variable").isNotNull)
       .groupBy(col("encounterId"), col("Variable"))
@@ -195,7 +220,7 @@ object LinkagePipeline {
     val freqMoments = freq.groupBy(col("Variable"))
       .agg(round(avg(col("obs_per_day")), 4).as("freq_mean"),
         round(stddev_samp(col("obs_per_day")), 4).as("freq_std"))
-    Map(
+    SeqMap(
       "chartevents" -> events,
       "completeness" -> Reports.completeness(
         events.filter(col("Variable").isNotNull), "Variable", "encounterId")

@@ -10,9 +10,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *  - S1 `csv`: comma CSV, header + schema inference;
   *  - S2 `tsvWithFooter`: tab-separated SQL-Server `.rpt`-style export
   *    whose trailing "(N rows affected)" footer the reference deletes
-  *    by hand (`/root/reference/clean_encounterids.py:17-19`) — here
-  *    DROPMALFORMED absorbs it: footer lines have the wrong token
-  *    count and are dropped at parse time, no manual editing;
+  *    by hand (`clean_encounterids.py:17-19`) — here DROPMALFORMED
+  *    drops it, but only when the query reads every column: footer
+  *    lines then have the wrong token count and are dropped at parse
+  *    time. Under CSV column pruning the parser sees only the required
+  *    columns, so each footer line is padded with nulls instead of
+  *    dropped, and its text reaches the callers' casts through the
+  *    file's first column (an `int` cast of it fails with
+  *    CAST_INVALID_INPUT) — a known open defect;
   *  - S3 `dimensionCsv` / `dimensionXlsx`: small lookup workbooks,
   *    either pre-converted to CSV or read directly from `.xlsx` (JDK
   *    zip + StAX, no library dependency — see [[Xlsx]]), always
@@ -31,9 +36,12 @@ object Readers {
 
   /** S2: tab-separated export with possible non-tabular footer garbage.
     * Read with an all-string schema derived from the header line (a
-    * driver-side metadata peek, not a data scan) + DROPMALFORMED so
-    * short footer rows vanish; then cast the declared timestamp
-    * columns with a pinned format (SURVEY §7.4#3 — never inference). */
+    * driver-side metadata peek, not a data scan) + DROPMALFORMED; then
+    * cast the declared timestamp columns with a pinned format (SURVEY
+    * §7.4#3 — never inference). The short footer rows vanish only
+    * when every column is read: a query that prunes columns gets each
+    * footer line as an extra row, with the footer text in the file's
+    * first column and nulls elsewhere (see the S2 note on [[Readers]]). */
   def tsvWithFooter(spark: SparkSession, path: String, dateCols: Seq[String],
                     fmt: String = "yyyy-MM-dd HH:mm:ss"): DataFrame = {
     val header = spark.read.text(path).first().getString(0)

@@ -39,7 +39,7 @@ object Metrics {
     * report); reused exchanges/subqueries are NOT expanded (their
     * metrics belong to the original node, which the walk reaches
     * anyway). */
-  private def expand(p: SparkPlan): Seq[SparkPlan] = p match {
+  def expand(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => a +: expand(a.executedPlan)
     case s: QueryStageExec => s +: expand(s.plan)
     case r: ReusedExchangeExec => Seq(r)

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.cli.LinkagePipeline
 import graft.operators.Validation
+import graft.tools.Metrics
 
 /** Golden end-to-end test of the E1/E2 reference-parity pipelines over
   * the checked-in domain fixtures (FIXTURES.md §A): every stage's
@@ -94,6 +99,46 @@ class LinkagePipelineSpec extends SparkSpec {
       val hr1001 = e2("per_stay_stats")
         .filter($"encounterId" === 1001 && $"Variable" === "Heart Rate").head()
       hr1001.getAs[Long]("n_obs") shouldBe 2L
+    }
+  }
+
+  /** File scans over `fileName` in `df`'s physical plan, looking
+    * through AQE wrappers and query stages. */
+  private def scansOf(df: DataFrame, fileName: String): Int =
+    Metrics.expand(df.asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan).count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == fileName)
+      case _ => false
+    }
+
+  describe("the composed runners") {
+    it("list their outputs in write order") {
+      e1.keys.toSeq shouldBe Seq("philips", "icustays", "cohort", "mortality_rates",
+        "admission_types")
+      e2.keys.toSeq shouldBe Seq("chartevents", "completeness", "per_stay_stats",
+        "freq_moments")
+    }
+
+    it("run the E1 lineage once: later outputs read no E1 source file") {
+      val outputs = Seq("cohort" -> cohort, "mortality_rates" -> e1("mortality_rates"),
+        "admission_types" -> e1("admission_types"), "chartevents" -> e2("chartevents"))
+      for ((name, df) <- outputs; file <- Seq("icnarc_cmp.xml", "encounter_summary.tsv"))
+        withClue(s"$name scans $file: ") { scansOf(df, file) shouldBe 0 }
+      // the walk does see file scans: E2 still reads its own extracts
+      scansOf(e2("chartevents"), "chartevents.ptassess.tsv") shouldBe 1
+    }
+
+    it("read the files afresh on every call") {
+      val copy = Files.createTempDirectory("graft-linkage")
+      try {
+        new java.io.File(dir).listFiles().foreach(f =>
+          Files.copy(f.toPath, copy.resolve(f.getName)))
+        LinkagePipeline.runLinkage(spark, copy.toString)("philips").count() shouldBe 4
+        val tsv = copy.resolve("encounter_summary.tsv")
+        Files.write(tsv, Files.readAllLines(tsv).asScala.filterNot(_.startsWith("1002\t")).asJava)
+        LinkagePipeline.runLinkage(spark, copy.toString)("philips").count() shouldBe 3
+      } finally {
+        Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      }
     }
   }
 }

@@ -6,11 +6,13 @@
 #   2. a COMPLETE per-query bench artifact at sf0.1
 #      (bench_r<N>_session.json — the driver's own BENCH_r<N>.json
 #      truncates to the stdout tail);
-#   3. optionally ("sf1"), the durable sf1.0 certification
+#   3. the paper pipeline's end-to-end numbers: one perfbench run per
+#      workload (seed 1), its metric table printed to stderr;
+#   4. optionally ("sf1"), the durable sf1.0 certification
 #      (CORRECTNESS_sf1.json, merge-on-write) + bench_r<N>_sf1.json.
 #
 # Usage: tools/round_close.sh <round-number> [sf1]
-#   tools/round_close.sh 14        # correctness sf0.01 + bench sf0.1
+#   tools/round_close.sh 14        # correctness sf0.01 + bench sf0.1 + perfbench
 #   tools/round_close.sh 14 sf1    # ... + the sf1.0 sweep and bench
 #
 # Exits nonzero on the first failing gate. Run `sbt test` separately —
@@ -22,7 +24,7 @@ ROUND="${1:?usage: round_close.sh <round-number> [sf1]}"
 WANT_SF1="${2:-}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 
-echo "== [1/2] full-catalog correctness at sf0.01 =="
+echo "== [1/3] full-catalog correctness at sf0.01 =="
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
@@ -30,7 +32,7 @@ SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
     echo "FATAL: Verify reported per-query failures"; exit 1; } || true
 python3 tools/check_oracle.py /root/testdata/sf0.01 target/verify_close
 
-echo "== [2/2] full per-query bench at sf0.1 =="
+echo "== [2/3] full per-query bench at sf0.1 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Bench" > target/bench_close.log
 grep '"metric"' target/bench_close.log > "bench_r${ROUND}_session.json"
@@ -40,6 +42,11 @@ if [ -n "$PREV" ] && [ "$PREV" != "bench_r${ROUND}_session.json" ]; then
   echo "-- bench diff vs $PREV (host noise moves totals; read per-query pairs) --"
   python3 tools/bench_diff.py "$PREV" "bench_r${ROUND}_session.json" || true
 fi
+
+echo "== [3/3] paper pipeline benchmark (perfbench, seed 1) =="
+for W in linkage_stays chartevents_dense; do
+  python3 perfbench/run.py --workload "$W" --seed 1 --seconds 20 --trace 0 > /dev/null
+done
 
 if [ "$WANT_SF1" = "sf1" ]; then
   echo "== [sf1] full-catalog certification at sf1.0 =="
