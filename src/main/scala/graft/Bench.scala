@@ -4,6 +4,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // $SPARK_GRAFT_BENCH_OUT overrides the default ./bench_out.json.
+    // An earlier run's file goes first, so a run that crashes cannot
+    // leave it behind to be read as this run's.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outPath)): Unit
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -57,11 +62,7 @@ object Bench {
       // sibling query's cache hit. The warm pass keeps whatever the
       // cold pass cached — that IS the long-lived-job semantics the
       // steady number models (same contract as plan-level persist()).
-      QueriesText.clearSessionCaches()
-      QueriesCurate.clearSessionCaches()
-      QueriesStreaming.clearSessionCaches()
-      QueriesSimilarity.clearSessionCaches()
-      QueriesPipeline.clearSessionCaches()
+      SparkEntry.clearSessionCaches()
       val cold = once()
       val coldErr = err.isDefined
       val warm = if (!coldErr) once() else cold
@@ -97,8 +98,6 @@ object Bench {
     // stays (the driver parses it), but a truncated stdout capture cost
     // the r18→r19 round-over-round comparison entirely (PERF_r19
     // n_common=0) — a durable copy makes the next diff robust.
-    // $SPARK_GRAFT_BENCH_OUT overrides the default ./bench_out.json.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (jsonLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

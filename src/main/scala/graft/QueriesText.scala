@@ -1376,20 +1376,22 @@ object QueriesText {
     val outDir = sys.props("java.io.tmpdir") +
       "/graft_tokshards_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
       "_" + java.util.UUID.randomUUID().toString.take(8)
-    graft.streaming.EventStreams.runMicroBatches(s)(encoded.writeStream
-      .option("checkpointLocation", s"${outDir}_ckpt")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          // batch-sized; feeds the eligible count AND the pack/join
-          val docs = batch.toDF().localCheckpoint()
-          val n = docs.filter($"n_toks" > 0 && $"n_toks" <= 512).count()
-          graft.streaming.EventStreams.writeBatchIdempotent(
-            packTokenShards(docs, n), batchId, outDir)
-      }
-      .start()
-    )
+    // the stream runs inside the try: a failing batch must not leak
+    // the shard store or its checkpoint into java.io.tmpdir
     try {
+      graft.streaming.EventStreams.runMicroBatches(s)(encoded.writeStream
+        .option("checkpointLocation", s"${outDir}_ckpt")
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+           batchId: Long) =>
+            // batch-sized; feeds the eligible count AND the pack/join
+            val docs = batch.toDF().localCheckpoint()
+            val n = docs.filter($"n_toks" > 0 && $"n_toks" <= 512).count()
+            graft.streaming.EventStreams.writeBatchIdempotent(
+              packTokenShards(docs, n), batchId, outDir)
+        }
+        .start()
+      )
       s.read.parquet(outDir)
         .select($"bin_key", $"n_docs", $"first_doc", $"last_doc",
           $"bin_tokens", $"digest")

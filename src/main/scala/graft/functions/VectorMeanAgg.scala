@@ -17,9 +17,13 @@ import org.apache.spark.sql.functions.udaf
   * one group count, reproduce the exploded `avg` semantics exactly on
   * ragged input: each dimension averages over the rows that HAVE it,
   * and null/empty vectors contribute nothing (a null/empty array
-  * explodes to no rows). Like every unordered float sum, low-order
-  * bits depend on partitioning — the bit-reproducible path is
-  * [[graft.operators.IvfIndex]]'s `orderedMean = true`.
+  * explodes to no rows). One difference from the exploded form: a
+  * group whose vectors are ALL null or empty still yields a row, with
+  * a null mean, where the posexplode form produced no row for it at
+  * all. No current caller feeds such a group: the ANN fits run on
+  * fixed-dim, non-empty embeddings. Like every unordered float sum,
+  * low-order bits depend on partitioning — the bit-reproducible path
+  * is [[graft.operators.IvfIndex]]'s `orderedMean = true`.
   */
 class VectorMeanAgg
     extends Aggregator[VectorMeanAgg.In, VectorMeanAgg.Buf, VectorMeanAgg.Out] {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.GraftFunctions
+import graft.sources.StoreFs.withStoreLease
 
 /** IVF (inverted-file) approximate nearest-neighbor index: partition
   * the corpus into k coarse cells by cosine-nearest centroid; a query
@@ -130,26 +131,6 @@ object IvfIndex {
       .select(col("id"), col("best.v").as("v"), col("best.cluster").as("cluster"))
   }
 
-  /** Persist a fitted index to parquet: centroids under
-    * `dir/centroids`, the assigned corpus under `dir/index`
-    * PARTITIONED BY cluster. An index you rebuild per session is not
-    * an index at 100 TB — fit and assignment are the expensive passes,
-    * and both round-trip exactly (parquet doubles are binary-exact, so
-    * search-after-reload ≡ in-memory search bit-for-bit; spec-pinned).
-    * Cluster-partitioning is the layout that makes the probe pattern
-    * cheap: a search touches nProbe cells per query, and with the
-    * corpus laid out one directory per cell the broadcast probe join
-    * prunes to those directories (dynamic partition pruning) instead
-    * of scanning the full corpus. */
-  /** Writer mutual exclusion for the flat store's mutation verbs —
-    * the [[PqIndex]]/[[NswIndex]] contract ([[graft.sources.StoreFs
-    * .withWriterLease]], re-entrant). NSW maintenance verbs that
-    * rewrite this store arrive holding THEIR store's lease and nest
-    * this one (always nsw-first; no reverse path, so no deadlock). */
-  private def withStoreLease[T](dir: String)(body: => T): T =
-    graft.sources.StoreFs.withWriterLease(
-      graft.sources.StoreFs.writerMarkerPath(dir))(body)
-
   /** Lease fence for the FLAT store's write points: this store's verbs
     * overwrite/append parquet directly — there is no [[graft.sources
     * .StoreFs.writeFileAtomic]] commit whose built-in fence would
@@ -162,6 +143,17 @@ object IvfIndex {
     * guarantee the generational stores get at their commit point. */
   private def fence(): Unit = graft.sources.StoreFs.assertLeasesStillHeld()
 
+  /** Persist a fitted index to parquet: centroids under
+    * `dir/centroids`, the assigned corpus under `dir/index`
+    * PARTITIONED BY cluster. An index you rebuild per session is not
+    * an index at 100 TB — fit and assignment are the expensive passes,
+    * and both round-trip exactly (parquet doubles are binary-exact, so
+    * search-after-reload ≡ in-memory search bit-for-bit; spec-pinned).
+    * Cluster-partitioning is the layout that makes the probe pattern
+    * cheap: a search touches nProbe cells per query, and with the
+    * corpus laid out one directory per cell the broadcast probe join
+    * prunes to those directories (dynamic partition pruning) instead
+    * of scanning the full corpus. */
   def save(centroids: DataFrame, indexed: DataFrame, dir: String): Unit =
       withStoreLease(dir) {
     fence()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StoreFs.withStoreLease
 
 /** Partitioned NSW ("HNSW-lite") — the graph tier of the ANN ladder
   * (brute → LSH → IVF → IVF+SQ8 → IVF+PQ-ADC → this): within each IVF
@@ -516,36 +517,17 @@ object NswIndex {
     * pattern), so a crashed refresh leaves readers on the previous
     * complete generation and `retainGenerations` keeps history for
     * pinned readers until [[vacuumNsw]] reclaims it. */
-  /** Writer mutual exclusion for the NSW store's mutation verbs — the
-    * [[graft.operators.PqIndex]] contract: every read-modify-write
-    * (append, delete, split, repair, tune, vacuum) brackets in the
-    * store's [[graft.sources.StoreFs.withWriterLease]]; re-entrant, so
-    * composed verbs (delete → repair → save → vacuum) take it once.
-    * The verbs that also rewrite the FLAT store do so through
-    * [[IvfIndex]]'s own leased verbs — nested on the flat dir's
-    * marker, always acquired nsw-first (no reverse path, so no
-    * deadlock). */
-  private def withStoreLease[T](nswDir: String)(body: => T): T =
-    graft.sources.StoreFs.withWriterLease(
-      graft.sources.StoreFs.writerMarkerPath(nswDir))(body)
-
   def saveNsw(graph: DataFrame, entries: DataFrame, dir: String,
               retainGenerations: Int = 1): Unit = withStoreLease(dir) {
     require(retainGenerations >= 1,
       s"retainGenerations must be >= 1, got $retainGenerations")
-    val gen = graft.sources.StoreFs.readManifest(s"$dir/manifest")
-      .getOrElse(0L) + 1L
-    // per-writer scratch isolation + fenced swap (the TextDedup store
-    // contract — see StoreFs.stageGenerationDir)
-    graft.sources.StoreFs.stageGenerationDir(
-      graft.sources.StoreFs.writerMarkerPath(dir), s"$dir/g$gen") { g =>
+    graft.sources.StoreFs.commitGenerationDir(dir) { g =>
       // one file per cell, not one per (task, cell) — see IvfIndex.save
       graph.repartition(col("cluster"))
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$g/graph")
       Failpoints.hit("nsw:after-graph")
       entries.write.mode("overwrite").parquet(s"$g/entries")
     }
-    graft.sources.StoreFs.commitManifest(s"$dir/manifest", gen)
     vacuumNsw(dir, keepLast = retainGenerations)
   }
 
@@ -562,14 +544,8 @@ object NswIndex {
     loadNswAt(spark, dir, None)
 
   /** Generations of an NSW store that are READABLE — valid
-    * time-travel targets for [[loadNswAt]] (the
-    * [[PqIndex.committedTwoTierGenerations]] contract on the graph
-    * tier): committed `g<n>` dirs at or below the manifest head; a
-    * generation dir exists iff its fenced commit renamed it in whole
-    * ([[graft.sources.StoreFs.stageGenerationDir]]), so presence
-    * implies both tables. [[vacuumNsw]] trims history —
-    * `retainGenerations` on the mutating verbs is the retention dial.
-    * Metadata-only (one directory listing). */
+    * time-travel targets for [[loadNswAt]]
+    * ([[graft.sources.StoreFs.committedGenerationDirs]]). */
   def committedNswGenerations(dir: String): Seq[Long] =
     graft.sources.StoreFs.committedGenerationDirs(dir)
 
@@ -599,18 +575,7 @@ object NswIndex {
     * only on historic reads of a store with an applicable ledger. */
   def loadNswAt(spark: SparkSession, dir: String,
                 atGeneration: Option[Long]): (DataFrame, DataFrame) = {
-    val root = atGeneration match {
-      case None =>
-        graft.sources.StoreFs.readManifest(s"$dir/manifest") match {
-          case Some(g) => s"$dir/g$g"
-          case None => dir
-        }
-      case Some(g) =>
-        val readable = committedNswGenerations(dir)
-        if (!readable.contains(g))
-          graft.sources.StoreFs.unreadableGeneration("NSW store", dir, g, readable)
-        s"$dir/g$g"
-    }
+    val root = graft.sources.StoreFs.generationRoot(dir, atGeneration, "NSW store")
     val graph0 = spark.read.parquet(s"$root/graph")
     val entries0 = spark.read.parquet(s"$root/entries")
     atGeneration match {
@@ -660,17 +625,8 @@ object NswIndex {
   /** Retention for a [[saveNsw]] store — the uniform keep-newest-N
     * policy ([[PqIndex.vacuumTwoTier]] semantics). */
   def vacuumNsw(dir: String, keepLast: Int): Unit = withStoreLease(dir) {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val current = graft.sources.StoreFs.readManifest(s"$dir/manifest")
-      .getOrElse(return)
-    val genRe = "g(\\d+)".r
-    graft.sources.StoreFs.childNames(dir)
-      .collect { case genRe(g) if g.toLong <= current => g.toLong }.sorted
-      .dropRight(keepLast)
-      .foreach(g => graft.sources.StoreFs.deleteChild(dir, s"g$g"))
-    graft.sources.StoreFs.sweepScratchDirs(dir,
-      graft.sources.StoreFs.writerMarkerPath(dir))
-    // Release the deletion ledger once NO readable generation predates
+    // After the generation retention, and only when a manifest exists:
+    // release the deletion ledger once NO readable generation predates
     // any un-revoked delete (oldest readable ≥ every effective
     // deleted_at_gen): every generation a ledger entry could scrub is
     // gone, so the ledger is inert — the [[PqIndex.compactTwoTier]]
@@ -680,7 +636,8 @@ object NswIndex {
     // their delete. Torn (never-committed) ledger/revocation appends
     // read as absent and their `_temporary`-only debris is swept here;
     // a revocation table outliving its ledger is inert debris too.
-    SparkSession.getActiveSession.foreach { spark =>
+    for (_ <- graft.sources.StoreFs.vacuumGenerationDirs(dir, keepLast);
+         spark <- SparkSession.getActiveSession) {
       def tornOnly(path: String): Boolean =
         graft.sources.StoreFs.tornParquetDebris(path)
       def release(): Unit = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.StoreFs.withStoreLease
 
 /** Product quantization (Jégou et al., PAMI 2011) — the
   * bytes-per-vector ANN tier: the embedding is split into `m`
@@ -175,31 +176,19 @@ object PqIndex {
     * parquet binary-exact, so search-after-reload ≡ in-memory search
     * bit-for-bit (q142 gates it on q141's oracle).
     *
-    * GENERATIONAL since round 10: the four tables land under
-    * `dir/g<n>/` and a one-long manifest (`dir/manifest`,
-    * tmp+rename-swapped — [[graft.sources.StoreFs]]) is the single
-    * commit point, the [[graft.operators.TextDedup
-    * .writeDedupStoreBucketed]] pattern. A crash between table writes
-    * leaves readers on the previous COMPLETE generation (the old
-    * overwrite-in-place layout corrupted the live store instead);
-    * `retainGenerations` keeps that many newest committed generations
-    * after the swap (1 = current only — superseded data is dropped,
-    * the old behavior), so a refresh can leave history for readers
-    * pinned to an older generation and [[vacuumTwoTier]] reclaims it
-    * later. */
+    * GENERATIONAL: the four tables land under `dir/g<n>/` through the
+    * shared commit protocol ([[graft.sources.StoreFs
+    * .commitGenerationDir]]), so a crash between table writes leaves
+    * readers on the previous COMPLETE generation. `retainGenerations`
+    * keeps that many newest committed generations after the swap
+    * (1 = current only), so a refresh can leave history for pinned
+    * readers until [[vacuumTwoTier]] reclaims it. */
   def saveTwoTier(centroids: DataFrame, codebooks: DataFrame,
                   codesIdx: DataFrame, fullIdx: DataFrame, dir: String,
                   retainGenerations: Int = 1): Unit = withStoreLease(dir) {
     require(retainGenerations >= 1,
       s"retainGenerations must be >= 1, got $retainGenerations")
-    val gen = graft.sources.StoreFs.readManifest(s"$dir/manifest")
-      .getOrElse(0L) + 1L
-    // per-writer scratch isolation + fenced swap (the TextDedup store
-    // contract): in-flight tables can never interleave with a
-    // usurper's generation; the manifest swap below stays the single
-    // commit point
-    graft.sources.StoreFs.stageGenerationDir(
-      graft.sources.StoreFs.writerMarkerPath(dir), s"$dir/g$gen") { g =>
+    graft.sources.StoreFs.commitGenerationDir(dir) { g =>
       centroids.write.mode("overwrite").parquet(s"$g/centroids")
       Failpoints.hit("twotier:after-centroids")
       codebooks.write.mode("overwrite").parquet(s"$g/codebooks")
@@ -210,60 +199,18 @@ object PqIndex {
       fullIdx.repartition(col("cluster"))
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$g/full")
     }
-    graft.sources.StoreFs.commitManifest(s"$dir/manifest", gen)
     vacuumTwoTier(dir, keepLast = retainGenerations)
   }
 
-  /** Retention for a generational two-tier store: drop all but the
-    * newest `keepLast` COMMITTED generations. Generations above the
-    * manifest (an in-flight writer's) are never touched; a store with
-    * no manifest (never committed, or legacy flat layout) is left
-    * alone. Safe beside readers pinned to any RETAINED generation —
-    * a reader's resolved `g<n>` paths stay valid until a vacuum with
-    * a smaller `keepLast` reclaims them. */
-  def vacuumTwoTier(dir: String, keepLast: Int): Unit = withStoreLease(dir) {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    graft.sources.StoreFs.readManifest(s"$dir/manifest").foreach { current =>
-      val genRe = "g(\\d+)".r
-      val committed = graft.sources.StoreFs.childNames(dir)
-        .collect { case genRe(g) if g.toLong <= current => g.toLong }.sorted
-      committed.dropRight(keepLast)
-        .foreach(g => graft.sources.StoreFs.deleteChild(dir, s"g$g"))
-      graft.sources.StoreFs.sweepScratchDirs(dir,
-        graft.sources.StoreFs.writerMarkerPath(dir))
-    }
-  }
-
-  /** WRITER MUTUAL EXCLUSION for every two-tier mutation verb: the
-    * generational commit is single-writer by construction (two
-    * concurrent writers would build the same `g<n+1>` dir and the last
-    * manifest rename would orphan the loser), so each verb brackets
-    * its whole read-modify-write in the store's
-    * [[graft.sources.StoreFs.withWriterLease]] — re-entrant, so
-    * composed verbs (refit → save → vacuum) take it once. */
-  private def withStoreLease[T](dir: String)(body: => T): T =
-    graft.sources.StoreFs.withWriterLease(
-      graft.sources.StoreFs.writerMarkerPath(dir))(body)
-
-  /** The current committed generation's root — or the legacy flat
-    * layout (`dir/centroids` etc.) for stores written before the
-    * generational format. */
-  private def twoTierRoot(dir: String): String =
-    graft.sources.StoreFs.readManifest(s"$dir/manifest") match {
-      case Some(g) => s"$dir/g$g"
-      case None => dir
-    }
+  /** Retention for a generational two-tier store: keep the newest
+    * `keepLast` committed generations
+    * ([[graft.sources.StoreFs.vacuumGenerationDirs]]). */
+  def vacuumTwoTier(dir: String, keepLast: Int): Unit =
+    graft.sources.StoreFs.vacuumGenerationDirs(dir, keepLast): Unit
 
   /** Generations of a two-tier store that are READABLE — valid
-    * time-travel targets for [[loadTwoTierAt]]: committed `g<n>` dirs
-    * at or below the manifest head. A generation dir exists iff its
-    * fenced commit renamed it in whole ([[graft.sources.StoreFs
-    * .stageGenerationDir]]), so presence implies all four tables;
-    * in-flight scratch (`g<n>__<token>`) never matches.
-    * [[vacuumTwoTier]] trims history — `retainGenerations` on the
-    * mutating verbs is the retention dial. Metadata-only (one
-    * directory listing). Empty for a legacy flat or never-committed
-    * store. */
+    * time-travel targets for [[loadTwoTierAt]]
+    * ([[graft.sources.StoreFs.committedGenerationDirs]]). */
   def committedTwoTierGenerations(dir: String): Seq[Long] =
     graft.sources.StoreFs.committedGenerationDirs(dir)
 
@@ -322,7 +269,7 @@ object PqIndex {
   def appendToTwoTier(spark: SparkSession, delta: DataFrame, dir: String,
                       m: Int, subDim: Int,
                       residual: Boolean = false): DataFrame = withStoreLease(dir) {
-    val root = twoTierRoot(dir)
+    val root = graft.sources.StoreFs.generationRoot(dir, None, "two-tier store")
     val cent = spark.read.parquet(s"$root/centroids")
     val cb = spark.read.parquet(s"$root/codebooks")
     val assigned = IvfIndex.assign(delta, cent).localCheckpoint()
@@ -420,15 +367,7 @@ object PqIndex {
   def loadTwoTierAt(spark: SparkSession, dir: String,
                     atGeneration: Option[Long])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val root = atGeneration match {
-      case None => twoTierRoot(dir)
-      case Some(g) =>
-        val readable = committedTwoTierGenerations(dir)
-        if (!readable.contains(g))
-          graft.sources.StoreFs.unreadableGeneration(
-            "two-tier store", dir, g, readable)
-        s"$dir/g$g"
-    }
+    val root = graft.sources.StoreFs.generationRoot(dir, atGeneration, "two-tier store")
     val drop = tombstones(spark, dir)
     def live(df: DataFrame): DataFrame = drop match {
       case Some(t) => df.join(broadcast(t), Seq("id"), "left_anti")

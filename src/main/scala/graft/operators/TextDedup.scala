@@ -607,34 +607,28 @@ object TextDedup {
     val gen = StoreFs.readManifest(s"${pathPrefix}_manifest")
       .getOrElse(0L) + 1L
     val seg = s"g$gen"
-    val tok = StoreFs.scratchTag(s"${pathPrefix}__writer")
-      .getOrElse(throw new IllegalStateException(
-        s"writeStoreTables requires the writer lease at ${pathPrefix}__writer"))
-    def scratch(sfx: String) = s"${pathPrefix}_${seg}_${sfx}__$tok"
+    val suffixes = Seq("fp", "bands", "mh")
     def finalPath(sfx: String) = s"${pathPrefix}_${seg}_$sfx"
     def table(sfx: String) = s"${namePrefix}_${seg}_$sfx"
-    def write(df: DataFrame, sfx: String, bucketCol: String): Unit = {
+    def write(df: DataFrame, sfx: String, bucketCol: String, at: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS ${table(sfx)}")
       df.write.mode("overwrite")
-        .option("path", scratch(sfx))
+        .option("path", at)
         .bucketBy(buckets, bucketCol).sortBy(bucketCol)
         .format("parquet").saveAsTable(table(sfx))
     }
-    write(fp, "fp", "fp")
-    Failpoints.hit("dedupstore:after-fp")
-    write(bands, "bands", "bh")
-    Failpoints.hit("dedupstore:after-bands")
-    write(mh, "mh", "s_id")
-    Failpoints.hit("dedupstore:before-swap")
-    // FENCED swap: a usurped lease refuses HERE, before any final
-    // location is touched — the usurper's generation stays byte-clean
-    // and this writer's output is orphaned scratch the doctor flags
-    StoreFs.assertLeasesStillHeld()
-    Seq("fp", "bands", "mh").foreach { sfx =>
+    StoreFs.stageGenerationDir(s"${pathPrefix}__writer", suffixes.map(finalPath)) {
+      case Seq(fpAt, bandsAt, mhAt) =>
+        write(fp, "fp", "fp", fpAt)
+        Failpoints.hit("dedupstore:after-fp")
+        write(bands, "bands", "bh", bandsAt)
+        Failpoints.hit("dedupstore:after-bands")
+        write(mh, "mh", "s_id", mhAt)
+        Failpoints.hit("dedupstore:before-swap")
+    }
+    // the catalog tables follow their data out of scratch
+    suffixes.foreach { sfx =>
       val (fs, fin) = StoreFs.of(finalPath(sfx))
-      fs.delete(fin, true): Unit // a crashed predecessor's uncommitted leftovers
-      require(fs.rename(new org.apache.hadoop.fs.Path(scratch(sfx)), fin),
-        s"dedup store commit: rename ${scratch(sfx)} -> $fin failed")
       spark.sql(
         s"ALTER TABLE ${table(sfx)} SET LOCATION '${fs.makeQualified(fin)}'")
     }

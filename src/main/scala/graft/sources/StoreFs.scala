@@ -19,6 +19,21 @@ import org.apache.spark.sql.SparkSession
   * store location-transparent — `file:`, `hdfs:` and `s3a:` paths all
   * behave identically.
   *
+  * THE GENERATIONAL COMMIT PROTOCOL. The manifest-committed stores —
+  * the two-tier ANN store ([[graft.operators.PqIndex]], `dir/manifest`),
+  * the NSW graph store ([[graft.operators.NswIndex]], `dir/manifest`)
+  * and the dedup signature store ([[graft.operators.TextDedup]],
+  * `<prefix>_manifest`) — all commit through one sequence: under the
+  * store's writer lease, read the head generation, build generation
+  * head+1 in lease-tagged scratch paths, run the fenced swap into the
+  * final paths ([[stageGenerationDir]]), then swap the manifest
+  * ([[commitManifest]]), the single commit point. The dir-layout
+  * stores (two-tier, NSW) call it whole as [[commitGenerationDir]] and
+  * share [[vacuumGenerationDirs]] and [[generationRoot]]; the dedup
+  * store's prefix layout shares the staging and the manifest swap and
+  * keeps its own segment-aware vacuum. The marker-committed agg store
+  * and the flat IVF store use only the lease and marker helpers.
+  *
   * The Hadoop conf comes from the active Spark session when one exists
   * (so `fs.*` overrides like S3 credentials apply) and falls back to a
   * bare [[Configuration]] for session-less callers (vacuum jobs). */
@@ -58,9 +73,10 @@ object StoreFs {
   }
 
   /** Read a generation manifest: the file at `path` holding one long
-    * (UTF-8 digits). Absent file = no committed generation. Shared by
-    * the generational stores (dedup signature store, two-tier ANN
-    * store) as their single commit point. */
+    * (UTF-8 digits). Absent file = no committed generation. The head
+    * read of the generational commit protocol (see the object doc),
+    * shared by every manifest-committed store: two-tier ANN, NSW
+    * graph and dedup signature. */
   def readManifest(path: String): Option[Long] = {
     val (fs, p) = of(path)
     def once(): Option[Long] =
@@ -450,30 +466,32 @@ object StoreFs {
     heldLeaseToken(markerPath)
       .map(_.replaceAll("[^a-zA-Z0-9]", "").takeRight(12))
 
-  /** Stage-then-swap for a DIR-PER-GENERATION store commit: `write`
-    * receives a lease-token-suffixed SCRATCH dir (`<finalDir>__<tag>`)
-    * to build the generation in; at the FENCED swap the scratch
-    * renames into `finalDir` (one atomic dir rename — a crashed
-    * predecessor's uncommitted finalDir is deleted first). A stalled
-    * writer whose lease was TTL-broken and usurped therefore never
-    * interleaves files with the usurper's generation: its writes stay
-    * inside its own scratch dir and [[assertLeasesStillHeld]] refuses
-    * before the rename, leaving the debris for the store's vacuum
-    * sweep (and [[graft.tools.StoreDoctor]] to flag). Callers commit
-    * the manifest AFTER this returns — the manifest swap stays the
-    * single commit point. */
-  def stageGenerationDir(markerPath: String, finalDir: String)
-                        (write: String => Unit): Unit = {
+  /** Stage-then-swap for a generation commit: `write` receives one
+    * lease-token-suffixed SCRATCH path (`<final>__<tag>`) per entry of
+    * `finalPaths` to build the generation in; at the FENCED swap each
+    * scratch renames into its final path (one atomic rename each — a
+    * crashed predecessor's uncommitted final path is deleted first).
+    * A stalled writer whose lease was TTL-broken and usurped therefore
+    * never interleaves files with the usurper's generation: its writes
+    * stay inside its own scratch paths and [[assertLeasesStillHeld]]
+    * refuses before the first rename, leaving the debris for the
+    * store's vacuum sweep (and [[graft.tools.StoreDoctor]] to flag).
+    * Callers commit the manifest AFTER this returns — the manifest
+    * swap stays the single commit point. */
+  def stageGenerationDir(markerPath: String, finalPaths: Seq[String])
+                        (write: Seq[String] => Unit): Unit = {
     val tag = scratchTag(markerPath).getOrElse(throw new IllegalStateException(
       s"stageGenerationDir requires the writer lease at $markerPath"))
-    val scratch = s"${finalDir}__$tag"
-    val (fs, fin) = of(finalDir)
-    fs.delete(new Path(scratch), true): Unit // this writer's own stale retry debris
+    val scratch = finalPaths.map(f => s"${f}__$tag")
+    val (fs, _) = of(finalPaths.head)
+    scratch.foreach(p => fs.delete(new Path(p), true): Unit) // own retry debris
     write(scratch)
     assertLeasesStillHeld()
-    fs.delete(fin, true): Unit // a crashed predecessor's uncommitted leftovers
-    require(fs.rename(new Path(scratch), fin),
-      s"generation commit: rename $scratch -> $finalDir failed")
+    scratch.zip(finalPaths).foreach { case (from, to) =>
+      fs.delete(new Path(to), true): Unit // a crashed predecessor's uncommitted leftovers
+      require(fs.rename(new Path(from), new Path(to)),
+        s"generation commit: rename $from -> $to failed")
+    }
   }
 
   /** Sweep ORPHANED generation-scratch dirs (`g<n>__<tag>` children of
@@ -489,6 +507,64 @@ object StoreFs {
       case _ => ()
     }
   }
+
+  /** The writer-lease bracket of a DIR-LAYOUT store (marker
+    * `<dir>/__writer`) — what every mutation verb of the two-tier, NSW
+    * and flat IVF stores wraps its read-modify-write in. Re-entrant, so
+    * composed verbs (refit → save → vacuum) take it once; the NSW
+    * verbs that also rewrite the flat store nest its lease inside
+    * their own (always nsw-first, so no deadlock). */
+  def withStoreLease[T](dir: String)(body: => T): T =
+    withWriterLease(writerMarkerPath(dir))(body)
+
+  /** COMMIT the next generation of a dir-per-generation store: under
+    * the store's lease, read the head, build `g<head+1>` in the
+    * lease-tagged scratch dir handed to `write`, run the fenced swap
+    * ([[stageGenerationDir]]), then commit `dir/manifest` — the single
+    * commit point. A crash anywhere before the manifest swap leaves
+    * readers on the previous complete generation. Returns the
+    * committed generation. */
+  def commitGenerationDir(dir: String)(write: String => Unit): Long =
+    withStoreLease(dir) {
+      val gen = readManifest(s"$dir/manifest").getOrElse(0L) + 1L
+      stageGenerationDir(writerMarkerPath(dir), Seq(s"$dir/g$gen"))(g => write(g.head))
+      commitManifest(s"$dir/manifest", gen)
+      gen
+    }
+
+  /** Retention for a dir-per-generation store: drop all but the newest
+    * `keepLast` COMMITTED generations ([[committedGenerationDirs]]) and
+    * sweep orphaned scratch dirs ([[sweepScratchDirs]]). Generations
+    * above the manifest (an in-flight writer's) are never touched; a
+    * store with no manifest (never committed, or legacy flat layout)
+    * is left alone. Safe beside readers pinned to any RETAINED
+    * generation. Returns the head generation, None when nothing is
+    * committed. */
+  def vacuumGenerationDirs(dir: String, keepLast: Int): Option[Long] =
+    withStoreLease(dir) {
+      require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+      val head = readManifest(s"$dir/manifest")
+      if (head.isDefined) {
+        committedGenerationDirs(dir).dropRight(keepLast)
+          .foreach(g => deleteChild(dir, s"g$g"))
+        sweepScratchDirs(dir, writerMarkerPath(dir))
+      }
+      head
+    }
+
+  /** The root a read of a dir-per-generation store resolves: with no
+    * `atGeneration`, the head generation's `g<n>` dir — or `dir`
+    * itself for a legacy flat (pre-generational) store; with one, that
+    * generation's dir when [[committedGenerationDirs]] lists it, else
+    * the [[unreadableGeneration]] refusal naming `kind`. */
+  def generationRoot(dir: String, atGeneration: Option[Long], kind: String): String =
+    atGeneration match {
+      case None => readManifest(s"$dir/manifest").fold(dir)(g => s"$dir/g$g")
+      case Some(g) =>
+        val readable = committedGenerationDirs(dir)
+        if (!readable.contains(g)) unreadableGeneration(kind, dir, g, readable)
+        s"$dir/g$g"
+    }
 
   /** The lease marker's `(holderToken, ageMs)` when one is present —
     * the StoreDoctor inspection surface. */

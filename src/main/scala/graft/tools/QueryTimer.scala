@@ -24,17 +24,17 @@ object QueryTimer {
     // dev knob: decouple shuffle width from core count to attribute
     // scaling anomalies (32-core slower than 8-core) to one or the other
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    // dev knob: arbitrary session confs (k=v;k=v) for A/B-ing
+    // conf-gated behavior (e.g. graft.streaming.shufflePartitions)
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(parseExtraConf)
+      .getOrElse(Seq.empty)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // dev knob: arbitrary session confs (k=v;k=v) for A/B-ing
-    // conf-gated behavior (e.g. graft.streaming.shufflePartitions)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    })
+    extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     names.split(",").foreach { name =>
       val fn = graft.SparkEntry.queries(name)
@@ -43,15 +43,23 @@ object QueryTimer {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      graft.QueriesText.clearSessionCaches()
-      graft.QueriesCurate.clearSessionCaches()
-      graft.QueriesStreaming.clearSessionCaches()
-      graft.QueriesSimilarity.clearSessionCaches()
-      graft.QueriesPipeline.clearSessionCaches()
+      graft.SparkEntry.clearSessionCaches()
       val cold = once()
       val steady = (1 to reps).map(_ => once()).min
       println(f"[probe] $name dir=$sfDir cold=$cold%.2fs steady=$steady%.2fs")
     }
     spark.stop()
   }
+
+  /** The `SPARK_GRAFT_EXTRA_CONF` pairs: `k=v` segments split on `;`.
+    * Empty segments (e.g. after a trailing `;`) are skipped; a segment
+    * without `=` or with an empty key refuses, naming itself. */
+  def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"malformed SPARK_GRAFT_EXTRA_CONF segment '$kv': expected k=v;k=v")
+      }
+    }
 }

@@ -61,4 +61,14 @@ class ScaleUpSpec extends SparkSpec {
       .filter($"va" === $"vb").count()
     same shouldBe 0
   }
+
+  it("QueryTimer parses SPARK_GRAFT_EXTRA_CONF, refusing malformed segments by name") {
+    import graft.tools.QueryTimer.parseExtraConf
+    parseExtraConf("a.b=1;c=x=y;") shouldBe Seq("a.b" -> "1", "c" -> "x=y")
+    parseExtraConf("") shouldBe Seq.empty
+    val noEq = intercept[IllegalArgumentException](parseExtraConf("a=1;oops"))
+    noEq.getMessage should (include("'oops'") and include("k=v;k=v"))
+    intercept[IllegalArgumentException](parseExtraConf("=1"))
+      .getMessage should include("'=1'")
+  }
 }

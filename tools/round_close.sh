@@ -37,6 +37,8 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$CPUS" \
   sbt -batch "runMain graft.Bench" > target/bench_close.log
 grep '"metric"' target/bench_close.log > "bench_r${ROUND}_session.json"
 grep BENCH_SUMMARY target/bench_close.log
+# aim 2's size yardstick, read the same way every round
+echo "MAIN_SCALA_LINES $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
 PREV=$(ls bench_r*_session.json 2>/dev/null | sort -V | tail -2 | head -1)
 if [ -n "$PREV" ] && [ "$PREV" != "bench_r${ROUND}_session.json" ]; then
   echo "-- bench diff vs $PREV (host noise moves totals; read per-query pairs) --"
