@@ -27,7 +27,7 @@ object Bench {
     // deterministic name order: Map iteration order is hash-based, which
     // would shuffle which query absorbs residual warm-up between runs
     // and make per-query numbers incomparable across rounds
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // a failed query must FAIL the bench, not be timed as ~0s: an
       // OOM or codegen error that only reproduces at bench scale would
       // otherwise silently flatter the total (the correctness gate runs
@@ -56,13 +56,14 @@ object Bench {
       // substitutes matching canonical plans) — deliberate: a
       // long-lived job serves repeated queries from exactly those
       // caches, and cold_total carries the no-cache number.
-      // cold = full end-to-end cost: drop the session-owned model
-      // caches (BPE merges/vocab, classifier fit) first, so a query
-      // that trains pays its training here instead of inheriting a
-      // sibling query's cache hit. The warm pass keeps whatever the
-      // cold pass cached — that IS the long-lived-job semantics the
-      // steady number models (same contract as plan-level persist()).
-      SparkEntry.clearSessionCaches()
+      // cold = full end-to-end cost: drop every session value and
+      // store ([[Scratch.clearSession]]: BPE merges/vocab, classifier
+      // fit, index/dedup/pipeline stores) first, so a query that
+      // trains pays its training here instead of inheriting a sibling
+      // query's cache hit. The warm pass keeps whatever the cold pass
+      // cached — that IS the long-lived-job semantics the steady
+      // number models (same contract as plan-level persist()).
+      Scratch.clearSession()
       val cold = once()
       val coldErr = err.isDefined
       val warm = if (!coldErr) once() else cold
@@ -76,7 +77,7 @@ object Bench {
       // query indistinguishable from normal progress
       System.err.println(f"[bench] $name cold=$cold%.2fs steady=$steady%.2fs")
       (name, steady, cold, err)
-    }
+    } finally Scratch.clearSession() // leave no session dir behind
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // cold per-query beside the steady map: cold totals price the full

@@ -970,19 +970,14 @@ object QueriesCurate {
   private val fitQ = 1048576L   // 2^20, gradient quantization scale
   private val fitWQ = 1073741824L // 2^30, weight dyadic-grid scale
 
-  /** Memoized per sf-dir: q119 and q120 gate the SAME deterministic
-    * fit (the oracle replays it independently for each), so refitting
-    * per query would only re-run identical arithmetic — the process-
-    * local cache is the persist()-across-consumers pattern at model
-    * granularity. */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Double)]()
-
-  /** Drop the session-owned classifier-fit cache — [[Bench]] calls this
-    * before each COLD pass so q119/q120's cold numbers carry the fit. */
-  private[graft] def clearSessionCaches(): Unit = fitCache.clear()
+  /** Memoized per sf-dir as an in-memory [[Scratch.session]] value:
+    * q119 and q120 gate the SAME deterministic fit (the oracle replays
+    * it independently for each), so refitting per query would only
+    * re-run identical arithmetic — the persist()-across-consumers
+    * pattern at model granularity. Bench's cold pass clears the
+    * session, so q119/q120's cold numbers carry the fit. */
   private def runFit(s: SparkSession, dir: String): (Seq[Double], Double) =
-    fitCache.computeIfAbsent(dir, _ =>
+    Scratch.session("logistic_fit", dir)(_ =>
       QualityFilters.logisticFit(labeledDocs(s, dir), "text", "y",
         dim = fitDim, epochs = fitEpochs, lr = fitLr))
 

@@ -46,34 +46,10 @@ import graft.operators.{Packing, TextDedup}
 object QueriesPipeline {
   import Queries.Q
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-    }
-    f.delete(): Unit
-  }
-
-  private val pipelineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamPipelineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def clearSessionCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (pipelineCache.values.asScala ++ streamPipelineCache.values.asScala)
-      .foreach(p => rmTree(new java.io.File(p)))
-    pipelineCache.clear()
-    streamPipelineCache.clear()
-  }
-
   // ---------------------------------------------------------------- q208
   val q208PipelineSoak: Q = (s, dir) => {
     import s.implicits._
-    val base = pipelineCache.computeIfAbsent(dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q208_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q208", dir) { b =>
       val d = Tables.documents(s, dir).select($"doc_id", $"text")
       val plant = d
         .unionByName(d.select(($"doc_id" + 100000L).as("doc_id"), $"text"))
@@ -141,7 +117,7 @@ object QueriesPipeline {
           lit(binsTotal.head().getLong(0))))
         .coalesce(1).write.mode("overwrite").parquet(s"$b/funnel")
       b
-    })
+    }
     // SERVE: the funnel from the store + the 06_shard row re-derived
     // from the REAL shard files on every pass — a lossless sink means
     // read-back rows and token mass equal the pack stage's
@@ -255,15 +231,12 @@ object QueriesPipeline {
     * classification, fresh-doc copies via the intra-batch stages. */
   val q209StreamPipeline: Q = (s, dir) => {
     import s.implicits._
-    val base = streamPipelineCache.computeIfAbsent(dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q209_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q209", dir) { b =>
       val file = s"$dir/documents.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"doc_id", 10)
       val corpus = s.read.parquet(file).filter(bk10 < 8)
         .select($"doc_id", $"text")
-      val storeName = s"q209_store_$stem"
+      val storeName = s"q209_store_${Scratch.stem(dir)}"
       TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
         shingleN = 5, k = 8, rowsPerBand = 2,
         namePrefix = storeName, pathPrefix = s"$b/store", buckets = 8)
@@ -288,8 +261,9 @@ object QueriesPipeline {
             .select(($"doc_id" + 500000L).as("doc_id"),
               concat($"text", lit(" zz qq")).as("text")))
       }
-      val (staging, stream) = QueriesStreaming.keyedMultiBatchStream(
-        s, file, "q209", dir, delta, col("doc_id") % 4)
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("doc_id") % 4)
       graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", s"$staging/ckpt")
         .foreachBatch {
@@ -352,9 +326,9 @@ object QueriesPipeline {
         }
         .start()
       )
-      rmTree(new java.io.File(staging))
+      Scratch.rmTree(staging)
       b
-    })
+    }
     // SERVE: the persisted funnel + one read-back row over the REAL
     // appended shard store — a lossless append means read-back rows
     // and token mass equal the sum of the four batches' pack stages
@@ -491,15 +465,12 @@ object QueriesPipeline {
     * gate on the append verb's on-disk result. */
   val q210CumulativeBuild: Q = (s, dir) => {
     import s.implicits._
-    val base = streamPipelineCache.computeIfAbsent("q210:" + dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q210_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q210", dir) { b =>
       val file = s"$dir/documents.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"doc_id", 10)
       val corpus = s.read.parquet(file).filter(bk10 < 8)
         .select($"doc_id", $"text")
-      val storeName = s"q210_store_$stem"
+      val storeName = s"q210_store_${Scratch.stem(dir)}"
       TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
         shingleN = 5, k = 8, rowsPerBand = 2,
         namePrefix = storeName, pathPrefix = s"$b/store", buckets = 8)
@@ -527,8 +498,9 @@ object QueriesPipeline {
             .select(($"doc_id" + 3000002L).as("doc_id"),
               concat($"text", lit(" zz qq")).as("text")))
       }
-      val (staging, stream) = QueriesStreaming.keyedMultiBatchStream(
-        s, file, "q210", dir, delta, col("doc_id") % 4)
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("doc_id") % 4)
       graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", s"$staging/ckpt")
         .foreachBatch {
@@ -598,9 +570,9 @@ object QueriesPipeline {
         }
         .start()
       )
-      rmTree(new java.io.File(staging))
+      Scratch.rmTree(staging)
       b
-    })
+    }
     // SERVE: funnel + shard read-back (q209) + the STORE read-back —
     // every committed segment's per-document fp rows, the on-disk
     // proof the append chain lost nothing
@@ -813,10 +785,7 @@ object QueriesPipeline {
     * batch re-reads the committed generation idempotently. */
   val q211SemStreamBuild: Q = (s, dir) => {
     import s.implicits._
-    val base = streamPipelineCache.computeIfAbsent("q211:" + dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q211_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q211", dir) { b =>
       val file = s"$dir/embeddings.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
       val corpus = s.read.parquet(file)
@@ -849,8 +818,9 @@ object QueriesPipeline {
               $"vec_id" % 3 === 0)
             .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
       }
-      val (staging, stream) = QueriesStreaming.keyedMultiBatchStream(
-        s, file, "q211", dir, delta, col("vec_id") % 4)
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("vec_id") % 4)
       graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", s"$staging/ckpt")
         .foreachBatch {
@@ -891,9 +861,9 @@ object QueriesPipeline {
         }
         .start()
       )
-      rmTree(new java.io.File(staging))
+      Scratch.rmTree(staging)
       b
-    })
+    }
     // SERVE: funnel + the cumulative index's serving face (the search a
     // retrieval job runs) + the on-disk read-back
     val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
@@ -1051,10 +1021,7 @@ object QueriesPipeline {
   val q216NswScreenBuild: Q = (s, dir) => {
     import s.implicits._
     val cap = 2000000000L
-    val base = streamPipelineCache.computeIfAbsent("q216:" + dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q216_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q216", dir) { b =>
       val file = s"$dir/embeddings.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
       val corpus = s.read.parquet(file)
@@ -1089,8 +1056,9 @@ object QueriesPipeline {
               $"vec_id" % 3 === 0)
             .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
       }
-      val (staging, stream) = QueriesStreaming.keyedMultiBatchStream(
-        s, file, "q216", dir, delta, col("vec_id") % 4)
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("vec_id") % 4)
       graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", s"$staging/ckpt")
         .foreachBatch {
@@ -1143,9 +1111,9 @@ object QueriesPipeline {
         }
         .start()
       )
-      rmTree(new java.io.File(staging))
+      Scratch.rmTree(staging)
       b
-    })
+    }
     val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
     val (graphF, entriesF) = graft.operators.NswIndex.loadNsw(s, s"$base/nsw")
     val qs = s.read.parquet(s"$dir/embeddings.parquet")
@@ -1307,10 +1275,7 @@ object QueriesPipeline {
     * the oracle DuckDB-sized; at-least-once caveat as q211. */
   val q219RefitCadence: Q = (s, dir) => {
     import s.implicits._
-    val base = streamPipelineCache.computeIfAbsent("q219:" + dir, _ => {
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val b = s"/root/repo/target/tmp/graft_q219_$stem"
-      rmTree(new java.io.File(b))
+    val base = Scratch.session("graft_q219", dir) { b =>
       val file = s"$dir/embeddings.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
       val corpus = s.read.parquet(file)
@@ -1346,8 +1311,9 @@ object QueriesPipeline {
       // fixture); the funnel's d_budget rows put every value it ever
       // takes on the hash.
       var nAtFit = graft.operators.IvfIndex.load(s, s"$b/ivf")._2.count()
-      val (staging, stream) = QueriesStreaming.keyedMultiBatchStream(
-        s, file, "q219", dir, delta, col("vec_id") % 4)
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("vec_id") % 4)
       graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", s"$staging/ckpt")
         .foreachBatch {
@@ -1402,9 +1368,9 @@ object QueriesPipeline {
         }
         .start()
       )
-      rmTree(new java.io.File(staging))
+      Scratch.rmTree(staging)
       b
-    })
+    }
     val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
     val qs = s.read.parquet(s"$dir/embeddings.parquet")
       .filter($"vec_id" < 5)
@@ -1593,11 +1559,8 @@ object QueriesPipeline {
     * spacing closes). */
   val q212TimeTravel: Q = (s, dir) => {
     import s.implicits._
-    val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val storeName = s"q212_store_$stem"
-    val base = pipelineCache.computeIfAbsent("q212:" + dir, _ => {
-      val b = s"/root/repo/target/tmp/graft_q212_$stem"
-      rmTree(new java.io.File(b))
+    val storeName = s"q212_store_${Scratch.stem(dir)}"
+    val base = Scratch.session("graft_q212", dir) { b =>
       val file = s"$dir/documents.parquet"
       val bk10 = graft.operators.Sampling.hashBucket($"doc_id", 10)
       val t = s.read.parquet(file)
@@ -1646,7 +1609,7 @@ object QueriesPipeline {
       }.reduce(_ unionByName _)
         .coalesce(1).write.mode("overwrite").parquet(s"$b/out")
       b
-    })
+    }
     // SERVE: the cached verdict matrix + the retention contract read
     // LIVE from store metadata (committedGenerations is the
     // time-travel discovery surface a caller uses first)

@@ -368,16 +368,10 @@ object QueriesScale {
     import graft.functions.TDigest
     val docs = Tables.documents(s, dir)
       .select($"source", $"n_chars".cast("double").as("x"))
-    val shardDir = sys.props("java.io.tmpdir") +
-      "/graft_tdigest_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    docs.groupBy($"source").agg(TDigest.digestAgg($"x").as("digest"))
-      .write.parquet(shardDir)
-    try {
-      val shards = s.read.parquet(shardDir)
-      digestFlagReport(s, docs, shards)
-    } finally {
-      rmTree(new java.io.File(shardDir))
+    Scratch.withTempDir("graft_tdigest") { shardDir =>
+      docs.groupBy($"source").agg(TDigest.digestAgg($"x").as("digest"))
+        .write.parquet(shardDir)
+      digestFlagReport(s, docs, s.read.parquet(shardDir))
     }
   }
   /** Shared verification tail of q153 (batch-built digests) and q166
@@ -449,12 +443,9 @@ object QueriesScale {
   val q159HllRollup: Q = (s, dir) => {
     import s.implicits._
     val ev = Tables.events(s, dir).select($"event_type", $"user_id")
-    val skDir = sys.props("java.io.tmpdir") +
-      "/graft_hll_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    Reports.distinctSketches(ev, "event_type", "user_id")
-      .write.parquet(skDir)
-    try {
+    Scratch.withTempDir("graft_hll") { skDir =>
+      Reports.distinctSketches(ev, "event_type", "user_id")
+        .write.parquet(skDir)
       val re = s.read.parquet(skDir)
       val global = re.agg(hll_union_agg($"sk").as("sk"))
         .select(lit("*").as("event_type"), $"sk")
@@ -467,8 +458,6 @@ object QueriesScale {
           (abs($"est" - $"n_exact") <= $"n_exact" * 0.05).as("ok_est"))
         .orderBy($"event_type")
         .localCheckpoint() // group-cardinality-sized; materialize pre-cleanup
-    } finally {
-      rmTree(new java.io.File(skDir))
     }
   }
   val q159Sql: String =
@@ -496,19 +485,14 @@ object QueriesScale {
   val q165BitmapDistinct: Q = (s, dir) => {
     import s.implicits._
     val ev = Tables.events(s, dir).select($"event_type", $"user_id")
-    val bmDir = sys.props("java.io.tmpdir") +
-      "/graft_bitmap_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    ev.select($"event_type",
-      expr("bitmap_bucket_number(user_id)").as("bkt"),
-      expr("bitmap_bit_position(user_id)").as("pos"))
-      .groupBy($"event_type", $"bkt")
-      .agg(expr("bitmap_construct_agg(pos)").as("bm"))
-      .write.parquet(bmDir)
-    try {
+    Scratch.withTempDir("graft_bitmap") { bmDir =>
+      ev.select($"event_type",
+        expr("bitmap_bucket_number(user_id)").as("bkt"),
+        expr("bitmap_bit_position(user_id)").as("pos"))
+        .groupBy($"event_type", $"bkt")
+        .agg(expr("bitmap_construct_agg(pos)").as("bm"))
+        .write.parquet(bmDir)
       bitmapDistinctReport(s, s.read.parquet(bmDir))
-    } finally {
-      rmTree(new java.io.File(bmDir))
     }
   }
   /** Shared rollup tail of q165 (batch-built bitmaps) and q172
@@ -539,14 +523,6 @@ object QueriesScale {
       |  SELECT '*' AS event_type, user_id FROM events)
       |SELECT event_type, count(DISTINCT user_id) AS n_users
       |FROM u GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-    }
-    f.delete(): Unit
-  }
 
   // ---------------------------------------------------------------- q175
   /** WEIGHTED t-digest quantiles

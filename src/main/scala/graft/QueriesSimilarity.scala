@@ -22,15 +22,6 @@ import graft.operators.Similarity
   */
 object QueriesSimilarity {
 
-  /** Recursive scratch-dir delete for the index-lifecycle gates
-    * (null-safe: listFiles is null on races/non-dirs). */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-    }
-    f.delete(): Unit
-  }
   import Queries.Q
 
   /** (id, v) corpus of double-cast embeddings ∪ scaled copy.
@@ -262,17 +253,14 @@ object QueriesSimilarity {
     val indexed = graft.operators.IvfIndex.assign(e, cent)
     // per-invocation scratch path: concurrent runs over the same sf
     // (bench + verify, or two drivers) must not race on one directory
-    val idxDir = sys.props("java.io.tmpdir") +
-      "/graft_ivf_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    try {
+    Scratch.withTempDir("graft_ivf") { idxDir =>
       graft.operators.IvfIndex.save(cent, indexed, idxDir)
       val (cent2, indexed2) = graft.operators.IvfIndex.load(s, idxDir)
       val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
       graft.operators.IvfIndex.search(s, queries, indexed2, cent2, k = 5, nProbe = 2)
         .orderBy($"q_id", $"rank")
         .localCheckpoint() // materialize before the scratch dir is deleted
-    } finally rmTree(new java.io.File(idxDir))
+    }
   }
   /** Same oracle as q39 — the lifecycle must be invisible in results. */
   val q106Sql: String = q39Sql
@@ -407,9 +395,7 @@ object QueriesSimilarity {
     val cent = graft.operators.IvfIndex
       .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxDir = sys.props("java.io.tmpdir") +
-      "/graft_ivf_app_" + java.util.UUID.randomUUID().toString.take(8)
-    try {
+    Scratch.withTempDir("graft_ivf_app") { idxDir =>
       graft.operators.IvfIndex.save(cent,
         graft.operators.IvfIndex.assign(base, cent), idxDir)
       graft.operators.IvfIndex.appendToIndex(s, delta, idxDir)
@@ -418,7 +404,7 @@ object QueriesSimilarity {
       graft.operators.IvfIndex.search(s, queries, indexed2, cent2, k = 5, nProbe = 2)
         .orderBy($"q_id", $"rank")
         .localCheckpoint() // materialize before the scratch dir is deleted
-    } finally rmTree(new java.io.File(idxDir))
+    }
   }
   val q122Sql: String =
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -479,9 +465,7 @@ object QueriesSimilarity {
     val cent = graft.operators.IvfIndex
       .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxDir = sys.props("java.io.tmpdir") +
-      "/graft_ivf_refit_" + java.util.UUID.randomUUID().toString.take(8)
-    try {
+    try Scratch.withTempDir("graft_ivf_refit") { idxDir =>
       graft.operators.IvfIndex.save(cent,
         graft.operators.IvfIndex.assign(base, cent), idxDir)
       graft.operators.IvfIndex.appendToIndex(s, delta, idxDir)
@@ -492,10 +476,7 @@ object QueriesSimilarity {
           k = 5, nProbe = 2)
         .orderBy($"q_id", $"rank")
         .localCheckpoint() // materialize before the scratch dir is deleted
-    } finally {
-      cent.unpersist(): Unit
-      rmTree(new java.io.File(idxDir))
-    }
+    } finally cent.unpersist(): Unit
   }
   val q218Sql: String =
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -633,16 +614,17 @@ object QueriesSimilarity {
       .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val indexed = graft.operators.IvfIndex.assign(e, cent).localCheckpoint()
-    val tag = new java.io.File(dir).getName.replace('.', '_')
-    val idxDir = s"/root/repo/target/tmp/q134_ivf_$tag"
-    graft.operators.IvfIndex.save(cent, indexed, idxDir)
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
-    graft.operators.IvfIndex.tuneNProbe(s, idxDir, queries,
-      k = 10, nProbes = Seq(1, 2, 4, 8), recallFloor = 0.9): Unit
-    s.read.parquet(s"$idxDir/tuning")
-      .select($"n_probe", $"n_queries", $"total_hits",
-        $"avg_recall", $"min_recall", $"chosen")
-      .orderBy($"n_probe")
+    Scratch.withTempDir("q134_ivf") { idxDir =>
+      graft.operators.IvfIndex.save(cent, indexed, idxDir)
+      val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
+      graft.operators.IvfIndex.tuneNProbe(s, idxDir, queries,
+        k = 10, nProbes = Seq(1, 2, 4, 8), recallFloor = 0.9): Unit
+      s.read.parquet(s"$idxDir/tuning")
+        .select($"n_probe", $"n_queries", $"total_hits",
+          $"avg_recall", $"min_recall", $"chosen")
+        .orderBy($"n_probe")
+        .localCheckpoint() // materialize before the scratch dir is deleted
+    }
   }
   val q134Sql: String = {
     val (ctes, perWidth) = recallOracleParts(Seq(1, 2, 4, 8))
@@ -959,20 +941,17 @@ object QueriesSimilarity {
     * of the cold tier. */
   val q142TwoTierPersist: Q = (s, dir) => {
     import s.implicits._
-    // session-owned store cache (the q132 `bpeMergeCache` contract): a
-    // serving deployment builds+persists the index ONCE and answers
-    // every later query from the parquet store — the steady bench pass
-    // models that (fit+save amortized away, load+probe+rerank
-    // measured); Bench clears this before cold passes so cold still
-    // carries the full fit+save lifecycle.
-    val idxDir = twoTierStoreCache.computeIfAbsent(dir, _ => {
+    // session-owned store ([[Scratch.session]]): a serving deployment
+    // builds+persists the index ONCE and answers every later query
+    // from the parquet store — the steady bench pass models that
+    // (fit+save amortized away, load+probe+rerank measured); Bench
+    // clears the session before cold passes so cold still carries the
+    // full fit+save lifecycle.
+    val idxDir = Scratch.session("graft_pq", dir) { p =>
       val (cent, cb, codesIdx, fullIdx, _) = twoTierFit(s, dir)
-      val p = "/root/repo/target/tmp/graft_pq_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + java.util.UUID.randomUUID().toString.take(8)
       graft.operators.PqIndex.saveTwoTier(cent, cb, codesIdx, fullIdx, p)
       p
-    })
+    }
     val queries = Tables.embeddings(s, dir)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
       .filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -1141,7 +1120,7 @@ object QueriesSimilarity {
     // once per session (the store is deterministic, so the cached
     // post-append store searches bit-identically); cold passes rebuild
     // after Bench clears the cache and so still price the append path
-    val idxDir = twoTierAppendCache.computeIfAbsent(dir, _ => {
+    val idxDir = Scratch.session("graft_pq_app", dir) { p =>
       val base = e.filter($"id" % 10 < 9)
       val delta = e.filter($"id" % 10 === 9)
       val cent = graft.operators.IvfIndex
@@ -1155,13 +1134,10 @@ object QueriesSimilarity {
         .join(indexed.select($"id", $"cluster"), Seq("id"))
         .select($"cluster", $"id", $"codes")
       val fullIdx = indexed.select($"cluster", $"id", $"v")
-      val p = "/root/repo/target/tmp/graft_pq_app_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + java.util.UUID.randomUUID().toString.take(8)
       graft.operators.PqIndex.saveTwoTier(cent, cb, codesIdx, fullIdx, p)
       graft.operators.PqIndex.appendToTwoTier(s, delta, p, m = 4, subDim = 16)
       p
-    })
+    }
     val (cent2, cb2, codes2, full2) =
       graft.operators.PqIndex.loadTwoTier(s, idxDir)
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -1264,10 +1240,7 @@ object QueriesSimilarity {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-    val idxDir = twoTierTtCache.computeIfAbsent(dir, _ => {
-      val p = "/root/repo/target/tmp/graft_pq_tt_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + java.util.UUID.randomUUID().toString.take(8)
+    val idxDir = Scratch.session("graft_pq_tt", dir) { p =>
       def fitSave(corpus: org.apache.spark.sql.DataFrame): Unit = {
         val cent = graft.operators.IvfIndex
           .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
@@ -1288,7 +1261,7 @@ object QueriesSimilarity {
       fitSave(e.filter($"id" % 10 < 9)) // g1: the base-era fit
       fitSave(e)                        // g2: the periodic refresh
       p
-    })
+    }
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
     val gens = graft.operators.PqIndex.committedTwoTierGenerations(idxDir)
     def at(g: Long) = {
@@ -1596,17 +1569,18 @@ object QueriesSimilarity {
       .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val indexed = graft.operators.IvfIndex.assign(e, cent).localCheckpoint()
-    val idxDir = "/root/repo/target/tmp/graft_nsw_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_")
-    graft.operators.NswIndex.saveNsw(
-      graft.operators.NswIndex.fitGraph(indexed, degree = 4),
-      graft.operators.NswIndex.entryPoints(indexed, cent), idxDir)
-    val (graph, entries) = graft.operators.NswIndex.loadNsw(s, idxDir)
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
-    graft.operators.NswIndex.search(s, queries, graph, indexed, cent, entries,
-        k = 5, nProbe = 2, ef = 8, rounds = 2)
-      .select($"q_id", $"rank", $"n_id", ($"cos" + 0.0).as("cos"))
-      .orderBy($"q_id", $"rank")
+    Scratch.withTempDir("graft_nsw") { idxDir =>
+      graft.operators.NswIndex.saveNsw(
+        graft.operators.NswIndex.fitGraph(indexed, degree = 4),
+        graft.operators.NswIndex.entryPoints(indexed, cent), idxDir)
+      val (graph, entries) = graft.operators.NswIndex.loadNsw(s, idxDir)
+      val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
+      graft.operators.NswIndex.search(s, queries, graph, indexed, cent, entries,
+          k = 5, nProbe = 2, ef = 8, rounds = 2)
+        .select($"q_id", $"rank", $"n_id", ($"cos" + 0.0).as("cos"))
+        .orderBy($"q_id", $"rank")
+        .localCheckpoint() // materialize before the scratch dir is deleted
+    }
   }
 
   // ---------------------------------------------------------------- q186
@@ -1632,7 +1606,7 @@ object QueriesSimilarity {
     // not carry); steady passes price the persisted walk — q185 proves
     // walk-from-parquet ≡ in-memory bit-for-bit — cold passes the full
     // lifecycle
-    val idxDir = nswAppendCache.computeIfAbsent(dir, _ => {
+    val idxDir = Scratch.session("graft_nsw_app", dir) { p =>
       val base = e.filter($"id" % 10 < 9)
       val delta = e.filter($"id" % 10 === 9)
       val cent = graft.operators.IvfIndex
@@ -1640,9 +1614,6 @@ object QueriesSimilarity {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val idxBase = graft.operators.IvfIndex.assign(base, cent).localCheckpoint()
       val idxDelta = graft.operators.IvfIndex.assign(delta, cent).localCheckpoint()
-      val p = "/root/repo/target/tmp/graft_nsw_app_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_")
-      rmTree(new java.io.File(p))
       graft.operators.NswIndex.saveNsw(
         graft.operators.NswIndex.fitGraph(idxBase, degree = 4),
         graft.operators.NswIndex.entryPoints(idxBase, cent), p)
@@ -1652,7 +1623,7 @@ object QueriesSimilarity {
       idxBase.unionByName(idxDelta).repartition(col("cluster"))
         .write.mode("overwrite").parquet(s"$p/aux_idx")
       p
-    })
+    }
     val cent2 = s.read.parquet(s"$idxDir/aux_cent")
     val idxAll = s.read.parquet(s"$idxDir/aux_idx")
     val (graph, entries) = graft.operators.NswIndex.loadNsw(s, idxDir)
@@ -1729,29 +1700,24 @@ object QueriesSimilarity {
     // deliberately-degenerate one-cell build + the split run ONCE per
     // session; steady bench passes price the post-maintenance SERVE
     // (load + walk), cold passes the full lifecycle
-    val nswDir = nswSplitCache.computeIfAbsent(dir, _ => {
+    val store = Scratch.session("graft_nswsplit", dir) { p =>
       val eM = e.localCheckpoint()
       val n = eM.count()
       val cent1 = graft.operators.IvfIndex
         .fitCentroids(s, eM, k = 1, iterations = 1, orderedMean = true)
         .localCheckpoint()
       val idx1 = graft.operators.IvfIndex.assign(eM, cent1).localCheckpoint()
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val fDir = s"/root/repo/target/tmp/graft_nswsplit_flat_$stem"
-      val nDir = s"/root/repo/target/tmp/graft_nswsplit_nsw_$stem"
-      rmTree(new java.io.File(fDir)); rmTree(new java.io.File(nDir))
-      graft.operators.IvfIndex.save(cent1, idx1, fDir)
+      graft.operators.IvfIndex.save(cent1, idx1, s"$p/flat")
       graft.operators.NswIndex.saveNsw(
         graft.operators.NswIndex.fitGraph(idx1, degree = 4),
-        graft.operators.NswIndex.entryPoints(idx1, cent1), nDir)
+        graft.operators.NswIndex.entryPoints(idx1, cent1), s"$p/nsw")
       val split = graft.operators.NswIndex.splitOversizedNswCells(
-        s, fDir, nDir, maxCellSize = math.max(2L, n / 2), degree = 4)
+        s, s"$p/flat", s"$p/nsw", maxCellSize = math.max(2L, n / 2), degree = 4)
       require(split == 1, s"fixture must force exactly one split, got $split")
-      nDir
-    })
-    val flatDir = nswDir.replace("graft_nswsplit_nsw_", "graft_nswsplit_flat_")
-    val (cent2, idx2) = graft.operators.IvfIndex.load(s, flatDir)
-    val (graph, entries) = graft.operators.NswIndex.loadNsw(s, nswDir)
+      p
+    }
+    val (cent2, idx2) = graft.operators.IvfIndex.load(s, s"$store/flat")
+    val (graph, entries) = graft.operators.NswIndex.loadNsw(s, s"$store/nsw")
     val queries = e.filter($"id" < 40).select($"id".as("q_id"), $"v".as("qv"))
     graft.operators.NswIndex.search(s, queries, graph,
         idx2.select($"id", $"v", $"cluster"), cent2, entries,
@@ -1787,11 +1753,8 @@ object QueriesSimilarity {
     // NOTE the gate still covers BOTH read paths on every cold pass:
     // the tombstone-anti-join read is exercised inside the builder
     // (loadTwoTier between delete and compact, via compactTwoTier).
-    val idxDir = twoTierDeleteCache.computeIfAbsent(dir, _ => {
+    val idxDir = Scratch.session("graft_pq_del", dir) { p =>
       val (cent, cb, codesIdx, fullIdx, _) = twoTierFit(s, dir)
-      val p = "/root/repo/target/tmp/graft_pq_del_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_")
-      rmTree(new java.io.File(p))
       graft.operators.PqIndex.saveTwoTier(cent, cb, codesIdx, fullIdx, p)
       val deleted = Tables.embeddings(s, dir)
         .select($"vec_id".as("id")).filter($"id" % 10 === 3)
@@ -1800,7 +1763,7 @@ object QueriesSimilarity {
       // generation: compaction must be invisible to the search
       graft.operators.PqIndex.compactTwoTier(s, p)
       p
-    })
+    }
     val queries = Tables.embeddings(s, dir)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
       .filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -1845,27 +1808,22 @@ object QueriesSimilarity {
     // session-owned lifecycle cache (the q142 contract): build + save +
     // cell-local delete-rebuild run ONCE per session; steady passes
     // price the post-delete SERVE, cold passes the full lifecycle
-    val nswDir = nswDeleteCache.computeIfAbsent(dir, _ => {
+    val store = Scratch.session("graft_nswdel", dir) { p =>
       val cent = graft.operators.IvfIndex
         .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val indexed = graft.operators.IvfIndex.assign(e, cent).localCheckpoint()
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val fDir = s"/root/repo/target/tmp/graft_nswdel_flat_$stem"
-      val nDir = s"/root/repo/target/tmp/graft_nswdel_nsw_$stem"
-      rmTree(new java.io.File(fDir)); rmTree(new java.io.File(nDir))
-      graft.operators.IvfIndex.save(cent, indexed, fDir)
+      graft.operators.IvfIndex.save(cent, indexed, s"$p/flat")
       graft.operators.NswIndex.saveNsw(
         graft.operators.NswIndex.fitGraph(indexed, degree = 4),
-        graft.operators.NswIndex.entryPoints(indexed, cent), nDir)
-      val rebuilt = graft.operators.NswIndex.deleteFromNsw(s, fDir, nDir,
-        e.filter($"id" % 10 === 3).select($"id"), degree = 4)
+        graft.operators.NswIndex.entryPoints(indexed, cent), s"$p/nsw")
+      val rebuilt = graft.operators.NswIndex.deleteFromNsw(s, s"$p/flat",
+        s"$p/nsw", e.filter($"id" % 10 === 3).select($"id"), degree = 4)
       require(rebuilt >= 1, s"fixture must touch at least one cell, got $rebuilt")
-      nDir
-    })
-    val flatDir = nswDir.replace("graft_nswdel_nsw_", "graft_nswdel_flat_")
-    val (cent2, idx2) = graft.operators.IvfIndex.load(s, flatDir)
-    val (graph, entries) = graft.operators.NswIndex.loadNsw(s, nswDir)
+      p
+    }
+    val (cent2, idx2) = graft.operators.IvfIndex.load(s, s"$store/flat")
+    val (graph, entries) = graft.operators.NswIndex.loadNsw(s, s"$store/nsw")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
     graft.operators.NswIndex.search(s, queries, graph,
         idx2.select($"id", $"v", $"cluster"), cent2, entries,
@@ -1926,28 +1884,24 @@ object QueriesSimilarity {
     val e = Tables.embeddings(s, dir)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
       .filter($"id" < 10000000000L)
-    val nswDir = nswTtCache.computeIfAbsent(dir, _ => {
+    val store = Scratch.session("graft_nswtt", dir) { p =>
       val cent = graft.operators.IvfIndex
         .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val indexed = graft.operators.IvfIndex.assign(e, cent).localCheckpoint()
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val fDir = s"/root/repo/target/tmp/graft_nswtt_flat_$stem"
-      val nDir = s"/root/repo/target/tmp/graft_nswtt_nsw_$stem"
-      rmTree(new java.io.File(fDir)); rmTree(new java.io.File(nDir))
-      graft.operators.IvfIndex.save(cent, indexed, fDir)
+      graft.operators.IvfIndex.save(cent, indexed, s"$p/flat")
       graft.operators.NswIndex.saveNsw(
         graft.operators.NswIndex.fitGraph(indexed, degree = 4),
-        graft.operators.NswIndex.entryPoints(indexed, cent), nDir,
+        graft.operators.NswIndex.entryPoints(indexed, cent), s"$p/nsw",
         retainGenerations = 2)
-      val rebuilt = graft.operators.NswIndex.deleteFromNsw(s, fDir, nDir,
-        e.filter($"id" % 10 === 3).select($"id"), degree = 4,
+      val rebuilt = graft.operators.NswIndex.deleteFromNsw(s, s"$p/flat",
+        s"$p/nsw", e.filter($"id" % 10 === 3).select($"id"), degree = 4,
         retainGenerations = 2)
       require(rebuilt >= 1, s"fixture must touch at least one cell, got $rebuilt")
-      nDir
-    })
-    val flatDir = nswDir.replace("graft_nswtt_nsw_", "graft_nswtt_flat_")
-    val (cent2, idx2) = graft.operators.IvfIndex.load(s, flatDir)
+      p
+    }
+    val nswDir = s"$store/nsw"
+    val (cent2, idx2) = graft.operators.IvfIndex.load(s, s"$store/flat")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
     val gens = graft.operators.NswIndex.committedNswGenerations(nswDir)
     def at(g: Long) = {
@@ -2111,17 +2065,15 @@ object QueriesSimilarity {
     // the four-setting tuning grid run ONCE per session; steady passes
     // read the PERSISTED tuning table (the serving artifact the gate
     // hashes), cold passes re-run the whole grid
-    val nswDir = nswTuneCache.computeIfAbsent(dir, _ => {
+    val nswDir = Scratch.session("q194", dir) { p =>
       val e = Tables.embeddings(s, dir)
         .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
       val cent = graft.operators.IvfIndex
         .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val indexed = graft.operators.IvfIndex.assign(e, cent).localCheckpoint()
-      val tag = new java.io.File(dir).getName.replace('.', '_')
-      val fDir = s"/root/repo/target/tmp/q194_flat_$tag"
-      val nDir = s"/root/repo/target/tmp/q194_nsw_$tag"
-      rmTree(new java.io.File(fDir)); rmTree(new java.io.File(nDir))
+      val fDir = s"$p/flat"
+      val nDir = s"$p/nsw"
       graft.operators.IvfIndex.save(cent, indexed, fDir)
       graft.operators.NswIndex.saveNsw(
         graft.operators.NswIndex.fitGraph(indexed, degree = 4),
@@ -2132,7 +2084,7 @@ object QueriesSimilarity {
         settings = Seq((10, 1), (10, 2), (16, 2), (16, 3)),
         recallFloor = 0.6): Unit
       nDir
-    })
+    }
     s.read.parquet(s"$nswDir/tuning")
       .select($"ef", $"rounds", $"cost", $"n_queries", $"total_hits",
         $"avg_recall", $"min_recall", $"chosen")
@@ -2261,7 +2213,7 @@ object QueriesSimilarity {
     // still prices the full lifecycle. The pre-refresh base tuning is
     // part of the audit trail the steady read needs, so the builder
     // snapshots it beside the store before the refresh overwrites it.
-    val nswDir = nswRetuneCache.computeIfAbsent(dir, _ => {
+    val nswDir = Scratch.session("graft_retune", dir) { p =>
       // q191's declared replica cap (no-op at gate SFs + sf1.0): the
       // pinned-k graph fixture is per-cell quadratic above sf1.0
       val e = Tables.embeddings(s, dir)
@@ -2271,10 +2223,8 @@ object QueriesSimilarity {
         .fitCentroids(s, e, k = 8, iterations = 1, orderedMean = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val indexed = IvfIndex.assign(e, cent).localCheckpoint()
-      val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val flatDir = s"/root/repo/target/tmp/graft_retune_flat_$stem"
-      val nsw = s"/root/repo/target/tmp/graft_retune_nsw_$stem"
-      rmTree(new java.io.File(flatDir)); rmTree(new java.io.File(nsw))
+      val flatDir = s"$p/flat"
+      val nsw = s"$p/nsw"
       IvfIndex.save(cent, indexed, flatDir)
       NswIndex.saveNsw(NswIndex.fitGraph(indexed, degree = 4),
         NswIndex.entryPoints(indexed, cent), nsw)
@@ -2298,7 +2248,7 @@ object QueriesSimilarity {
         .select($"id".as("q_id"), $"v".as("qv"))
       NswIndex.refreshWalkTuning(s, flatDir, nsw, Some(driftQ)): Unit
       nsw
-    })
+    }
     val base = s.read.parquet(s"$nswDir/bench_base_tuning")
     val check = phaseRows(s.read.parquet(s"$nswDir/tuning_check"),
       "check", $"stale")
@@ -2466,12 +2416,13 @@ object QueriesSimilarity {
     * regime / q205 residual regime): build + tune the store at the
     * regime, snapshot the pre-refresh base tuning beside it, append
     * the drifting delta (shifted twins), refresh against the drifted
-    * sample. Returns the store path. Session-owned lifecycle cache —
+    * sample. Builds at `store` (a [[Scratch.session]] dir) and
+    * returns it. Session-owned lifecycle cache —
     * the q199/q142 contract: cold bench passes price the full
     * fit/tune/append/refresh lifecycle, the steady pass reads the
     * persisted operating point + audit trail a long-lived deployment
     * serves from. */
-  private def ttRetuneFixture(s: SparkSession, dir: String, stemTag: String,
+  private def ttRetuneFixture(s: SparkSession, dir: String, store: String,
                               residual: Boolean): String = {
     import s.implicits._
     import graft.operators.{IvfIndex, PqIndex}
@@ -2489,9 +2440,6 @@ object QueriesSimilarity {
     val codesIdx = PqIndex.encode(encSrc, cb, m = 4, subDim = 16)
       .join(indexed.select($"id", $"cluster"), Seq("id"))
       .select($"cluster", $"id", $"codes")
-    val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val store = s"/root/repo/target/tmp/graft_${stemTag}_$stem"
-    rmTree(new java.io.File(store))
     PqIndex.saveTwoTier(cent, cb, codesIdx,
       indexed.select($"cluster", $"id", $"v"), store)
     val baseQ = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -2533,8 +2481,8 @@ object QueriesSimilarity {
   }
 
   val q203TwoTierRetune: Q = (s, dir) => {
-    val p = twoTierRetuneCache.computeIfAbsent(dir,
-      _ => ttRetuneFixture(s, dir, "ttretune", residual = false))
+    val p = Scratch.session("graft_ttretune", dir)(
+      ttRetuneFixture(s, dir, _, residual = false))
     ttRetunePhases(s, p)
   }
 
@@ -2789,8 +2737,8 @@ object QueriesSimilarity {
     * (append ≡ rebuild with the same models), residual grid chains,
     * and both ordered-fold residual-reconstruction error means. */
   val q205TwoTierResidRetune: Q = (s, dir) => {
-    val p = twoTierResidRetuneCache.computeIfAbsent(dir,
-      _ => ttRetuneFixture(s, dir, "ttrretune", residual = true))
+    val p = Scratch.session("graft_ttrretune", dir)(
+      ttRetuneFixture(s, dir, _, residual = true))
     ttRetunePhases(s, p)
   }
 
@@ -2861,11 +2809,11 @@ object QueriesSimilarity {
     * post-refit tuning table ∪ baseline row on one hash. */
   /** Shared builder for the two-tier refit fixtures (q204 raw / q206
     * residual): build + tune at the regime, append the drifting
-    * delta, then [[graft.operators.PqIndex.refitTwoTier]]. Returns
-    * the store path. Session-cache contract as [[ttRetuneFixture]]:
+    * delta, then [[graft.operators.PqIndex.refitTwoTier]]. Builds
+    * at and returns `store`. Session-cache contract as [[ttRetuneFixture]]:
     * cold passes price the full build/tune/append/refit lifecycle,
     * steady reads the post-refit store a deployment serves from. */
-  private def ttRefitFixture(s: SparkSession, dir: String, stemTag: String,
+  private def ttRefitFixture(s: SparkSession, dir: String, store: String,
                              residual: Boolean): String = {
     import s.implicits._
     import graft.operators.{IvfIndex, PqIndex}
@@ -2882,9 +2830,6 @@ object QueriesSimilarity {
     val codesIdx = PqIndex.encode(encSrc, cb, m = 4, subDim = 16)
       .join(indexed.select($"id", $"cluster"), Seq("id"))
       .select($"cluster", $"id", $"codes")
-    val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val store = s"/root/repo/target/tmp/graft_${stemTag}_$stem"
-    rmTree(new java.io.File(store))
     PqIndex.saveTwoTier(cent, cb, codesIdx,
       indexed.select($"cluster", $"id", $"v"), store)
     val baseQ = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -2918,8 +2863,8 @@ object QueriesSimilarity {
   }
 
   val q204TwoTierRefit: Q = (s, dir) => {
-    val p = twoTierRefitCache.computeIfAbsent(dir,
-      _ => ttRefitFixture(s, dir, "ttrefit", residual = false))
+    val p = Scratch.session("graft_ttrefit", dir)(
+      ttRefitFixture(s, dir, _, residual = false))
     ttRefitPhases(s, p)
   }
 
@@ -3025,8 +2970,8 @@ object QueriesSimilarity {
     * base sample, the choice rule, and the reset ordered-fold
     * residual baseline. */
   val q206TwoTierResidRefit: Q = (s, dir) => {
-    val p = twoTierResidRefitCache.computeIfAbsent(dir,
-      _ => ttRefitFixture(s, dir, "ttrrefit", residual = true))
+    val p = Scratch.session("graft_ttrrefit", dir)(
+      ttRefitFixture(s, dir, _, residual = true))
     ttRefitPhases(s, p)
   }
 
@@ -3080,82 +3025,6 @@ object QueriesSimilarity {
        |         CAST(NULL AS DOUBLE), q.mean_qerr, q.n_rows, FALSE
        |  FROM qfit q)
        |ORDER BY phase, n_probe""".stripMargin
-  }
-
-  /** Session-owned persisted-store caches for the two-tier lifecycle
-    * gates — see q142/q146. Values are store directories under
-    * target/tmp, deleted on clear. */
-  private val twoTierStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierTtCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswRetuneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierRetuneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierRefitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierResidRetuneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierResidRefitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // round-15: the heaviest steady lifecycle fixtures take the same
-  // contract (r14 verdict #2) — values are the NSW/two-tier end-state
-  // dirs; NSW pairs derive the flat sibling from the stem tag
-  private val nswSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswDeleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswTuneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierDeleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswTtCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop (and delete) the session-owned index stores — [[Bench]] calls
-    * this before each COLD pass so cold numbers carry the fit + save
-    * (+ append) lifecycle (the [[QueriesText.clearSessionCaches]]
-    * contract). */
-  private[graft] def clearSessionCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (twoTierStoreCache.values.asScala ++ twoTierAppendCache.values.asScala ++
-        twoTierTtCache.values.asScala ++
-        twoTierRetuneCache.values.asScala ++ twoTierRefitCache.values.asScala ++
-        twoTierResidRetuneCache.values.asScala ++
-        twoTierResidRefitCache.values.asScala ++
-        twoTierDeleteCache.values.asScala ++
-        nswAppendCache.values.asScala)
-      .foreach(p => rmTree(new java.io.File(p)))
-    // the NSW fixtures own a flat/nsw dir PAIR; each cache holds the
-    // nsw path, the flat sibling differs only in the stem tag
-    (nswRetuneCache.values.asScala.map((_, "graft_retune_nsw_", "graft_retune_flat_")) ++
-        nswSplitCache.values.asScala.map((_, "graft_nswsplit_nsw_", "graft_nswsplit_flat_")) ++
-        nswDeleteCache.values.asScala.map((_, "graft_nswdel_nsw_", "graft_nswdel_flat_")) ++
-        nswTtCache.values.asScala.map((_, "graft_nswtt_nsw_", "graft_nswtt_flat_")) ++
-        nswTuneCache.values.asScala.map((_, "q194_nsw_", "q194_flat_")))
-      .foreach { case (p, nswTag, flatTag) =>
-        rmTree(new java.io.File(p))
-        rmTree(new java.io.File(p.replace(nswTag, flatTag)))
-      }
-    twoTierStoreCache.clear()
-    twoTierAppendCache.clear()
-    twoTierTtCache.clear()
-    nswRetuneCache.clear()
-    twoTierRetuneCache.clear()
-    twoTierRefitCache.clear()
-    twoTierResidRetuneCache.clear()
-    twoTierResidRefitCache.clear()
-    nswSplitCache.clear()
-    nswDeleteCache.clear()
-    nswTuneCache.clear()
-    twoTierDeleteCache.clear()
-    nswAppendCache.clear()
-    nswTtCache.clear()
   }
 
   val catalog: Seq[(String, Q, Option[String])] = Seq(

@@ -8,18 +8,15 @@ import org.apache.spark.sql.functions._
 import graft.sources.Readers
 
 /** Source/sink round-trip catalog (SURVEY.md §2.1): each query writes a
-  * fixture in the source's native format under the repo's scratch dir,
-  * reads it back through [[Readers]], and surfaces the recovered rows —
-  * so the oracle over the original parquet table gates the full
-  * sink → reader → cast path, not just a happy-path spec.
+  * fixture in the source's native format to a [[Scratch.session]] dir
+  * (keyed on the data dir's full path, so two data dirs never
+  * collide), reads it back through [[Readers]], and surfaces the
+  * recovered rows — so the oracle over the original parquet table
+  * gates the full sink → reader → cast path, not just a happy-path
+  * spec.
   */
 object QueriesSources {
   import Queries.Q
-
-  /** Repo-local scratch (the driver forbids writes outside the repo);
-    * suffixed with the sf-dir name so scale factors never collide. */
-  private def scratch(tag: String, dir: String): String =
-    s"/root/repo/target/tmp/${tag}_${new File(dir).getName}"
 
   // ---------------------------------------------------------------- q42
   /** S4/S5 XML round-trip: nation → built-in XML sink → [[Readers.xml]]
@@ -28,7 +25,7 @@ object QueriesSources {
     * semantics, and the no-inference policy. */
   val q42XmlRoundtrip: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q42_xml", dir)
+    val out = Scratch.session("q42_xml", dir)(identity)
     Tables.nation(s, dir)
       .select($"n_nationkey", $"n_name", $"n_regionkey")
       .write.mode("overwrite")
@@ -51,7 +48,7 @@ object QueriesSources {
     * recover the datetime (surfaced as epoch seconds, never raw). */
   val q43TsvFooter: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q43_tsv", dir)
+    val out = Scratch.session("q43_tsv", dir)(identity)
     val n = Tables.supplier(s, dir).count()
     Tables.supplier(s, dir)
       .select($"s_suppkey", $"s_name", $"s_nationkey",
@@ -94,7 +91,7 @@ object QueriesSources {
     * the original parquet. */
   val q53JsonlRoundtrip: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q53_jsonl", dir)
+    val out = Scratch.session("q53_jsonl", dir)(identity)
     val docs = Tables.documents(s, dir)
     Readers.writeJsonl(docs, out)
     Readers.jsonl(s, out, docs.schema)
@@ -111,7 +108,7 @@ object QueriesSources {
     * (surfaced as epoch millis under the q47 rule). */
   val q54OrcRoundtrip: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q54_orc", dir)
+    val out = Scratch.session("q54_orc", dir)(identity)
     Readers.writeOrc(
       Tables.events(s, dir).select($"event_id", $"ts", $"user_id", $"event_type", $"value"),
       out)
@@ -135,7 +132,7 @@ object QueriesSources {
     * spans (what the scan-skipping exists for). */
   val q69ZOrderRoundtrip: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q69_zorder", dir)
+    val out = Scratch.session("q69_zorder", dir)(identity)
     graft.sources.Layout.writeZOrdered(
       Tables.events(s, dir).select($"event_id", $"user_id", $"event_type", $"value"),
       out, Seq("user_id", "value"), nFiles = 16)
@@ -168,7 +165,7 @@ object QueriesSources {
     * row-group skipping feeds on. */
   val q183HilbertRoundtrip: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q183_hilbert", dir)
+    val out = Scratch.session("q183_hilbert", dir)(identity)
     graft.sources.Layout.writeHilbertOrdered(
       Tables.events(s, dir).select($"event_id", $"user_id", $"event_type", $"value"),
       out, Seq("user_id", "value"), nFiles = 16)
@@ -191,7 +188,7 @@ object QueriesSources {
     * including the text payload (md5-checked). */
   val q78PartitionPrune: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q78_part", dir)
+    val out = Scratch.session("q78_part", dir)(identity)
     graft.sources.Layout.writeHivePartitioned(
       Tables.documents(s, dir), out, Seq("lang"))
     s.read.parquet(out)
@@ -219,7 +216,7 @@ object QueriesSources {
     * why additive (never type-changing) evolution is the rule. */
   val q83SchemaEvolution: Q = (s, dir) => {
     import s.implicits._
-    val out = scratch("q83_evo", dir)
+    val out = Scratch.session("q83_evo", dir)(identity)
     val orders = Tables.orders(s, dir)
     orders.filter($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_totalprice")
@@ -259,11 +256,13 @@ object QueriesSources {
     s.sql(s"DROP TABLE IF EXISTS $ot")
     s.sql(s"DROP TABLE IF EXISTS $ct")
     Tables.orders(s, dir).select($"o_orderkey", $"o_custkey", $"o_totalprice")
-      .write.mode("overwrite").option("path", scratch("q85_orders", dir))
+      .write.mode("overwrite")
+      .option("path", Scratch.session("q85_orders", dir)(identity))
       .bucketBy(8, "o_custkey").sortBy("o_custkey")
       .format("parquet").saveAsTable(ot)
     Tables.customer(s, dir).select($"c_custkey", $"c_mktsegment")
-      .write.mode("overwrite").option("path", scratch("q85_customer", dir))
+      .write.mode("overwrite")
+      .option("path", Scratch.session("q85_customer", dir)(identity))
       .bucketBy(8, "c_custkey").sortBy("c_custkey")
       .format("parquet").saveAsTable(ct)
     graft.sources.Bucketing.readBucketed(s, ot)

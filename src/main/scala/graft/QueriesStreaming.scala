@@ -26,14 +26,13 @@ object QueriesStreaming {
   private[graft] def streamableDir(dir: String, name: String, tag: String): String = {
     val target = java.nio.file.Paths.get(s"$dir/$name")
     if (java.nio.file.Files.isDirectory(target)) target.toString
-    else {
-      val watch = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/${tag}_${new java.io.File(dir).getName}")
-      java.nio.file.Files.createDirectories(watch)
-      val link = watch.resolve(name)
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(link, target)
-      watch.toString
+    else Scratch.session(tag, dir) { watch =>
+      // keyed on the data dir's FULL path: two dirs that share a
+      // basename (two `sf0.1` copies) each stream their own file
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(watch, name), target)
+      watch
     }
   }
 
@@ -462,19 +461,18 @@ object QueriesStreaming {
     val corpus = s.read.parquet(file)
       .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
       .select($"doc_id", $"text")
-    val tag = new java.io.File(dir).getName.replace('.', '_')
-    // session-owned store cache (the bpeMergeCache contract): a
-    // production ingest service builds the corpus store ONCE and serves
-    // every later micro-batch from it — the steady number models that;
-    // Bench clears this before cold passes so cold carries the build
-    val prefix = dedupStoreCache.computeIfAbsent(dir, _ => {
-      val p = s"q132_store_$tag"
+    val prefix = s"q132_store_${new java.io.File(dir).getName.replace('.', '_')}"
+    // session-owned store ([[Scratch.session]]): a production ingest
+    // service builds the corpus store ONCE and serves every later
+    // micro-batch from it — the steady number models that; Bench
+    // clears the session before cold passes so cold carries the build
+    val store = Scratch.session("q132_store", dir) { d =>
+      val path = s"$d/store"
       graft.operators.TextDedup.writeDedupStoreBucketed(
         corpus, "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
-        namePrefix = p,
-        pathPrefix = s"/root/repo/target/tmp/$p", buckets = 8)
-      p
-    })
+        namePrefix = prefix, pathPrefix = path, buckets = 8)
+      path
+    }
     def arriving = s.readStream.schema(schema).parquet(watch)
       .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
     val delta = arriving.filter($"b" >= 8).select($"doc_id", $"text")
@@ -486,7 +484,7 @@ object QueriesStreaming {
       .unionByName(arriving.filter($"b" >= 8 && $"doc_id" % 13 === 0)
         .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
     val flags = graft.operators.TextDedup.ingestFlagsBucketed(
-      delta, "doc_id", "text", prefix, s"/root/repo/target/tmp/$prefix",
+      delta, "doc_id", "text", prefix, store,
       shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
     val name = s"q132_neardup_${System.nanoTime()}"
     EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
@@ -532,7 +530,7 @@ object QueriesStreaming {
           concat($"text", lit(" zz qq")).as("text")))
       .unionByName(base.filter($"b" >= 8 && $"doc_id" % 13 === 0)
         .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
-    val tag = new java.io.File(dir).getName.replace('.', '_')
+    val name = s"q189_store_${new java.io.File(dir).getName.replace('.', '_')}"
     def flags(p: String, path: String) = graft.operators.TextDedup
       .ingestFlagsBucketed(delta, "doc_id", "text", p, path,
         shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
@@ -545,11 +543,8 @@ object QueriesStreaming {
     // whole sequence IS the lifecycle cold passes price); steady
     // passes classify the same delta against the COMPACTED store —
     // identical verdicts by the very invariance the builder asserts
-    val p = dedupDeleteStoreCache.computeIfAbsent(dir, _ => {
-      val name = s"q189_store_$tag"
-      val path = s"/root/repo/target/tmp/$name"
-      // fresh tombstones: the store rebuild resets state
-      rmTree(new java.io.File(s"${path}_tombstones"))
+    val store = Scratch.session("q189_store", dir) { d =>
+      val path = s"$d/store"
       graft.operators.TextDedup.writeDedupStoreBucketed(corpus, "doc_id",
         "text", shingleN = 5, k = 8, rowsPerBand = 2,
         namePrefix = name, pathPrefix = path, buckets = 8)
@@ -563,9 +558,9 @@ object QueriesStreaming {
       graft.operators.TextDedup.compactDedupStore(s, name, path, buckets = 8)
       require(flags(name, path).collect().toSeq == tombstoned,
         "compaction changed ingest verdicts")
-      name
-    })
-    flags(p, s"/root/repo/target/tmp/$p")
+      path
+    }
+    flags(name, store)
   }
   val q189Sql: String = nearDupIngestSql("doc_id % 5 <> 1")
 
@@ -589,23 +584,20 @@ object QueriesStreaming {
     val corpus = s.read.parquet(file)
       .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
       .select($"doc_id", $"text")
-    val tag = new java.io.File(dir).getName.replace('.', '_')
+    val p = s"q198_store_${new java.io.File(dir).getName.replace('.', '_')}"
     // session-owned lifecycle cache (the q142 contract, r14 verdict #2):
     // store build + tombstoning run ONCE per session; steady passes
     // price the STREAMING transport against the tombstoned store (the
     // thing this gate exists to cover), cold passes the full lifecycle
-    val p = dedupStreamDelStoreCache.computeIfAbsent(dir, _ => {
-      val name = s"q198_store_$tag"
-      val path = s"/root/repo/target/tmp/$name"
-      rmTree(new java.io.File(s"${path}_tombstones"))
+    val store = Scratch.session("q198_store", dir) { d =>
+      val path = s"$d/store"
       graft.operators.TextDedup.writeDedupStoreBucketed(corpus, "doc_id",
         "text", shingleN = 5, k = 8, rowsPerBand = 2,
-        namePrefix = name, pathPrefix = path, buckets = 8)
+        namePrefix = p, pathPrefix = path, buckets = 8)
       graft.operators.TextDedup.deleteFromDedupStore(s, path,
         corpus.filter($"doc_id" % 5 === 1).select($"doc_id"))
-      name
-    })
-    val path = s"/root/repo/target/tmp/$p"
+      path
+    }
     def arriving = s.readStream.schema(schema).parquet(watch)
       .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
     val delta = arriving.filter($"b" >= 8).select($"doc_id", $"text")
@@ -617,7 +609,7 @@ object QueriesStreaming {
       .unionByName(arriving.filter($"b" >= 8 && $"doc_id" % 13 === 0)
         .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
     val flags = graft.operators.TextDedup.ingestFlagsBucketed(
-      delta, "doc_id", "text", p, path,
+      delta, "doc_id", "text", p, store,
       shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
     val name = s"q198_deldup_${System.nanoTime()}"
     EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
@@ -652,8 +644,8 @@ object QueriesStreaming {
     val file = s"$dir/embeddings.parquet"
     val e = s.read.parquet(file)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-    val storeBase = twoTierStreamDelCache.computeIfAbsent(dir, _ => {
-      val (b, stream) = stagedMultiBatchStream(s, file, "q201", dir,
+    val storeBase = Scratch.session("graft_q201", dir) { b =>
+      val stream = stagedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9))
       val p = b + "/store"
       val base = e.filter($"id" % 10 < 9)
@@ -704,7 +696,7 @@ object QueriesStreaming {
         .start()
       )
       b
-    })
+    }
     val (cent2, cb2, codes2, full2) =
       PqIndex.loadTwoTier(s, storeBase + "/store")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -731,8 +723,8 @@ object QueriesStreaming {
     val file = s"$dir/embeddings.parquet"
     val e = s.read.parquet(file)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-    val base = nswStreamDelCache.computeIfAbsent(dir, _ => {
-      val (b, stream) = stagedMultiBatchStream(s, file, "q202", dir,
+    val base = Scratch.session("graft_q202", dir) { b =>
+      val stream = stagedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9))
       val nswDir = b + "/nsw"
       val flatDir = b + "/flat"
@@ -790,7 +782,7 @@ object QueriesStreaming {
         .start()
       )
       b
-    })
+    }
     val (graph, entries) = NswIndex.loadNsw(s, base + "/nsw")
     val (centF, idxAll) = IvfIndex.load(s, base + "/flat")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -825,8 +817,8 @@ object QueriesStreaming {
     val file = s"$dir/embeddings.parquet"
     val e = s.read.parquet(file)
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-    val storeBase = twoTierStreamRefitCache.computeIfAbsent(dir, _ => {
-      val (b, stream) = keyedMultiBatchStream(s, file, "q207", dir,
+    val storeBase = Scratch.session("graft_q207", dir) { b =>
+      val stream = keyedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9),
         expr("vec_id div 10") % 4)
       val p = b + "/store"
@@ -873,7 +865,7 @@ object QueriesStreaming {
         .start()
       )
       b
-    })
+    }
     val (cent2, cb2, codes2, full2) =
       PqIndex.loadTwoTier(s, storeBase + "/store")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
@@ -889,47 +881,6 @@ object QueriesStreaming {
         lit(null).cast("double").as("ad2"), lit(null).cast("double").as("d2"),
         $"mean_qerr", $"n_rows")
     serve.unionByName(baseline).orderBy($"phase", $"q_id", $"rank")
-  }
-
-  private val twoTierStreamDelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nswStreamDelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoTierStreamRefitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val dedupStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // round-15 (r14 verdict #2): the q189/q198 delete-lifecycle stores
-  // take the same contract; values are name prefixes under target/tmp
-  // (the dedupStoreCache convention — builders reset their own state)
-  private val dedupDeleteStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dedupStreamDelStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** q187's stream-built two-tier stores, one scratch base per data
-    * dir — the q142 serving contract: steady passes load+search the
-    * stream-maintained store, cold passes re-run the whole 4-batch
-    * ingest after the clear. */
-  private val nswIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop the session-owned store markers — [[Bench]] calls this
-    * before each COLD pass so cold numbers carry the store builds
-    * (the [[QueriesText.clearSessionCaches]] contract). */
-  private[graft] def clearSessionCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (nswIngestCache.values.asScala ++ twoTierStreamDelCache.values.asScala ++
-        nswStreamDelCache.values.asScala ++
-        twoTierStreamRefitCache.values.asScala)
-      .foreach(p => rmTree(new java.io.File(p)))
-    dedupStoreCache.clear()
-    dedupDeleteStoreCache.clear()
-    dedupStreamDelStoreCache.clear()
-    nswIngestCache.clear()
-    twoTierStreamDelCache.clear()
-    nswStreamDelCache.clear()
-    twoTierStreamRefitCache.clear()
   }
 
   /** Registry: name → (spark program, oracle sql). */
@@ -956,8 +907,8 @@ object QueriesStreaming {
       .select(explode(regexp_extract_all(lower($"text"),
         lit("[a-z]+"), lit(0))).as("w"))
       .select(substring($"w", 1, 1).as("key"))
-    val (base, staged) = stagedMultiBatchStream(s, file, "q143", dir, identity)
-    try {
+    Scratch.withTempDir("graft_q143") { base =>
+      val staged = stagedMultiBatchStream(s, file, base, identity)
       val stream = initials(staged)
       val acc = new java.util.concurrent.atomic.AtomicReference[
         (Seq[graft.functions.MisraGriesAgg.Entry], Long)]((Seq.empty, 0L))
@@ -985,7 +936,7 @@ object QueriesStreaming {
         .withColumnRenamed("key", "ch")
         .orderBy($"ch")
         .localCheckpoint() // materialize before the scratch dir is deleted
-    } finally rmTree(new java.io.File(base))
+    }
   }
 
   /** Shared multi-batch staging harness of q143/q166/q172/q173: copy
@@ -993,22 +944,19 @@ object QueriesStreaming {
     * run-unique base dir and open it with one file per micro-batch
     * (`maxFilesPerTrigger=1`), so gates exercise the real cross-batch
     * fold rather than a degenerate single batch (the shipped fixture
-    * is one parquet file = one micro-batch). Returns (base, stream);
-    * callers own `base/store`, `base/ckpt`, and the final
-    * `rmTree(base)`. */
+    * is one parquet file = one micro-batch). The corpus is staged at
+    * `base/watch`; `base` is the caller's scratch dir (a
+    * [[Scratch.withTempDir]] or [[Scratch.session]] dir), and callers
+    * own `base/store` and `base/ckpt` beside it. */
   private def stagedMultiBatchStream(s: SparkSession, srcFile: String,
-                                     tag: String, dir: String,
+                                     base: String,
                                      project: DataFrame => DataFrame)
-      : (String, DataFrame) = {
+      : DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${tag}_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
     val watch = base + "/watch"
     project(s.read.parquet(srcFile)).repartition(4).write.parquet(watch)
     val schema = s.read.parquet(watch).schema
-    (base, s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(watch))
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(watch)
   }
 
   /** [[stagedMultiBatchStream]] with a DETERMINISTIC, SQL-replayable
@@ -1022,14 +970,11 @@ object QueriesStreaming {
     * (q207's refit fits codebooks over exactly the pre-refit
     * arrivals). */
   private[graft] def keyedMultiBatchStream(s: SparkSession, srcFile: String,
-                                    tag: String, dir: String,
+                                    base: String,
                                     project: DataFrame => DataFrame,
                                     key: org.apache.spark.sql.Column)
-      : (String, DataFrame) = {
+      : DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${tag}_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
     val watch = new java.io.File(base + "/watch")
     watch.mkdirs(): Unit
     val src = project(s.read.parquet(srcFile))
@@ -1042,7 +987,7 @@ object QueriesStreaming {
     val outOfRange = src
       .filter(key.isNull || key < 0 || key > 3).count()
     require(outOfRange == 0,
-      s"keyedMultiBatchStream($tag): key expression must range over " +
+      s"keyedMultiBatchStream($base): key expression must range over " +
         s"0..3 but $outOfRange source rows fall outside (or are null) " +
         "— those rows would be silently dropped from the staged corpus")
     val now = System.currentTimeMillis()
@@ -1059,18 +1004,10 @@ object QueriesStreaming {
       dst.setLastModified(now - 40000L + k * 10000L): Unit
     }
     val schema = s.read.parquet(watch.toString).schema
-    (base, s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(watch.toString))
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(watch.toString)
   }
 
-  /** Recursive scratch-dir delete (null-safe listFiles). */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-    }
-    f.delete(): Unit
-  }
   /** Same oracle as q138 — end-of-stream state must equal the batch
     * computation on the same corpus. */
   val q143Sql: String = QueriesText.q138Sql
@@ -1113,11 +1050,11 @@ object QueriesStreaming {
     import s.implicits._
     import graft.functions.TDigest
     val file = s"$dir/documents.parquet"
-    val (base, stream) = stagedMultiBatchStream(s, file, "q166", dir,
-      _.select($"source", $"n_chars".cast("double").as("x")))
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q166") { base =>
+      val stream = stagedMultiBatchStream(s, file, base,
+        _.select($"source", $"n_chars".cast("double").as("x")))
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch {
@@ -1134,7 +1071,7 @@ object QueriesStreaming {
         .select($"source", $"n_chars".cast("double").as("x"))
       QueriesScale.digestFlagReport(s,
         docs, s.read.parquet(store).select($"source", $"digest"))
-    } finally rmTree(new java.io.File(base))
+    }
   }
 
   // ---------------------------------------------------------------- q172
@@ -1150,11 +1087,11 @@ object QueriesStreaming {
   val q172StreamBitmap: Q = (s, dir) => {
     import s.implicits._
     val file = s"$dir/events.parquet"
-    val (base, stream) = stagedMultiBatchStream(s, file, "q172", dir,
-      _.select($"event_type", $"user_id"))
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q172") { base =>
+      val stream = stagedMultiBatchStream(s, file, base,
+        _.select($"event_type", $"user_id"))
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch {
@@ -1173,7 +1110,7 @@ object QueriesStreaming {
       )
       QueriesScale.bitmapDistinctReport(s,
         s.read.parquet(store).select($"event_type", $"bkt", $"bm"))
-    } finally rmTree(new java.io.File(base))
+    }
   }
 
   // ---------------------------------------------------------------- q173
@@ -1190,11 +1127,11 @@ object QueriesStreaming {
   val q173MaterializedView: Q = (s, dir) => {
     import s.implicits._
     val file = s"$dir/events.parquet"
-    val (base, stream) = stagedMultiBatchStream(s, file, "q173", dir,
-      _.select($"user_id", $"value"))
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q173") { base =>
+      val stream = stagedMultiBatchStream(s, file, base,
+        _.select($"user_id", $"value"))
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
         keyCols = Seq("user_id"),
         batchAggs = Seq(count(lit(1)).as("n"), sum($"value").as("v")),
@@ -1216,7 +1153,7 @@ object QueriesStreaming {
           round($"v", 2).as("value_sum"))
         .orderBy($"user_id")
         .localCheckpoint() // user-cardinality-sized; pre-cleanup
-    } finally rmTree(new java.io.File(base))
+    }
   }
   val q173Sql: String =
     """SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS value_sum
@@ -1253,13 +1190,13 @@ object QueriesStreaming {
   val q215AggTimeTravel: Q = (s, dir) => {
     import s.implicits._
     val file = s"$dir/events.parquet"
-    val (base, stream) = keyedMultiBatchStream(s, file, "q215", dir,
-      _.select($"event_id", $"user_id",
-        round($"value" * 100).cast("long").as("cents")),
-      col("event_id") % 4)
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q215") { base =>
+      val stream = keyedMultiBatchStream(s, file, base,
+        _.select($"event_id", $"user_id",
+          round($"value" * 100).cast("long").as("cents")),
+        col("event_id") % 4)
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
         keyCols = Seq("user_id"),
         batchAggs = Seq(count(lit(1)).as("n"), sum($"cents").as("c")),
@@ -1280,7 +1217,7 @@ object QueriesStreaming {
         .toDF("gen", "n_users", "n_events", "cents")
       perGen.unionByName(gensRow).orderBy($"gen")
         .localCheckpoint() // 5 rows; pre-cleanup (store lives under base)
-    } finally rmTree(new java.io.File(base))
+    }
   }
   val q215Sql: String = {
     val perGen = (0 to 3).map { g =>
@@ -1334,13 +1271,13 @@ object QueriesStreaming {
   val q217AggRetraction: Q = (s, dir) => {
     import s.implicits._
     val file = s"$dir/events.parquet"
-    val (base, stream) = keyedMultiBatchStream(s, file, "q217", dir,
-      _.select($"event_id", $"user_id",
-        round($"value" * 100).cast("long").as("cents")),
-      col("event_id") % 4)
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q217") { base =>
+      val stream = keyedMultiBatchStream(s, file, base,
+        _.select($"event_id", $"user_id",
+          round($"value" * 100).cast("long").as("cents")),
+        col("event_id") % 4)
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
         keyCols = Seq("user_id"),
         batchAggs = Seq(count(lit(1)).as("n"), sum($"cents").as("c")),
@@ -1363,7 +1300,7 @@ object QueriesStreaming {
         .toDF("gen", "n_users", "n_events", "cents")
       perGen.unionByName(metaRow).orderBy($"gen")
         .localCheckpoint() // 5 rows; pre-cleanup (store lives under base)
-    } finally rmTree(new java.io.File(base))
+    }
   }
   val q217Sql: String = {
     val perGen = (0 to 3).map { g =>
@@ -1402,12 +1339,12 @@ object QueriesStreaming {
   val q177StreamExactMedian: Q = (s, dir) => {
     import s.implicits._
     val file = s"$dir/events.parquet"
-    val (base, stream) = stagedMultiBatchStream(s, file, "q177", dir,
-      _.select($"event_type",
-        round($"value" * 100).cast("long").as("cents")))
-    val store = base + "/store"
-    val ckpt = base + "/ckpt"
-    try {
+    Scratch.withTempDir("graft_q177") { base =>
+      val stream = stagedMultiBatchStream(s, file, base,
+        _.select($"event_type",
+          round($"value" * 100).cast("long").as("cents")))
+      val store = base + "/store"
+      val ckpt = base + "/ckpt"
       EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
         keyCols = Seq("event_type", "cents"),
         batchAggs = Seq(count(lit(1)).as("cnt")),
@@ -1430,7 +1367,7 @@ object QueriesStreaming {
           min($"cents").as("value"))
         .orderBy($"event_type")
         .localCheckpoint() // type-cardinality-sized; pre-cleanup
-    } finally rmTree(new java.io.File(base))
+    }
   }
 
   // ---------------------------------------------------------------- q187
@@ -1458,9 +1395,9 @@ object QueriesStreaming {
     // session-owned stream-built store (the q142 serving contract):
     // the 4-batch ingest runs once per session; steady bench passes
     // load+search the maintained store, cold passes re-ingest after
-    // clearSessionCaches
-    val base = nswIngestCache.computeIfAbsent(dir, _ => {
-      val (b, stream) = stagedMultiBatchStream(s, file, "q187", dir,
+    // the [[Scratch.session]] clear
+    val base = Scratch.session("graft_q187", dir) { b =>
+      val stream = stagedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9))
       val nswDir = b + "/nsw"
       val flatDir = b + "/flat"
@@ -1530,7 +1467,7 @@ object QueriesStreaming {
         .start()
       )
       b
-    })
+    }
     val (graph, entries) = NswIndex.loadNsw(s, base + "/nsw")
     val (centF, idxAll) = IvfIndex.load(s, base + "/flat")
     val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))

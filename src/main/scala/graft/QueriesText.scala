@@ -1154,17 +1154,20 @@ object QueriesText {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val bucket = graft.operators.Sampling.hashBucket($"doc_id", 10)
-    val tag = new java.io.File(dir).getName.replace('.', '_')
-    val storeDir = s"/root/repo/target/tmp/q133_freqs_$tag"
-    // state write: what a PRIOR training run would have persisted
-    graft.operators.BpeTrain
-      .wordFreqs(docs.filter(bucket < 8), "text")
-      .write.mode("overwrite").parquet(storeDir)
-    // refresh: delta scan + vocabulary-sized merge + re-learn
-    val merged = graft.operators.BpeTrain.mergeFreqs(
-      s.read.parquet(storeDir),
-      graft.operators.BpeTrain.wordFreqs(docs.filter(bucket >= 8), "text"))
-    graft.operators.BpeTrain.learnMerges(s, merged, merges = 6)
+    // learnMerges returns the trajectory to the driver, so the result
+    // frame never reads the state store after its dir is deleted
+    val trajectory = Scratch.withTempDir("q133_freqs") { storeDir =>
+      // state write: what a PRIOR training run would have persisted
+      graft.operators.BpeTrain
+        .wordFreqs(docs.filter(bucket < 8), "text")
+        .write.mode("overwrite").parquet(storeDir)
+      // refresh: delta scan + vocabulary-sized merge + re-learn
+      val merged = graft.operators.BpeTrain.mergeFreqs(
+        s.read.parquet(storeDir),
+        graft.operators.BpeTrain.wordFreqs(docs.filter(bucket >= 8), "text"))
+      graft.operators.BpeTrain.learnMerges(s, merged, merges = 6)
+    }
+    trajectory
       .map { case (st, l, r, c) => (st.toLong, l, r, c) }
       .toDF("step", "left", "right", "pair_count")
       .orderBy($"step")
@@ -1188,10 +1191,7 @@ object QueriesText {
     * document token. */
   val q125BpeEncode: Q = (s, dir) => {
     import s.implicits._
-    val merges = bpeMergeCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.learnMerges(s,
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges = 6).map { case (_, l, r, _) => (l, r) })
+    val merges = bpeMerges(s, dir)
     Tables.documents(s, dir)
       .select($"source",
         // NON-EMPTY tokens only, and docs with zero of them are dropped
@@ -1208,8 +1208,20 @@ object QueriesText {
         sum($"sw").as("n_subwords"))
       .orderBy($"source")
   }
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  /** The six merges learned on `dir`'s corpus (q124's trajectory) and
+    * the vocabulary they induce: in-memory [[Scratch.session]] values,
+    * trained once per session, so a cold pass carries the full
+    * train-and-apply cost instead of a cache hit. */
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    Scratch.session("bpe_merges", dir)(_ =>
+      graft.operators.BpeTrain.learnMerges(s,
+        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
+        merges = 6).map { case (_, l, r, _) => (l, r) })
+  private def bpeVocab(s: SparkSession, dir: String): Map[String, Int] =
+    Scratch.session("bpe_vocab", dir)(_ =>
+      graft.operators.BpeTrain.buildVocab(
+        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
+        bpeMerges(s, dir)))
   val q125Sql: String = {
     val applyRounds = (1 to 6).map { e =>
       s"""t$e AS MATERIALIZED (
@@ -1261,14 +1273,8 @@ object QueriesText {
     * alphabet+merges rows. */
   val q126TokenPipeline: Q = (s, dir) => {
     import s.implicits._
-    val merges = bpeMergeCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.learnMerges(s,
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges = 6).map { case (_, l, r, _) => (l, r) })
-    val vocab = bpeVocabCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.buildVocab(
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges))
+    val merges = bpeMerges(s, dir)
+    val vocab = bpeVocab(s, dir)
     // tokenize ONCE, into SCRATCH PARQUET rather than an eager cache:
     // the encoded-ids table is corpus-sized (one ids string per doc),
     // and three consumers read it (bucket-sizing count, packing fold,
@@ -1278,39 +1284,27 @@ object QueriesText {
     // this write — tokenizer output lands in storage once, downstream
     // stages scan it. The small final result is materialized before
     // the scratch dir is deleted (the q106 lifecycle pattern).
-    val idsDir = sys.props("java.io.tmpdir") +
-      "/graft_tokids_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    // the eligible-doc count (sizes the FFD buckets) rides the write
-    // pass as an observed metric — zero extra scans of the scratch
-    // table, vs a separate count() job re-reading it
-    val elig = org.apache.spark.sql.Observation("q126_eligible")
-    Tables.documents(s, dir)
-      .select($"doc_id",
-        graft.operators.BpeTrain.encodeIds($"text", merges, vocab).as("ids"))
-      .select($"doc_id", array_join($"ids", ",").as("ids_str"),
-        size($"ids").cast("long").as("n_toks"))
-      .observe(elig, coalesce(sum(
-        when($"n_toks" > 0 && $"n_toks" <= 512, 1L).otherwise(0L)),
-        lit(0L)).as("n_eligible"))
-      .write.parquet(idsDir)
-    try {
+    Scratch.withTempDir("graft_tokids") { idsDir =>
+      // the eligible-doc count (sizes the FFD buckets) rides the write
+      // pass as an observed metric — zero extra scans of the scratch
+      // table, vs a separate count() job re-reading it
+      val elig = org.apache.spark.sql.Observation("q126_eligible")
+      Tables.documents(s, dir)
+        .select($"doc_id",
+          graft.operators.BpeTrain.encodeIds($"text", merges, vocab).as("ids"))
+        .select($"doc_id", array_join($"ids", ",").as("ids_str"),
+          size($"ids").cast("long").as("n_toks"))
+        .observe(elig, coalesce(sum(
+          when($"n_toks" > 0 && $"n_toks" <= 512, 1L).otherwise(0L)),
+          lit(0L)).as("n_eligible"))
+        .write.parquet(idsDir)
       val docs = s.read.parquet(idsDir)
       val nEligible = elig.get("n_eligible").asInstanceOf[Long]
       packTokenShards(docs, nEligible)
         .orderBy($"bin_key")
         .localCheckpoint() // bins-sized; materialize before scratch cleanup
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val k = f.listFiles(); if (k != null) k.foreach(rm) }
-        f.delete(): Unit
-      }
-      rm(new java.io.File(idsDir))
     }
   }
-  private val bpeVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Int]]()
-
   /** Shared pack-and-assemble tail of q126 (whole corpus) and q135 (per
     * micro-batch): FFD-pack the encoded docs into 512-token bins
     * (bucket count scaled to `nEligible`), join the id sequences back,
@@ -1355,14 +1349,8 @@ object QueriesText {
     * independence is pinned separately in `StreamingSpec`. */
   val q135StreamTokenPipeline: Q = (s, dir) => {
     import s.implicits._
-    val merges = bpeMergeCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.learnMerges(s,
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges = 6).map { case (_, l, r, _) => (l, r) })
-    val vocab = bpeVocabCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.buildVocab(
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges))
+    val merges = bpeMerges(s, dir)
+    val vocab = bpeVocab(s, dir)
     val file = s"$dir/documents.parquet"
     val watch = QueriesStreaming.streamableDir(dir, "documents.parquet", "q135_docs")
     val schema = s.read.parquet(file).schema
@@ -1372,15 +1360,13 @@ object QueriesText {
       .select($"doc_id", array_join($"ids", ",").as("ids_str"),
         size($"ids").cast("long").as("n_toks"))
     // run-unique shard store: the sink is idempotent WITHIN a run
-    // (batch_id partitions); a previous run's shards must not leak in
-    val outDir = sys.props("java.io.tmpdir") +
-      "/graft_tokshards_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + java.util.UUID.randomUUID().toString.take(8)
-    // the stream runs inside the try: a failing batch must not leak
-    // the shard store or its checkpoint into java.io.tmpdir
-    try {
+    // (batch_id partitions); a previous run's shards must not leak in.
+    // The stream runs inside withTempDir: a failing batch must not leak
+    // the shard store or its checkpoint
+    Scratch.withTempDir("graft_tokshards") { base =>
+      val outDir = s"$base/shards"
       graft.streaming.EventStreams.runMicroBatches(s)(encoded.writeStream
-        .option("checkpointLocation", s"${outDir}_ckpt")
+        .option("checkpointLocation", s"$base/ckpt")
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            batchId: Long) =>
@@ -1397,22 +1383,9 @@ object QueriesText {
           $"bin_tokens", $"digest")
         .orderBy($"bin_key")
         .localCheckpoint() // bins-sized; materialize before scratch cleanup
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val k = f.listFiles(); if (k != null) k.foreach(rm) }
-        f.delete(): Unit
-      }
-      rm(new java.io.File(outDir))
-      rm(new java.io.File(s"${outDir}_ckpt"))
     }
   }
 
-  /** Drop the session-owned tokenizer caches (merge table + vocab) —
-    * [[Bench]] calls this before each COLD pass so cold numbers carry
-    * the full train-and-apply cost instead of a cache hit. */
-  private[graft] def clearSessionCaches(): Unit = {
-    bpeMergeCache.clear(); bpeVocabCache.clear()
-  }
   val q126Sql: String = {
     val digits = (1 to 8).map { p =>
       s"(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
@@ -1556,14 +1529,8 @@ object QueriesText {
     * shows up as mismatches and a shifted char total. */
   val q131Detokenize: Q = (s, dir) => {
     import s.implicits._
-    val merges = bpeMergeCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.learnMerges(s,
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges = 6).map { case (_, l, r, _) => (l, r) })
-    val vocab = bpeVocabCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.buildVocab(
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges))
+    val merges = bpeMerges(s, dir)
+    val vocab = bpeVocab(s, dir)
     val byteFix = Tables.documents(s, dir)
       .withColumn("text", regexp_replace($"text", "e", "é"))
     val byteFreqs = graft.operators.BpeTrain.wordFreqs(byteFix, "text")
@@ -1627,14 +1594,8 @@ object QueriesText {
     * vocabulary, dedup, encoding and the id sum. */
   val q136SqlCuration: Q = (s, dir) => {
     graft.plans.GraftFunctions.register(s)
-    val merges = bpeMergeCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.learnMerges(s,
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges = 6).map { case (_, l, r, _) => (l, r) })
-    val vocab = bpeVocabCache.computeIfAbsent(dir, _ =>
-      graft.operators.BpeTrain.buildVocab(
-        graft.operators.BpeTrain.wordFreqs(Tables.documents(s, dir), "text"),
-        merges))
+    val merges = bpeMerges(s, dir)
+    val vocab = bpeVocab(s, dir)
     def sqlLit(x: String) = x.replace("\\", "\\\\").replace("'", "\\'")
     val mspec = sqlLit(graft.plans.GraftFunctions.mergesToSpec(merges))
     val vspec = sqlLit(graft.plans.GraftFunctions.vocabToSpec(vocab))

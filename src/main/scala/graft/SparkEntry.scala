@@ -22,17 +22,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map { case (name, q, _) => name -> q }.toMap
 
-  /** Drop every catalog's session-owned caches (tokenizer tables,
-    * classifier fits, the index, dedup and pipeline stores they built)
-    * — what the timing mains call before each cold pass. */
-  private[graft] def clearSessionCaches(): Unit = {
-    QueriesText.clearSessionCaches()
-    QueriesCurate.clearSessionCaches()
-    QueriesStreaming.clearSessionCaches()
-    QueriesSimilarity.clearSessionCaches()
-    QueriesPipeline.clearSessionCaches()
-  }
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

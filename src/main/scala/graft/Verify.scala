@@ -19,13 +19,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
+    try SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    }
+    } finally Scratch.clearSession() // leave no session dir behind
     // MERGE-ON-WRITE: a subset re-run (dev loop, sf1.0 spot-fix) must
     // not clobber the full catalog's oracle dump — check_oracle_big.py
     // replays this file, so entries for queries not in this run are

@@ -24,10 +24,10 @@ object ExplainDump {
         "q19_pivot", "q29_jaccard_pairs", "q33_knn_brute",
         "q73_repetition", "q77_trigram_lm", "q82_linkage_score", "q85_bucketed_join",
         "q107_incremental_dedup", "q108_domain_cap", "q113_decontaminate")
-    names.foreach { n =>
+    try names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, dir).explain("formatted")
-    }
+    } finally graft.Scratch.clearSession()
     spark.stop()
   }
 }

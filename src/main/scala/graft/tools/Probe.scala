@@ -53,39 +53,6 @@ object Probe {
   }
 }
 
-/** Repeat one catalog query N times in a single session — separates
-  * within-JVM stability from environment noise. */
-object Repeat {
-  def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q30_minhash_lsh")
-    val n = if (args.length > 1) args(1).toInt else 3
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    (1 to n).foreach { i =>
-      val t0 = System.nanoTime()
-      val c0 = osBean.getProcessCpuTime
-      // noop sink, matching Bench: count() would let Catalyst prune
-      // all columns of projection-only queries
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      // process-CPU seconds ride along: the host has heavy external CPU
-      // interference, so wall time alone cannot A/B two implementations —
-      // CPU time measures the actual work done
-      println(f"[repeat] $name iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s  " +
-        f"(cpu ${(osBean.getProcessCpuTime - c0) / 1e9}%.1f s)")
-    }
-    spark.stop()
-  }
-}
-
 /** Dev-only NSW graph-tier scale probe with CORPUS-SCALED k — the
   * honest ×10/×100 shape: the gates pin k=8 for oracle replay, but the
   * documented 100 TB story holds cell size ~constant by scaling the
@@ -141,30 +108,32 @@ object ProbeNsw {
       val g = NswIndex.fitGraph(idxBase, degree = 4).localCheckpoint()
       g.count(); g
     }
-    val stem = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val flat = s"/root/repo/target/tmp/probe_nsw_flat_$stem"
-    val nsw = s"/root/repo/target/tmp/probe_nsw_g_$stem"
-    time("save flat + nsw stores") {
-      IvfIndex.save(cent, idxBase, flat)
-      NswIndex.saveNsw(graph, NswIndex.entryPoints(idxBase, cent), nsw)
+    // the stores are deleted when the probe ends, also when it fails
+    graft.Scratch.withTempDir("probe_nsw") { d =>
+      val flat = s"$d/flat"
+      val nsw = s"$d/nsw"
+      time("save flat + nsw stores") {
+        IvfIndex.save(cent, idxBase, flat)
+        NswIndex.saveNsw(graph, NswIndex.entryPoints(idxBase, cent), nsw)
+      }
+      time("append 10% delta (exact)") {
+        val idxDelta = IvfIndex.assign(delta, cent).localCheckpoint()
+        NswIndex.appendToNsw(spark, nsw, idxBase, idxDelta, cent, degree = 4)
+        idxDelta.write.mode("append").partitionBy("cluster").parquet(s"$flat/index")
+      }
+      time("search 100 queries") {
+        val (g2, en2) = NswIndex.loadNsw(spark, nsw)
+        val (c2, i2) = IvfIndex.load(spark, flat)
+        val qs = e.filter($"id" < 100).select($"id".as("q_id"), $"v".as("qv"))
+        NswIndex.search(spark, qs, g2, i2.select($"id", $"v", $"cluster"),
+          c2, en2, k = 10, nProbe = 2, ef = 16, rounds = 2).count()
+      }
+      val cap = math.max(2L, (n / k) / 2)
+      val split = time(s"split round (cap=$cap, worst case)") {
+        NswIndex.splitOversizedNswCells(spark, flat, nsw, cap, degree = 4)
+      }
+      println(s"[nsw] cells split: $split")
     }
-    time("append 10% delta (exact)") {
-      val idxDelta = IvfIndex.assign(delta, cent).localCheckpoint()
-      NswIndex.appendToNsw(spark, nsw, idxBase, idxDelta, cent, degree = 4)
-      idxDelta.write.mode("append").partitionBy("cluster").parquet(s"$flat/index")
-    }
-    time("search 100 queries") {
-      val (g2, en2) = NswIndex.loadNsw(spark, nsw)
-      val (c2, i2) = IvfIndex.load(spark, flat)
-      val qs = e.filter($"id" < 100).select($"id".as("q_id"), $"v".as("qv"))
-      NswIndex.search(spark, qs, g2, i2.select($"id", $"v", $"cluster"),
-        c2, en2, k = 10, nProbe = 2, ef = 16, rounds = 2).count()
-    }
-    val cap = math.max(2L, (n / k) / 2)
-    val split = time(s"split round (cap=$cap, worst case)") {
-      NswIndex.splitOversizedNswCells(spark, flat, nsw, cap, degree = 4)
-    }
-    println(s"[nsw] cells split: $split")
     spark.stop()
   }
 }

@@ -3,18 +3,18 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Per-query timing over arbitrary data dirs — the dev-loop companion
-  * to [[graft.Bench]] (full catalog, fixed dir) and [[Repeat]] (one
-  * query, CPU-time A/B): times a SUBSET of the catalog at any
-  * directory (typically a [[ScaleUp]]-built 10×/100× corpus) without
-  * paying for the full 140+-query run.
+  * to [[graft.Bench]] (full catalog, fixed dir): times a SUBSET of the
+  * catalog at any directory (typically a [[ScaleUp]]-built 10×/100×
+  * corpus) without paying for the full 140+-query run.
   *
   * Usage: `runMain graft.tools.QueryTimer <sfDir> <q1,q2,…> [reps]` —
   * prints per-query cold and steady (min of `reps` post-cold runs,
   * default 2) wall seconds through the same noop-sink path as Bench,
-  * so numbers are comparable with bench artifacts. For A/B-ing two
-  * IMPLEMENTATIONS on this CPU-noisy host, use [[Repeat]]'s
-  * process-CPU seconds instead — wall time alone can't separate work
-  * from interference.
+  * so numbers are comparable with bench artifacts. Each pass also
+  * prints the process-CPU seconds it used: on a CPU-noisy host wall
+  * time alone can't separate work from interference, so A/B two
+  * IMPLEMENTATIONS on the CPU column. A name listed twice runs twice,
+  * each time from a cleared session (cold rebuilds every store).
   */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
@@ -36,18 +36,23 @@ object QueryTimer {
     spark.sparkContext.setLogLevel("ERROR")
     extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    names.split(",").foreach { name =>
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    try names.split(",").foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def once(): Double = {
+      // (wall, process-CPU) seconds of one noop-sink pass
+      def once(): (Double, Double) = {
         val t0 = System.nanoTime()
+        val c0 = osBean.getProcessCpuTime
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
       }
-      graft.SparkEntry.clearSessionCaches()
-      val cold = once()
-      val steady = (1 to reps).map(_ => once()).min
-      println(f"[probe] $name dir=$sfDir cold=$cold%.2fs steady=$steady%.2fs")
-    }
+      graft.Scratch.clearSession()
+      val (cold, coldCpu) = once()
+      val (steady, steadyCpu) = (1 to reps).map(_ => once()).minBy(_._1)
+      println(f"[probe] $name dir=$sfDir cold=$cold%.2fs (cpu $coldCpu%.1fs) " +
+        f"steady=$steady%.2fs (cpu $steadyCpu%.1fs)")
+    } finally graft.Scratch.clearSession()
     spark.stop()
   }
 

@@ -125,8 +125,7 @@ object SemStreamScale {
           buildK: Int, refitAtBudget: Long = 0L): Summary = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val scratch = sys.props("java.io.tmpdir") + "/graft_semscale_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val scratch = graft.Scratch.freshDir("graft_semscale")
     val store = s"$scratch/ivf"
     val file = s"$sfDir/embeddings.parquet"
     val withB = (df: DataFrame) => df
@@ -190,9 +189,9 @@ object SemStreamScale {
     }
     maintain() // the base build itself must respect the bound
     if (maintained) tuneOverCurrentGrid()
-    val (staging, stream) = graft.QueriesStreaming.keyedMultiBatchStream(
-      spark, file, "semscale", sfDir + maxCellSize, d => arrivals(withB(d)),
-      col("vec_id") % 4)
+    val staging = s"$scratch/staging"
+    val stream = graft.QueriesStreaming.keyedMultiBatchStream(
+      spark, file, staging, d => arrivals(withB(d)), col("vec_id") % 4)
     val query = stream.writeStream
       .option("checkpointLocation", s"$staging/ckpt")
       .foreachBatch {
@@ -219,7 +218,7 @@ object SemStreamScale {
       }
       .start()
     try query.processAllAvailable() finally query.stop()
-    rmTree(new java.io.File(staging))
+    graft.Scratch.rmTree(staging)
     val (centF, idxF) = IvfIndex.load(spark, store)
     val idx = idxF.localCheckpoint()
     val sizes = idx.groupBy(col("cluster")).count()
@@ -276,8 +275,7 @@ object SemStreamScale {
              walkSliceRows: Long = 16384L): Summary = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val scratch = sys.props("java.io.tmpdir") + "/graft_semnsw_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val scratch = graft.Scratch.freshDir("graft_semnsw")
     val flat = s"$scratch/ivf"
     val nsw = s"$scratch/nsw"
     val file = s"$sfDir/embeddings.parquet"
@@ -301,9 +299,9 @@ object SemStreamScale {
                splits += n; n > 0 }) ()
     }
     maintain() // the base build itself must respect the bound
-    val (staging, stream) = graft.QueriesStreaming.keyedMultiBatchStream(
-      spark, file, "semnsw", sfDir + maxCellSize, d => arrivals(withB(d)),
-      col("vec_id") % 4)
+    val staging = s"$scratch/staging"
+    val stream = graft.QueriesStreaming.keyedMultiBatchStream(
+      spark, file, staging, d => arrivals(withB(d)), col("vec_id") % 4)
     val query = stream.writeStream
       .option("checkpointLocation", s"$staging/ckpt")
       .foreachBatch {
@@ -352,7 +350,7 @@ object SemStreamScale {
       }
       .start()
     try query.processAllAvailable() finally query.stop()
-    rmTree(new java.io.File(staging))
+    graft.Scratch.rmTree(staging)
     val (centF, idxF) = IvfIndex.load(spark, flat)
     val idx = idxF.localCheckpoint()
     val (gF, enF) = graft.operators.NswIndex.loadNsw(spark, nsw)
@@ -388,13 +386,9 @@ object SemStreamScale {
       avgRecall = recall, secs = (System.nanoTime() - t0) / 1e9)
   }
 
-  def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-    }
-    f.delete(): Unit
-  }
+  /** [[graft.Scratch.rmTree]] for a caller holding a `File`: the
+    * [[Summary.storeDir]] a run hands back is the caller's to delete. */
+  val rmTree: java.io.File => Unit = f => graft.Scratch.rmTree(f.getPath)
 
   /** Decade probe: `runMain graft.tools.SemStreamScale <sfDir>
     * <maxCellSize> <buildK> [flat [refitAtBudget] | nsw [degree ef
@@ -442,7 +436,7 @@ object SemStreamScale {
       s""""candBudget":${s.candBudget},"retunes":${s.retunes},""" +
       s""""refits":${s.refits},"avgRecall":${s.avgRecall},""" +
       s""""secs":${f"${s.secs}%.1f"}}""")
-    rmTree(new java.io.File(s.storeDir))
+    graft.Scratch.rmTree(s.storeDir)
     spark.stop()
   }
 }

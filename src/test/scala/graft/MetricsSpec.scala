@@ -7,7 +7,7 @@ import graft.tools.Metrics
 class MetricsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/tmp/metrics_spec"
+  private val scratch = s"${Scratch.root}/metrics_spec"
 
   describe("Metrics.run") {
     it("measures partition pruning: a partition-column filter reads fewer files and bytes") {

@@ -327,13 +327,12 @@ class PlanShapeSpec extends SparkSpec {
       try {
         val corpus = spark.read.parquet(s"$dir/documents.parquet")
           .limit(50).select($"doc_id", $"text")
+        val store = s"${Scratch.root}/planshape_store"
         graft.operators.TextDedup.writeDedupStoreBucketed(
           corpus, "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
-          namePrefix = "planshape_store",
-          pathPrefix = "/root/repo/target/tmp/planshape_store", buckets = 4)
+          namePrefix = "planshape_store", pathPrefix = store, buckets = 4)
         val flagged = graft.operators.TextDedup.ingestFlagsBucketed(
-          corpus, "doc_id", "text", "planshape_store",
-          "/root/repo/target/tmp/planshape_store",
+          corpus, "doc_id", "text", "planshape_store", store,
           shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
         val plan = flagged.queryExecution.executedPlan.toString
         (plan should not).include("BroadcastHashJoin")

@@ -146,7 +146,7 @@ class SimilaritySpec extends SparkSpec {
       // layout (a tuning_check row exists past the tuneNProbe write)
       spark.read.parquet(s"$dir/tuning_check").count() should be >= 1L
       IvfIndex.loadTunedNProbe(spark, dir) should be >= 1
-      graft.tools.SemStreamScale.rmTree(new java.io.File(dir))
+      Scratch.rmTree(dir)
     }
 
     it("tuneNProbe picks the cheapest width meeting the floor and persists the choice") {

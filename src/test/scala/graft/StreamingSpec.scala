@@ -354,4 +354,30 @@ class StreamingSpec extends SparkSpec {
       } finally query.stop()
     }
   }
+
+  describe("streamableDir") {
+    it("keys the watch dir on the data dir's full path, not its basename") {
+      import java.nio.file.{Files, Paths}
+      // two data dirs that share a basename, like two `sf0.1` copies:
+      // each watch dir must link to its own file, not the first one's
+      val dirs = Seq("a", "b").map { p =>
+        val d = Files.createDirectories(
+          Files.createTempDirectory(s"graft-watch-$p").resolve("sf0.1"))
+        Files.write(d.resolve("documents.parquet"), p.getBytes("UTF-8"))
+        d
+      }
+      try {
+        val watches = dirs.map(d => QueriesStreaming.streamableDir(
+          d.toString, "documents.parquet", "spec_watch"))
+        watches.distinct.size shouldBe 2
+        watches.zip(dirs).foreach { case (w, d) =>
+          Files.readSymbolicLink(Paths.get(w, "documents.parquet")) shouldBe
+            d.resolve("documents.parquet")
+        }
+      } finally {
+        Scratch.clearSession()
+        dirs.foreach(d => Scratch.rmTree(d.getParent.toString))
+      }
+    }
+  }
 }

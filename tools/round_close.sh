@@ -25,6 +25,18 @@ WANT_SF1="${2:-}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 echo "== [1/3] full-catalog correctness at sf0.01 =="
+# scratch dirs, session caches and the recursive delete live in
+# graft.Scratch alone; a copy anywhere else in src/main fails the gate
+SCRATCH_LEAKS=$( {
+  grep -rlF -e 'target/tmp' -e 'java.io.tmpdir' -e 'def rmTree' \
+    --include='*.scala' src/main
+  grep -lF 'ConcurrentHashMap' src/main/scala/graft/Queries*.scala
+} | grep -v '^src/main/scala/graft/Scratch\.scala$' | sort -u || true)
+if [ -n "$SCRATCH_LEAKS" ]; then
+  echo "FATAL: scratch path, tmpdir, rmTree or Queries* session map outside Scratch.scala in:"
+  echo "$SCRATCH_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
