@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // $SPARK_GRAFT_BENCH_OUT overrides the default ./bench_out.json.
     // An earlier run's file goes first, so a run that crashes cannot
     // leave it behind to be read as this run's.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outPath)): Unit
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // session warm-up (executor threads, codegen compiler, shuffle and
     // broadcast machinery, parquet reader path) so the first timed
     // query is not charged ~4s of JVM bring-up; nation is the smallest

@@ -47,7 +47,6 @@ object QueriesStreaming {
     * µs TIMESTAMP encodings (it did, in round 7). */
   val q45StreamWindow: Q = (s, dir) => {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val file = s"$dir/events.parquet"
     val watch = streamableDir(dir, "events.parquet", "q45_events")
     // driver-side schema peek (footer metadata only, not a data scan) —
@@ -212,7 +211,6 @@ object QueriesStreaming {
     * arrival batches, which a batch oracle cannot restate.) */
   val q68StreamDedup: Q = (s, dir) => {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val file = s"$dir/events.parquet"
     val watch = streamableDir(dir, "events.parquet", "q68_events")
     val schema = s.read.parquet(file).schema
@@ -952,7 +950,6 @@ object QueriesStreaming {
                                      base: String,
                                      project: DataFrame => DataFrame)
       : DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val watch = base + "/watch"
     project(s.read.parquet(srcFile)).repartition(4).write.parquet(watch)
     val schema = s.read.parquet(watch).schema
@@ -974,7 +971,6 @@ object QueriesStreaming {
                                     project: DataFrame => DataFrame,
                                     key: org.apache.spark.sql.Column)
       : DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val watch = new java.io.File(base + "/watch")
     watch.mkdirs(): Unit
     val src = project(s.read.parquet(srcFile))

@@ -88,10 +88,11 @@ object Tables {
     }
   }
 
+  /** The events table with `ts` repaired by [[repairTs]]. An
+    * ns-precision INT64 `ts` reads only in a session with
+    * `spark.sql.legacy.parquet.nanosAsLong=true`: a [[Sessions.local]]
+    * session, or one that sets the flag itself. */
   def events(s: SparkSession, d: String): DataFrame = {
-    // harmless when the file is already µs: the flag only changes how a
-    // ns-annotated INT64 column is surfaced
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // every consumer gets ts-predicate pushdown through the repair
     graft.plans.RepairTsPushdown.install(s)
     repairTs(table(s, d, "events"))

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Readers
 
 /** E3 batch entry point (the reference's script `__main__`s,
@@ -18,15 +17,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("src/test/resources/domain")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-pipeline"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     try {
       val e1 = LinkagePipeline.runLinkage(spark, dir)

@@ -398,41 +398,33 @@ object IvfIndex {
       .filter(!col("cluster").isInCollection(good))
       .unionByName(newCents)
       .localCheckpoint() // materialize before the centroid file is replaced
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // one write; dynamic overwrite rewrites ONLY the split partitions
-      fence()
-      remapped.repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/index")
-      Failpoints.hit("ivfsplit:after-index-overwrite")
-      // commit-marker pattern: build the new centroid table on a scratch
-      // path, then swap it in with renames — the slow write job never
-      // has the live directory in a half-written state; a crash inside
-      // the rename window is repaired by [[recoverCentroidSwap]]
-      val tmp = s"$dir/centroids__tmp"
-      centroids.write.mode("overwrite").parquet(tmp)
-      Failpoints.hit("ivfsplit:after-centroid-tmp")
-      fence() // last check before the live centroid table is replaced
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(conf)
-      val live = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/centroids__old")
-      if (fs.exists(old)) fs.delete(old, true)
-      fs.rename(live, old)
-      Failpoints.hit("ivfsplit:mid-swap")
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), live)
-      fs.delete(old, true)
-      spark.catalog.refreshByPath(s"$dir/index")
-      spark.catalog.refreshByPath(s"$dir/centroids")
-      pairsSeq
-    } finally {
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // one write; dynamic overwrite rewrites ONLY the split partitions
+    fence()
+    remapped.repartition(col("cluster"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cluster").parquet(s"$dir/index")
+    Failpoints.hit("ivfsplit:after-index-overwrite")
+    // commit-marker pattern: build the new centroid table on a scratch
+    // path, then swap it in with renames — the slow write job never
+    // has the live directory in a half-written state; a crash inside
+    // the rename window is repaired by [[recoverCentroidSwap]]
+    val tmp = s"$dir/centroids__tmp"
+    centroids.write.mode("overwrite").parquet(tmp)
+    Failpoints.hit("ivfsplit:after-centroid-tmp")
+    fence() // last check before the live centroid table is replaced
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(conf)
+    val live = new org.apache.hadoop.fs.Path(s"$dir/centroids")
+    val old = new org.apache.hadoop.fs.Path(s"$dir/centroids__old")
+    if (fs.exists(old)) fs.delete(old, true)
+    fs.rename(live, old)
+    Failpoints.hit("ivfsplit:mid-swap")
+    fs.rename(new org.apache.hadoop.fs.Path(tmp), live)
+    fs.delete(old, true)
+    spark.catalog.refreshByPath(s"$dir/index")
+    spark.catalog.refreshByPath(s"$dir/centroids")
+    pairsSeq
   }
 
   /** ANN top-k search: each query probes its `nProbe` nearest cells

@@ -476,14 +476,9 @@ object NswIndex {
       .withColumn("deleted_at_gen", lit(headGen + 1L))
       .coalesce(1).write.mode("append").parquet(ledgerPath(nswDir))
     Failpoints.hit("nswmaint:after-pending")
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try remaining.repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$flatDir/index")
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    remaining.repartition(col("cluster"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cluster").parquet(s"$flatDir/index")
     // dynamic overwrite only touches partitions PRESENT in the output:
     // a cell emptied by the delete must be dropped explicitly
     val nonEmpty = remaining.select(col("cluster")).distinct()

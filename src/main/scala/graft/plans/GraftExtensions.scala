@@ -5,14 +5,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension point. Installable two ways:
+/** Engine extension point. Installed two ways:
   *
-  *  1. plugin path — `SparkSession.builder().withExtensions(new
-  *     GraftExtensions)` or `spark.sql.extensions=graft.plans.GraftExtensions`
-  *     (cluster deployments);
-  *  2. runtime path — [[GraftFunctions.register]] on an already-built
-  *     session (used by the query catalog, which receives the session
-  *     from the harness and cannot assume the plugin was configured).
+  *  1. plugin path — [[graft.Sessions.local]] builds every session of
+  *     this repo `withExtensions(new GraftExtensions)`, so its functions,
+  *     rules and strategy are there from the start and in every
+  *     `newSession()`; a cluster `spark-submit` gets the same with
+  *     `spark.sql.extensions=graft.plans.GraftExtensions` (README);
+  *  2. runtime path — [[GraftFunctions.register]] (and
+  *     [[TopKPerKey.register]] for the top-k rules), which the library
+  *     calls itself before it uses them, for a session built outside
+  *     this repo without the plugin. Both are idempotent.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -163,20 +166,5 @@ object GraftFunctions {
       if (!registry.functionExists(ident))
         registry.registerFunction(ident, info, builder)
     }
-    // TypedImperativeAggregates (TopKAgg, the sketches) plan as
-    // ObjectHashAggregate, which FALLS BACK to sort-based aggregation
-    // once a task sees more than this many distinct groups — default
-    // 128. Our top-k folds routinely group by thousands of query ids
-    // per task over a cross-join/probe-join input, and the fallback
-    // then SORTS that input (the corpus × queries stream!) through
-    // disk: measured at the sf100 probe as a multi-TB spill that
-    // filled the volume, where the intended bounded-heap path touches
-    // only |groups| × k rows of state. Raise the threshold once per
-    // session (only if the user hasn't set their own) — the buffers
-    // are k-bounded heaps, so a few million groups of hash-map state
-    // stay executor-sized by construction.
-    val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    if (spark.conf.getOption(fallbackKey).forall(_ == "128"))
-      spark.conf.set(fallbackKey, "4194304")
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev-only plan auditor: prints the formatted physical plan of each
@@ -12,12 +10,7 @@ import graft.SparkEntry
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val names =
       if (args.nonEmpty) args.toSeq
       else Seq("q01_pricing_summary", "q02_filter_project", "q08_join_inner",

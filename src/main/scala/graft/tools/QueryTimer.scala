@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query timing over arbitrary data dirs — the dev-loop companion
   * to [[graft.Bench]] (full catalog, fixed dir): times a SUBSET of the
   * catalog at any directory (typically a [[ScaleUp]]-built 10×/100×
@@ -15,25 +13,20 @@ import org.apache.spark.sql.SparkSession
   * time alone can't separate work from interference, so A/B two
   * IMPLEMENTATIONS on the CPU column. A name listed twice runs twice,
   * each time from a cleared session (cold rebuilds every store).
+  *
+  * The session is [[graft.Sessions.local]]'s, shuffle width = cores.
+  * `SPARK_GRAFT_EXTRA_CONF=k=v;k=v` sets session confs after it is
+  * built, e.g. `spark.sql.shuffle.partitions=N` to time another width.
   */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // dev knob: decouple shuffle width from core count to attribute
-    // scaling anomalies (32-core slower than 8-core) to one or the other
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // dev knob: arbitrary session confs (k=v;k=v) for A/B-ing
     // conf-gated behavior (e.g. graft.streaming.shufflePartitions)
     val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(parseExtraConf)
       .getOrElse(Seq.empty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-scale data multiplier: builds an sf×N copy of a testdata
@@ -107,19 +107,10 @@ object ScaleUp {
         require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(", ")}")
         sel
       } else tables
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // events `ts` has shipped in two physical encodings (ns-as-INT64,
-    // native µs TIMESTAMP); the flag only matters for the former (lets
-    // the read surface it as a raw long, written back untouched) and is
-    // harmless for the latter — Tables.repairTs adapts to whichever
-    // encoding the scaled copy carries
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the session reads events' ns-as-INT64 `ts` as a raw long, written
+    // back untouched; Tables.repairTs adapts to whichever encoding the
+    // scaled copy carries
+    val spark = graft.Sessions.local()
     selected.foreach { t =>
       scaleTable(spark.read.parquet(s"$src/$t.parquet"), t, copies)
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")

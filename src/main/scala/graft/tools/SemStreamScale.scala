@@ -386,10 +386,6 @@ object SemStreamScale {
       avgRecall = recall, secs = (System.nanoTime() - t0) / 1e9)
   }
 
-  /** [[graft.Scratch.rmTree]] for a caller holding a `File`: the
-    * [[Summary.storeDir]] a run hands back is the caller's to delete. */
-  val rmTree: java.io.File => Unit = f => graft.Scratch.rmTree(f.getPath)
-
   /** Decade probe: `runMain graft.tools.SemStreamScale <sfDir>
     * <maxCellSize> <buildK> [flat [refitAtBudget] | nsw [degree ef
     * rounds nProbe seeds]]` — one
@@ -399,13 +395,7 @@ object SemStreamScale {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, maxCell, k) = args.take(3)
     val screen = if (args.length > 3) args(3) else "flat"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val s = screen match {
       case "flat" =>
         val refitAt = if (args.length > 4) args(4).toLong else 0L

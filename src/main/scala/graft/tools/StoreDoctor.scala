@@ -615,13 +615,7 @@ object StoreDoctor {
     val usage = "usage: StoreDoctor twotier <dir> | nsw <flatDir> <nswDir> " +
       "| ivf <dir> | dedup <pathPrefix> | aggstore <dir>"
     require(args.length >= 2, usage)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val findings = args(0) match {
       case "twotier" => auditTwoTier(spark, args(1))
       case "nsw" =>

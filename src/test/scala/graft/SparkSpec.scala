@@ -5,29 +5,17 @@ import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
 /** Shared SparkSession for all suites — one JVM-wide session keeps the
-  * test run fast (session startup dominates otherwise). Config mirrors
-  * production defaults: AQE on, small shuffle partition count for the
-  * tiny test inputs.
+  * test run fast (session startup dominates otherwise). It is a
+  * production [[Sessions.local]] session on 4 cores (a small shuffle
+  * width for the tiny test inputs) with a temporary warehouse dir.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4,
+    Some(java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }
 
 trait SparkSpec extends AnyFunSpec with Matchers {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.spark
 
   /** Collect to a sorted Seq of row-value lists for order-insensitive
     * comparison. */

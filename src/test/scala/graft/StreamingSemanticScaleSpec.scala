@@ -61,8 +61,8 @@ class StreamingSemanticScaleSpec extends SparkSpec {
       // cells — the number is deterministic for this fixture
       maintained.avgRecall should be >= 0.5
     } finally {
-      SemStreamScale.rmTree(new java.io.File(maintained.storeDir))
-      SemStreamScale.rmTree(new java.io.File(pinned.storeDir))
+      Scratch.rmTree(maintained.storeDir)
+      Scratch.rmTree(pinned.storeDir)
     }
   }
 
@@ -91,6 +91,6 @@ class StreamingSemanticScaleSpec extends SparkSpec {
       cadence.candBudget should be <= 120L
       cadence.avgRecall should be >= 0.9
     } finally
-      SemStreamScale.rmTree(new java.io.File(cadence.storeDir))
+      Scratch.rmTree(cadence.storeDir)
   }
 }

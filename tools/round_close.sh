@@ -37,6 +37,22 @@ if [ -n "$SCRATCH_LEAKS" ]; then
   echo "$SCRATCH_LEAKS"
   exit 1
 fi
+# graft.Sessions builds every session and sets its conf; library code
+# changes no session conf (streaming's runMicroBatches width aside) and
+# tools may set only what their caller asks for
+SESSION_LEAKS=$( {
+  grep -rlF 'SparkSession.builder()' --include='*.scala' src/main |
+    grep -v '^src/main/scala/graft/Sessions\.scala$'
+  grep -rlF 'conf.set(' --include='*.scala' src/main |
+    grep -v -e '^src/main/scala/graft/Sessions\.scala$' \
+      -e '^src/main/scala/graft/tools/' \
+      -e '^src/main/scala/graft/streaming/EventStreams\.scala$'
+} | sort -u || true)
+if [ -n "$SESSION_LEAKS" ]; then
+  echo "FATAL: SparkSession.builder() or conf.set( outside Sessions.scala in:"
+  echo "$SESSION_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
