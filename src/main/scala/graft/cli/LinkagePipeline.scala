@@ -3,6 +3,7 @@ package graft.cli
 import scala.collection.immutable.SeqMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.functions.Derivations
 import graft.operators._
 import graft.sources.Readers
@@ -40,6 +41,13 @@ import graft.sources.Readers
   * frames are dropped. On a cluster its blocks live on the executors
   * without replication: losing an executor fails the job instead of
   * recomputing the lost partitions.
+  *
+  * Every extract is read with a declared schema (SURVEY §1.2), each
+  * declared next to the stage that reads it with the types inference
+  * gave the extracts: building a stage's frame starts no inference or
+  * header job, and a dirty CSV (a renamed header column, a value of the
+  * wrong type) fails its read, naming the file, instead of binding by
+  * position or turning into a dropped null.
   */
 object LinkagePipeline {
 
@@ -50,18 +58,31 @@ object LinkagePipeline {
 
   // ------------------------------------------------------------ E1 stages
 
+  /** `icnarc_ids.csv`, the ICNARC link table. */
+  val icnarcIdsSchema: StructType = StructType.fromDDL("`ICNARC number` INT, " +
+    "`CIS Patient ID` INT, `CIS Episode ID` INT, `Unit ID` INT, `Key` STRING, " +
+    "`Readmission during this hospital stay` STRING")
+
+  /** `issue_list.ww.csv`, the WW list of wrong CIS ids. */
+  val wwIssuesSchema: StructType =
+    StructType.fromDDL("`ICNARC Number` INT, `Corrected encID` INT, `Unit ID` INT")
+
   /** ICNARC link table: CSV scan, drop cardiac unit, repair CIS ids via
     * the WW issue list, drop rows with no CIS id, take the CIS id as
     * the join key (`clean_encounterids.py:31-53`). */
   def cleanIcnarcIds(spark: SparkSession, idsCsv: String, wwIssuesCsv: String): DataFrame = {
-    val ids = Readers.csv(spark, idsCsv).filter(col("Unit ID") =!= 14)
-    val ww = Readers.dimensionCsv(spark, wwIssuesCsv)
+    val ids = Readers.csv(spark, idsCsv, icnarcIdsSchema).filter(col("Unit ID") =!= 14)
+    val ww = Readers.csv(spark, wwIssuesCsv, wwIssuesSchema)
       .select(col("ICNARC Number").as("ICNARC number"),
         col("Corrected encID").cast("int").as("corrected_cis"))
     KeyCorrection.correctVia(ids, ww, "ICNARC number", "CIS Patient ID", "corrected_cis")
       .na.drop(Seq("CIS Patient ID"))
       .withColumn("encounterId", col("CIS Patient ID").cast("int"))
   }
+
+  /** `issue_list.encounterId.csv`, the encounterId remap list. */
+  val encounterIssuesSchema: StructType = StructType.fromDDL("encounterId_CIS INT, " +
+    "encounterId_Adjusted INT, clinicalUnitId DOUBLE, Explanation STRING")
 
   /** Philips encounters: footer-tolerant TSV scan, drop cardiac unit,
     * repair encounterIds via the issue list (+ error-type column),
@@ -74,7 +95,7 @@ object LinkagePipeline {
       .withColumn("lengthOfStay (mins)", col("lengthOfStay (mins)").cast("double"))
       .withColumn("clinicalUnitId", col("clinicalUnitId").cast("int"))
       .filter(col("clinicalUnitId") =!= 8)
-    val issues = Readers.dimensionCsv(spark, issuesCsv)
+    val issues = Readers.csv(spark, issuesCsv, encounterIssuesSchema)
       .filter(col("clinicalUnitId") =!= 8.0)
       .select(col("encounterId_CIS").as("encounterId"),
         col("encounterId_Adjusted").cast("int"),
@@ -109,15 +130,26 @@ object LinkagePipeline {
   def joinIcnarcToPhilips(icnarc: DataFrame, philips: DataFrame): DataFrame =
     philips.join(icnarc.drop("Key"), Seq("encounterId"), "inner")
 
+  /** `cmp_dictionary.csv`: each CMP element code and its readable name. */
+  val cmpDictionarySchema: StructType = StructType.fromDDL("CODE STRING, Description STRING")
+
   /** S4 + §1.3: CMP XML scan, dictionary-driven rename, unit recode
-    * (`parse_ICNARC_xml.py:22-75`). */
+    * (`parse_ICNARC_xml.py:22-75`). Starts one job, the collect of the
+    * dimension-scale dictionary, which gives both the XML read schema
+    * (one string column per code, sorted by code, the order inference
+    * gave) and the rename. As in the reference's dictionary-driven
+    * parse (`parse_ICNARC_xml.py:51-62`), a dictionary code that no
+    * record has reads as an all-null column, not a missing one, and an
+    * element that is not in the dictionary is not read. */
   def parseCmp(spark: SparkSession, xmlPath: String, dictionaryCsv: String): DataFrame = {
-    val dict = Readers.dimensionCsv(spark, dictionaryCsv)
-    val wide = Readers.xml(spark, xmlPath, rowTag = "patient")
+    val names = Readers.csv(spark, dictionaryCsv, cmpDictionarySchema).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val wide = Readers.xml(spark, xmlPath, rowTag = "patient",
+      StructType(names.keys.toSeq.sorted.map(StructField(_, StringType))))
     // "ICNARC Number" → "ICNARC number" (link-table spelling): via a
     // temp name because Spark's case-insensitive resolution would make
     // withColumn("ICNARC number", ...) overwrite-then-drop the source
-    Readers.renameByDictionary(wide, dict)
+    Readers.renameByDictionary(wide, names)
       .withColumn("Unit ID",
         when(col("ICNARC CMP Number") === "H91", 1).otherwise(14))
       .withColumn("icnarc_no_tmp", col("ICNARC Number").cast("int"))
@@ -180,6 +212,13 @@ object LinkagePipeline {
 
   // ------------------------------------------------------------ E2 stages
 
+  /** `interventions_key.csv`: the variable each (intervention,
+    * attribute) pair charts. */
+  val interventionsKeySchema: StructType = StructType.fromDDL("Variable STRING, " +
+    "`Intervention name (longLabel)` STRING, interventionId INT, " +
+    "`Attribute name (shortLabel)` STRING, attributeId INT, " +
+    "`Back end location (ICCA table)` STRING, `Frontend Source` STRING")
+
   /** Chartevents: U1 union of the two EAV extracts, J5 cohort
     * restriction, P8 typed value coalesce + P12 lenient parse, J6
     * variable harmonisation (`ipynb:cells 44-54`). */
@@ -192,7 +231,7 @@ object LinkagePipeline {
       .withColumn("valueNumber", col("valueNumber").cast("double"))
     val events = scan(s"$dir/chartevents.ptassess.tsv")
       .unionByName(scan(s"$dir/chartevents.labresults.tsv"))
-    val key = Readers.dimensionCsv(spark, s"$dir/interventions_key.csv")
+    val key = Readers.csv(spark, s"$dir/interventions_key.csv", interventionsKeySchema)
       .select(col("interventionId"), col("attributeId"), col("Variable"))
     events
       .join(cohortIds.select(col("encounterId")), Seq("encounterId"), "right")

@@ -1,12 +1,18 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.cli.LinkagePipeline
 import graft.operators.Validation
+import graft.sources.Readers
 import graft.tools.Metrics
 
 /** Golden end-to-end test of the E1/E2 reference-parity pipelines over
@@ -19,15 +25,38 @@ class LinkagePipelineSpec extends SparkSpec {
   private lazy val e1 = LinkagePipeline.runLinkage(spark, dir)
   private lazy val cohort = e1("cohort")
 
+  /** Runs `body` over a temporary copy of the fixture whose `file` is
+    * rewritten by `edit`, then deletes the copy. */
+  private def withFixtureCopy[T](file: String, edit: String => String)(body: String => T): T = {
+    val copy = Files.createTempDirectory("graft-linkage")
+    try {
+      new java.io.File(dir).listFiles().foreach(f =>
+        Files.copy(f.toPath, copy.resolve(f.getName)))
+      val p = copy.resolve(file)
+      Files.writeString(p, edit(Files.readString(p, UTF_8)), UTF_8)
+      body(copy.toString)
+    } finally {
+      Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    }
+  }
+
   describe("E1 linkage") {
     it("repairs keys, dedups fragments, and keeps the cohort unique") {
       // philips: 7 rows; footer dropped; unit 8 row (1005) filtered;
-      // 9901→1004 correction merges with 1004; 1001 fragments merge
-      val philips = e1("philips")
-      Validation.isUnique(philips, Seq("encounterId")) shouldBe true
-      philips.count() shouldBe 4 // 1001, 1002, 1003, 1004
-      philips.filter($"encounterId" === 1001)
-        .head().getAs[Double]("lengthOfStay (mins)") shouldBe 5805.0
+      // 9901→1004 correction merges with 1004; 1001 fragments merge.
+      // The same holds for a summary export that starts with a UTF-8
+      // byte-order mark, which must not reach the first column's name.
+      withFixtureCopy("encounter_summary.tsv", "\uFEFF" + _) { bomDir =>
+        val bomPhilips = LinkagePipeline.dedupEncounters(LinkagePipeline.cleanPhilipsEncounters(
+          spark, s"$bomDir/encounter_summary.tsv", s"$bomDir/issue_list.encounterId.csv"))
+        for ((input, philips) <- Seq("fixture" -> e1("philips"), "BOM copy" -> bomPhilips))
+          withClue(s"$input: ") {
+            Validation.isUnique(philips, Seq("encounterId")) shouldBe true
+            philips.count() shouldBe 4 // 1001, 1002, 1003, 1004
+            philips.filter($"encounterId" === 1001)
+              .head().getAs[Double]("lengthOfStay (mins)") shouldBe 5805.0
+          }
+      }
     }
 
     it("merges the corrected 9901 stay into encounter 1004") {
@@ -128,16 +157,74 @@ class LinkagePipelineSpec extends SparkSpec {
     }
 
     it("read the files afresh on every call") {
-      val copy = Files.createTempDirectory("graft-linkage")
-      try {
-        new java.io.File(dir).listFiles().foreach(f =>
-          Files.copy(f.toPath, copy.resolve(f.getName)))
-        LinkagePipeline.runLinkage(spark, copy.toString)("philips").count() shouldBe 4
-        val tsv = copy.resolve("encounter_summary.tsv")
+      withFixtureCopy("encounter_summary.tsv", identity) { copy =>
+        LinkagePipeline.runLinkage(spark, copy)("philips").count() shouldBe 4
+        val tsv = java.nio.file.Paths.get(copy, "encounter_summary.tsv")
         Files.write(tsv, Files.readAllLines(tsv).asScala.filterNot(_.startsWith("1002\t")).asJava)
-        LinkagePipeline.runLinkage(spark, copy.toString)("philips").count() shouldBe 3
-      } finally {
-        Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+        LinkagePipeline.runLinkage(spark, copy)("philips").count() shouldBe 3
+      }
+    }
+  }
+
+  /** Jobs that `body` starts, counted by a listener over a job group of
+    * its own; the listener bus is drained before the count is read. */
+  private def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"linkage-spec-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "LinkagePipelineSpec job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  describe("the source reads") {
+    it("build the stage frames without a job; parsing the CMP collects the dictionary once") {
+      cohort // materialized outside the counted group
+      jobsStarted {
+        LinkagePipeline.cleanIcnarcIds(spark, s"$dir/icnarc_ids.csv", s"$dir/issue_list.ww.csv")
+        LinkagePipeline.cleanPhilipsEncounters(
+          spark, s"$dir/encounter_summary.tsv", s"$dir/issue_list.encounterId.csv")
+        LinkagePipeline.buildChartevents(spark, dir, cohort)
+      } shouldBe 0
+      jobsStarted {
+        LinkagePipeline.parseCmp(spark, s"$dir/icnarc_cmp.xml", s"$dir/cmp_dictionary.csv")
+      } shouldBe 1
+    }
+
+    it("declare the types that inference gives the extracts") {
+      import LinkagePipeline._
+      for ((file, schema) <- Seq("icnarc_ids.csv" -> icnarcIdsSchema,
+          "issue_list.ww.csv" -> wwIssuesSchema,
+          "issue_list.encounterId.csv" -> encounterIssuesSchema,
+          "cmp_dictionary.csv" -> cmpDictionarySchema,
+          "interventions_key.csv" -> interventionsKeySchema))
+        withClue(s"$file: ") { Readers.csv(spark, s"$dir/$file").schema shouldBe schema }
+      val codes = Readers.csv(spark, s"$dir/cmp_dictionary.csv").collect().map(_.getString(0))
+      Readers.xml(spark, s"$dir/icnarc_cmp.xml", rowTag = "patient").schema shouldBe
+        StructType(codes.sorted.map(StructField(_, StringType)))
+    }
+
+    it("fail the linkage on a dirty CSV extract, naming the file") {
+      val dirty = Seq(
+        "icnarc_ids.csv" -> ((s: String) => s.replace("300001,1001,", "300001,abc,")),
+        "issue_list.ww.csv" -> ((s: String) => s.replace("Corrected encID", "Corrected encounterId")))
+      for ((file, edit) <- dirty) withClue(s"$file: ") {
+        withFixtureCopy(file, edit) { copy =>
+          val e = intercept[Exception](LinkagePipeline.runLinkage(spark, copy))
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(t => String.valueOf(t.getMessage)).mkString("\n") should include(file)
+        }
       }
     }
   }

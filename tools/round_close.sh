@@ -53,6 +53,19 @@ if [ -n "$SESSION_LEAKS" ]; then
   echo "$SESSION_LEAKS"
   exit 1
 fi
+# the paper pipelines read every extract with a declared schema: no
+# inference scan, no header-peek job, and a dirty extract fails its read
+SCHEMA_LEAKS=$(grep -rlE --include='*.scala' \
+  -e 'inferSchema|dimensionCsv\(|spark\.read\.text\(' \
+  -e 'Readers\.csv\([^,()]*,[^,()]*\)' \
+  -e 'Readers\.xml\([^,()]*,[^,()]*,[^,()]*\)' \
+  src/main/scala/graft/cli | sort -u || true)
+if [ -n "$SCHEMA_LEAKS" ]; then
+  echo "FATAL: an extract read without a declared schema (inferSchema, dimensionCsv," \
+    "schema-less Readers.csv/Readers.xml or a spark.read.text header peek) in:"
+  echo "$SCHEMA_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
