@@ -1,10 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextAnalysis
-import graft.operators.{Packing, TextDedup}
+import graft.operators.{IvfIndex, NswIndex, Packing, TextDedup}
+import graft.operators.Sampling.hashBucket
+import graft.sources.StoreFs
 
 /** The composed END-TO-END pipeline gate (r14 verdict #7): every stage
   * of the production training-data pipeline is oracle-gated separately
@@ -72,23 +76,10 @@ object QueriesPipeline {
         .select($"doc_id", $"text", $"len")
         .localCheckpoint()
       // 03: exact dedup — min doc_id per content fingerprint
-      val ex = qual
-        .withColumn("keep", min($"doc_id").over(org.apache.spark.sql
-          .expressions.Window.partitionBy(TextAnalysis.fingerprint($"text"))))
-        .filter($"doc_id" === $"keep")
-        .select($"doc_id", $"text", $"len")
-        .localCheckpoint()
+      val ex = minIdPer(qual, "doc_id", TextAnalysis.fingerprint($"text"))
       // 04: near-dup removal — banded MinHash-LSH pairs (the q30
       // parameters), drop the LARGER id of every verified pair
-      val sh = TextDedup.shingleTable(ex, "doc_id", "text", 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nr =
-        try ex.join(
-          TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2,
-              threshold = 0.3, maxBandDf = Some(1024))
-            .select($"b_id".as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-        finally sh.unpersist()
+      val nr = dropNearDups(ex)
       // 05: FFD pack at 256-token capacity, q121's bucket sizing
       val buckets = math.max(1L, math.ceil(nr.count() / 64.0).toLong).toInt
       val packed = Packing.ffdPack(nr.select($"doc_id", $"len"),
@@ -229,117 +220,8 @@ object QueriesPipeline {
     * SAME batch as their originals (`+200000/+300000/+400000 ≡ 0 mod
     * 4`), so both dedup faces fire every batch: store copies via the
     * classification, fresh-doc copies via the intra-batch stages. */
-  val q209StreamPipeline: Q = (s, dir) => {
-    import s.implicits._
-    val base = Scratch.session("graft_q209", dir) { b =>
-      val file = s"$dir/documents.parquet"
-      val bk10 = graft.operators.Sampling.hashBucket($"doc_id", 10)
-      val corpus = s.read.parquet(file).filter(bk10 < 8)
-        .select($"doc_id", $"text")
-      val storeName = s"q209_store_${Scratch.stem(dir)}"
-      TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
-        shingleN = 5, k = 8, rowsPerBand = 2,
-        namePrefix = storeName, pathPrefix = s"$b/store", buckets = 8)
-      // the arriving crawl: fresh docs + the q128 planted copies, all
-      // congruent mod 4 with their originals (same batch)
-      def delta(df: DataFrame): DataFrame = {
-        val t = df.withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-        t.filter($"b" >= 8).select($"doc_id", $"text")
-          .unionByName(t.filter($"b" < 8 && $"doc_id" % 7 === 0)
-            .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .unionByName(t.filter($"b" < 8 && $"doc_id" % 11 === 0)
-            .select(($"doc_id" + 300000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")))
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-            .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
-          // perturbed copies of FRESH docs: neither side is in the
-          // store, both survive the classification, and the copy falls
-          // to the INTRA-batch near-dup stage — without this planting
-          // that stage never fires (the +300000 perturbed copies
-          // target STORE docs and die at c_store)
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 17 === 0)
-            .select(($"doc_id" + 500000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")))
-      }
-      val staging = s"$b/staging"
-      val stream = QueriesStreaming.keyedMultiBatchStream(
-        s, file, staging, delta, col("doc_id") % 4)
-      graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".q209_batch_${batchId}_applied"
-            if (!graft.sources.StoreFs.childNames(b).contains(marker)) {
-              val slice = batch.toDF().select($"doc_id", $"text")
-                .localCheckpoint()
-              val ex = slice
-                .withColumn("keep", min($"doc_id").over(org.apache.spark.sql
-                  .expressions.Window
-                  .partitionBy(TextAnalysis.fingerprint($"text"))))
-                .filter($"doc_id" === $"keep")
-                .select($"doc_id", $"text").localCheckpoint()
-              val ok = TextDedup.ingestFlagsBucketed(ex, "doc_id", "text",
-                  storeName, s"$b/store",
-                  shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-                .filter(!$"dup_exact" && !$"dup_near")
-                .select($"id".as("doc_id"))
-              val kept = ex.join(ok, Seq("doc_id")).localCheckpoint()
-              val sh = TextDedup.shingleTable(kept, "doc_id", "text", 5)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              val nr =
-                try kept.join(
-                  TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2,
-                      threshold = 0.3, maxBandDf = Some(1024))
-                    .select($"b_id".as("doc_id")).distinct(),
-                  Seq("doc_id"), "left_anti").localCheckpoint()
-                finally sh.unpersist()
-              val withLen = nr.withColumn("len",
-                TextAnalysis.wsTokenCount($"text").cast("long"))
-              val eligible = withLen
-                .filter($"len" > 0 && $"len" <= 256).count()
-              val buckets = math.max(1L, math.ceil(eligible / 64.0).toLong).toInt
-              val packed = Packing.ffdPack(withLen.select($"doc_id", $"len"),
-                  "doc_id", "len", capacity = 256L, buckets = buckets)
-                .select(lit(batchId).cast("long").as("bk"), $"bucket",
-                  $"id".as("doc_id"), $"len".as("n_toks"), $"bin")
-                .localCheckpoint()
-              packed.write.mode("append").partitionBy("bk")
-                .parquet(s"$b/shards")
-              val binsTotal = packed.groupBy($"bucket")
-                .agg(max($"bin").as("mx"))
-                .agg(coalesce(sum($"mx"), lit(0L)).cast("long")).head().getLong(0)
-              def row(stage: String, df: DataFrame,
-                      w: org.apache.spark.sql.Column) =
-                df.agg(count(lit(1)).cast("long").as("n_rows"),
-                    coalesce(w, lit(0L)).cast("long").as("w"))
-                  .select(lit(batchId).cast("long").as("bk"),
-                    lit(stage).as("stage"), $"n_rows", $"w")
-              row("a_arrived", slice, sum($"doc_id"))
-                .unionByName(row("b_exact", ex, sum($"doc_id")))
-                .unionByName(row("c_store", kept, sum($"doc_id")))
-                .unionByName(row("d_near", nr, sum($"doc_id")))
-                .unionByName(row("e_packed", packed, lit(binsTotal)))
-                .coalesce(1).write.mode("append").parquet(s"$b/funnel")
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
-      Scratch.rmTree(staging)
-      b
-    }
-    // SERVE: the persisted funnel + one read-back row over the REAL
-    // appended shard store — a lossless append means read-back rows
-    // and token mass equal the sum of the four batches' pack stages
-    val back = s.read.parquet(s"$base/shards")
-    val shardRow = back
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"n_toks"), lit(0L)).cast("long").as("w"))
-      .select(lit(-1L).as("bk"), lit("f_shard").as("stage"), $"n_rows", $"w")
-    s.read.parquet(s"$base/funnel").unionByName(shardRow)
-      .orderBy($"bk", $"stage")
-  }
+  val q209StreamPipeline: Q = (s, dir) =>
+    corpusStreamBuild(s, dir, "q209")(_ => Nil, (_, _, _) => (), _ => Nil)
 
   val q209Sql: String = {
     val normSql = QueriesText.normSql
@@ -465,134 +347,32 @@ object QueriesPipeline {
     * gate on the append verb's on-disk result. */
   val q210CumulativeBuild: Q = (s, dir) => {
     import s.implicits._
-    val base = Scratch.session("graft_q210", dir) { b =>
-      val file = s"$dir/documents.parquet"
-      val bk10 = graft.operators.Sampling.hashBucket($"doc_id", 10)
-      val corpus = s.read.parquet(file).filter(bk10 < 8)
-        .select($"doc_id", $"text")
-      val storeName = s"q210_store_${Scratch.stem(dir)}"
-      TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
-        shingleN = 5, k = 8, rowsPerBand = 2,
-        namePrefix = storeName, pathPrefix = s"$b/store", buckets = 8)
-      def delta(df: DataFrame): DataFrame = {
-        val t = df.withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-        t.filter($"b" >= 8).select($"doc_id", $"text")
-          .unionByName(t.filter($"b" < 8 && $"doc_id" % 7 === 0)
-            .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .unionByName(t.filter($"b" < 8 && $"doc_id" % 11 === 0)
-            .select(($"doc_id" + 300000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")))
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-            .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 17 === 0)
-            .select(($"doc_id" + 500000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")))
-          // CROSS-BATCH plantings: copies of batch-0 fresh docs
-          // (≡ 0 mod 4) landing in batch 2 (+2000002 ≡ +3000002 ≡ 2
-          // mod 4) — dead only if batch 0's survivors entered the store
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 4 === 0 &&
-              $"doc_id" % 19 === 0)
-            .select(($"doc_id" + 2000002L).as("doc_id"), $"text"))
-          .unionByName(t.filter($"b" >= 8 && $"doc_id" % 4 === 0 &&
-              $"doc_id" % 23 === 0)
-            .select(($"doc_id" + 3000002L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")))
-      }
-      val staging = s"$b/staging"
-      val stream = QueriesStreaming.keyedMultiBatchStream(
-        s, file, staging, delta, col("doc_id") % 4)
-      graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".q210_batch_${batchId}_applied"
-            if (!graft.sources.StoreFs.childNames(b).contains(marker)) {
-              val slice = batch.toDF().select($"doc_id", $"text")
-                .localCheckpoint()
-              val ex = slice
-                .withColumn("keep", min($"doc_id").over(org.apache.spark.sql
-                  .expressions.Window
-                  .partitionBy(TextAnalysis.fingerprint($"text"))))
-                .filter($"doc_id" === $"keep")
-                .select($"doc_id", $"text").localCheckpoint()
-              // classify vs base corpus PLUS every earlier batch's
-              // appended survivor segment
-              val ok = TextDedup.ingestFlagsBucketed(ex, "doc_id", "text",
-                  storeName, s"$b/store",
-                  shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-                .filter(!$"dup_exact" && !$"dup_near")
-                .select($"id".as("doc_id"))
-              val kept = ex.join(ok, Seq("doc_id")).localCheckpoint()
-              val sh = TextDedup.shingleTable(kept, "doc_id", "text", 5)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              val nr =
-                try kept.join(
-                  TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2,
-                      threshold = 0.3, maxBandDf = Some(1024))
-                    .select($"b_id".as("doc_id")).distinct(),
-                  Seq("doc_id"), "left_anti").localCheckpoint()
-                finally sh.unpersist()
-              // THE cumulative step: this batch's survivors become a
-              // store segment the NEXT batch classifies against
-              TextDedup.appendToDedupStoreBucketed(nr, "doc_id", "text",
-                shingleN = 5, k = 8, rowsPerBand = 2,
-                namePrefix = storeName, pathPrefix = s"$b/store", buckets = 8)
-              val withLen = nr.withColumn("len",
-                TextAnalysis.wsTokenCount($"text").cast("long"))
-              val eligible = withLen
-                .filter($"len" > 0 && $"len" <= 256).count()
-              val buckets = math.max(1L, math.ceil(eligible / 64.0).toLong).toInt
-              val packed = Packing.ffdPack(withLen.select($"doc_id", $"len"),
-                  "doc_id", "len", capacity = 256L, buckets = buckets)
-                .select(lit(batchId).cast("long").as("bk"), $"bucket",
-                  $"id".as("doc_id"), $"len".as("n_toks"), $"bin")
-                .localCheckpoint()
-              packed.write.mode("append").partitionBy("bk")
-                .parquet(s"$b/shards")
-              val binsTotal = packed.groupBy($"bucket")
-                .agg(max($"bin").as("mx"))
-                .agg(coalesce(sum($"mx"), lit(0L)).cast("long")).head().getLong(0)
-              def row(stage: String, df: DataFrame,
-                      w: org.apache.spark.sql.Column) =
-                df.agg(count(lit(1)).cast("long").as("n_rows"),
-                    coalesce(w, lit(0L)).cast("long").as("w"))
-                  .select(lit(batchId).cast("long").as("bk"),
-                    lit(stage).as("stage"), $"n_rows", $"w")
-              row("a_arrived", slice, sum($"doc_id"))
-                .unionByName(row("b_exact", ex, sum($"doc_id")))
-                .unionByName(row("c_store", kept, sum($"doc_id")))
-                .unionByName(row("d_near", nr, sum($"doc_id")))
-                .unionByName(row("e_packed", packed, lit(binsTotal)))
-                .coalesce(1).write.mode("append").parquet(s"$b/funnel")
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
-      Scratch.rmTree(staging)
-      b
-    }
-    // SERVE: funnel + shard read-back (q209) + the STORE read-back —
-    // every committed segment's per-document fp rows, the on-disk
-    // proof the append chain lost nothing
-    val back = s.read.parquet(s"$base/shards")
-    val shardRow = back
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"n_toks"), lit(0L)).cast("long").as("w"))
-      .select(lit(-1L).as("bk"), lit("f_shard").as("stage"), $"n_rows", $"w")
-    val gen = graft.sources.StoreFs.readManifest(s"$base/store_manifest")
-      .getOrElse(sys.error(s"q210: no committed store at $base/store_manifest"))
-    val fpAll = TextDedup.segmentsOf(s"$base/store", gen)
-      .map(seg => s.read.parquet(s"$base/store_${seg}_fp"))
-      .reduce(_ unionByName _)
-    val storeRow = fpAll
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"s_id"), lit(0L)).cast("long").as("w"))
-      .select(lit(-2L).as("bk"), lit("g_store").as("stage"), $"n_rows", $"w")
-    s.read.parquet(s"$base/funnel")
-      .unionByName(shardRow).unionByName(storeRow)
-      .orderBy($"bk", $"stage")
+    corpusStreamBuild(s, dir, "q210")(
+      // CROSS-BATCH plantings: copies of batch-0 fresh docs
+      // (≡ 0 mod 4) landing in batch 2 (+2000002 ≡ +3000002 ≡ 2
+      // mod 4) — dead only if batch 0's survivors entered the store
+      t => Seq(
+        t.filter($"b" >= 8 && $"doc_id" % 4 === 0 && $"doc_id" % 19 === 0)
+          .select(($"doc_id" + 2000002L).as("doc_id"), $"text"),
+        t.filter($"b" >= 8 && $"doc_id" % 4 === 0 && $"doc_id" % 23 === 0)
+          .select(($"doc_id" + 3000002L).as("doc_id"),
+            concat($"text", lit(" zz qq")).as("text"))),
+      // THE cumulative step: this batch's survivors become a store
+      // segment the NEXT batch classifies against
+      (nr, storeName, store) =>
+        TextDedup.appendToDedupStoreBucketed(nr, "doc_id", "text",
+          shingleN = 5, k = 8, rowsPerBand = 2,
+          namePrefix = storeName, pathPrefix = store, buckets = 8),
+      // the STORE read-back: every committed segment's per-document fp
+      // rows, the on-disk proof the append chain lost nothing
+      base => {
+        val gen = StoreFs.readManifest(s"$base/store_manifest")
+          .getOrElse(sys.error(s"q210: no committed store at $base/store_manifest"))
+        val fpAll = TextDedup.segmentsOf(s"$base/store", gen)
+          .map(seg => s.read.parquet(s"$base/store_${seg}_fp"))
+          .reduce(_ unionByName _)
+        Seq(funnelRow(-2L, "g_store", fpAll, sum($"s_id")))
+      })
   }
 
   val q210Sql: String = {
@@ -783,107 +563,8 @@ object QueriesPipeline {
     * wants the q210 shape instead, where the store append is
     * manifest-committed (scratch-staged, fenced swap) and a replayed
     * batch re-reads the committed generation idempotently. */
-  val q211SemStreamBuild: Q = (s, dir) => {
-    import s.implicits._
-    val base = Scratch.session("graft_q211", dir) { b =>
-      val file = s"$dir/embeddings.parquet"
-      val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
-      val corpus = s.read.parquet(file)
-        .filter(bk10 < 8 && $"vec_id" < 10000000000L)
-        .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-      val cent = graft.operators.IvfIndex
-        .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try graft.operators.IvfIndex.save(cent,
-        graft.operators.IvfIndex.assign(corpus, cent), s"$b/ivf")
-      finally cent.unpersist(): Unit
-      def delta(df: DataFrame): DataFrame = {
-        val t = df.filter($"vec_id" < 10000000000L)
-          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-          .withColumn("b", graft.operators.Sampling.hashBucket($"vec_id", 10))
-        val scaled = transform($"v", x => x * 1.01)
-        t.filter($"b" >= 8).select($"vec_id", $"v")
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 7 === 0)
-            .select(($"vec_id" + 200000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 11 === 0)
-            .select(($"vec_id" + 300000L).as("vec_id"), scaled.as("v")))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 13 === 0)
-            .select(($"vec_id" + 400000L).as("vec_id"), $"v"))
-          // CROSS-BATCH plantings: copies of batch-0 fresh vectors
-          // (≡ 0 mod 4) landing in batch 2 (+2000002 ≡ +3000002 ≡ 2
-          // mod 4) — dead only if batch 0's survivors were appended
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0)
-            .select(($"vec_id" + 2000002L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0 &&
-              $"vec_id" % 3 === 0)
-            .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
-      }
-      val staging = s"$b/staging"
-      val stream = QueriesStreaming.keyedMultiBatchStream(
-        s, file, staging, delta, col("vec_id") % 4)
-      graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".q211_batch_${batchId}_applied"
-            if (!graft.sources.StoreFs.childNames(b).contains(marker)) {
-              val slice = batch.toDF().select($"vec_id", $"v")
-                .localCheckpoint()
-              val ex = slice
-                .withColumn("keep", min($"vec_id").over(org.apache.spark.sql
-                  .expressions.Window.partitionBy($"v")))
-                .filter($"vec_id" === $"keep")
-                .select($"vec_id", $"v").localCheckpoint()
-              val (centK, idxK) = graft.operators.IvfIndex.load(s, s"$b/ivf")
-              val dups = graft.operators.IvfIndex.search(s,
-                  ex.select($"vec_id".as("q_id"), $"v".as("qv")),
-                  idxK, centK, k = 1, nProbe = 2)
-                .filter($"cos" >= 0.8)
-                .select($"q_id".as("vec_id"))
-              val kept = ex.join(dups, Seq("vec_id"), "left_anti")
-                .localCheckpoint()
-              // THE cumulative step: this batch's survivors join the
-              // index the NEXT batch screens against
-              graft.operators.IvfIndex.appendToIndex(s,
-                kept.select($"vec_id".as("id"), $"v"), s"$b/ivf"): Unit
-              def row(stage: String, df: DataFrame) =
-                df.agg(count(lit(1)).cast("long").as("n_rows"),
-                    coalesce(sum($"vec_id"), lit(0L)).cast("long").as("w"))
-                  .select(lit(batchId).cast("long").as("bk"),
-                    lit(stage).as("stage"), $"n_rows", $"w")
-              row("a_arrived", slice)
-                .unionByName(row("b_exact", ex))
-                .unionByName(row("c_store", kept))
-                .coalesce(1).write.mode("append").parquet(s"$b/funnel")
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
-      Scratch.rmTree(staging)
-      b
-    }
-    // SERVE: funnel + the cumulative index's serving face (the search a
-    // retrieval job runs) + the on-disk read-back
-    val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
-    val qs = s.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
-    val serveRow = graft.operators.IvfIndex
-      .search(s, qs, idxF, centF, k = 3, nProbe = 2)
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"rank".cast("long") * $"n_id"), lit(0L))
-          .cast("long").as("w"))
-      .select(lit(-1L).as("bk"), lit("f_serve").as("stage"), $"n_rows", $"w")
-    val indexRow = idxF
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"id"), lit(0L)).cast("long").as("w"))
-      .select(lit(-2L).as("bk"), lit("g_index").as("stage"), $"n_rows", $"w")
-    s.read.parquet(s"$base/funnel")
-      .unionByName(serveRow).unionByName(indexRow)
-      .orderBy($"bk", $"stage")
-  }
+  val q211SemStreamBuild: Q = (s, dir) =>
+    semanticBuild(s, dir, "q211", 10000000000L, FlatScreen)
 
   val q211Sql: String = {
     import QueriesSimilarity.{dotSql, norm2Sql, lloydIdxSql}
@@ -1018,130 +699,12 @@ object QueriesPipeline {
     * which the cap keeps DuckDB-sized; no-op at the three gate SFs.
     * At-least-once window: q211's caveat applies verbatim (marker
     * after append; single-attempt fixture). */
-  val q216NswScreenBuild: Q = (s, dir) => {
-    import s.implicits._
-    val cap = 2000000000L
-    val base = Scratch.session("graft_q216", dir) { b =>
-      val file = s"$dir/embeddings.parquet"
-      val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
-      val corpus = s.read.parquet(file)
-        .filter(bk10 < 8 && $"vec_id" < cap)
-        .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-      val cent = graft.operators.IvfIndex
-        .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val idxBase = graft.operators.IvfIndex.assign(corpus, cent)
-          .localCheckpoint()
-        graft.operators.IvfIndex.save(cent, idxBase, s"$b/ivf")
-        graft.operators.NswIndex.saveNsw(
-          graft.operators.NswIndex.fitGraph(idxBase, degree = 4),
-          graft.operators.NswIndex.entryPoints(idxBase, cent), s"$b/nsw")
-      } finally cent.unpersist(): Unit
-      def delta(df: DataFrame): DataFrame = {
-        val t = df.filter($"vec_id" < cap)
-          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-          .withColumn("b", graft.operators.Sampling.hashBucket($"vec_id", 10))
-        val scaled = transform($"v", x => x * 1.01)
-        t.filter($"b" >= 8).select($"vec_id", $"v")
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 7 === 0)
-            .select(($"vec_id" + 200000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 11 === 0)
-            .select(($"vec_id" + 300000L).as("vec_id"), scaled.as("v")))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 13 === 0)
-            .select(($"vec_id" + 400000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0)
-            .select(($"vec_id" + 2000002L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0 &&
-              $"vec_id" % 3 === 0)
-            .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
-      }
-      val staging = s"$b/staging"
-      val stream = QueriesStreaming.keyedMultiBatchStream(
-        s, file, staging, delta, col("vec_id") % 4)
-      graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".q216_batch_${batchId}_applied"
-            if (!graft.sources.StoreFs.childNames(b).contains(marker)) {
-              val slice = batch.toDF().select($"vec_id", $"v")
-                .localCheckpoint()
-              val ex = slice
-                .withColumn("keep", min($"vec_id").over(org.apache.spark.sql
-                  .expressions.Window.partitionBy($"v")))
-                .filter($"vec_id" === $"keep")
-                .select($"vec_id", $"v").localCheckpoint()
-              val (centK, idxK) = graft.operators.IvfIndex.load(s, s"$b/ivf")
-              // capture the pre-append base: appendToNsw's exact merge
-              // scores existing nodes against the delta only
-              val idxCk = idxK.localCheckpoint()
-              val (graphK, entriesK) =
-                graft.operators.NswIndex.loadNsw(s, s"$b/nsw")
-              // THE screening tier: constant per-arrival walk budget
-              // (nProbe + rounds·ef·degree scored vectors) instead of
-              // the flat probe's nProbe × |cell|
-              val dups = graft.operators.NswIndex.search(s,
-                  ex.select($"vec_id".as("q_id"), $"v".as("qv")),
-                  graphK, idxCk, centK, entriesK,
-                  k = 1, nProbe = 2, ef = 8, rounds = 2)
-                .filter($"cos" >= 0.8)
-                .select($"q_id".as("vec_id"))
-              val kept = ex.join(dups, Seq("vec_id"), "left_anti")
-                .localCheckpoint()
-              val idxDelta = graft.operators.IvfIndex
-                .assign(kept.select($"vec_id".as("id"), $"v"), centK)
-                .localCheckpoint()
-              graft.operators.IvfIndex.appendToIndex(s,
-                kept.select($"vec_id".as("id"), $"v"), s"$b/ivf"): Unit
-              graft.operators.NswIndex.appendToNsw(s, s"$b/nsw",
-                idxCk, idxDelta, centK, degree = 4)
-              def row(stage: String, df: DataFrame) =
-                df.agg(count(lit(1)).cast("long").as("n_rows"),
-                    coalesce(sum($"vec_id"), lit(0L)).cast("long").as("w"))
-                  .select(lit(batchId).cast("long").as("bk"),
-                    lit(stage).as("stage"), $"n_rows", $"w")
-              row("a_arrived", slice)
-                .unionByName(row("b_exact", ex))
-                .unionByName(row("c_store", kept))
-                .coalesce(1).write.mode("append").parquet(s"$b/funnel")
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
-      Scratch.rmTree(staging)
-      b
-    }
-    val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
-    val (graphF, entriesF) = graft.operators.NswIndex.loadNsw(s, s"$base/nsw")
-    val qs = s.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
-    val serveRow = graft.operators.NswIndex
-      .search(s, qs, graphF, idxF, centF, entriesF,
-        k = 3, nProbe = 2, ef = 8, rounds = 2)
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"rank".cast("long") * $"n_id"), lit(0L))
-          .cast("long").as("w"))
-      .select(lit(-1L).as("bk"), lit("f_serve").as("stage"), $"n_rows", $"w")
-    val indexRow = idxF
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"id"), lit(0L)).cast("long").as("w"))
-      .select(lit(-2L).as("bk"), lit("g_index").as("stage"), $"n_rows", $"w")
-    val graphRow = graphF.select(explode($"nbrs").as("dst"))
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"dst"), lit(0L)).cast("long").as("w"))
-      .select(lit(-3L).as("bk"), lit("h_graph").as("stage"), $"n_rows", $"w")
-    s.read.parquet(s"$base/funnel")
-      .unionByName(serveRow).unionByName(indexRow).unionByName(graphRow)
-      .orderBy($"bk", $"stage")
-  }
+  val q216NswScreenBuild: Q = (s, dir) =>
+    semanticBuild(s, dir, "q216", 2000000000L, NswScreen)
 
   val q216Sql: String = {
-    import QueriesSimilarity.{dotSql, norm2Sql, lloydIdxSql, nswCos,
-      nswWalkBaseCtes, nswRoundCtes}
+    import QueriesSimilarity.{lloydIdxSql, nswCos, nswWalkBaseCtes,
+      nswRoundCtes}
     // assign relation `src(id, v)` to its argmax-cosine fitted cell —
     // the engine's IvfIndex.assign tie-break (cos DESC, cluster ASC)
     def assignSql(name: String, src: String): String =
@@ -1273,122 +836,8 @@ object QueriesPipeline {
     * contract), then batch 3 and the serve against the refitted
     * centroids. Declared replica cap `vec_id < 10¹⁰` (q211's) keeps
     * the oracle DuckDB-sized; at-least-once caveat as q211. */
-  val q219RefitCadence: Q = (s, dir) => {
-    import s.implicits._
-    val base = Scratch.session("graft_q219", dir) { b =>
-      val file = s"$dir/embeddings.parquet"
-      val bk10 = graft.operators.Sampling.hashBucket($"vec_id", 10)
-      val corpus = s.read.parquet(file)
-        .filter(bk10 < 8 && $"vec_id" < 10000000000L)
-        .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-      val cent = graft.operators.IvfIndex
-        .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try graft.operators.IvfIndex.save(cent,
-        graft.operators.IvfIndex.assign(corpus, cent), s"$b/ivf")
-      finally cent.unpersist(): Unit
-      def delta(df: DataFrame): DataFrame = {
-        val t = df.filter($"vec_id" < 10000000000L)
-          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-          .withColumn("b", graft.operators.Sampling.hashBucket($"vec_id", 10))
-        val scaled = transform($"v", x => x * 1.01)
-        t.filter($"b" >= 8).select($"vec_id", $"v")
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 7 === 0)
-            .select(($"vec_id" + 200000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 11 === 0)
-            .select(($"vec_id" + 300000L).as("vec_id"), scaled.as("v")))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 13 === 0)
-            .select(($"vec_id" + 400000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0)
-            .select(($"vec_id" + 2000002L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0 &&
-              $"vec_id" % 3 === 0)
-            .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
-      }
-      // n_at_fit: the store size the live fit was computed over — the
-      // trigger's denominator, reset by a refit. Driver-sequential
-      // (foreachBatch runs batches in order on this single-attempt
-      // fixture); the funnel's d_budget rows put every value it ever
-      // takes on the hash.
-      var nAtFit = graft.operators.IvfIndex.load(s, s"$b/ivf")._2.count()
-      val staging = s"$b/staging"
-      val stream = QueriesStreaming.keyedMultiBatchStream(
-        s, file, staging, delta, col("vec_id") % 4)
-      graft.streaming.EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".q219_batch_${batchId}_applied"
-            if (!graft.sources.StoreFs.childNames(b).contains(marker)) {
-              val slice = batch.toDF().select($"vec_id", $"v")
-                .localCheckpoint()
-              val ex = slice
-                .withColumn("keep", min($"vec_id").over(org.apache.spark.sql
-                  .expressions.Window.partitionBy($"v")))
-                .filter($"vec_id" === $"keep")
-                .select($"vec_id", $"v").localCheckpoint()
-              val (centK, idxK) = graft.operators.IvfIndex.load(s, s"$b/ivf")
-              val dups = graft.operators.IvfIndex.search(s,
-                  ex.select($"vec_id".as("q_id"), $"v".as("qv")),
-                  idxK, centK, k = 1, nProbe = 2)
-                .filter($"cos" >= 0.8)
-                .select($"q_id".as("vec_id"))
-              val kept = ex.join(dups, Seq("vec_id"), "left_anti")
-                .localCheckpoint()
-              graft.operators.IvfIndex.appendToIndex(s,
-                kept.select($"vec_id".as("id"), $"v"), s"$b/ivf"): Unit
-              // THE CADENCE: trigger arithmetic after the append (all
-              // long integers — exact in both engines)
-              val nStore = graft.operators.IvfIndex
-                .load(s, s"$b/ivf")._2.count()
-              val nFitUsed = nAtFit
-              val fired = 1000L * nStore > 1165L * nAtFit
-              def row(stage: String, df: DataFrame) =
-                df.agg(count(lit(1)).cast("long").as("n_rows"),
-                    coalesce(sum($"vec_id"), lit(0L)).cast("long").as("w"))
-                  .select(lit(batchId).cast("long").as("bk"),
-                    lit(stage).as("stage"), $"n_rows", $"w")
-              var rows = row("a_arrived", slice)
-                .unionByName(row("b_exact", ex))
-                .unionByName(row("c_store", kept))
-                .unionByName(Seq((batchId, "d_budget", nStore, nFitUsed))
-                  .toDF("bk", "stage", "n_rows", "w"))
-              if (fired) {
-                val cells = graft.operators.IvfIndex
-                  .refitIndex(s, s"$b/ivf", k = 16)
-                nAtFit = nStore
-                rows = rows.unionByName(
-                  Seq((batchId, "e_refit", cells, 16L))
-                    .toDF("bk", "stage", "n_rows", "w"))
-              }
-              rows.coalesce(1).write.mode("append").parquet(s"$b/funnel")
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
-      Scratch.rmTree(staging)
-      b
-    }
-    val (centF, idxF) = graft.operators.IvfIndex.load(s, s"$base/ivf")
-    val qs = s.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
-    val serveRow = graft.operators.IvfIndex
-      .search(s, qs, idxF, centF, k = 3, nProbe = 2)
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"rank".cast("long") * $"n_id"), lit(0L))
-          .cast("long").as("w"))
-      .select(lit(-1L).as("bk"), lit("f_serve").as("stage"), $"n_rows", $"w")
-    val indexRow = idxF
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        coalesce(sum($"id"), lit(0L)).cast("long").as("w"))
-      .select(lit(-2L).as("bk"), lit("g_index").as("stage"), $"n_rows", $"w")
-    s.read.parquet(s"$base/funnel")
-      .unionByName(serveRow).unionByName(indexRow)
-      .orderBy($"bk", $"stage")
-  }
+  val q219RefitCadence: Q = (s, dir) =>
+    semanticBuild(s, dir, "q219", 10000000000L, FlatScreen, refitCadence(s))
 
   val q219Sql: String = {
     import QueriesSimilarity.{dotSql, norm2Sql, lloydIdxSql}
@@ -1700,6 +1149,329 @@ object QueriesPipeline {
        |  UNION ALL
        |$verdictRows)
        |ORDER BY gen, stage""".stripMargin
+  }
+
+  // ------------------------------------------- shared stages and builds
+  /** One `(bk, stage, n_rows, w)` funnel row: the row count of `df` and
+    * its `w` total (0 over no rows), tagged `bk` — the batch id for a
+    * per-batch stage, a negative id for a read-back. */
+  private def funnelRow(bk: Long, stage: String, df: DataFrame,
+                        w: Column): DataFrame =
+    df.agg(count(lit(1)).cast("long").as("n_rows"),
+        coalesce(w, lit(0L)).cast("long").as("w"))
+      .select(lit(bk).as("bk"), lit(stage).as("stage"), col("n_rows"), col("w"))
+
+  /** Exact dedup: the min `id` per `key` value survives, materialized. */
+  private def minIdPer(df: DataFrame, id: String, key: Column): DataFrame =
+    df.withColumn("keep", min(col(id)).over(Window.partitionBy(key)))
+      .filter(col(id) === col("keep")).drop("keep")
+      .localCheckpoint()
+
+  /** `df` without the LARGER `doc_id` of every verified MinHash-LSH
+    * near-dup pair — the q30 parameters (5-shingles, k=8, 2 rows per
+    * band, Jaccard ≥ 0.3, hot bands capped at 1024), materialized. */
+  private def dropNearDups(df: DataFrame): DataFrame = {
+    val sh = TextDedup.shingleTable(df, "doc_id", "text", 5)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try df.join(
+      TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2,
+          threshold = 0.3, maxBandDf = Some(1024))
+        .select(col("b_id").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti").localCheckpoint()
+    finally sh.unpersist(): Unit
+  }
+
+  /** The streaming corpus build of q209 and q210, run once per session
+    * (`graft_<tag>`): a dedup store over the `bk10 < 8` corpus, then
+    * the planted delta — q209's plantings, then `extraPlant`'s, each
+    * drawn from the source `t` with its `b` = bk10 column — over four
+    * keyed micro-batches (batch k ≡ `doc_id % 4 = k`), each under the
+    * replay guard:
+    *
+    *   intra-batch exact dedup → classification vs the store →
+    *   intra-batch near-dup removal → `grow(survivors, storeName,
+    *   storePath)` → token count → per-batch FFD pack → shard APPEND
+    *   (partitioned by batch) + funnel append.
+    *
+    * Serves the funnel, the `f_shard` read-back over the appended
+    * shards and `extraRows(base)`. */
+  private def corpusStreamBuild(s: SparkSession, dir: String, tag: String)(
+      extraPlant: DataFrame => Seq[DataFrame],
+      grow: (DataFrame, String, String) => Unit,
+      extraRows: String => Seq[DataFrame]): DataFrame = {
+    import s.implicits._
+    val base = Scratch.session(s"graft_$tag", dir) { b =>
+      val file = s"$dir/documents.parquet"
+      val corpus = s.read.parquet(file).filter(hashBucket($"doc_id", 10) < 8)
+        .select($"doc_id", $"text")
+      val storeName = s"${tag}_store_${Scratch.stem(dir)}"
+      val store = s"$b/store"
+      TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
+        shingleN = 5, k = 8, rowsPerBand = 2,
+        namePrefix = storeName, pathPrefix = store, buckets = 8)
+      // the arriving crawl: fresh docs + the q128 planted copies, all
+      // congruent mod 4 with their originals (same batch)
+      def delta(df: DataFrame): DataFrame = {
+        val t = df.withColumn("b", hashBucket($"doc_id", 10))
+        (Seq(
+          t.filter($"b" >= 8).select($"doc_id", $"text"),
+          t.filter($"b" < 8 && $"doc_id" % 7 === 0)
+            .select(($"doc_id" + 200000L).as("doc_id"), $"text"),
+          t.filter($"b" < 8 && $"doc_id" % 11 === 0)
+            .select(($"doc_id" + 300000L).as("doc_id"),
+              concat($"text", lit(" zz qq")).as("text")),
+          t.filter($"b" >= 8 && $"doc_id" % 13 === 0)
+            .select(($"doc_id" + 400000L).as("doc_id"), $"text"),
+          // perturbed copies of FRESH docs: neither side is in the
+          // store, both survive the classification, and the copy falls
+          // to the INTRA-batch near-dup stage — without this planting
+          // that stage never fires (the +300000 perturbed copies
+          // target STORE docs and die at c_store)
+          t.filter($"b" >= 8 && $"doc_id" % 17 === 0)
+            .select(($"doc_id" + 500000L).as("doc_id"),
+              concat($"text", lit(" zz qq")).as("text"))
+        ) ++ extraPlant(t)).reduce(_ unionByName _)
+      }
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("doc_id") % 4)
+      QueriesStreaming.replayGuardedBatches(s, stream, staging, b, tag) {
+        (batch, batchId) =>
+          val slice = batch.select($"doc_id", $"text").localCheckpoint()
+          val ex = minIdPer(slice, "doc_id", TextAnalysis.fingerprint($"text"))
+          val ok = TextDedup.ingestFlagsBucketed(ex, "doc_id", "text",
+              storeName, store,
+              shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
+            .filter(!$"dup_exact" && !$"dup_near")
+            .select($"id".as("doc_id"))
+          val kept = ex.join(ok, Seq("doc_id")).localCheckpoint()
+          val nr = dropNearDups(kept)
+          grow(nr, storeName, store)
+          val withLen = nr.withColumn("len",
+            TextAnalysis.wsTokenCount($"text").cast("long"))
+          val eligible = withLen.filter($"len" > 0 && $"len" <= 256).count()
+          val buckets = math.max(1L, math.ceil(eligible / 64.0).toLong).toInt
+          val packed = Packing.ffdPack(withLen.select($"doc_id", $"len"),
+              "doc_id", "len", capacity = 256L, buckets = buckets)
+            .select(lit(batchId).as("bk"), $"bucket",
+              $"id".as("doc_id"), $"len".as("n_toks"), $"bin")
+            .localCheckpoint()
+          packed.write.mode("append").partitionBy("bk")
+            .parquet(s"$b/shards")
+          val binsTotal = packed.groupBy($"bucket")
+            .agg(max($"bin").as("mx"))
+            .agg(coalesce(sum($"mx"), lit(0L)).cast("long")).head().getLong(0)
+          funnelRow(batchId, "a_arrived", slice, sum($"doc_id"))
+            .unionByName(funnelRow(batchId, "b_exact", ex, sum($"doc_id")))
+            .unionByName(funnelRow(batchId, "c_store", kept, sum($"doc_id")))
+            .unionByName(funnelRow(batchId, "d_near", nr, sum($"doc_id")))
+            .unionByName(funnelRow(batchId, "e_packed", packed, lit(binsTotal)))
+            .coalesce(1).write.mode("append").parquet(s"$b/funnel")
+      }
+      Scratch.rmTree(staging)
+      b
+    }
+    // SERVE: the persisted funnel + one read-back row over the REAL
+    // appended shard store — a lossless append means read-back rows
+    // and token mass equal the sum of the four batches' pack stages
+    val shardRow = funnelRow(-1L, "f_shard", s.read.parquet(s"$base/shards"),
+      sum($"n_toks"))
+    (s.read.parquet(s"$base/funnel") +: shardRow +: extraRows(base))
+      .reduce(_ unionByName _)
+      .orderBy($"bk", $"stage")
+  }
+
+  /** How the cumulative semantic build screens arrivals against its
+    * store (the flat index at `<session>/ivf`, plus whatever the tier
+    * keeps beside it). */
+  private trait ScreenTier {
+    /** Persist the tier's own structures over the fitted base index. */
+    def seed(indexed: DataFrame, centroids: DataFrame, b: String): Unit = ()
+
+    /** Drop the arrivals whose top-1 store neighbour has cosine ≥ 0.8,
+      * append the survivors to the store and return them. */
+    def screen(s: SparkSession, ex: DataFrame, b: String): DataFrame
+
+    /** The `f_serve` row (top-3 search for `qs`, Σ rank·n_id) over the
+      * final store, plus the tier's own read-back rows. */
+    def serveRows(s: SparkSession, qs: DataFrame, idx: DataFrame,
+                  cent: DataFrame, base: String): Seq[DataFrame]
+
+    protected def serveRow(hits: DataFrame): DataFrame =
+      funnelRow(-1L, "f_serve", hits, sum(col("rank").cast("long") * col("n_id")))
+
+    protected def dupsOf(hits: DataFrame): DataFrame =
+      hits.filter(col("cos") >= 0.8).select(col("q_id").as("vec_id"))
+  }
+
+  /** q211/q219's tier: a flat IVF probe (k=1, nProbe=2), survivors
+    * appended to the fixed centroids' cells. */
+  private object FlatScreen extends ScreenTier {
+    def screen(s: SparkSession, ex: DataFrame, b: String): DataFrame = {
+      val (centK, idxK) = IvfIndex.load(s, s"$b/ivf")
+      val dups = dupsOf(IvfIndex.search(s,
+        ex.select(col("vec_id").as("q_id"), col("v").as("qv")),
+        idxK, centK, k = 1, nProbe = 2))
+      val kept = ex.join(dups, Seq("vec_id"), "left_anti").localCheckpoint()
+      // THE cumulative step: this batch's survivors join the
+      // index the NEXT batch screens against
+      IvfIndex.appendToIndex(s,
+        kept.select(col("vec_id").as("id"), col("v")), s"$b/ivf"): Unit
+      kept
+    }
+
+    def serveRows(s: SparkSession, qs: DataFrame, idx: DataFrame,
+                  cent: DataFrame, base: String): Seq[DataFrame] =
+      Seq(serveRow(IvfIndex.search(s, qs, idx, cent, k = 3, nProbe = 2)))
+  }
+
+  /** q216's tier: a greedy NSW walk (nProbe 2, ef 8, rounds 2, degree
+    * 4) over a graph kept beside the flat index, survivors appended to
+    * both; the serve adds the `h_graph` read-back (edge count + Σ dst
+    * over the final persisted graph). */
+  private object NswScreen extends ScreenTier {
+    override def seed(indexed: DataFrame, centroids: DataFrame,
+                      b: String): Unit =
+      NswIndex.saveNsw(NswIndex.fitGraph(indexed, degree = 4),
+        NswIndex.entryPoints(indexed, centroids), s"$b/nsw")
+
+    def screen(s: SparkSession, ex: DataFrame, b: String): DataFrame = {
+      val (centK, idxK) = IvfIndex.load(s, s"$b/ivf")
+      // capture the pre-append base: appendToNsw's exact merge
+      // scores existing nodes against the delta only
+      val idxCk = idxK.localCheckpoint()
+      val (graphK, entriesK) = NswIndex.loadNsw(s, s"$b/nsw")
+      // THE screening tier: constant per-arrival walk budget
+      // (nProbe + rounds·ef·degree scored vectors) instead of
+      // the flat probe's nProbe × |cell|
+      val dups = dupsOf(NswIndex.search(s,
+        ex.select(col("vec_id").as("q_id"), col("v").as("qv")),
+        graphK, idxCk, centK, entriesK, k = 1, nProbe = 2, ef = 8, rounds = 2))
+      val kept = ex.join(dups, Seq("vec_id"), "left_anti").localCheckpoint()
+      val survivors = kept.select(col("vec_id").as("id"), col("v"))
+      val idxDelta = IvfIndex.assign(survivors, centK).localCheckpoint()
+      IvfIndex.appendToIndex(s, survivors, s"$b/ivf"): Unit
+      NswIndex.appendToNsw(s, s"$b/nsw", idxCk, idxDelta, centK, degree = 4)
+      kept
+    }
+
+    def serveRows(s: SparkSession, qs: DataFrame, idx: DataFrame,
+                  cent: DataFrame, base: String): Seq[DataFrame] = {
+      val (graph, entries) = NswIndex.loadNsw(s, s"$base/nsw")
+      Seq(serveRow(NswIndex.search(s, qs, graph, idx, cent, entries,
+          k = 3, nProbe = 2, ef = 8, rounds = 2)),
+        funnelRow(-3L, "h_graph", graph.select(explode(col("nbrs")).as("dst")),
+          sum(col("dst"))))
+    }
+  }
+
+  /** The cumulative semantic build of q211, q216 and q219, run once per
+    * session (`graft_<tag>`) over the embeddings with `vec_id < cap`:
+    * a deterministic k=8 Lloyd fit over the `bk10 < 8` corpus saved as
+    * the flat index (plus `tier.seed`), then the planted delta over
+    * four keyed micro-batches (batch k ≡ `vec_id % 4 = k`), each under
+    * the replay guard: intra-batch exact-vector dedup → `tier.screen`
+    * (screen + append) → funnel rows `a_arrived`/`b_exact`/`c_store`
+    * plus the rows of `cadence(ivfDir)(batchId)`, the per-batch step
+    * that runs after the append. Serves the funnel, the tier's serve
+    * rows over the final store for queries `vec_id < 5` and the
+    * `g_index` read-back. */
+  private def semanticBuild(s: SparkSession, dir: String, tag: String,
+                            cap: Long, tier: ScreenTier,
+                            cadence: String => Long => Seq[DataFrame] =
+                              _ => _ => Nil): DataFrame = {
+    import s.implicits._
+    val file = s"$dir/embeddings.parquet"
+    val base = Scratch.session(s"graft_$tag", dir) { b =>
+      val corpus = s.read.parquet(file)
+        .filter(hashBucket($"vec_id", 10) < 8 && $"vec_id" < cap)
+        .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
+      val cent = IvfIndex
+        .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val idxBase = IvfIndex.assign(corpus, cent).localCheckpoint()
+        IvfIndex.save(cent, idxBase, s"$b/ivf")
+        tier.seed(idxBase, cent, b)
+      } finally cent.unpersist(): Unit
+      def delta(df: DataFrame): DataFrame = {
+        val t = df.filter($"vec_id" < cap)
+          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+          .withColumn("b", hashBucket($"vec_id", 10))
+        val scaled = transform($"v", x => x * 1.01)
+        t.filter($"b" >= 8).select($"vec_id", $"v")
+          .unionByName(t.filter($"b" < 8 && $"vec_id" % 7 === 0)
+            .select(($"vec_id" + 200000L).as("vec_id"), $"v"))
+          .unionByName(t.filter($"b" < 8 && $"vec_id" % 11 === 0)
+            .select(($"vec_id" + 300000L).as("vec_id"), scaled.as("v")))
+          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 13 === 0)
+            .select(($"vec_id" + 400000L).as("vec_id"), $"v"))
+          // CROSS-BATCH plantings: copies of batch-0 fresh vectors
+          // (≡ 0 mod 4) landing in batch 2 (+2000002 ≡ +3000002 ≡ 2
+          // mod 4) — dead only if batch 0's survivors were appended
+          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0)
+            .select(($"vec_id" + 2000002L).as("vec_id"), $"v"))
+          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0 &&
+              $"vec_id" % 3 === 0)
+            .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
+      }
+      val afterAppend = cadence(s"$b/ivf")
+      val staging = s"$b/staging"
+      val stream = QueriesStreaming.keyedMultiBatchStream(
+        s, file, staging, delta, col("vec_id") % 4)
+      QueriesStreaming.replayGuardedBatches(s, stream, staging, b, tag) {
+        (batch, batchId) =>
+          val slice = batch.select($"vec_id", $"v").localCheckpoint()
+          val ex = minIdPer(slice, "vec_id", $"v")
+          val kept = tier.screen(s, ex, b)
+          (Seq(funnelRow(batchId, "a_arrived", slice, sum($"vec_id")),
+            funnelRow(batchId, "b_exact", ex, sum($"vec_id")),
+            funnelRow(batchId, "c_store", kept, sum($"vec_id"))
+          ) ++ afterAppend(batchId)).reduce(_ unionByName _)
+            .coalesce(1).write.mode("append").parquet(s"$b/funnel")
+      }
+      Scratch.rmTree(staging)
+      b
+    }
+    // SERVE: funnel + the cumulative store's serving face (the search
+    // a retrieval job runs) + the on-disk read-back
+    val (centF, idxF) = IvfIndex.load(s, s"$base/ivf")
+    val qs = s.read.parquet(file)
+      .filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
+    ((s.read.parquet(s"$base/funnel") +: tier.serveRows(s, qs, idxF, centF, base)) :+
+      funnelRow(-2L, "g_index", idxF, sum($"id")))
+      .reduce(_ unionByName _)
+      .orderBy($"bk", $"stage")
+  }
+
+  /** q219's refit cadence over the flat index at `ivf`, as the
+    * per-batch step run after each batch's append: a `d_budget` row
+    * (n_store after the append, the n_at_fit its trigger compared
+    * against) and, when 1000·n_store > 1165·n_at_fit, a k=16
+    * [[graft.operators.IvfIndex.refitIndex]] with an `e_refit` row
+    * (new cell count, k'). */
+  private def refitCadence(s: SparkSession)(ivf: String): Long => Seq[DataFrame] = {
+    import s.implicits._
+    // n_at_fit: the store size the live fit was computed over — the
+    // trigger's denominator, reset by a refit. Driver-sequential
+    // (foreachBatch runs batches in order on this single-attempt
+    // fixture); the funnel's d_budget rows put every value it ever
+    // takes on the hash.
+    var nAtFit = IvfIndex.load(s, ivf)._2.count()
+    batchId => {
+      // THE CADENCE: trigger arithmetic after the append (all long
+      // integers — exact in both engines)
+      val nStore = IvfIndex.load(s, ivf)._2.count()
+      val budget = Seq((batchId, "d_budget", nStore, nAtFit))
+        .toDF("bk", "stage", "n_rows", "w")
+      if (1000L * nStore > 1165L * nAtFit) {
+        val cells = IvfIndex.refitIndex(s, ivf, k = 16)
+        nAtFit = nStore
+        Seq(budget, Seq((batchId, "e_refit", cells, 16L))
+          .toDF("bk", "stage", "n_rows", "w"))
+      } else Seq(budget)
+    }
   }
 
   val catalog: Seq[(String, Q, Option[String])] = Seq(

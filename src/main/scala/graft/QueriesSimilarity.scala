@@ -2493,7 +2493,7 @@ object QueriesSimilarity {
     * [[ivfAdcSql]] — fixed-order lookup folds, same tie-breaks). */
   private def adcTopKCtes(p: String, idxRel: String, qsRel: String,
                           dtabRel: String, nProbe: Int,
-                          rerank: Int = 10): String =
+                          rerank: Int): String =
     s"""${p}qsc AS (
        |  SELECT q.q_id, q.qv, c.cluster,
        |         ${dotSql("q.qv", "c.centroid")} / sqrt(${norm2Sql("q.qv")} * ${norm2Sql("c.centroid")}) AS cos
@@ -2532,7 +2532,7 @@ object QueriesSimilarity {
     * is no shared query-level `dtab` relation to pass in). Same
     * exact-rerank tail as the raw chain. */
   private def adcTopKResidCtes(p: String, idxRel: String, qsRel: String,
-                               nProbe: Int, rerank: Int = 10): String =
+                               nProbe: Int, rerank: Int): String =
     s"""${p}qsc AS (
        |  SELECT q.q_id, q.qv, c.cluster,
        |         ${dotSql("q.qv", "c.centroid")} / sqrt(${norm2Sql("q.qv")} * ${norm2Sql("c.centroid")}) AS cos

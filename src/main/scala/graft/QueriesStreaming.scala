@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.{IvfIndex, NswIndex, PqIndex}
+import graft.sources.StoreFs
 import graft.streaming.EventStreams
 
 /** Structured-Streaming gate query: the events table consumed through
@@ -632,75 +634,39 @@ object QueriesStreaming {
     * state must serve identically to a direct build over
     * (base ∪ delta) ∖ deleted with the SAME base-fitted models — the
     * oracle replays exactly that (q146's text with the live filter).
-    * Batch replay guard: per-batch marker + an ALL-delta-ids presence
-    * check against the full tier; this single-session gate cannot
-    * crash mid-append, and the torn-append windows of the store
-    * itself are `StoreLifecycleSpec`'s contract. */
+    * Batch replay guard: per-batch marker ([[replayGuardedBatches]])
+    * + [[twoTierReplayAppend]]'s ALL-delta-ids presence check against
+    * the full tier; this single-session gate cannot crash mid-append,
+    * and the torn-append windows of the store itself are
+    * `StoreLifecycleSpec`'s contract. */
   val q201StreamTwoTierDelete: Q = (s, dir) => {
     import s.implicits._
-    import graft.operators.{IvfIndex, PqIndex}
     val file = s"$dir/embeddings.parquet"
-    val e = s.read.parquet(file)
-      .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
+    val e = idVectors(s.read.parquet(file))
     val storeBase = Scratch.session("graft_q201", dir) { b =>
       val stream = stagedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9))
       val p = b + "/store"
-      val base = e.filter($"id" % 10 < 9)
-      val cent = IvfIndex
-        .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
-        .localCheckpoint()
-      val indexed = IvfIndex.assign(base, cent).localCheckpoint()
-      val cb = PqIndex.fitCodebooks(s, base, m = 4, ks = 16, iterations = 1)
-      val codesIdx = PqIndex.encode(base, cb, m = 4, subDim = 16)
-        .join(indexed.select($"id", $"cluster"), Seq("id"))
-        .select($"cluster", $"id", $"codes")
-      PqIndex.saveTwoTier(cent, cb, codesIdx,
-        indexed.select($"cluster", $"id", $"v"), p)
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", b + "/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".tt_batch_${batchId}_applied"
-            val applied = graft.sources.StoreFs.childNames(b).contains(marker)
-            val delta = batch.toDF().select(col("vec_id").as("id"),
-              col("embedding").cast("array<double>").as("v"))
-            if (!applied) {
-              if (!delta.isEmpty) {
-                val (_, _, _, fullPrev) = PqIndex.loadTwoTier(s, p)
-                val landedAll = delta.select(col("id"))
-                  .join(fullPrev.select(col("id")), Seq("id"), "left_anti")
-                  .isEmpty
-                if (!landedAll)
-                  PqIndex.appendToTwoTier(s, delta, p, m = 4, subDim = 16): Unit
-              }
-              // the INTERLEAVE: a takedown commits between micro-batches
-              // (deleted ids are base rows, disjoint from every delta,
-              // so the tombstone→compact cycle can never hide arrivals).
-              // Deliberately OUTSIDE the empty-delta guard: repartition
-              // can emit an empty part file, and skipping the takedown
-              // on an empty batch 1 would silently diverge from the
-              // live-filtered oracle; the tombstone append and eager
-              // rebuild are idempotent for these fixed base ids.
-              if (batchId == 1) {
-                PqIndex.deleteFromTwoTier(s, p,
-                  e.filter($"id" % 10 === 3).select($"id"))
-                PqIndex.compactTwoTier(s, p)
-              }
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
+      seedTwoTier(s, e.filter($"id" % 10 < 9), p)
+      replayGuardedBatches(s, stream, b, b, "tt") { (batch, batchId) =>
+        twoTierReplayAppend(s, idVectors(batch), p)
+        // the INTERLEAVE: a takedown commits between micro-batches
+        // (deleted ids are base rows, disjoint from every delta,
+        // so the tombstone→compact cycle can never hide arrivals).
+        // Deliberately OUTSIDE the empty-delta guard: repartition
+        // can emit an empty part file, and skipping the takedown
+        // on an empty batch 1 would silently diverge from the
+        // live-filtered oracle; the tombstone append and eager
+        // rebuild are idempotent for these fixed base ids.
+        if (batchId == 1) {
+          PqIndex.deleteFromTwoTier(s, p,
+            e.filter($"id" % 10 === 3).select($"id"))
+          PqIndex.compactTwoTier(s, p)
         }
-        .start()
-      )
+      }
       b
     }
-    val (cent2, cb2, codes2, full2) =
-      PqIndex.loadTwoTier(s, storeBase + "/store")
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
-    PqIndex.ivfAdcSearch(s, queries, codes2, full2, cent2, cb2,
-        m = 4, subDim = 16, k = 5, rerank = 10, nProbe = 2)
-      .orderBy($"q_id", $"rank")
+    twoTierServe(s, e, storeBase).orderBy($"q_id", $"rank")
   }
 
   // ---------------------------------------------------------------- q202
@@ -717,78 +683,29 @@ object QueriesStreaming {
     * under the same centroids — q186's oracle with the live filter. */
   val q202StreamNswDelete: Q = (s, dir) => {
     import s.implicits._
-    import graft.operators.{IvfIndex, NswIndex}
     val file = s"$dir/embeddings.parquet"
-    val e = s.read.parquet(file)
-      .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
+    val e = idVectors(s.read.parquet(file))
     val base = Scratch.session("graft_q202", dir) { b =>
       val stream = stagedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9))
       val nswDir = b + "/nsw"
       val flatDir = b + "/flat"
-      val baseRel = e.filter($"id" % 10 < 9)
-      val cent = IvfIndex
-        .fitCentroids(s, baseRel, k = 8, iterations = 1, orderedMean = true)
-        .localCheckpoint()
-      val idxBase = IvfIndex.assign(baseRel, cent).localCheckpoint()
-      IvfIndex.save(cent, idxBase, flatDir)
-      NswIndex.saveNsw(NswIndex.fitGraph(idxBase, degree = 4),
-        NswIndex.entryPoints(idxBase, cent), nswDir)
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", b + "/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            // the q187 replay guard (marker + ALL-delta-ids presence,
-            // torn flat append completed by missing-rows-only repair)
-            val marker = s".nsw_batch_${batchId}_applied"
-            val applied = graft.sources.StoreFs.childNames(b).contains(marker)
-            val delta = batch.toDF().select(col("vec_id").as("id"),
-              col("embedding").cast("array<double>").as("v"))
-            if (!applied) {
-              if (!delta.isEmpty) {
-                val (cent2, prevRaw) = IvfIndex.load(s, flatDir)
-                val prev = prevRaw.select(col("id"), col("v"), col("cluster"))
-                  .localCheckpoint()
-                val missing = delta
-                  .join(prev.select(col("id")), Seq("id"), "left_anti")
-                  .localCheckpoint()
-                if (!missing.isEmpty) {
-                  val anyPresent = !delta.select(col("id"))
-                    .join(prev, Seq("id"), "left_semi").isEmpty
-                  val idxMissing = IvfIndex.assign(missing, cent2)
-                    .localCheckpoint()
-                  if (!anyPresent)
-                    NswIndex.appendToNsw(s, nswDir, prev, idxMissing, cent2,
-                      degree = 4)
-                  idxMissing.write.mode("append").partitionBy("cluster")
-                    .parquet(s"$flatDir/index")
-                }
-              }
-              // the INTERLEAVE: an eager delete+rebuild generation
-              // commits between micro-batches (base ids only, disjoint
-              // from every delta). OUTSIDE the empty-delta guard — an
-              // empty batch 1 part file must not silently skip the
-              // takedown (the delete+rebuild is idempotent for these
-              // fixed base ids).
-              if (batchId == 1)
-                NswIndex.deleteFromNsw(s, flatDir, nswDir,
-                  e.filter($"id" % 10 === 3).select($"id"), degree = 4): Unit
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
+      seedNsw(s, e.filter($"id" % 10 < 9), flatDir, nswDir)
+      replayGuardedBatches(s, stream, b, b, "nsw") { (batch, batchId) =>
+        nswReplayAppend(s, idVectors(batch), flatDir, nswDir)
+        // the INTERLEAVE: an eager delete+rebuild generation
+        // commits between micro-batches (base ids only, disjoint
+        // from every delta). OUTSIDE the empty-delta guard — an
+        // empty batch 1 part file must not silently skip the
+        // takedown (the delete+rebuild is idempotent for these
+        // fixed base ids).
+        if (batchId == 1)
+          NswIndex.deleteFromNsw(s, flatDir, nswDir,
+            e.filter($"id" % 10 === 3).select($"id"), degree = 4): Unit
+      }
       b
     }
-    val (graph, entries) = NswIndex.loadNsw(s, base + "/nsw")
-    val (centF, idxAll) = IvfIndex.load(s, base + "/flat")
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
-    NswIndex.search(s, queries, graph,
-        idxAll.select(col("id"), col("v"), col("cluster")), centF, entries,
-        k = 5, nProbe = 2, ef = 8, rounds = 2)
-      .select($"q_id", $"rank", $"n_id", ($"cos" + 0.0).as("cos"))
-      .orderBy($"q_id", $"rank")
+    nswServe(s, e, base)
   }
 
   // ---------------------------------------------------------------- q207
@@ -811,64 +728,28 @@ object QueriesStreaming {
     * single-session replay-guard caveat as q201. */
   val q207StreamTwoTierRefit: Q = (s, dir) => {
     import s.implicits._
-    import graft.operators.{IvfIndex, PqIndex}
     val file = s"$dir/embeddings.parquet"
-    val e = s.read.parquet(file)
-      .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
+    val e = idVectors(s.read.parquet(file))
     val storeBase = Scratch.session("graft_q207", dir) { b =>
       val stream = keyedMultiBatchStream(s, file, b,
         _.filter(col("vec_id") % 10 === 9),
         expr("vec_id div 10") % 4)
       val p = b + "/store"
-      val base = e.filter($"id" % 10 < 9)
-      val cent = IvfIndex
-        .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
-        .localCheckpoint()
-      val indexed = IvfIndex.assign(base, cent).localCheckpoint()
-      val cb = PqIndex.fitCodebooks(s, base, m = 4, ks = 16, iterations = 1)
-      val codesIdx = PqIndex.encode(base, cb, m = 4, subDim = 16)
-        .join(indexed.select($"id", $"cluster"), Seq("id"))
-        .select($"cluster", $"id", $"codes")
-      PqIndex.saveTwoTier(cent, cb, codesIdx,
-        indexed.select($"cluster", $"id", $"v"), p)
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", b + "/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val marker = s".ttrf_batch_${batchId}_applied"
-            val applied = graft.sources.StoreFs.childNames(b).contains(marker)
-            val delta = batch.toDF().select(col("vec_id").as("id"),
-              col("embedding").cast("array<double>").as("v"))
-            if (!applied) {
-              if (!delta.isEmpty) {
-                val (_, _, _, fullPrev) = PqIndex.loadTwoTier(s, p)
-                val landedAll = delta.select(col("id"))
-                  .join(fullPrev.select(col("id")), Seq("id"), "left_anti")
-                  .isEmpty
-                if (!landedAll)
-                  PqIndex.appendToTwoTier(s, delta, p, m = 4, subDim = 16): Unit
-              }
-              // the INTERLEAVE: the refit generation commits between
-              // micro-batches. OUTSIDE the empty-delta guard (the q201
-              // contract): an empty batch-1 part file must not skip
-              // the refit, or batches 2-3 silently encode under the
-              // base codebooks and diverge from the refit-fit oracle.
-              if (batchId == 1)
-                PqIndex.refitTwoTier(s, p, m = 4, subDim = 16, ks = 16,
-                  iterations = 1)
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
+      seedTwoTier(s, e.filter($"id" % 10 < 9), p)
+      replayGuardedBatches(s, stream, b, b, "ttrf") { (batch, batchId) =>
+        twoTierReplayAppend(s, idVectors(batch), p)
+        // the INTERLEAVE: the refit generation commits between
+        // micro-batches. OUTSIDE the empty-delta guard (the q201
+        // contract): an empty batch-1 part file must not skip
+        // the refit, or batches 2-3 silently encode under the
+        // base codebooks and diverge from the refit-fit oracle.
+        if (batchId == 1)
+          PqIndex.refitTwoTier(s, p, m = 4, subDim = 16, ks = 16,
+            iterations = 1)
+      }
       b
     }
-    val (cent2, cb2, codes2, full2) =
-      PqIndex.loadTwoTier(s, storeBase + "/store")
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
-    val serve = PqIndex.ivfAdcSearch(s, queries, codes2, full2, cent2, cb2,
-        m = 4, subDim = 16, k = 5, rerank = 10, nProbe = 2)
+    val serve = twoTierServe(s, e, storeBase)
       .select(lit("serve").as("phase"), $"q_id", $"rank", $"n_id",
         $"ad2", $"d2", lit(null).cast("double").as("mean_qerr"),
         lit(null).cast("long").as("n_rows"))
@@ -879,6 +760,54 @@ object QueriesStreaming {
         lit(null).cast("double").as("ad2"), lit(null).cast("double").as("d2"),
         $"mean_qerr", $"n_rows")
     serve.unionByName(baseline).orderBy($"phase", $"q_id", $"rank")
+  }
+
+  /** `(id, v)` of an embeddings frame: `vec_id` and the vector as
+    * `array<double>` — the shape every vector store here takes. */
+  private def idVectors(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The base two-tier store of q201/q207 at `p`: k=8 coarse centroids
+    * and 4×16 PQ codebooks, both fitted over `base`. */
+  private def seedTwoTier(s: SparkSession, base: DataFrame, p: String): Unit = {
+    val cent = IvfIndex
+      .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
+      .localCheckpoint()
+    val indexed = IvfIndex.assign(base, cent).localCheckpoint()
+    val cb = PqIndex.fitCodebooks(s, base, m = 4, ks = 16, iterations = 1)
+    val codesIdx = PqIndex.encode(base, cb, m = 4, subDim = 16)
+      .join(indexed.select(col("id"), col("cluster")), Seq("id"))
+      .select(col("cluster"), col("id"), col("codes"))
+    PqIndex.saveTwoTier(cent, cb, codesIdx,
+      indexed.select(col("cluster"), col("id"), col("v")), p)
+  }
+
+  /** q201/q207's serve: the top-5 ADC search (rerank 10, nProbe 2)
+    * over the stream-built two-tier store under `base` for the first
+    * ten vectors of `e`. */
+  private def twoTierServe(s: SparkSession, e: DataFrame,
+                           base: String): DataFrame = {
+    val (cent, cb, codes, full) = PqIndex.loadTwoTier(s, base + "/store")
+    val queries = e.filter(col("id") < 10)
+      .select(col("id").as("q_id"), col("v").as("qv"))
+    PqIndex.ivfAdcSearch(s, queries, codes, full, cent, cb,
+      m = 4, subDim = 16, k = 5, rerank = 10, nProbe = 2)
+  }
+
+  /** The replay check of one two-tier batch (q201/q207): `delta` is
+    * appended unless every one of its ids is already in the full tier
+    * — a crash after the append's commit and before the batch marker
+    * leaves all of them there. An empty delta appends nothing. */
+  private def twoTierReplayAppend(s: SparkSession, delta: DataFrame,
+                                  p: String): Unit = {
+    if (!delta.isEmpty) {
+      val (_, _, _, fullPrev) = PqIndex.loadTwoTier(s, p)
+      val landedAll = delta.select(col("id"))
+        .join(fullPrev.select(col("id")), Seq("id"), "left_anti")
+        .isEmpty
+      if (!landedAll)
+        PqIndex.appendToTwoTier(s, delta, p, m = 4, subDim = 16): Unit
+    }
   }
 
   /** Registry: name → (spark program, oracle sql). */
@@ -912,12 +841,11 @@ object QueriesStreaming {
         (Seq[graft.functions.MisraGriesAgg.Entry], Long)]((Seq.empty, 0L))
       EventStreams.runMicroBatches(s)(stream.writeStream
         .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
+          (batch: Dataset[Row], _: Long) =>
             val r = batch.toDF()
               .agg(graft.functions.MisraGriesAgg(k, $"key").as("mg"),
                 count(lit(1)).as("n")).head()
-            val items = r.getStruct(0).getSeq[org.apache.spark.sql.Row](0)
+            val items = r.getStruct(0).getSeq[Row](0)
               .map(x => graft.functions.MisraGriesAgg.Entry(
                 x.getString(0), x.getLong(1)))
             val n = r.getLong(1)
@@ -1004,6 +932,33 @@ object QueriesStreaming {
       .option("maxFilesPerTrigger", 1).parquet(watch.toString)
   }
 
+  /** Runs `stream` to completion ([[EventStreams.runMicroBatches]],
+    * checkpoint at `staging/ckpt`) with every batch under the
+    * at-least-once replay guard of the store-building gates.
+    * `foreachBatch` may run a batch again (a restart between the body
+    * and the checkpoint commit), and these bodies append to persisted
+    * stores, so a finished batch must not apply twice: batch `id` runs
+    * `body(batch, id)` only while `markers` lacks the
+    * `.<tag>_batch_<id>_applied` marker, and touches it once the body
+    * returns. A crash INSIDE the body leaves no marker, so the next
+    * attempt re-runs the whole body; a body whose appends cannot simply
+    * re-run adds its own presence check ([[nswReplayAppend]],
+    * [[twoTierReplayAppend]]). */
+  private[graft] def replayGuardedBatches(s: SparkSession, stream: DataFrame,
+                                          staging: String, markers: String,
+                                          tag: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    EventStreams.runMicroBatches(s)(stream.writeStream
+      .option("checkpointLocation", s"$staging/ckpt")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val marker = s".${tag}_batch_${batchId}_applied"
+        if (!StoreFs.childNames(markers).contains(marker)) {
+          body(batch.toDF(), batchId)
+          StoreFs.touchMarker(markers, marker)
+        }
+      }
+      .start())
+
   /** Same oracle as q138 — end-of-stream state must equal the batch
     * computation on the same corpus. */
   val q143Sql: String = QueriesText.q138Sql
@@ -1054,8 +1009,7 @@ object QueriesStreaming {
       EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
+          (batch: Dataset[Row], batchId: Long) =>
             EventStreams.writeBatchIdempotent(
               batch.toDF().groupBy(col("source"))
                 .agg(TDigest.digestAgg(col("x")).as("digest")),
@@ -1091,8 +1045,7 @@ object QueriesStreaming {
       EventStreams.runMicroBatches(s)(stream.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
+          (batch: Dataset[Row], batchId: Long) =>
             EventStreams.writeBatchIdempotent(
               batch.toDF()
                 .select(col("event_type"),
@@ -1381,13 +1334,11 @@ object QueriesStreaming {
     * base ∪ delta regardless of how the stream chopped the delta — so
     * the oracle is q186's verbatim. The previous index snapshot is
     * localCheckpoint-pinned BEFORE the batch's files append, so the
-    * merge never reads its own writes. */
+    * merge never reads its own writes ([[nswReplayAppend]]). */
   val q187StreamNswIngest: Q = (s, dir) => {
     import s.implicits._
-    import graft.operators.{IvfIndex, NswIndex}
     val file = s"$dir/embeddings.parquet"
-    val e = s.read.parquet(file)
-      .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
+    val e = idVectors(s.read.parquet(file))
     // session-owned stream-built store (the q142 serving contract):
     // the 4-batch ingest runs once per session; steady bench passes
     // load+search the maintained store, cold passes re-ingest after
@@ -1397,81 +1348,84 @@ object QueriesStreaming {
         _.filter(col("vec_id") % 10 === 9))
       val nswDir = b + "/nsw"
       val flatDir = b + "/flat"
-      val baseRel = e.filter($"id" % 10 < 9)
-      val cent = IvfIndex
-        .fitCentroids(s, baseRel, k = 8, iterations = 1, orderedMean = true)
-        .localCheckpoint()
-      val idxBase = IvfIndex.assign(baseRel, cent).localCheckpoint()
-      IvfIndex.save(cent, idxBase, flatDir)
-      NswIndex.saveNsw(NswIndex.fitGraph(idxBase, degree = 4),
-        NswIndex.entryPoints(idxBase, cent), nswDir)
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", b + "/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            // REPLAY GUARD: foreachBatch is at-least-once, and this
-            // body is NOT naturally idempotent (a replayed append would
-            // duplicate delta vectors in the flat store and violate
-            // appendToNsw's disjoint-id precondition). Two layers, the
-            // EventStreams generational-sink pattern adapted:
-            //  1. a per-batch marker touched AFTER both appends — the
-            //     fast path skipping fully-applied replays outright;
-            //  2. for a crash INSIDE the body, a presence check of the
-            //     delta ids against the pinned pre-batch flat snapshot.
-            //     The NSW append runs FIRST and is content-idempotent
-            //     on identical (prev, delta) — append ≡ rebuild, so a
-            //     re-run just commits an equal generation — while the
-            //     flat append runs LAST. ALL delta ids present in the
-            //     flat snapshot ⟺ both appends landed fully; a
-            //     PARTIAL presence means the flat parquet append's job
-            //     commit was torn mid-crash — and since the flat
-            //     append only starts after appendToNsw's generation
-            //     committed, the repair is to append ONLY the missing
-            //     rows (rows are per-id, so this completes the delta
-            //     exactly, no duplicates) and skip the NSW re-append.
-            val marker = s".nsw_batch_${batchId}_applied"
-            val applied = graft.sources.StoreFs.childNames(b).contains(marker)
-            val delta = batch.toDF().select(col("vec_id").as("id"),
-              col("embedding").cast("array<double>").as("v"))
-            // empty-delta guard is CORRECT here (unlike q201/q202, which
-            // hoist a takedown outside it): q187 has no interleaved
-            // delete, so an empty batch has genuinely nothing to do
-            if (!applied && !delta.isEmpty) {
-              val (cent2, prevRaw) = IvfIndex.load(s, flatDir)
-              // pin the pre-batch snapshot before this batch appends
-              val prev = prevRaw.select(col("id"), col("v"), col("cluster"))
-                .localCheckpoint()
-              val missing = delta
-                .join(prev.select(col("id")), Seq("id"), "left_anti")
-                .localCheckpoint()
-              if (!missing.isEmpty) {
-                val anyPresent = !delta.select(col("id"))
-                  .join(prev, Seq("id"), "left_semi").isEmpty
-                val idxMissing = IvfIndex.assign(missing, cent2).localCheckpoint()
-                // clean replay (no delta rows landed): run both appends;
-                // torn flat append (some landed): NSW already committed
-                // this delta — only complete the flat side
-                if (!anyPresent)
-                  NswIndex.appendToNsw(s, nswDir, prev, idxMissing, cent2, degree = 4)
-                idxMissing.write.mode("append").partitionBy("cluster")
-                  .parquet(s"$flatDir/index")
-              }
-              graft.sources.StoreFs.touchMarker(b, marker)
-            }
-        }
-        .start()
-      )
+      seedNsw(s, e.filter($"id" % 10 < 9), flatDir, nswDir)
+      // q187 has no interleaved delete, so the append is the whole
+      // batch (an empty batch has genuinely nothing to do)
+      replayGuardedBatches(s, stream, b, b, "nsw") { (batch, _) =>
+        nswReplayAppend(s, idVectors(batch), flatDir, nswDir)
+      }
       b
     }
+    nswServe(s, e, base)
+  }
+
+  /** The base store of q187/q202: k=8 centroids fitted over `baseRel`,
+    * its flat index at `flatDir` and its degree-4 NSW graph at
+    * `nswDir`. */
+  private def seedNsw(s: SparkSession, baseRel: DataFrame, flatDir: String,
+                      nswDir: String): Unit = {
+    val cent = IvfIndex
+      .fitCentroids(s, baseRel, k = 8, iterations = 1, orderedMean = true)
+      .localCheckpoint()
+    val idxBase = IvfIndex.assign(baseRel, cent).localCheckpoint()
+    IvfIndex.save(cent, idxBase, flatDir)
+    NswIndex.saveNsw(NswIndex.fitGraph(idxBase, degree = 4),
+      NswIndex.entryPoints(idxBase, cent), nswDir)
+  }
+
+  /** One batch's NSW + flat appends (q187/q202), safe to re-run.
+    * `foreachBatch` is at-least-once and the appends are NOT naturally
+    * idempotent (a replayed append would duplicate delta vectors in the
+    * flat store and violate appendToNsw's disjoint-id precondition).
+    * [[replayGuardedBatches]]'s marker skips fully applied replays;
+    * for a crash INSIDE the batch, the delta ids are checked against
+    * the pinned pre-batch flat snapshot. The NSW append runs FIRST and
+    * is content-idempotent on identical (prev, delta) — append ≡
+    * rebuild, so a re-run just commits an equal generation — while the
+    * flat append runs LAST. ALL delta ids present in the flat snapshot
+    * ⟺ both appends landed fully; a PARTIAL presence means the flat
+    * parquet append's job commit was torn mid-crash — and since the
+    * flat append only starts after appendToNsw's generation committed,
+    * the repair is to append ONLY the missing rows (rows are per-id,
+    * so this completes the delta exactly, no duplicates) and skip the
+    * NSW re-append. An empty delta appends nothing. */
+  private def nswReplayAppend(s: SparkSession, delta: DataFrame,
+                              flatDir: String, nswDir: String): Unit = {
+    if (!delta.isEmpty) {
+      val (cent2, prevRaw) = IvfIndex.load(s, flatDir)
+      // pin the pre-batch snapshot before this batch appends
+      val prev = prevRaw.select(col("id"), col("v"), col("cluster"))
+        .localCheckpoint()
+      val missing = delta
+        .join(prev.select(col("id")), Seq("id"), "left_anti")
+        .localCheckpoint()
+      if (!missing.isEmpty) {
+        val anyPresent = !delta.select(col("id"))
+          .join(prev, Seq("id"), "left_semi").isEmpty
+        val idxMissing = IvfIndex.assign(missing, cent2).localCheckpoint()
+        // clean replay (no delta rows landed): run both appends;
+        // torn flat append (some landed): NSW already committed
+        // this delta — only complete the flat side
+        if (!anyPresent)
+          NswIndex.appendToNsw(s, nswDir, prev, idxMissing, cent2, degree = 4)
+        idxMissing.write.mode("append").partitionBy("cluster")
+          .parquet(s"$flatDir/index")
+      }
+    }
+  }
+
+  /** q187/q202's serve: the top-5 NSW walk over the stream-built store
+    * under `base` for the first ten vectors of `e`. */
+  private def nswServe(s: SparkSession, e: DataFrame, base: String): DataFrame = {
     val (graph, entries) = NswIndex.loadNsw(s, base + "/nsw")
     val (centF, idxAll) = IvfIndex.load(s, base + "/flat")
-    val queries = e.filter($"id" < 10).select($"id".as("q_id"), $"v".as("qv"))
+    val queries = e.filter(col("id") < 10)
+      .select(col("id").as("q_id"), col("v").as("qv"))
     NswIndex.search(s, queries, graph,
         idxAll.select(col("id"), col("v"), col("cluster")), centF, entries,
         k = 5, nProbe = 2, ef = 8, rounds = 2)
-      .select($"q_id", $"rank", $"n_id", ($"cos" + 0.0).as("cos"))
-      .orderBy($"q_id", $"rank")
+      .select(col("q_id"), col("rank"), col("n_id"), (col("cos") + 0.0).as("cos"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   val catalog: Seq[(String, Q, Option[String])] = Seq(

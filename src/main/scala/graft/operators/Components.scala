@@ -62,9 +62,7 @@ object Components {
     var converged = false
     // outer None = no previous round yet; inner None = null sum (empty graph)
     var prevSum: Option[Option[java.math.BigDecimal]] = None
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       // one dataflow per round: neighbor labels ∪ own labels → min per
       // id. The id set is invariant (sym is symmetric, so every vertex
       // occurs as dst; the union keeps the rest), so this is exactly
@@ -96,8 +94,6 @@ object Components {
       labels.unpersist()
       labels = next
       iter += 1
-      if (verbose)
-        println(f"[cc] round $iter: ${(System.nanoTime() - tRound) / 1e9}%.2f s (converged=$converged)")
     }
     sym.unpersist()
     if (!converged)

@@ -58,10 +58,6 @@ object IvfIndex {
           .groupBy(col("cluster"))
           .agg(graft.functions.VectorMeanAgg(col("v")).as("m"))
           .select(col("cluster"), col("m.mean").as("centroid"))
-      // plan audit hook (the [[PageRank]] pattern): callers persist or
-      // checkpoint the fit, so its dataflow never reaches a query-level
-      // explain
-      if (sys.env.contains("GRAFT_FIT_EXPLAIN")) centroids.explain("formatted")
     }
     centroids
   }
@@ -715,22 +711,35 @@ object IvfIndex {
       .select(col("q_id"), col("rn"), col("id"), col("cos"))
       .localCheckpoint()
     nProbes.map { np =>
-      val hits = cand.filter(col("rn") <= np)
+      val found = cand.filter(col("rn") <= np)
         .groupBy(col("q_id"))
         .agg(graft.functions.TopKAgg(k, col("cos"), col("id")).as("topk"))
         .select(col("q_id"), explode(col("topk.items")).as("c"))
         .select(col("q_id"), col("c.id").as("n_id"))
-        .join(truth, Seq("q_id", "n_id"), "left_semi")
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-      queries.select(col("q_id")).join(hits, Seq("q_id"), "left")
-        .select(col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("n_hit")).as("total_hits"),
-          round(avg(col("n_hit").cast("double") / k), 4).as("avg_recall"),
-          round(min(col("n_hit").cast("double") / k), 4).as("min_recall"))
-        .select(lit(np).cast("int").as("n_probe"), col("n_queries"),
-          col("total_hits"), col("avg_recall"), col("min_recall"))
+      recallSummary(queries, found, truth, k, lit(np).cast("int").as("n_probe"))
     }.reduce(_ unionByName _)
+  }
+
+  /** The recall block of the index tuners ([[recallAtK]],
+    * [[PqIndex.twoTierRecallAtK]], `NswIndex.measureWalkRecall`): the
+    * `found` `(q_id, n_id)` rows that `truth` holds, counted per query
+    * (a query with no hit counts 0), summarised as one row
+    * `(lead…, n_queries, total_hits, avg_recall, min_recall)` with the
+    * recalls rounded to 4 — the value the choice rules and the oracles
+    * read. */
+  private[operators] def recallSummary(queries: DataFrame, found: DataFrame,
+                                       truth: DataFrame, k: Int,
+                                       lead: Column*): DataFrame = {
+    val hits = found.join(truth, Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
+    queries.select(col("q_id")).join(hits, Seq("q_id"), "left")
+      .select(col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+      .agg(count(lit(1)).as("n_queries"),
+        sum(col("n_hit")).as("total_hits"),
+        round(avg(col("n_hit").cast("double") / k), 4).as("avg_recall"),
+        round(min(col("n_hit").cast("double") / k), 4).as("min_recall"))
+      .select(lead ++ Seq(col("n_queries"), col("total_hits"),
+        col("avg_recall"), col("min_recall")): _*)
   }
 
   /** The flat tier's `(q_id, n_id)` brute-force ground truth —

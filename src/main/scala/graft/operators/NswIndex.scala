@@ -181,10 +181,6 @@ object NswIndex {
         struct(col("escore"), (-col("entry")).as("tb"))).as("e"))
       .select(col("cluster"), col("e.entry").as("entry"),
         col("e.escore").as("escore"))
-    // plan audit hook (the [[PageRank]] GRAFT_PR_EXPLAIN pattern): the
-    // merge dataflow runs eagerly under saveNsw's write, so it never
-    // reaches a query-level explain
-    if (sys.env.contains("GRAFT_NSW_EXPLAIN")) merged.explain("formatted")
     saveNsw(merged, mergedEntries, dir, retainGenerations)
   }
 
@@ -831,7 +827,7 @@ object NswIndex {
   private def measureWalkRecall(spark: SparkSession, flatDir: String,
                                 nswDir: String, queries: DataFrame, k: Int,
                                 costed: Seq[(WalkSetting, Long)],
-                                sharedTruth: Option[DataFrame] = None
+                                sharedTruth: Option[DataFrame]
                                ): DataFrame = {
     // the [[search]] precondition, re-checked here because this path is
     // also reached through [[refreshWalkTuning]] reading a PERSISTED
@@ -860,23 +856,13 @@ object NswIndex {
         ss.map(s => s -> trimTopK(snaps(s.rounds), k))
       }.toMap
     costed.map { case (s, cost) =>
-      val hits = walked(s)
-        .select(col("q_id"), col("n_id"))
-        .join(truth, Seq("q_id", "n_id"), "left_semi")
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-      queries.select(col("q_id")).join(hits, Seq("q_id"), "left")
-        .select(col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("n_hit")).as("total_hits"),
-          round(avg(col("n_hit").cast("double") / k), 4).as("avg_recall"),
-          round(min(col("n_hit").cast("double") / k), 4).as("min_recall"))
-        .select(lit(s.nProbe).cast("int").as("n_probe"),
-          lit(s.ef).cast("int").as("ef"),
-          lit(s.rounds).cast("int").as("rounds"),
-          lit(s.seeds).cast("int").as("seeds"),
-          lit(cost).as("cost"),
-          col("n_queries"), col("total_hits"),
-          col("avg_recall"), col("min_recall"))
+      IvfIndex.recallSummary(queries,
+        walked(s).select(col("q_id"), col("n_id")), truth, k,
+        lit(s.nProbe).cast("int").as("n_probe"),
+        lit(s.ef).cast("int").as("ef"),
+        lit(s.rounds).cast("int").as("rounds"),
+        lit(s.seeds).cast("int").as("seeds"),
+        lit(cost).as("cost"))
     }.reduce(_ unionByName _)
   }
 
@@ -1008,7 +994,7 @@ object NswIndex {
                           graph: DataFrame, indexed: DataFrame,
                           centroids: DataFrame, entries: DataFrame,
                           nProbe: Int, ef: Int, rounds: Int,
-                          seedsPerCell: Int = 1): DataFrame =
+                          seedsPerCell: Int): DataFrame =
     walkVisitedSnapshots(spark, queries, graph, indexed, centroids, entries,
       nProbe, ef, Seq(rounds), seedsPerCell)(rounds)
 
@@ -1026,7 +1012,7 @@ object NswIndex {
                                    centroids: DataFrame, entries: DataFrame,
                                    nProbe: Int, ef: Int,
                                    roundsWanted: Seq[Int],
-                                   seedsPerCell: Int = 1): Map[Int, DataFrame] = {
+                                   seedsPerCell: Int): Map[Int, DataFrame] = {
     require(roundsWanted.nonEmpty, "walkVisitedSnapshots needs >= 1 rounds value")
     require(roundsWanted.forall(_ >= 0), s"negative rounds: $roundsWanted")
     val rounds = roundsWanted.max

@@ -178,10 +178,6 @@ object PageRank {
             expr(s"($dampingPct * (coalesce(in_mass, 0L) + sink_mass div $n)) div 100"))
             .as("rank")) ++
           (if (withPrev) Seq(col("prev")) else Seq.empty): _*)
-      // plan audit hook: the per-iteration dataflow is otherwise hidden
-      // behind the eager checkpoint (explain on the query result shows
-      // only the final checkpoint scan)
-      if (sys.env.contains("GRAFT_PR_EXPLAIN")) next.explain("formatted")
       if (checkpoint) next.localCheckpoint() else next
     }
   }

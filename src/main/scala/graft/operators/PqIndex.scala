@@ -559,18 +559,9 @@ object PqIndex {
       .select(col("np"), col("q_id"), col("id").as("n_id"))
       .localCheckpoint()
     nProbes.map { np =>
-      val hits = reranked.filter(col("np") === np)
-        .select(col("q_id"), col("n_id"))
-        .join(truth, Seq("q_id", "n_id"), "left_semi")
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-      queries.select(col("q_id")).join(hits, Seq("q_id"), "left")
-        .select(col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("n_hit")).as("total_hits"),
-          round(avg(col("n_hit").cast("double") / k), 4).as("avg_recall"),
-          round(min(col("n_hit").cast("double") / k), 4).as("min_recall"))
-        .select(lit(np).cast("int").as("n_probe"), col("n_queries"),
-          col("total_hits"), col("avg_recall"), col("min_recall"))
+      IvfIndex.recallSummary(queries,
+        reranked.filter(col("np") === np).select(col("q_id"), col("n_id")),
+        truth, k, lit(np).cast("int").as("n_probe"))
     }.reduce(_ unionByName _)
   }
 

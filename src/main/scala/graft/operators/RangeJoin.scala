@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Binned range join — the scale path for point-in-interval joins.
@@ -40,10 +40,4 @@ object RangeJoin {
       .filter(col(pCol) >= col(loCol) && col(pCol) < col(hiCol))
       .drop("__bin")
   }
-
-  /** Convenience for banded aggregation: assign each point its band
-    * label via [[binnedRangeJoin]] (points outside every band drop). */
-  def bandAssign(points: DataFrame, pCol: String, bands: DataFrame,
-                 loCol: String, hiCol: String, binWidth: Double): DataFrame =
-    binnedRangeJoin(points, pCol, bands, loCol, hiCol, binWidth)
 }

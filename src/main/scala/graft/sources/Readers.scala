@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    Given a schema it reads the declared elements without a scan to
   *    discover them; without one it scans the file for element names;
   *  - S5/S6 sinks: parquet is the engine default (splittable, columnar,
-  *    statistics for pushdown); CSV kept for reference parity.
+  *    statistics for pushdown).
   * JDBC (S7) is `spark.read.jdbc` — nothing to wrap.
   */
 object Readers {
@@ -153,10 +153,6 @@ object Readers {
   /** S5/S6: engine-default sink (splittable columnar checkpoint). */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
-
-  /** S5: CSV sink for reference-parity exports. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
 
   /** JSONL (line-delimited JSON) sink — the interchange format of
     * training-data pipelines. Splittable: one JSON document per line. */

@@ -39,7 +39,14 @@ object EventStreams {
     * protocol is untouched: same batches, same folds, same markers —
     * only the width of the per-batch exchanges changes, which the
     * bench's own 8-vs-32-cpu runs already prove result-neutral.
-    * The previous conf value is restored even on failure. */
+    * The previous conf value is restored even on failure.
+    *
+    * The narrowing is a SESSION-GLOBAL `spark.sql.shuffle.partitions`
+    * set, held for the whole run: every query on the session sees the
+    * narrowed width until the call returns. So the call is not safe for
+    * concurrent use on one session — two overlapping calls, or a batch
+    * query running beside one, read each other's width, and the later
+    * restore can clobber the earlier. */
   def runMicroBatches(spark: SparkSession)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
@@ -690,17 +697,4 @@ object EventStreams {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(path)
-
-  /** Exactly-once-effective parquet sink via `foreachBatch` +
-    * [[writeBatchIdempotent]] — the standard recipe when the built-in
-    * file sink's commit log can't own the output layout (downstream
-    * batch readers, partition contracts). Checkpointed so batch ids are
-    * stable across restarts. */
-  def idempotentParquetSink(df: DataFrame, outPath: String,
-                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeBatchIdempotent(batch.toDF(), batchId, outPath))
-      .start()
 }

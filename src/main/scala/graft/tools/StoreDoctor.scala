@@ -237,7 +237,7 @@ object StoreDoctor {
   private def tombstoneFinding(spark: SparkSession, store: String,
                                tombPath: String, livePath: String,
                                compactVerb: String,
-                               historyGens: Long = 0L): Seq[Finding] =
+                               historyGens: Long): Seq[Finding] =
     tombstoneFinding(spark, store, tombPath, Seq(livePath), compactVerb,
       historyGens)
 
@@ -357,7 +357,6 @@ object StoreDoctor {
     // cannot resurrect deleted ids, and vacuumNsw releases it once no
     // readable generation predates any recorded delete
     if (exists(s"$nswDir/tombstones")) {
-      import org.apache.spark.sql.functions.{col, max}
       graft.operators.NswIndex.effectiveLedger(spark, nswDir) match {
         case None =>
           // dir exists but no part file ever committed: a crash inside

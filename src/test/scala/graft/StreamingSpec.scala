@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
@@ -377,6 +379,39 @@ class StreamingSpec extends SparkSpec {
       } finally {
         Scratch.clearSession()
         dirs.foreach(d => Scratch.rmTree(d.getParent.toString))
+      }
+    }
+  }
+
+  describe("replayGuardedBatches") {
+    it("runs the body once per batch id and skips a batch whose marker exists") {
+      Scratch.withTempDir("replay_guard") { dir =>
+        val src = s"$dir/src"
+        spark.range(40).toDF("id").write.parquet(src)
+        val markers = s"$dir/markers"
+        def marker(id: Long) = s".rg_batch_${id}_applied"
+        // an earlier attempt finished batch 2 and touched its marker
+        graft.sources.StoreFs.touchMarker(markers, marker(2))
+        def run(staging: String): Seq[(Long, Seq[Long])] = {
+          val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+          val stream = QueriesStreaming.keyedMultiBatchStream(
+            spark, src, staging, identity, col("id") % 4)
+          QueriesStreaming.replayGuardedBatches(spark, stream, staging,
+            markers, "rg") { (batch, batchId) =>
+            seen.add((batchId, batch.collect().map(_.getLong(0)).toSeq.sorted)): Unit
+          }
+          seen.asScala.toSeq
+        }
+        val first = run(s"$dir/staging1")
+        first.map(_._1) shouldBe Seq(0L, 1L, 3L)
+        // batch k of the keyed stream is the id % 4 = k slice
+        first.foreach { case (k, ids) =>
+          ids shouldBe (0L until 40L).filter(_ % 4 == k)
+        }
+        graft.sources.StoreFs.childNames(markers).toSet shouldBe
+          (0L to 3L).map(marker).toSet
+        // a replay of every batch id (a fresh checkpoint) runs no body
+        run(s"$dir/staging2") shouldBe empty
       }
     }
   }

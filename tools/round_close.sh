@@ -66,6 +66,17 @@ if [ -n "$SCHEMA_LEAKS" ]; then
   echo "$SCHEMA_LEAKS"
   exit 1
 fi
+# the at-least-once batch replay guard lives in
+# QueriesStreaming.replayGuardedBatches alone: a batch-marker literal
+# anywhere else in src/main is a hand-rolled copy and fails the gate
+MARKER_LEAKS=$(grep -rnF --include='*.scala' '_applied"' src/main |
+  grep -v '^src/main/scala/graft/QueriesStreaming\.scala:[0-9]*: *val marker = s"\.\${tag}_batch_\${batchId}_applied"$' ||
+  true)
+if [ -n "$MARKER_LEAKS" ]; then
+  echo "FATAL: a batch replay marker outside QueriesStreaming.replayGuardedBatches:"
+  echo "$MARKER_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
