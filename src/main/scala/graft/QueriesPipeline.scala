@@ -1383,20 +1383,17 @@ object QueriesPipeline {
     import s.implicits._
     val file = s"$dir/embeddings.parquet"
     val base = Scratch.session(s"graft_$tag", dir) { b =>
-      val corpus = s.read.parquet(file)
-        .filter(hashBucket($"vec_id", 10) < 8 && $"vec_id" < cap)
-        .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-      val cent = IvfIndex
-        .fitCentroids(s, corpus, k = 8, iterations = 1, orderedMean = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val corpus = QueriesSimilarity.idVectors(s.read.parquet(file)
+        .filter(hashBucket($"vec_id", 10) < 8 && $"vec_id" < cap))
+      val cent = QueriesSimilarity.coarseFit(s, corpus)
       try {
         val idxBase = IvfIndex.assign(corpus, cent).localCheckpoint()
         IvfIndex.save(cent, idxBase, s"$b/ivf")
         tier.seed(idxBase, cent, b)
       } finally cent.unpersist(): Unit
       def delta(df: DataFrame): DataFrame = {
-        val t = df.filter($"vec_id" < cap)
-          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+        val t = QueriesSimilarity.idVectors(df.filter($"vec_id" < cap))
+          .withColumnRenamed("id", "vec_id")
           .withColumn("b", hashBucket($"vec_id", 10))
         val scaled = transform($"v", x => x * 1.01)
         t.filter($"b" >= 8).select($"vec_id", $"v")

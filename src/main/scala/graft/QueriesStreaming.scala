@@ -15,6 +15,7 @@ import graft.streaming.EventStreams
   */
 object QueriesStreaming {
   import Queries.Q
+  import QueriesSimilarity.{fullTier, idVectors, pqTier, querySample, twoTierServe}
 
   /** A directory a file-stream source can watch for `$dir/$name`: the
     * testdata fixtures are single parquet FILES (exposed through a
@@ -666,7 +667,7 @@ object QueriesStreaming {
       }
       b
     }
-    twoTierServe(s, e, storeBase).orderBy($"q_id", $"rank")
+    twoTierServe(s, e, storeBase + "/store").orderBy($"q_id", $"rank")
   }
 
   // ---------------------------------------------------------------- q202
@@ -749,7 +750,7 @@ object QueriesStreaming {
       }
       b
     }
-    val serve = twoTierServe(s, e, storeBase)
+    val serve = twoTierServe(s, e, storeBase + "/store")
       .select(lit("serve").as("phase"), $"q_id", $"rank", $"n_id",
         $"ad2", $"d2", lit(null).cast("double").as("mean_qerr"),
         lit(null).cast("long").as("n_rows"))
@@ -762,11 +763,6 @@ object QueriesStreaming {
     serve.unionByName(baseline).orderBy($"phase", $"q_id", $"rank")
   }
 
-  /** `(id, v)` of an embeddings frame: `vec_id` and the vector as
-    * `array<double>` — the shape every vector store here takes. */
-  private def idVectors(df: DataFrame): DataFrame =
-    df.select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
-
   /** The base two-tier store of q201/q207 at `p`: k=8 coarse centroids
     * and 4×16 PQ codebooks, both fitted over `base`. */
   private def seedTwoTier(s: SparkSession, base: DataFrame, p: String): Unit = {
@@ -774,24 +770,8 @@ object QueriesStreaming {
       .fitCentroids(s, base, k = 8, iterations = 1, orderedMean = true)
       .localCheckpoint()
     val indexed = IvfIndex.assign(base, cent).localCheckpoint()
-    val cb = PqIndex.fitCodebooks(s, base, m = 4, ks = 16, iterations = 1)
-    val codesIdx = PqIndex.encode(base, cb, m = 4, subDim = 16)
-      .join(indexed.select(col("id"), col("cluster")), Seq("id"))
-      .select(col("cluster"), col("id"), col("codes"))
-    PqIndex.saveTwoTier(cent, cb, codesIdx,
-      indexed.select(col("cluster"), col("id"), col("v")), p)
-  }
-
-  /** q201/q207's serve: the top-5 ADC search (rerank 10, nProbe 2)
-    * over the stream-built two-tier store under `base` for the first
-    * ten vectors of `e`. */
-  private def twoTierServe(s: SparkSession, e: DataFrame,
-                           base: String): DataFrame = {
-    val (cent, cb, codes, full) = PqIndex.loadTwoTier(s, base + "/store")
-    val queries = e.filter(col("id") < 10)
-      .select(col("id").as("q_id"), col("v").as("qv"))
-    PqIndex.ivfAdcSearch(s, queries, codes, full, cent, cb,
-      m = 4, subDim = 16, k = 5, rerank = 10, nProbe = 2)
+    val (cb, codesIdx) = pqTier(s, base, indexed)
+    PqIndex.saveTwoTier(cent, cb, codesIdx, fullTier(indexed), p)
   }
 
   /** The replay check of one two-tier batch (q201/q207): `delta` is
@@ -1419,9 +1399,7 @@ object QueriesStreaming {
   private def nswServe(s: SparkSession, e: DataFrame, base: String): DataFrame = {
     val (graph, entries) = NswIndex.loadNsw(s, base + "/nsw")
     val (centF, idxAll) = IvfIndex.load(s, base + "/flat")
-    val queries = e.filter(col("id") < 10)
-      .select(col("id").as("q_id"), col("v").as("qv"))
-    NswIndex.search(s, queries, graph,
+    NswIndex.search(s, querySample(e), graph,
         idxAll.select(col("id"), col("v"), col("cluster")), centF, entries,
         k = 5, nProbe = 2, ef = 8, rounds = 2)
       .select(col("q_id"), col("rank"), col("n_id"), (col("cos") + 0.0).as("cos"))

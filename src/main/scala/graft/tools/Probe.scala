@@ -76,9 +76,7 @@ object ProbeNsw {
       r
     }
 
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("v"))
-      .localCheckpoint()
+    val e = QueriesSimilarity.corpus(spark, dir).localCheckpoint()
     val n = e.count()
     val k = if (args.length > 1) args(1).toInt
             else math.max(8L, n / 250).toInt
@@ -120,52 +118,6 @@ object ProbeNsw {
         NswIndex.splitOversizedNswCells(spark, flat, nsw, cap, degree = 4)
       }
       println(s"[nsw] cells split: $split")
-    }
-    spark.stop()
-  }
-}
-
-/** Dev-only breakdown of q58's phases: edge-building LSH chain vs the
-  * label-propagation loop vs the final corpus join. */
-object ProbeComponents {
-  def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local()
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft._
-    import graft.operators._
-
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[probe58] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    val corpus = docs.unionByName(
-      docs.select(($"doc_id" + 100000L).as("doc_id"),
-        concat($"text", lit(" zz qq")).as("text")))
-    val sh = TextDedup.shingleTable(corpus, "doc_id", "text", 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = time("edges (lsh chain)") {
-      val p = TextDedup.minHashLshPairs(sh, 8, 2, 0.3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"[probe58]   n_edges = ${p.count()}")
-      p
-    }
-    val comps = time("connectedComponents") {
-      val c = Components.connectedComponents(pairs, "a_id", "b_id")
-      c.count()
-      c
-    }
-    time("final corpus join") {
-      corpus.select($"doc_id")
-        .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
-        .orderBy($"doc_id")
-        .write.format("noop").mode("overwrite").save()
     }
     spark.stop()
   }

@@ -7,10 +7,8 @@ import graft.tools.Metrics
 class MetricsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = s"${Scratch.root}/metrics_spec"
-
   describe("Metrics.run") {
-    it("measures partition pruning: a partition-column filter reads fewer files and bytes") {
+    it("measures partition pruning: a partition-column filter reads fewer files and bytes") { Scratch.withTempDir("metrics_spec") { scratch =>
       val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       Layout.writeHivePartitioned(docs, s"$scratch/by_lang", Seq("lang"))
       val full = Metrics.run(spark.read.parquet(s"$scratch/by_lang"))
@@ -19,9 +17,9 @@ class MetricsSpec extends SparkSpec {
       full.filesRead should be > 0L
       pruned.filesRead should be < full.filesRead
       pruned.bytesRead should be < full.bytesRead
-    }
+    }}
 
-    it("measures row-group skipping: a range filter over range-sorted files scans fewer rows") {
+    it("measures row-group skipping: a range filter over range-sorted files scans fewer rows") { Scratch.withTempDir("metrics_spec") { scratch =>
       val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
         .select($"l_orderkey", $"l_quantity")
       li.repartitionByRange(8, $"l_orderkey")
@@ -32,7 +30,7 @@ class MetricsSpec extends SparkSpec {
       val skipped = Metrics.run(spark.read.parquet(s"$scratch/li_sorted")
         .filter($"l_orderkey" < maxKey / 8))
       skipped.rowsScanned should be < full.rowsScanned
-    }
+    }}
 
     it("measures shuffle: aggregation shuffles, a broadcast join does not") {
       val li = Tables.lineitem(spark, "/root/testdata/sf0.001")

@@ -327,23 +327,25 @@ class PlanShapeSpec extends SparkSpec {
       try {
         val corpus = spark.read.parquet(s"$dir/documents.parquet")
           .limit(50).select($"doc_id", $"text")
-        val store = s"${Scratch.root}/planshape_store"
-        graft.operators.TextDedup.writeDedupStoreBucketed(
-          corpus, "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
-          namePrefix = "planshape_store", pathPrefix = store, buckets = 4)
-        val flagged = graft.operators.TextDedup.ingestFlagsBucketed(
-          corpus, "doc_id", "text", "planshape_store", store,
-          shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-        val plan = flagged.queryExecution.executedPlan.toString
-        (plan should not).include("BroadcastHashJoin")
-        plan should include("SortMergeJoin")
-        plan should include("SelectedBucketsCount") // bucketed scans in play
-        // three store joins + the per-doc fold: the arriving side pays
-        // one hash exchange per join key (bh, s_id, fp) plus one for
-        // the final groupBy(id); the three static sides pay NONE (the
-        // test corpus's limit() adds one SinglePartition exchange below
-        // the arriving side — an input artifact, excluded here)
-        "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 4
+        Scratch.withTempDir("planshape") { scratch =>
+          val store = s"$scratch/planshape_store"
+          graft.operators.TextDedup.writeDedupStoreBucketed(
+            corpus, "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
+            namePrefix = "planshape_store", pathPrefix = store, buckets = 4)
+          val flagged = graft.operators.TextDedup.ingestFlagsBucketed(
+            corpus, "doc_id", "text", "planshape_store", store,
+            shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
+          val plan = flagged.queryExecution.executedPlan.toString
+          (plan should not).include("BroadcastHashJoin")
+          plan should include("SortMergeJoin")
+          plan should include("SelectedBucketsCount") // bucketed scans in play
+          // three store joins + the per-doc fold: the arriving side pays
+          // one hash exchange per join key (bh, s_id, fp) plus one for
+          // the final groupBy(id); the three static sides pay NONE (the
+          // test corpus's limit() adds one SinglePartition exchange below
+          // the arriving side — an input artifact, excluded here)
+          "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 4
+        }
       } finally
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }

@@ -77,6 +77,20 @@ if [ -n "$MARKER_LEAKS" ]; then
   echo "$MARKER_LEAKS"
   exit 1
 fi
+# the ANN gates' (id, v) corpus projection and its DuckDB twin live in
+# QueriesSimilarity's shared helpers (idVectors, vecFromEmbeddings)
+# alone: a copy anywhere else in src/main fails the gate
+CORPUS_LEAKS=$(grep -rnF --include='*.scala' \
+  -e 'embedding".cast("array<double>").as("v")' \
+  -e 'CAST(embedding AS DOUBLE[]) AS v FROM embeddings' src/main |
+  grep -v -e '^src/main/scala/graft/QueriesSimilarity\.scala:[0-9]*:    df\.select(\$"vec_id"\.as("id"), \$"embedding"\.cast("array<double>")\.as("v"))$' \
+    -e '^src/main/scala/graft/QueriesSimilarity\.scala:[0-9]*:    "CAST(embedding AS DOUBLE\[\]) AS v FROM embeddings"$' ||
+  true)
+if [ -n "$CORPUS_LEAKS" ]; then
+  echo "FATAL: an (id, v) embeddings projection outside QueriesSimilarity.idVectors/vecFromEmbeddings:"
+  echo "$CORPUS_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
@@ -91,6 +105,8 @@ grep '"metric"' target/bench_close.log > "bench_r${ROUND}_session.json"
 grep BENCH_SUMMARY target/bench_close.log
 # aim 2's size yardstick, read the same way every round
 echo "MAIN_SCALA_LINES $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
+# public src/main members no other file references (ROADMAP H)
+python3 tools/unreferenced_defs.py | head -1
 PREV=$(ls bench_r*_session.json 2>/dev/null | sort -V | tail -2 | head -1)
 if [ -n "$PREV" ] && [ "$PREV" != "bench_r${ROUND}_session.json" ]; then
   echo "-- bench diff vs $PREV (host noise moves totals; read per-query pairs) --"
