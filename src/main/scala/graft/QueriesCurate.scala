@@ -14,8 +14,7 @@ import graft.operators.{IncrementalAgg, Linkage, NgramLm, Normalize, QualityFilt
   */
 object QueriesCurate {
   import Queries.Q
-
-  private val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+  import QueriesText.{md5Bits32Sql, normSql}
 
   // ---------------------------------------------------------------- q73
   /** Gopher-style repetition audit ([[QualityFilters.ngramRepetition]]):
@@ -708,9 +707,7 @@ object QueriesCurate {
       .orderBy($"doc_id")
   }
   val q109Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(md5(t), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+    val digits = md5Bits32Sql("md5(t)")
     val sig = "1.0 / (1.0 + exp(-(ssum / greatest(n_toks, 1.0) - 0.01) * 4.0))"
     s"""WITH tk AS (
        |  SELECT doc_id, string_split($normSql, ' ') AS w FROM documents),
@@ -988,9 +985,7 @@ object QueriesCurate {
     * engine's sequential fold), long-quantized residuals, exact integer
     * gradient sums, and the driver's update arithmetic. */
   private def fitCtes: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(md5(t), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+    val digits = md5Bits32Sql("md5(t)")
     val epochs = (1 to fitEpochs).map { e =>
       s"""ds$e AS MATERIALIZED (
          |  SELECT d.doc_id, d.y, d.n,

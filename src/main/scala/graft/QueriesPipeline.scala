@@ -49,6 +49,197 @@ import graft.sources.StoreFs
   * the persisted funnel — cold passes re-run the whole pipeline. */
 object QueriesPipeline {
   import Queries.Q
+  import QueriesSimilarity.{dotSql, lloydIdxSql, norm2Sql}
+  import QueriesText.{docBucketsSql, md5Bits32Sql, normSql, plantedArrivals,
+    plantedDeltaSql, plantedVecDeltaSql, scaled101, storeCorpusSql,
+    storeDeltaSigCtes, storeNearCtes, vecBucketsSql, zzQq}
+
+  // ------------------------- shared oracle parts of q209–q211/q216/q219
+  // Built from QueriesText's shared text-dedup gate parts; the vals sit
+  // above every gate because an object's vals initialise in source
+  // order.
+
+  /** Batch `k`'s funnel rows `(bk, stage, n_rows, w)`: for each
+    * `stage -> relation`, its row count and Σ `id`; the first row
+    * carries the column aliases. */
+  private def funnelRowsSql(k: Int, id: String, stages: (String, String)*): String =
+    stages.zipWithIndex.map {
+      case ((stage, rel), 0) =>
+        s"""  SELECT CAST($k AS BIGINT) AS bk, '$stage' AS stage,
+           |         CAST(count(*) AS BIGINT) AS n_rows,
+           |         COALESCE(CAST(sum($id) AS BIGINT), 0) AS w FROM $rel""".stripMargin
+      case ((stage, rel), _) =>
+        s"""  SELECT CAST($k AS BIGINT), '$stage', CAST(count(*) AS BIGINT),
+           |         COALESCE(CAST(sum($id) AS BIGINT), 0) FROM $rel""".stripMargin
+    }.mkString("\n  UNION ALL\n")
+
+  /** The corpus builds' planted `delta` body: [[plantedDeltaSql]] plus
+    * perturbed copies of fresh arrivals (`+500000`), which only the
+    * intra-batch near-dup stage can catch. */
+  private val corpusBuildDeltaSql: String =
+    s"""$plantedDeltaSql
+       |  UNION ALL SELECT doc_id + 500000 AS doc_id, text || ' zz qq' AS text
+       |    FROM bkt WHERE bk >= 8 AND doc_id % 17 = 0""".stripMargin
+
+  /** Batch `k` of a corpus build: its arrivals `arr<k>` (`doc_id % 4 =
+    * k` of `delta`) and their intra-batch exact dedup `ex<k>`. */
+  private def docBatchSql(k: Int): String =
+    s"""arr$k AS (SELECT doc_id, text FROM delta WHERE doc_id % 4 = $k),
+       |ex$k AS MATERIALIZED (
+       |  SELECT doc_id, text FROM (
+       |    SELECT *, min(doc_id) OVER (PARTITION BY md5($normSql)) AS keep
+       |    FROM arr$k)
+       |  WHERE doc_id = keep)""".stripMargin
+
+  /** Batch `k`'s store survivors `st<k>` (the `ex<k>` rows whose id is
+    * in `ok`) and their intra-batch MinHash-LSH near-dup removal
+    * `nr<k>`. */
+  private def docNearSql(k: Int, ok: String): String = {
+    val p = s"b${k}_"
+    s"""st$k AS MATERIALIZED (
+       |  SELECT e.doc_id, e.text FROM ex$k e JOIN $ok o ON o.id = e.doc_id),
+       |${QueriesText.minhashCtesPrefixed(p, s"SELECT doc_id, text FROM st$k")},
+       |bdrop$k AS (
+       |  SELECT DISTINCT b_id FROM ${p}inter
+       |  WHERE i * 1.0 / (na + nb - i) >= 0.3),
+       |nr$k AS MATERIALIZED (
+       |  SELECT doc_id, text FROM st$k
+       |  WHERE doc_id NOT IN (SELECT b_id FROM bdrop$k))""".stripMargin
+  }
+
+  /** Batch `k`'s token count and FFD pack of `nr<k>` into `pk<k>`. */
+  private def docPackSql(k: Int): String = {
+    val p = s"b${k}_"
+    s"""${p}f0 AS (
+       |  SELECT doc_id, CAST(len(string_split($normSql, ' ')) AS BIGINT) AS len
+       |  FROM nr$k
+       |  WHERE len(string_split($normSql, ' ')) BETWEEN 1 AND 256),
+       |${p}nb AS (
+       |  SELECT CAST(greatest(1, ceil(count(*) / 64.0)) AS BIGINT) AS b FROM ${p}f0),
+       |${p}f AS (
+       |  SELECT doc_id, len,
+       |         ((${md5Bits32Sql("md5(CAST(doc_id AS VARCHAR))")}) % (SELECT b FROM ${p}nb)) AS bucket
+       |  FROM ${p}f0),
+       |${QueriesScale.ffdFoldCtesPrefixed(p, capacity = 256)},
+       |pk$k AS MATERIALIZED (
+       |  ${QueriesScale.ffdUnnestedPrefixed(p)})""".stripMargin
+  }
+
+  /** The closing rows of q209/q210: the `f_shard` read-back over the
+    * four packs, then every batch's five funnel rows, ordered. */
+  private val docFunnelTailSql: String = {
+    val funnelRows = (0 until 4).map { k =>
+      funnelRowsSql(k, "doc_id", "a_arrived" -> s"arr$k", "b_exact" -> s"ex$k",
+        "c_store" -> s"st$k", "d_near" -> s"nr$k") +
+        s"""
+           |  UNION ALL
+           |  SELECT CAST($k AS BIGINT), 'e_packed', CAST(count(*) AS BIGINT),
+           |         (SELECT COALESCE(CAST(sum(mx) AS BIGINT), 0) FROM
+           |            (SELECT max(bin) AS mx FROM pk$k GROUP BY bucket)) FROM pk$k""".stripMargin
+    }.mkString("\n  UNION ALL\n")
+    s"""  SELECT CAST(-1 AS BIGINT) AS bk, 'f_shard' AS stage,
+       |         CAST(count(*) AS BIGINT) AS n_rows,
+       |         COALESCE(CAST(sum(n_toks) AS BIGINT), 0) AS w
+       |  FROM (SELECT * FROM pk0 UNION ALL SELECT * FROM pk1
+       |        UNION ALL SELECT * FROM pk2 UNION ALL SELECT * FROM pk3)
+       |  UNION ALL
+       |$funnelRows)
+       |ORDER BY bk, stage""".stripMargin
+  }
+
+  /** The semantic builds' opening CTEs: `eb` over `vec_id < cap`, the
+    * base corpus `src` (buckets 0–7) and its k=8 Lloyd fit, the
+    * planted `delta` ([[plantedVecDeltaSql]] plus the cross-batch
+    * copies of batch-0 fresh arrivals) and the fitted base store
+    * `st0`. */
+  private def semanticPrefixSql(cap: String): String =
+    s"""eb AS (
+       |  ${vecBucketsSql(cap)}),
+       |src AS MATERIALIZED (SELECT vec_id AS id, v FROM eb WHERE bk < 8),
+       |${lloydIdxSql("src", "8")},
+       |delta AS MATERIALIZED (
+       |$plantedVecDeltaSql
+       |  UNION ALL SELECT vec_id + 2000002 AS id, v FROM eb
+       |    WHERE bk >= 8 AND vec_id % 4 = 0
+       |  UNION ALL SELECT vec_id + 3000002 AS id,
+       |    list_transform(v, x -> x * 1.01) AS v FROM eb
+       |    WHERE bk >= 8 AND vec_id % 4 = 0 AND vec_id % 3 = 0),
+       |st0 AS MATERIALIZED (SELECT id, v, cluster FROM idx)""".stripMargin
+
+  /** Batch `k` of a semantic build: its arrivals `arr<k>` (`id % 4 = k`
+    * of `delta`) and their intra-batch exact dedup `ex<k>`. */
+  private def vecBatchSql(k: Int): String =
+    s"""arr$k AS (SELECT id, v FROM delta WHERE id % 4 = $k),
+       |ex$k AS MATERIALIZED (
+       |  SELECT id, v FROM (
+       |    SELECT *, min(id) OVER (PARTITION BY v) AS keep FROM arr$k)
+       |  WHERE id = keep)""".stripMargin
+
+  /** Batch `k`'s screen survivors `sv<k>`: `ex<k>` without `dup<k>`. */
+  private def vecSurvivorsSql(k: Int): String =
+    s"""sv$k AS MATERIALIZED (
+       |  SELECT id, v FROM ex$k WHERE id NOT IN (SELECT id FROM dup$k))""".stripMargin
+
+  /** Batch `k`'s three semantic funnel rows. */
+  private def vecFunnelRowsSql(k: Int): String =
+    funnelRowsSql(k, "id", "a_arrived" -> s"arr$k", "b_exact" -> s"ex$k",
+      "c_store" -> s"sv$k")
+
+  private def flatCosSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / sqrt(${norm2Sql(a)} * ${norm2Sql(b)})"
+
+  /** Top-`n` centroid probe of relation `src(id, v)` against the
+    * centroids `c`: the engine's probeCells tie-break (cos DESC,
+    * cluster ASC), q122's replay. */
+  private def flatProbeSql(name: String, src: String, c: String, n: Int): String =
+    s"""$name AS (
+       |  SELECT id, v, cluster FROM (
+       |    SELECT e.id, e.v, c.cluster,
+       |           row_number() OVER (PARTITION BY e.id
+       |             ORDER BY ${flatCosSql("e.v", "c.centroid")} DESC, c.cluster ASC) AS rn
+       |    FROM $src e CROSS JOIN $c c)
+       |  WHERE rn <= $n)""".stripMargin
+
+  /** Batch `k` of q211/q219's flat screen against the store `store`
+    * and its centroids `cent`: probe (nProbe 2), dup iff a probed
+    * store row has cos ≥ 0.8, the survivors assigned to their top
+    * cell and appended as `st<k+1>`. */
+  private def flatScreenSql(k: Int, cent: String, store: String): String =
+    s"""${vecBatchSql(k)},
+       |${flatProbeSql(s"pr$k", s"ex$k", cent, 2)},
+       |dup$k AS (
+       |  SELECT DISTINCT p.id FROM pr$k p JOIN $store i USING (cluster)
+       |  WHERE round(${flatCosSql("p.v", "i.v")}, 4) >= 0.8),
+       |${vecSurvivorsSql(k)},
+       |${flatProbeSql(s"svidx$k", s"sv$k", cent, 1)},
+       |st${k + 1} AS MATERIALIZED (
+       |  SELECT * FROM $store UNION ALL SELECT id, v, cluster FROM svidx$k)""".stripMargin
+
+  /** The `g_index` read-back row over the final store `st4`. */
+  private val gIndexRowSql: String =
+    """  SELECT CAST(-2 AS BIGINT), 'g_index', CAST(count(*) AS BIGINT),
+      |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM st4""".stripMargin
+
+  /** q211/q219's serve: the top-3 search of the queries `vec_id < 5`
+    * over `st4` probed against `cent`, opening the result with the
+    * `f_serve` and `g_index` rows. */
+  private def flatServeSql(cent: String): String =
+    s"""qs AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
+       |       FROM embeddings WHERE vec_id < 5),
+       |${flatProbeSql("qpr", "qs", cent, 2)},
+       |qrank AS (
+       |  SELECT q_id, n_id, rank FROM (
+       |    SELECT p.id AS q_id, i.id AS n_id,
+       |           row_number() OVER (PARTITION BY p.id
+       |             ORDER BY ${flatCosSql("p.v", "i.v")} DESC, i.id ASC) AS rank
+       |    FROM qpr p JOIN st4 i USING (cluster))
+       |  WHERE rank <= 3)
+       |SELECT bk, stage, n_rows, w FROM (
+       |  SELECT CAST(-1 AS BIGINT) AS bk, 'f_serve' AS stage,
+       |         CAST(count(*) AS BIGINT) AS n_rows,
+       |         COALESCE(CAST(sum(rank * n_id) AS BIGINT), 0) AS w FROM qrank
+       |  UNION ALL
+       |$gIndexRowSql""".stripMargin
 
   // ---------------------------------------------------------------- q208
   val q208PipelineSoak: Q = (s, dir) => {
@@ -121,8 +312,7 @@ object QueriesPipeline {
       .orderBy($"stage")
   }
 
-  val q208Sql: String = {
-    val normSql = QueriesText.normSql
+  val q208Sql: String =
     s"""WITH plant AS MATERIALIZED (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -157,7 +347,7 @@ object QueriesPipeline {
        |  SELECT CAST(greatest(1, ceil(count(*) / 64.0)) AS BIGINT) AS b FROM f0),
        |f AS (
        |  SELECT doc_id, len,
-       |         ((${QueriesScale.ffdBucketDigits}) % (SELECT b FROM nb)) AS bucket
+       |         ((${md5Bits32Sql("md5(CAST(doc_id AS VARCHAR))")}) % (SELECT b FROM nb)) AS bucket
        |  FROM f0),
        |${QueriesScale.ffdFoldCtes(capacity = 256)},
        |packed AS MATERIALIZED (
@@ -185,7 +375,6 @@ object QueriesPipeline {
        |  SELECT '06_shard', CAST(count(*) AS BIGINT),
        |         COALESCE(CAST(sum(n_toks) AS BIGINT), 0) FROM packed)
        |ORDER BY stage""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q209
   /** STREAMING incremental corpus build — the streaming face of q208
@@ -209,7 +398,7 @@ object QueriesPipeline {
     * appended shard store; the oracle replays every batch's chain from
     * the prefixed factored CTEs ([[QueriesText.minhashCtesPrefixed]],
     * [[QueriesScale.ffdFoldCtesPrefixed]],
-    * [[QueriesStreaming.ingestSigCtes]] — one text with the q128/q132/
+    * [[QueriesText.ingestSigCtes]] — one text with the q128/q132/
     * q189/q198 classification and the q30/q121 stages).
     *
     * CONTRACT (documented, deliberate): the store is FIXED during the
@@ -224,79 +413,18 @@ object QueriesPipeline {
     corpusStreamBuild(s, dir, "q209")(_ => Nil, (_, _, _) => (), _ => Nil)
 
   val q209Sql: String = {
-    val normSql = QueriesText.normSql
     val perBatch = (0 until 4).map { k =>
-      val p = s"b${k}_"
-      s"""arr$k AS (SELECT doc_id, text FROM delta WHERE doc_id % 4 = $k),
-         |ex$k AS MATERIALIZED (
-         |  SELECT doc_id, text FROM (
-         |    SELECT *, min(doc_id) OVER (PARTITION BY md5($normSql)) AS keep
-         |    FROM arr$k)
-         |  WHERE doc_id = keep),
-         |st$k AS MATERIALIZED (
-         |  SELECT e.doc_id, e.text FROM ex$k e JOIN okstore o ON o.id = e.doc_id),
-         |${QueriesText.minhashCtesPrefixed(p, s"SELECT doc_id, text FROM st$k")},
-         |bdrop$k AS (
-         |  SELECT DISTINCT b_id FROM ${p}inter
-         |  WHERE i * 1.0 / (na + nb - i) >= 0.3),
-         |nr$k AS MATERIALIZED (
-         |  SELECT doc_id, text FROM st$k
-         |  WHERE doc_id NOT IN (SELECT b_id FROM bdrop$k)),
-         |${p}f0 AS (
-         |  SELECT doc_id, CAST(len(string_split($normSql, ' ')) AS BIGINT) AS len
-         |  FROM nr$k
-         |  WHERE len(string_split($normSql, ' ')) BETWEEN 1 AND 256),
-         |${p}nb AS (
-         |  SELECT CAST(greatest(1, ceil(count(*) / 64.0)) AS BIGINT) AS b FROM ${p}f0),
-         |${p}f AS (
-         |  SELECT doc_id, len,
-         |         ((${QueriesScale.ffdBucketDigits}) % (SELECT b FROM ${p}nb)) AS bucket
-         |  FROM ${p}f0),
-         |${QueriesScale.ffdFoldCtesPrefixed(p, capacity = 256)},
-         |pk$k AS MATERIALIZED (
-         |  ${QueriesScale.ffdUnnestedPrefixed(p)})""".stripMargin
+      s"""${docBatchSql(k)},
+         |${docNearSql(k, "okstore")},
+         |${docPackSql(k)}""".stripMargin
     }.mkString(",\n")
-    val funnelRows = (0 until 4).map { k =>
-      s"""  SELECT CAST($k AS BIGINT) AS bk, 'a_arrived' AS stage,
-         |         CAST(count(*) AS BIGINT) AS n_rows,
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) AS w FROM arr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'b_exact', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM ex$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'c_store', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM st$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'd_near', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM nr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'e_packed', CAST(count(*) AS BIGINT),
-         |         (SELECT COALESCE(CAST(sum(mx) AS BIGINT), 0) FROM
-         |            (SELECT max(bin) AS mx FROM pk$k GROUP BY bucket)) FROM pk$k""".stripMargin
-    }.mkString("\n  UNION ALL\n")
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
-       |corpus AS (SELECT doc_id, text FROM bkt WHERE bk < 8),
+       |  $docBucketsSql),
+       |corpus AS ($storeCorpusSql),
        |delta AS MATERIALIZED (
-       |  SELECT doc_id, text FROM bkt WHERE bk >= 8
-       |  UNION ALL SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id % 7 = 0
-       |  UNION ALL SELECT doc_id + 300000 AS doc_id, text || ' zz qq' AS text
-       |    FROM corpus WHERE doc_id % 11 = 0
-       |  UNION ALL SELECT doc_id + 400000 AS doc_id, text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 13 = 0
-       |  UNION ALL SELECT doc_id + 500000 AS doc_id, text || ' zz qq' AS text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 17 = 0),
-       |sfp AS (SELECT DISTINCT md5($normSql) AS fp FROM corpus),
-       |${QueriesStreaming.ingestSigCtes("s_", "corpus")},
-       |${QueriesStreaming.ingestSigCtes("d_", "delta")},
-       |scand AS (
-       |  SELECT DISTINCT d.id AS d_id, s.id AS s_id
-       |  FROM d_bands d JOIN s_bands s ON d.b = s.b AND d.h = s.h),
-       |snear AS (
-       |  SELECT DISTINCT c.d_id AS id
-       |  FROM scand c JOIN d_mh dm ON dm.id = c.d_id JOIN s_mh sm ON sm.id = c.s_id
-       |  WHERE ${QueriesStreaming.ingestAgreeSum} >= 4),
+       |$corpusBuildDeltaSql),
+       |${storeDeltaSigCtes("corpus")},
+       |${storeNearCtes("scand", "snear")},
        |okstore AS MATERIALIZED (
        |  SELECT f.id FROM (SELECT doc_id AS id, md5($normSql) AS fp FROM delta) f
        |  LEFT JOIN sfp sf ON f.fp = sf.fp
@@ -304,14 +432,7 @@ object QueriesPipeline {
        |  WHERE sf.fp IS NULL AND nr.id IS NULL),
        |$perBatch
        |SELECT bk, stage, n_rows, w FROM (
-       |  SELECT CAST(-1 AS BIGINT) AS bk, 'f_shard' AS stage,
-       |         CAST(count(*) AS BIGINT) AS n_rows,
-       |         COALESCE(CAST(sum(n_toks) AS BIGINT), 0) AS w
-       |  FROM (SELECT * FROM pk0 UNION ALL SELECT * FROM pk1
-       |        UNION ALL SELECT * FROM pk2 UNION ALL SELECT * FROM pk3)
-       |  UNION ALL
-       |$funnelRows)
-       |ORDER BY bk, stage""".stripMargin
+       |$docFunnelTailSql""".stripMargin
   }
 
   // ---------------------------------------------------------------- q210
@@ -333,7 +454,7 @@ object QueriesPipeline {
     *
     * The oracle replays the growing store per batch: for batch k the
     * store relations are the base corpus's signature CTEs plus one
-    * prefixed [[QueriesStreaming.ingestSigCtes]] set per earlier
+    * prefixed [[QueriesText.ingestSigCtes]] set per earlier
     * batch's survivor relation. The per-SEGMENT join structure is
     * mirrored exactly (candidate pairs verify against the SEGMENT
     * whose band produced them, as the engine's per-segment
@@ -355,8 +476,7 @@ object QueriesPipeline {
         t.filter($"b" >= 8 && $"doc_id" % 4 === 0 && $"doc_id" % 19 === 0)
           .select(($"doc_id" + 2000002L).as("doc_id"), $"text"),
         t.filter($"b" >= 8 && $"doc_id" % 4 === 0 && $"doc_id" % 23 === 0)
-          .select(($"doc_id" + 3000002L).as("doc_id"),
-            concat($"text", lit(" zz qq")).as("text"))),
+          .select(($"doc_id" + 3000002L).as("doc_id"), zzQq($"text").as("text"))),
       // THE cumulative step: this batch's survivors become a store
       // segment the NEXT batch classifies against
       (nr, storeName, store) =>
@@ -376,8 +496,6 @@ object QueriesPipeline {
   }
 
   val q210Sql: String = {
-    val normSql = QueriesText.normSql
-    val agreeSum = QueriesStreaming.ingestAgreeSum
     // per-segment near check of batch k's arrivals against ONE store
     // source (the base corpus `s_` or an earlier batch's survivors
     // `v<j>_`): candidates from THAT segment's bands verify against
@@ -389,9 +507,8 @@ object QueriesPipeline {
          |        FROM d_bands d JOIN ${pre}bands s ON d.b = s.b AND d.h = s.h
          |        WHERE d.id % 4 = $k) c
          |  JOIN d_mh dm ON dm.id = c.d_id JOIN ${pre}mh sm ON sm.id = c.s_id
-         |  WHERE $agreeSum >= 4)""".stripMargin
+         |  WHERE ${QueriesText.agreeSumSql} >= 4)""".stripMargin
     val perBatch = (0 until 4).map { k =>
-      val p = s"b${k}_"
       val sources = "s_" +: (0 until k).map(j => s"v${j}_")
       val nearCtes = sources.zipWithIndex
         .map { case (pre, i) => nearVs(k, pre, s"sn${k}x$i") }
@@ -401,12 +518,7 @@ object QueriesPipeline {
       val fpUnion = (s"SELECT fp FROM sfp" +:
         (0 until k).map(j =>
           s"SELECT DISTINCT md5($normSql) AS fp FROM nr$j")).mkString(" UNION ")
-      s"""arr$k AS (SELECT doc_id, text FROM delta WHERE doc_id % 4 = $k),
-         |ex$k AS MATERIALIZED (
-         |  SELECT doc_id, text FROM (
-         |    SELECT *, min(doc_id) OVER (PARTITION BY md5($normSql)) AS keep
-         |    FROM arr$k)
-         |  WHERE doc_id = keep),
+      s"""${docBatchSql(k)},
          |$nearCtes,
          |snear$k AS ($nearUnion),
          |stfp$k AS ($fpUnion),
@@ -416,70 +528,22 @@ object QueriesPipeline {
          |  LEFT JOIN stfp$k sf ON f.fp = sf.fp
          |  LEFT JOIN snear$k nr ON f.id = nr.id
          |  WHERE sf.fp IS NULL AND nr.id IS NULL),
-         |st$k AS MATERIALIZED (
-         |  SELECT e.doc_id, e.text FROM ex$k e JOIN okstore$k o ON o.id = e.doc_id),
-         |${QueriesText.minhashCtesPrefixed(p, s"SELECT doc_id, text FROM st$k")},
-         |bdrop$k AS (
-         |  SELECT DISTINCT b_id FROM ${p}inter
-         |  WHERE i * 1.0 / (na + nb - i) >= 0.3),
-         |nr$k AS MATERIALIZED (
-         |  SELECT doc_id, text FROM st$k
-         |  WHERE doc_id NOT IN (SELECT b_id FROM bdrop$k)),
-         |${QueriesStreaming.ingestSigCtes(s"v${k}_", s"nr$k")},
-         |${p}f0 AS (
-         |  SELECT doc_id, CAST(len(string_split($normSql, ' ')) AS BIGINT) AS len
-         |  FROM nr$k
-         |  WHERE len(string_split($normSql, ' ')) BETWEEN 1 AND 256),
-         |${p}nb AS (
-         |  SELECT CAST(greatest(1, ceil(count(*) / 64.0)) AS BIGINT) AS b FROM ${p}f0),
-         |${p}f AS (
-         |  SELECT doc_id, len,
-         |         ((${QueriesScale.ffdBucketDigits}) % (SELECT b FROM ${p}nb)) AS bucket
-         |  FROM ${p}f0),
-         |${QueriesScale.ffdFoldCtesPrefixed(p, capacity = 256)},
-         |pk$k AS MATERIALIZED (
-         |  ${QueriesScale.ffdUnnestedPrefixed(p)})""".stripMargin
+         |${docNearSql(k, s"okstore$k")},
+         |${QueriesText.ingestSigCtes(s"v${k}_", s"nr$k")},
+         |${docPackSql(k)}""".stripMargin
     }.mkString(",\n")
-    val funnelRows = (0 until 4).map { k =>
-      s"""  SELECT CAST($k AS BIGINT) AS bk, 'a_arrived' AS stage,
-         |         CAST(count(*) AS BIGINT) AS n_rows,
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) AS w FROM arr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'b_exact', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM ex$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'c_store', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM st$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'd_near', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) FROM nr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'e_packed', CAST(count(*) AS BIGINT),
-         |         (SELECT COALESCE(CAST(sum(mx) AS BIGINT), 0) FROM
-         |            (SELECT max(bin) AS mx FROM pk$k GROUP BY bucket)) FROM pk$k""".stripMargin
-    }.mkString("\n  UNION ALL\n")
     val storeParts = "SELECT doc_id FROM corpus" +:
       (0 until 4).map(j => s"SELECT doc_id FROM nr$j")
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
-       |corpus AS MATERIALIZED (SELECT doc_id, text FROM bkt WHERE bk < 8),
+       |  $docBucketsSql),
+       |corpus AS MATERIALIZED ($storeCorpusSql),
        |delta AS MATERIALIZED (
-       |  SELECT doc_id, text FROM bkt WHERE bk >= 8
-       |  UNION ALL SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id % 7 = 0
-       |  UNION ALL SELECT doc_id + 300000 AS doc_id, text || ' zz qq' AS text
-       |    FROM corpus WHERE doc_id % 11 = 0
-       |  UNION ALL SELECT doc_id + 400000 AS doc_id, text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 13 = 0
-       |  UNION ALL SELECT doc_id + 500000 AS doc_id, text || ' zz qq' AS text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 17 = 0
+       |$corpusBuildDeltaSql
        |  UNION ALL SELECT doc_id + 2000002 AS doc_id, text
        |    FROM bkt WHERE bk >= 8 AND doc_id % 4 = 0 AND doc_id % 19 = 0
        |  UNION ALL SELECT doc_id + 3000002 AS doc_id, text || ' zz qq' AS text
        |    FROM bkt WHERE bk >= 8 AND doc_id % 4 = 0 AND doc_id % 23 = 0),
-       |sfp AS (SELECT DISTINCT md5($normSql) AS fp FROM corpus),
-       |${QueriesStreaming.ingestSigCtes("s_", "corpus")},
-       |${QueriesStreaming.ingestSigCtes("d_", "delta")},
+       |${storeDeltaSigCtes("corpus")},
        |$perBatch
        |SELECT bk, stage, n_rows, w FROM (
        |  SELECT CAST(-2 AS BIGINT) AS bk, 'g_store' AS stage,
@@ -487,14 +551,7 @@ object QueriesPipeline {
        |         COALESCE(CAST(sum(doc_id) AS BIGINT), 0) AS w
        |  FROM (${storeParts.mkString(" UNION ALL ")})
        |  UNION ALL
-       |  SELECT CAST(-1 AS BIGINT) AS bk, 'f_shard' AS stage,
-       |         CAST(count(*) AS BIGINT) AS n_rows,
-       |         COALESCE(CAST(sum(n_toks) AS BIGINT), 0) AS w
-       |  FROM (SELECT * FROM pk0 UNION ALL SELECT * FROM pk1
-       |        UNION ALL SELECT * FROM pk2 UNION ALL SELECT * FROM pk3)
-       |  UNION ALL
-       |$funnelRows)
-       |ORDER BY bk, stage""".stripMargin
+       |$docFunnelTailSql""".stripMargin
   }
 
   // ---------------------------------------------------------------- q211
@@ -567,88 +624,12 @@ object QueriesPipeline {
     semanticBuild(s, dir, "q211", 10000000000L, FlatScreen)
 
   val q211Sql: String = {
-    import QueriesSimilarity.{dotSql, norm2Sql, lloydIdxSql}
-    def cosSql(a: String, b: String): String =
-      s"${dotSql(a, b)} / sqrt(${norm2Sql(a)} * ${norm2Sql(b)})"
-    // top-`n` centroid probe of relation `src(id, v)` — the engine's
-    // probeCells tie-break (cos DESC, cluster ASC), q122's replay
-    def probeSql(name: String, src: String, n: Int): String =
-      s"""$name AS (
-         |  SELECT id, v, cluster FROM (
-         |    SELECT e.id, e.v, c.cluster,
-         |           row_number() OVER (PARTITION BY e.id
-         |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster ASC) AS rn
-         |    FROM $src e CROSS JOIN cent c)
-         |  WHERE rn <= $n)""".stripMargin
-    val perBatch = (0 until 4).map { k =>
-      s"""arr$k AS (SELECT id, v FROM delta WHERE id % 4 = $k),
-         |ex$k AS MATERIALIZED (
-         |  SELECT id, v FROM (
-         |    SELECT *, min(id) OVER (PARTITION BY v) AS keep FROM arr$k)
-         |  WHERE id = keep),
-         |${probeSql(s"pr$k", s"ex$k", 2)},
-         |dup$k AS (
-         |  SELECT DISTINCT p.id FROM pr$k p JOIN st$k i USING (cluster)
-         |  WHERE round(${cosSql("p.v", "i.v")}, 4) >= 0.8),
-         |sv$k AS MATERIALIZED (
-         |  SELECT id, v FROM ex$k WHERE id NOT IN (SELECT id FROM dup$k)),
-         |${probeSql(s"svidx$k", s"sv$k", 1)},
-         |st${k + 1} AS MATERIALIZED (
-         |  SELECT * FROM st$k UNION ALL SELECT id, v, cluster FROM svidx$k)"""
-        .stripMargin
-    }.mkString(",\n")
-    val funnelRows = (0 until 4).map { k =>
-      s"""  SELECT CAST($k AS BIGINT) AS bk, 'a_arrived' AS stage,
-         |         CAST(count(*) AS BIGINT) AS n_rows,
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) AS w FROM arr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'b_exact', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM ex$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'c_store', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM sv$k""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""WITH eb AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT vec_id, embedding,
-       |               md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings
-       |        WHERE vec_id < 10000000000)),
-       |src AS MATERIALIZED (SELECT vec_id AS id, v FROM eb WHERE bk < 8),
-       |${lloydIdxSql("src", "8")},
-       |delta AS MATERIALIZED (
-       |  SELECT vec_id AS id, v FROM eb WHERE bk >= 8
-       |  UNION ALL SELECT vec_id + 200000 AS id, v FROM eb
-       |    WHERE bk < 8 AND vec_id % 7 = 0
-       |  UNION ALL SELECT vec_id + 300000 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk < 8 AND vec_id % 11 = 0
-       |  UNION ALL SELECT vec_id + 400000 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 13 = 0
-       |  UNION ALL SELECT vec_id + 2000002 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0
-       |  UNION ALL SELECT vec_id + 3000002 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0 AND vec_id % 3 = 0),
-       |st0 AS MATERIALIZED (SELECT id, v, cluster FROM idx),
+    val perBatch = (0 until 4).map(k => flatScreenSql(k, "cent", s"st$k"))
+      .mkString(",\n")
+    val funnelRows = (0 until 4).map(vecFunnelRowsSql).mkString("\n  UNION ALL\n")
+    s"""WITH ${semanticPrefixSql("10000000000")},
        |$perBatch,
-       |qs AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-       |       FROM embeddings WHERE vec_id < 5),
-       |${probeSql("qpr", "qs", 2)},
-       |qrank AS (
-       |  SELECT q_id, n_id, rank FROM (
-       |    SELECT p.id AS q_id, i.id AS n_id,
-       |           row_number() OVER (PARTITION BY p.id
-       |             ORDER BY ${cosSql("p.v", "i.v")} DESC, i.id ASC) AS rank
-       |    FROM qpr p JOIN st4 i USING (cluster))
-       |  WHERE rank <= 3)
-       |SELECT bk, stage, n_rows, w FROM (
-       |  SELECT CAST(-1 AS BIGINT) AS bk, 'f_serve' AS stage,
-       |         CAST(count(*) AS BIGINT) AS n_rows,
-       |         COALESCE(CAST(sum(rank * n_id) AS BIGINT), 0) AS w FROM qrank
-       |  UNION ALL
-       |  SELECT CAST(-2 AS BIGINT), 'g_index', CAST(count(*) AS BIGINT),
-       |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM st4
+       |${flatServeSql("cent")}
        |  UNION ALL
        |$funnelRows)
        |ORDER BY bk, stage""".stripMargin
@@ -703,8 +684,7 @@ object QueriesPipeline {
     semanticBuild(s, dir, "q216", 2000000000L, NswScreen)
 
   val q216Sql: String = {
-    import QueriesSimilarity.{lloydIdxSql, nswCos, nswWalkBaseCtes,
-      nswRoundCtes}
+    import QueriesSimilarity.{nswCos, nswWalkBaseCtes, nswRoundCtes}
     // assign relation `src(id, v)` to its argmax-cosine fitted cell —
     // the engine's IvfIndex.assign tie-break (cos DESC, cluster ASC)
     def assignSql(name: String, src: String): String =
@@ -716,11 +696,7 @@ object QueriesPipeline {
          |    FROM $src e CROSS JOIN cent c)
          |  WHERE rn = 1)""".stripMargin
     val perBatch = (0 until 4).map { k =>
-      s"""arr$k AS (SELECT id, v FROM delta WHERE id % 4 = $k),
-         |ex$k AS MATERIALIZED (
-         |  SELECT id, v FROM (
-         |    SELECT *, min(id) OVER (PARTITION BY v) AS keep FROM arr$k)
-         |  WHERE id = keep),
+      s"""${vecBatchSql(k)},
          |qs$k AS (SELECT id AS q_id, v AS qv FROM ex$k),
          |${nswWalkBaseCtes(s"st$k", s"b$k", s"qs$k", "cent")},
          |${nswRoundCtes(s"st$k", 1, s"b${k}v0", s"b${k}v0", 8, s"b$k",
@@ -732,47 +708,14 @@ object QueriesPipeline {
          |    SELECT q_id, id, cos, row_number() OVER (PARTITION BY q_id
          |      ORDER BY cos DESC, id ASC) AS rn FROM b${k}nv2)
          |  WHERE rn = 1 AND round(cos, 4) >= 0.8),
-         |sv$k AS MATERIALIZED (
-         |  SELECT id, v FROM ex$k WHERE id NOT IN (SELECT id FROM dup$k)),
+         |${vecSurvivorsSql(k)},
          |${assignSql(s"svidx$k", s"sv$k")},
          |st${k + 1} AS MATERIALIZED (
          |  SELECT * FROM st$k UNION ALL SELECT id, v, cluster FROM svidx$k)"""
         .stripMargin
     }.mkString(",\n")
-    val funnelRows = (0 until 4).map { k =>
-      s"""  SELECT CAST($k AS BIGINT) AS bk, 'a_arrived' AS stage,
-         |         CAST(count(*) AS BIGINT) AS n_rows,
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) AS w FROM arr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'b_exact', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM ex$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'c_store', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM sv$k""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""WITH eb AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT vec_id, embedding,
-       |               md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings
-       |        WHERE vec_id < 2000000000)),
-       |src AS MATERIALIZED (SELECT vec_id AS id, v FROM eb WHERE bk < 8),
-       |${lloydIdxSql("src", "8")},
-       |delta AS MATERIALIZED (
-       |  SELECT vec_id AS id, v FROM eb WHERE bk >= 8
-       |  UNION ALL SELECT vec_id + 200000 AS id, v FROM eb
-       |    WHERE bk < 8 AND vec_id % 7 = 0
-       |  UNION ALL SELECT vec_id + 300000 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk < 8 AND vec_id % 11 = 0
-       |  UNION ALL SELECT vec_id + 400000 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 13 = 0
-       |  UNION ALL SELECT vec_id + 2000002 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0
-       |  UNION ALL SELECT vec_id + 3000002 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0 AND vec_id % 3 = 0),
-       |st0 AS MATERIALIZED (SELECT id, v, cluster FROM idx),
+    val funnelRows = (0 until 4).map(vecFunnelRowsSql).mkString("\n  UNION ALL\n")
+    s"""WITH ${semanticPrefixSql("2000000000")},
        |$perBatch,
        |qsv AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
        |        FROM embeddings WHERE vec_id < 5),
@@ -788,8 +731,7 @@ object QueriesPipeline {
        |         CAST(count(*) AS BIGINT) AS n_rows,
        |         COALESCE(CAST(sum(rank * id) AS BIGINT), 0) AS w FROM serve
        |  UNION ALL
-       |  SELECT CAST(-2 AS BIGINT), 'g_index', CAST(count(*) AS BIGINT),
-       |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM st4
+       |$gIndexRowSql
        |  UNION ALL
        |  SELECT CAST(-3 AS BIGINT), 'h_graph', CAST(count(*) AS BIGINT),
        |         COALESCE(CAST(sum(dst) AS BIGINT), 0) FROM fgraph
@@ -840,119 +782,30 @@ object QueriesPipeline {
     semanticBuild(s, dir, "q219", 10000000000L, FlatScreen, refitCadence(s))
 
   val q219Sql: String = {
-    import QueriesSimilarity.{dotSql, norm2Sql, lloydIdxSql}
-    def cosSql(a: String, b: String): String =
-      s"${dotSql(a, b)} / sqrt(${norm2Sql(a)} * ${norm2Sql(b)})"
-    // top-`n` centroid probe of relation `src(id, v)` against centroid
-    // relation `c` — q211's probeSql with the centroid side
-    // parameterized (pre- vs post-refit batches probe different fits)
-    def probeSql(name: String, src: String, c: String, n: Int): String =
-      s"""$name AS (
-         |  SELECT id, v, cluster FROM (
-         |    SELECT e.id, e.v, c.cluster,
-         |           row_number() OVER (PARTITION BY e.id
-         |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster ASC) AS rn
-         |    FROM $src e CROSS JOIN $c c)
-         |  WHERE rn <= $n)""".stripMargin
-    // batches 0-2 against the base k=8 fit (q211's chain verbatim)
-    val preRefit = (0 until 3).map { k =>
-      s"""arr$k AS (SELECT id, v FROM delta WHERE id % 4 = $k),
-         |ex$k AS MATERIALIZED (
-         |  SELECT id, v FROM (
-         |    SELECT *, min(id) OVER (PARTITION BY v) AS keep FROM arr$k)
-         |  WHERE id = keep),
-         |${probeSql(s"pr$k", s"ex$k", "cent", 2)},
-         |dup$k AS (
-         |  SELECT DISTINCT p.id FROM pr$k p JOIN st$k i USING (cluster)
-         |  WHERE round(${cosSql("p.v", "i.v")}, 4) >= 0.8),
-         |sv$k AS MATERIALIZED (
-         |  SELECT id, v FROM ex$k WHERE id NOT IN (SELECT id FROM dup$k)),
-         |${probeSql(s"svidx$k", s"sv$k", "cent", 1)},
-         |st${k + 1} AS MATERIALIZED (
-         |  SELECT * FROM st$k UNION ALL SELECT id, v, cluster FROM svidx$k)"""
-        .stripMargin
-    }.mkString(",\n")
-    // THE REFIT, after batch 2's append: a fresh global k=16 Lloyd
-    // over exactly the store's rows (refit ≡ rebuild — q218), then
-    // batch 3 and the serve run against the refitted layout
+    // batches 0-2 against the base k=8 fit (q211's chain); THE REFIT,
+    // after batch 2's append: a fresh global k=16 Lloyd over exactly
+    // the store's rows (refit ≡ rebuild — q218), then batch 3 and the
+    // serve run against the refitted layout
+    val preRefit = (0 until 3).map(k => flatScreenSql(k, "cent", s"st$k"))
+      .mkString(",\n")
     val postRefit =
       s"""rsrc AS MATERIALIZED (SELECT id, v FROM st3),
          |${lloydIdxSql("rsrc", "16", "rf")},
-         |arr3 AS (SELECT id, v FROM delta WHERE id % 4 = 3),
-         |ex3 AS MATERIALIZED (
-         |  SELECT id, v FROM (
-         |    SELECT *, min(id) OVER (PARTITION BY v) AS keep FROM arr3)
-         |  WHERE id = keep),
-         |${probeSql("pr3", "ex3", "rfcent", 2)},
-         |dup3 AS (
-         |  SELECT DISTINCT p.id FROM pr3 p JOIN rfidx i USING (cluster)
-         |  WHERE round(${cosSql("p.v", "i.v")}, 4) >= 0.8),
-         |sv3 AS MATERIALIZED (
-         |  SELECT id, v FROM ex3 WHERE id NOT IN (SELECT id FROM dup3)),
-         |${probeSql("svidx3", "sv3", "rfcent", 1)},
-         |st4 AS MATERIALIZED (
-         |  SELECT * FROM rfidx UNION ALL SELECT id, v, cluster FROM svidx3)"""
-        .stripMargin
+         |${flatScreenSql(3, "rfcent", "rfidx")}""".stripMargin
     val funnelRows = (0 until 4).map { k =>
       // d_budget: n_store after batch k's append vs the n_at_fit its
       // trigger compared against (base fit for 0-2, the refit for 3)
       val nFitRel = if (k < 3) "st0" else "st3"
-      s"""  SELECT CAST($k AS BIGINT) AS bk, 'a_arrived' AS stage,
-         |         CAST(count(*) AS BIGINT) AS n_rows,
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) AS w FROM arr$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'b_exact', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM ex$k
-         |  UNION ALL
-         |  SELECT CAST($k AS BIGINT), 'c_store', CAST(count(*) AS BIGINT),
-         |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM sv$k
+      s"""${vecFunnelRowsSql(k)}
          |  UNION ALL
          |  SELECT CAST($k AS BIGINT), 'd_budget',
          |         (SELECT CAST(count(*) AS BIGINT) FROM st${k + 1}),
          |         (SELECT CAST(count(*) AS BIGINT) FROM $nFitRel)""".stripMargin
     }.mkString("\n  UNION ALL\n")
-    s"""WITH eb AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT vec_id, embedding,
-       |               md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings
-       |        WHERE vec_id < 10000000000)),
-       |src AS MATERIALIZED (SELECT vec_id AS id, v FROM eb WHERE bk < 8),
-       |${lloydIdxSql("src", "8")},
-       |delta AS MATERIALIZED (
-       |  SELECT vec_id AS id, v FROM eb WHERE bk >= 8
-       |  UNION ALL SELECT vec_id + 200000 AS id, v FROM eb
-       |    WHERE bk < 8 AND vec_id % 7 = 0
-       |  UNION ALL SELECT vec_id + 300000 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk < 8 AND vec_id % 11 = 0
-       |  UNION ALL SELECT vec_id + 400000 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 13 = 0
-       |  UNION ALL SELECT vec_id + 2000002 AS id, v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0
-       |  UNION ALL SELECT vec_id + 3000002 AS id,
-       |    list_transform(v, x -> x * 1.01) AS v FROM eb
-       |    WHERE bk >= 8 AND vec_id % 4 = 0 AND vec_id % 3 = 0),
-       |st0 AS MATERIALIZED (SELECT id, v, cluster FROM idx),
+    s"""WITH ${semanticPrefixSql("10000000000")},
        |$preRefit,
        |$postRefit,
-       |qs AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-       |       FROM embeddings WHERE vec_id < 5),
-       |${probeSql("qpr", "qs", "rfcent", 2)},
-       |qrank AS (
-       |  SELECT q_id, n_id, rank FROM (
-       |    SELECT p.id AS q_id, i.id AS n_id,
-       |           row_number() OVER (PARTITION BY p.id
-       |             ORDER BY ${cosSql("p.v", "i.v")} DESC, i.id ASC) AS rank
-       |    FROM qpr p JOIN st4 i USING (cluster))
-       |  WHERE rank <= 3)
-       |SELECT bk, stage, n_rows, w FROM (
-       |  SELECT CAST(-1 AS BIGINT) AS bk, 'f_serve' AS stage,
-       |         CAST(count(*) AS BIGINT) AS n_rows,
-       |         COALESCE(CAST(sum(rank * n_id) AS BIGINT), 0) AS w FROM qrank
-       |  UNION ALL
-       |  SELECT CAST(-2 AS BIGINT), 'g_index', CAST(count(*) AS BIGINT),
-       |         COALESCE(CAST(sum(id) AS BIGINT), 0) FROM st4
+       |${flatServeSql("rfcent")}
        |  UNION ALL
        |  SELECT CAST(2 AS BIGINT), 'e_refit',
        |         (SELECT CAST(count(*) AS BIGINT) FROM rfcent),
@@ -1070,8 +923,6 @@ object QueriesPipeline {
   }
 
   val q212Sql: String = {
-    val normSql = QueriesText.normSql
-    val agreeSum = QueriesStreaming.ingestAgreeSum
     // near-verdict of the probe set against ONE store segment
     // (candidates from THAT segment's bands verify against THAT
     // segment's signatures — the engine's per-segment join)
@@ -1081,7 +932,7 @@ object QueriesPipeline {
          |  FROM (SELECT DISTINCT p.id AS p_id, s.id AS s_id
          |        FROM p_bands p JOIN ${pre}bands s ON p.b = s.b AND p.h = s.h) c
          |  JOIN p_mh dm ON dm.id = c.p_id JOIN ${pre}mh sm ON sm.id = c.s_id
-         |  WHERE $agreeSum >= 4)""".stripMargin
+         |  WHERE ${QueriesText.agreeSumSql} >= 4)""".stripMargin
     val perGen = (1 to 3).map { g =>
       val sources = Seq("s_", "v1_", "v2_").take(g)
       val nearCtes = sources.zipWithIndex
@@ -1114,9 +965,8 @@ object QueriesPipeline {
          |    AND doc_id NOT IN (SELECT id FROM near$g)""".stripMargin
     }.mkString("\n  UNION ALL\n")
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, (${QueriesStreaming.ingestBktDigits}) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
-       |corpus AS MATERIALIZED (SELECT doc_id, text FROM bkt WHERE bk < 8),
+       |  $docBucketsSql),
+       |corpus AS MATERIALIZED ($storeCorpusSql),
        |d1 AS MATERIALIZED (
        |  SELECT doc_id, text FROM bkt WHERE bk >= 8 AND doc_id % 2 = 0),
        |d2 AS MATERIALIZED (
@@ -1134,10 +984,10 @@ object QueriesPipeline {
        |    WHERE doc_id % 11 = 0
        |  UNION ALL SELECT doc_id + 900000000, reverse(text) FROM bkt
        |    WHERE doc_id % 13 = 0),
-       |${QueriesStreaming.ingestSigCtes("p_", "probes")},
-       |${QueriesStreaming.ingestSigCtes("s_", "corpus")},
-       |${QueriesStreaming.ingestSigCtes("v1_", "d1")},
-       |${QueriesStreaming.ingestSigCtes("v2_", "d2")},
+       |${QueriesText.ingestSigCtes("p_", "probes")},
+       |${QueriesText.ingestSigCtes("s_", "corpus")},
+       |${QueriesText.ingestSigCtes("v1_", "d1")},
+       |${QueriesText.ingestSigCtes("v2_", "d2")},
        |pfp AS MATERIALIZED (SELECT doc_id, md5($normSql) AS fp FROM probes),
        |sfp AS MATERIALIZED (SELECT DISTINCT md5($normSql) AS fp FROM corpus),
        |v1fp AS MATERIALIZED (SELECT DISTINCT md5($normSql) AS fp FROM d1),
@@ -1183,7 +1033,8 @@ object QueriesPipeline {
 
   /** The streaming corpus build of q209 and q210, run once per session
     * (`graft_<tag>`): a dedup store over the `bk10 < 8` corpus, then
-    * the planted delta — q209's plantings, then `extraPlant`'s, each
+    * the planted delta — [[QueriesText.plantedArrivals]]' lanes and
+    * q209's `+500000` lane, then `extraPlant`'s, each
     * drawn from the source `t` with its `b` = bk10 column — over four
     * keyed micro-batches (batch k ≡ `doc_id % 4 = k`), each under the
     * replay guard:
@@ -1202,34 +1053,25 @@ object QueriesPipeline {
     import s.implicits._
     val base = Scratch.session(s"graft_$tag", dir) { b =>
       val file = s"$dir/documents.parquet"
-      val corpus = s.read.parquet(file).filter(hashBucket($"doc_id", 10) < 8)
-        .select($"doc_id", $"text")
       val storeName = s"${tag}_store_${Scratch.stem(dir)}"
       val store = s"$b/store"
-      TextDedup.writeDedupStoreBucketed(corpus, "doc_id", "text",
-        shingleN = 5, k = 8, rowsPerBand = 2,
+      TextDedup.writeDedupStoreBucketed(QueriesStreaming.storeCorpus(s, dir),
+        "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
         namePrefix = storeName, pathPrefix = store, buckets = 8)
-      // the arriving crawl: fresh docs + the q128 planted copies, all
-      // congruent mod 4 with their originals (same batch)
+      // the arriving crawl: fresh docs + the planted copies
+      // (QueriesText.plantedArrivals), all congruent mod 4 with their
+      // originals (same batch)
       def delta(df: DataFrame): DataFrame = {
         val t = df.withColumn("b", hashBucket($"doc_id", 10))
         (Seq(
-          t.filter($"b" >= 8).select($"doc_id", $"text"),
-          t.filter($"b" < 8 && $"doc_id" % 7 === 0)
-            .select(($"doc_id" + 200000L).as("doc_id"), $"text"),
-          t.filter($"b" < 8 && $"doc_id" % 11 === 0)
-            .select(($"doc_id" + 300000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text")),
-          t.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-            .select(($"doc_id" + 400000L).as("doc_id"), $"text"),
+          plantedArrivals(t, "doc_id", "text", zzQq),
           // perturbed copies of FRESH docs: neither side is in the
           // store, both survive the classification, and the copy falls
           // to the INTRA-batch near-dup stage — without this planting
           // that stage never fires (the +300000 perturbed copies
           // target STORE docs and die at c_store)
           t.filter($"b" >= 8 && $"doc_id" % 17 === 0)
-            .select(($"doc_id" + 500000L).as("doc_id"),
-              concat($"text", lit(" zz qq")).as("text"))
+            .select(($"doc_id" + 500000L).as("doc_id"), zzQq($"text").as("text"))
         ) ++ extraPlant(t)).reduce(_ unionByName _)
       }
       val staging = s"$b/staging"
@@ -1368,7 +1210,8 @@ object QueriesPipeline {
   /** The cumulative semantic build of q211, q216 and q219, run once per
     * session (`graft_<tag>`) over the embeddings with `vec_id < cap`:
     * a deterministic k=8 Lloyd fit over the `bk10 < 8` corpus saved as
-    * the flat index (plus `tier.seed`), then the planted delta over
+    * the flat index (plus `tier.seed`), then the planted delta
+    * ([[QueriesText.plantedArrivals]] plus the cross-batch copies) over
     * four keyed micro-batches (batch k ≡ `vec_id % 4 = k`), each under
     * the replay guard: intra-batch exact-vector dedup → `tier.screen`
     * (screen + append) → funnel rows `a_arrived`/`b_exact`/`c_store`
@@ -1391,27 +1234,7 @@ object QueriesPipeline {
         IvfIndex.save(cent, idxBase, s"$b/ivf")
         tier.seed(idxBase, cent, b)
       } finally cent.unpersist(): Unit
-      def delta(df: DataFrame): DataFrame = {
-        val t = QueriesSimilarity.idVectors(df.filter($"vec_id" < cap))
-          .withColumnRenamed("id", "vec_id")
-          .withColumn("b", hashBucket($"vec_id", 10))
-        val scaled = transform($"v", x => x * 1.01)
-        t.filter($"b" >= 8).select($"vec_id", $"v")
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 7 === 0)
-            .select(($"vec_id" + 200000L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" < 8 && $"vec_id" % 11 === 0)
-            .select(($"vec_id" + 300000L).as("vec_id"), scaled.as("v")))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 13 === 0)
-            .select(($"vec_id" + 400000L).as("vec_id"), $"v"))
-          // CROSS-BATCH plantings: copies of batch-0 fresh vectors
-          // (≡ 0 mod 4) landing in batch 2 (+2000002 ≡ +3000002 ≡ 2
-          // mod 4) — dead only if batch 0's survivors were appended
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0)
-            .select(($"vec_id" + 2000002L).as("vec_id"), $"v"))
-          .unionByName(t.filter($"b" >= 8 && $"vec_id" % 4 === 0 &&
-              $"vec_id" % 3 === 0)
-            .select(($"vec_id" + 3000002L).as("vec_id"), scaled.as("v")))
-      }
+      def delta(df: DataFrame): DataFrame = semanticArrivals(df.filter($"vec_id" < cap))
       val afterAppend = cadence(s"$b/ivf")
       val staging = s"$b/staging"
       val stream = QueriesStreaming.keyedMultiBatchStream(
@@ -1440,6 +1263,26 @@ object QueriesPipeline {
       funnelRow(-2L, "g_index", idxF, sum($"id")))
       .reduce(_ unionByName _)
       .orderBy($"bk", $"stage")
+  }
+
+  /** The semantic builds' planted arrivals from the embeddings `df`:
+    * [[QueriesText.plantedArrivals]] with ×1.01 near copies, plus
+    * CROSS-BATCH exact (+2000002) and scaled (+3000002) copies of
+    * batch-0 fresh vectors (≡ 0 mod 4) landing in batch 2 (≡ 2 mod 4)
+    * — dead only if batch 0's survivors were appended. Every offset
+    * stays below the 10⁹ ScaleUp replica stride and above any
+    * per-replica organic id, so planted ⟺ `vec_id % 10⁹ ≥ 200000` at
+    * every scale. [[graft.tools.SemStreamScale]] streams the same
+    * arrivals. */
+  private[graft] def semanticArrivals(df: DataFrame): DataFrame = {
+    val (id, v) = (col("vec_id"), col("v"))
+    val t = QueriesSimilarity.idVectors(df).withColumnRenamed("id", "vec_id")
+      .withColumn("b", hashBucket(id, 10))
+    plantedArrivals(t, "vec_id", "v", scaled101)
+      .unionByName(t.filter(col("b") >= 8 && id % 4 === 0)
+        .select((id + 2000002L).as("vec_id"), v))
+      .unionByName(t.filter(col("b") >= 8 && id % 4 === 0 && id % 3 === 0)
+        .select((id + 3000002L).as("vec_id"), scaled101(v).as("v")))
   }
 
   /** q219's refit cadence over the flat index at `ivf`, as the

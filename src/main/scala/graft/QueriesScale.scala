@@ -11,6 +11,7 @@ import graft.operators.{Packing, Reports, Sampling, SkewJoin}
   */
 object QueriesScale {
   import Queries.Q
+  import QueriesText.{md5Bits32Sql, normSql}
 
   // ---------------------------------------------------------------- q44
   /** Two-phase salted aggregation over lineitem supplier keys: phase 1
@@ -44,9 +45,9 @@ object QueriesScale {
   /** Deterministic hash train/val/test split ([[Sampling.hashSplit]]):
     * split = f(md5(id)) — a pure per-row expression, no shuffle, stable
     * across reruns and engines (the property `rand()`-based splits lack).
-    * The oracle recomputes the md5 bucket with digit-position arithmetic
-    * (DuckDB has no conv()), so the 32-bit hash → bucket → label path is
-    * checked bit-for-bit. */
+    * The oracle recomputes the md5 bucket with
+    * [[QueriesText.md5Bits32Sql]] (DuckDB has no conv()), so the 32-bit
+    * hash → bucket → label path is checked bit-for-bit. */
   val q50HashSplit: Q = (s, dir) => {
     import s.implicits._
     Sampling.hashSplit(Tables.documents(s, dir), "doc_id")
@@ -54,12 +55,9 @@ object QueriesScale {
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("n_chars"))
       .orderBy($"split")
   }
-  val q50Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+  val q50Sql: String =
     s"""WITH b AS (
-       |  SELECT doc_id, n_chars, ($digits) % 100 AS bucket
+       |  SELECT doc_id, n_chars, (${md5Bits32Sql("h")}) % 100 AS bucket
        |  FROM (SELECT doc_id, n_chars, md5(CAST(doc_id AS VARCHAR)) AS h
        |        FROM documents))
        |SELECT CASE WHEN bucket < 80 THEN 'train'
@@ -67,7 +65,6 @@ object QueriesScale {
        |            ELSE 'test' END AS split,
        |       count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars
        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q51
   /** Sequence packing ([[Packing.packChunks]]): concatenate documents in
@@ -153,9 +150,7 @@ object QueriesScale {
       .orderBy($"source")
   }
   val q52Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+    val digits = md5Bits32Sql("h")
     val cases = mixWeights.map { case (i, wt) => s"WHEN $i THEN $wt" }.mkString(" ")
     s"""WITH w AS (
        |  SELECT doc_id, source, n_chars,
@@ -276,14 +271,6 @@ object QueriesScale {
       .select($"bucket", $"id".as("doc_id"), $"len".as("n_toks"), $"bin")
       .orderBy($"bucket", $"doc_id")
   }
-  /** The deterministic md5-digit hash-bucket arithmetic over `doc_id`
-    * as a SQL fragment — mirrors [[graft.operators.Sampling
-    * .hashBucket]]'s first-32-bit decode. Shared with the composed
-    * pipeline gate ([[graft.QueriesPipeline]]). */
-  private[graft] val ffdBucketDigits: String = (1 to 8).map { p =>
-    s"(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-  }.mkString(" + ")
-
   /** The [[Packing.ffdPack]] fold as CTEs over `f(doc_id, len,
     * bucket)`: per-bucket descending sort (id tiebreak) → first-fit
     * scan fold → `p(bucket, packed)`, with the per-doc unnest as the
@@ -326,7 +313,7 @@ object QueriesScale {
        |FROM (SELECT bucket, unnest(packed) AS a FROM ${pre}p)""".stripMargin
 
   val q121Sql: String = {
-    val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+    val docIdBits = md5Bits32Sql("md5(CAST(doc_id AS VARCHAR))")
     s"""WITH tk AS (
        |  SELECT doc_id, CAST(len(string_split($normSql, ' ')) AS BIGINT) AS len
        |  FROM documents),
@@ -334,7 +321,7 @@ object QueriesScale {
        |nb AS (
        |  SELECT CAST(greatest(1, ceil(count(*) / 64.0)) AS BIGINT) AS b FROM f0),
        |f AS (
-       |  SELECT doc_id, len, (($ffdBucketDigits) % (SELECT b FROM nb)) AS bucket
+       |  SELECT doc_id, len, (($docIdBits) % (SELECT b FROM nb)) AS bucket
        |  FROM f0),
        |${ffdFoldCtes(capacity = 256)}
        |$ffdUnnested

@@ -10,15 +10,7 @@ import graft.operators.{BloomJoin, Sampling, TermScoring}
   */
 object QueriesSelect {
   import Queries.Q
-
-  private val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
-
-  /** md5 first-32-bits as digit-position arithmetic (DuckDB has no
-    * conv()) — shared by the sampling oracles. */
-  private def md5DigitsSql(expr: String): String =
-    (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(md5($expr), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+  import QueriesText.{md5Bits32Sql, normSql, qualitySql}
 
   // ---------------------------------------------------------------- q59
   /** TF-IDF top-3 terms per document ([[TermScoring]]): explode → (doc,
@@ -93,7 +85,7 @@ object QueriesSelect {
   val q60Sql: String =
     s"""WITH b AS (
        |  SELECT lang, n_chars,
-       |         (${md5DigitsSql("CAST(doc_id AS VARCHAR)")}) % 100 AS bucket,
+       |         (${md5Bits32Sql("md5(CAST(doc_id AS VARCHAR))")}) % 100 AS bucket,
        |         CASE lang WHEN 'en' THEN 50 WHEN 'es' THEN 25
        |                   WHEN 'de' THEN 25 WHEN 'fr' THEN 10 ELSE 0 END AS rate
        |  FROM documents)
@@ -196,13 +188,7 @@ object QueriesSelect {
   val q64Sql: String =
     s"""WITH t AS (
        |  SELECT source, doc_id,
-       |    round(0.4 * least(
-       |        len(regexp_extract_all(lower(text), '\\b(the|and|of|is|to|a|in|that)\\b'))
-       |          / greatest(len(string_split($normSql, ' ')), 1.0) * 4.0, 1.0)
-       |      + 0.3 * least(len(string_split($normSql, ' ')) / 50.0, 1.0)
-       |      + 0.3 * (1.0 - least(
-       |          length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))
-       |            / greatest(length(text), 1.0) * 5.0, 1.0)), 4) AS q
+       |    $qualitySql
        |  FROM documents),
        |r AS (
        |  SELECT source, doc_id, q,

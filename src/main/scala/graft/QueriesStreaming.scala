@@ -16,6 +16,9 @@ import graft.streaming.EventStreams
 object QueriesStreaming {
   import Queries.Q
   import QueriesSimilarity.{fullTier, idVectors, pqTier, querySample, twoTierServe}
+  import QueriesText.{docBucketsSql, md5Bits32Sql, normSql, plantedArrivals,
+    plantedDeltaSql, storeCorpusSql, storeDeltaSigCtes, storeNearCtes, zzQq}
+  import graft.operators.Sampling.hashBucket
 
   /** A directory a file-stream source can watch for `$dir/$name`: the
     * testdata fixtures are single parquet FILES (exposed through a
@@ -37,6 +40,43 @@ object QueriesStreaming {
         java.nio.file.Paths.get(watch, name), target)
       watch
     }
+  }
+
+  // ----------------------------------- shared dedup-ingest gate parts
+  /** The dedup store's corpus: the `documents` in hash buckets 0–7. */
+  private[graft] def storeCorpus(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/documents.parquet")
+      .filter(hashBucket(col("doc_id"), 10) < 8)
+      .select(col("doc_id"), col("text"))
+
+  /** The planted arrivals ([[QueriesText.plantedArrivals]], ` zz qq`
+    * near copies) of `documents.parquet`, read as a file stream from
+    * the watch dir `tag`. */
+  private def streamedArrivals(s: SparkSession, dir: String, tag: String): DataFrame = {
+    val file = s"$dir/documents.parquet"
+    val watch = streamableDir(dir, "documents.parquet", tag)
+    plantedArrivals(s.readStream.schema(s.read.parquet(file).schema).parquet(watch)
+      .withColumn("b", hashBucket(col("doc_id"), 10)), "doc_id", "text", zzQq)
+  }
+
+  /** The four `(dup_exact, dup_near)` verdict classes of `flags`, each
+    * with its row count and id sum. */
+  private def verdictClasses(flags: DataFrame): DataFrame = {
+    import flags.sparkSession.implicits._
+    flags.groupBy($"dup_exact", $"dup_near")
+      .agg(count(lit(1)).as("n_docs"), sum($"id").as("id_sum"))
+      .orderBy($"dup_exact", $"dup_near")
+  }
+
+  /** q128/q132/q198's verdict tail: the verdict stream `flags` run
+    * through its micro-batches into the memory sink `name`, then
+    * [[verdictClasses]]. */
+  private def streamVerdictClasses(s: SparkSession, flags: DataFrame,
+                                   name: String): DataFrame = {
+    EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Complete()).start()
+    )
+    verdictClasses(s.table(name))
   }
 
   // ---------------------------------------------------------------- q45
@@ -274,35 +314,28 @@ object QueriesStreaming {
     )
     s.table(name).orderBy($"bucket")
   }
-  val q110Sql: String = {
-    val bdig = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
-    val fdig = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(fp, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+  val q110Sql: String =
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, ($bdig) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
+       |  $docBucketsSql),
        |sfp AS (
-       |  SELECT DISTINCT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+       |  SELECT DISTINCT md5($normSql) AS fp
        |  FROM bkt WHERE bk < 8),
        |novel AS (
-       |  SELECT DISTINCT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+       |  SELECT DISTINCT md5($normSql) AS fp
        |  FROM documents
-       |  WHERE md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+       |  WHERE md5($normSql)
        |        NOT IN (SELECT fp FROM sfp))
        |SELECT substr(fp, 1, 1) AS bucket, count(*) AS n_accepted,
-       |       CAST(sum($fdig) AS BIGINT) AS fp_sum
+       |       CAST(sum(${md5Bits32Sql("fp")}) AS BIGINT) AS fp_sum
        |FROM novel GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q128
   /** Streaming NEAR-dup ingest against the persisted dedup store — the
     * r6-verdict extension of q110 (exact-fingerprint only) and the
     * continuous face of q107's snapshot classification
     * ([[graft.operators.TextDedup.ingestFlags]]): documents arrive as a
-    * file stream carrying q107's planted delta — novel docs (md5
+    * file stream carrying q107's planted delta
+    * ([[QueriesText.plantedArrivals]]) — novel docs (md5
     * buckets 8–9), exact corpus copies (`dup_exact`), PERTURBED corpus
     * copies with a ` zz qq` suffix (NON-identical text, so only the
     * MinHash band path can catch them → `dup_near`), and in-shard
@@ -319,115 +352,35 @@ object QueriesStreaming {
     * classes. The oracle replays fingerprints, signatures, banding,
     * agreement, and classification in SQL. */
   val q128StreamNearDup: Q = (s, dir) => {
-    import s.implicits._
-    val file = s"$dir/documents.parquet"
-    val watch = streamableDir(dir, "documents.parquet", "q128_docs")
-    val schema = s.read.parquet(file).schema
-    val corpus = s.read.parquet(file)
-      .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
-      .select($"doc_id", $"text")
+    val delta = streamedArrivals(s, dir, "q128_docs")
     val (storeFp, storeSig) = graft.operators.TextDedup
-      .buildDedupStore(corpus, "doc_id", "text", shingleN = 5, k = 8)
+      .buildDedupStore(storeCorpus(s, dir), "doc_id", "text", shingleN = 5, k = 8)
     // eager-materialize the store tables: a stream-static join re-reads
     // its static side EVERY micro-batch, and the signature build is a
     // corpus scan + shingle explode we must not repeat per batch
     val sFp = storeFp.localCheckpoint()
     val sSig = storeSig.localCheckpoint()
-    def arriving = s.readStream.schema(schema).parquet(watch)
-      .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-    val delta = arriving.filter($"b" >= 8).select($"doc_id", $"text")
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 7 === 0)
-        .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 11 === 0)
-        .select(($"doc_id" + 300000L).as("doc_id"),
-          concat($"text", lit(" zz qq")).as("text")))
-      .unionByName(arriving.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
     val flags = graft.operators.TextDedup.ingestFlags(delta, "doc_id", "text",
       sFp, sSig, shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-    val name = s"q128_neardup_${System.nanoTime()}"
-    EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete()).start()
-    )
-    s.table(name)
-      .groupBy($"dup_exact", $"dup_near")
-      .agg(count(lit(1)).as("n_docs"), sum($"id").as("id_sum"))
-      .orderBy($"dup_exact", $"dup_near")
+    streamVerdictClasses(s, flags, s"q128_neardup_${System.nanoTime()}")
   }
   val q128Sql: String = nearDupIngestSql("TRUE")
-  /** ONE oracle text for q128/q132/q189 — near-dup ingest
+  /** ONE oracle text for q128/q132/q189/q198 — near-dup ingest
     * classification against the corpus store, with the store built
     * from the corpus docs satisfying `liveWhere` (q189 deletes the
-    * complement; q128/q132 keep everything). The PLANTED DELTA is
-    * always built from the FULL corpus — deleted docs' copies still
-    * arrive and must classify against the shrunken store. */
-  /** The [[graft.operators.TextDedup.ingestFlags]] signature chain as
-    * prefixed CTEs over `src` `(doc_id, text)` — shingles → md5-lane
-    * minhash signature → band keys. ONE text for the q128/q132/q189/
-    * q198 classification oracle and the q209 streaming-pipeline
-    * oracle (the q203 discipline). */
-  private[graft] def ingestSigCtes(pre: String, src: String): String = {
-    val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
-    val mins = (0 until 8).map { j =>
-      val m = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
-      s"min(substr($m, ${(j % 4) * 8 + 1}, 8)) AS h$j"
-    }.mkString(",\n    ")
-    val bandHashes = (0 until 4).map(b => s"md5(h${2 * b} || h${2 * b + 1})").mkString(", ")
-    s"""${pre}shd AS (
-       |  SELECT DISTINCT id, s FROM (
-       |    SELECT doc_id AS id, unnest(list_transform(
-       |      generate_series(1, len(string_split($normSql, ' '))-4),
-       |      i -> array_to_string(list_slice(string_split($normSql, ' '), i, i+4), ' '))) AS s
-       |    FROM $src)),
-       |${pre}mh AS (
-       |  SELECT id, $mins
-       |  FROM ${pre}shd GROUP BY id),
-       |${pre}bands AS (
-       |  SELECT id, b, h FROM (
-       |    SELECT id, unnest([0, 1, 2, 3]) AS b, unnest([$bandHashes]) AS h
-       |    FROM ${pre}mh))""".stripMargin
-  }
-
-  /** Signature-lane agreement count between a delta row (`dm`) and a
-    * store row (`sm`) — the MinHash Jaccard-estimate verification of
-    * [[graft.operators.TextDedup.ingestFlags]] (`minAgree` lanes). */
-  private[graft] def ingestAgreeSum: String = (0 until 8)
-    .map(j => s"(CASE WHEN dm.h$j = sm.h$j THEN 1 ELSE 0 END)").mkString("\n    + ")
-
-  /** The deterministic md5-digit hash bucket of `doc_id` (expects an
-    * `h = md5(CAST(doc_id AS VARCHAR))` column in scope) — mirrors
-    * [[graft.operators.Sampling.hashBucket]]. */
-  private[graft] def ingestBktDigits: String = (1 to 8).map { p =>
-    s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-  }.mkString(" + ")
-
-  private def nearDupIngestSql(liveWhere: String): String = {
-    val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
-    val digits = ingestBktDigits
-    def sigCtes(pre: String, src: String): String = ingestSigCtes(pre, src)
-    val agreeSum = ingestAgreeSum
+    * complement; q128/q132 keep everything). The PLANTED DELTA
+    * ([[QueriesText.plantedDeltaSql]]) is always built from the FULL
+    * corpus — deleted docs' copies still arrive and must classify
+    * against the shrunken store. */
+  private def nearDupIngestSql(liveWhere: String): String =
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, ($digits) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
-       |corpus AS (SELECT doc_id, text FROM bkt WHERE bk < 8),
+       |  $docBucketsSql),
+       |corpus AS ($storeCorpusSql),
        |live AS (SELECT doc_id, text FROM corpus WHERE $liveWhere),
        |delta AS (
-       |  SELECT doc_id, text FROM bkt WHERE bk >= 8
-       |  UNION ALL SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id % 7 = 0
-       |  UNION ALL SELECT doc_id + 300000 AS doc_id, text || ' zz qq' AS text
-       |    FROM corpus WHERE doc_id % 11 = 0
-       |  UNION ALL SELECT doc_id + 400000 AS doc_id, text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 13 = 0),
-       |sfp AS (SELECT DISTINCT md5($normSql) AS fp FROM live),
-       |${sigCtes("s_", "live")},
-       |${sigCtes("d_", "delta")},
-       |cand AS (
-       |  SELECT DISTINCT d.id AS d_id, s.id AS s_id
-       |  FROM d_bands d JOIN s_bands s ON d.b = s.b AND d.h = s.h),
-       |near AS (
-       |  SELECT DISTINCT c.d_id AS id
-       |  FROM cand c JOIN d_mh dm ON dm.id = c.d_id JOIN s_mh sm ON sm.id = c.s_id
-       |  WHERE $agreeSum >= 4),
+       |$plantedDeltaSql),
+       |${storeDeltaSigCtes("live")},
+       |${storeNearCtes("cand", "near")},
        |verdicts AS (
        |  SELECT f.id,
        |    sf.fp IS NOT NULL AS dup_exact,
@@ -438,7 +391,6 @@ object QueriesStreaming {
        |SELECT dup_exact, dup_near, count(*) AS n_docs,
        |       CAST(sum(id) AS BIGINT) AS id_sum
        |FROM verdicts GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q132
   /** q128's classification with the BUCKETED (non-broadcast) store —
@@ -455,13 +407,7 @@ object QueriesStreaming {
     * q128 — the two paths must agree exactly; what changes is only the
     * physical store transport. */
   val q132StreamNearDupBucketed: Q = (s, dir) => {
-    import s.implicits._
-    val file = s"$dir/documents.parquet"
-    val watch = streamableDir(dir, "documents.parquet", "q132_docs")
-    val schema = s.read.parquet(file).schema
-    val corpus = s.read.parquet(file)
-      .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
-      .select($"doc_id", $"text")
+    val delta = streamedArrivals(s, dir, "q132_docs")
     val prefix = s"q132_store_${new java.io.File(dir).getName.replace('.', '_')}"
     // session-owned store ([[Scratch.session]]): a production ingest
     // service builds the corpus store ONCE and serves every later
@@ -470,31 +416,14 @@ object QueriesStreaming {
     val store = Scratch.session("q132_store", dir) { d =>
       val path = s"$d/store"
       graft.operators.TextDedup.writeDedupStoreBucketed(
-        corpus, "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
+        storeCorpus(s, dir), "doc_id", "text", shingleN = 5, k = 8, rowsPerBand = 2,
         namePrefix = prefix, pathPrefix = path, buckets = 8)
       path
     }
-    def arriving = s.readStream.schema(schema).parquet(watch)
-      .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-    val delta = arriving.filter($"b" >= 8).select($"doc_id", $"text")
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 7 === 0)
-        .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 11 === 0)
-        .select(($"doc_id" + 300000L).as("doc_id"),
-          concat($"text", lit(" zz qq")).as("text")))
-      .unionByName(arriving.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
     val flags = graft.operators.TextDedup.ingestFlagsBucketed(
       delta, "doc_id", "text", prefix, store,
       shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-    val name = s"q132_neardup_${System.nanoTime()}"
-    EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete()).start()
-    )
-    s.table(name)
-      .groupBy($"dup_exact", $"dup_near")
-      .agg(count(lit(1)).as("n_docs"), sum($"id").as("id_sum"))
-      .orderBy($"dup_exact", $"dup_near")
+    streamVerdictClasses(s, flags, s"q132_neardup_${System.nanoTime()}")
   }
 
   // ---------------------------------------------------------------- q189
@@ -504,7 +433,8 @@ object QueriesStreaming {
     * store is built, every `doc_id % 5 = 1` corpus document is
     * tombstoned (O(|ids|) append; all three tables are per-document
     * rows, so read-time anti-joins are exactly a rebuild without the
-    * ids), and the q128 planted delta — built from the FULL corpus, so
+    * ids), and the planted delta ([[QueriesText.plantedArrivals]]) —
+    * built from the FULL corpus, so
     * deleted docs' exact and perturbed copies still arrive — must
     * classify against the SHRUNKEN store: copies of deleted docs lose
     * their dup_exact/dup_near flags, everything else keeps its
@@ -517,27 +447,13 @@ object QueriesStreaming {
     * batch/stream contract); q128/q132 cover the streaming transports. */
   val q189DedupDelete: Q = (s, dir) => {
     import s.implicits._
-    val file = s"$dir/documents.parquet"
-    val corpus = s.read.parquet(file)
-      .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
-      .select($"doc_id", $"text")
-    val base = s.read.parquet(file)
-      .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-    val delta = base.filter($"b" >= 8).select($"doc_id", $"text")
-      .unionByName(base.filter($"b" < 8 && $"doc_id" % 7 === 0)
-        .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-      .unionByName(base.filter($"b" < 8 && $"doc_id" % 11 === 0)
-        .select(($"doc_id" + 300000L).as("doc_id"),
-          concat($"text", lit(" zz qq")).as("text")))
-      .unionByName(base.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
+    val corpus = storeCorpus(s, dir)
+    val delta = plantedArrivals(s.read.parquet(s"$dir/documents.parquet")
+      .withColumn("b", hashBucket($"doc_id", 10)), "doc_id", "text", zzQq)
     val name = s"q189_store_${new java.io.File(dir).getName.replace('.', '_')}"
-    def flags(p: String, path: String) = graft.operators.TextDedup
+    def flags(p: String, path: String) = verdictClasses(graft.operators.TextDedup
       .ingestFlagsBucketed(delta, "doc_id", "text", p, path,
-        shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-      .groupBy($"dup_exact", $"dup_near")
-      .agg(count(lit(1)).as("n_docs"), sum($"id").as("id_sum"))
-      .orderBy($"dup_exact", $"dup_near")
+        shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4))
     // session-owned lifecycle cache (the q142 contract, r14 verdict #2):
     // build + tombstone + the tombstoned-read classification + compact
     // + the compaction-invariance check run ONCE per session (that
@@ -570,7 +486,8 @@ object QueriesStreaming {
     * bucketed stream-static transport composed with
     * [[graft.operators.TextDedup.deleteFromDedupStore]]: the corpus
     * store is built, every `doc_id % 5 = 1` document tombstoned, and
-    * the q128 planted delta then arrives as a real file stream (the
+    * the planted delta ([[QueriesText.plantedArrivals]]) then arrives
+    * as a real file stream (the
     * q132 transport) — every micro-batch's static-side reads must apply the
     * tombstone anti-joins (still exchange-free on the bucketed
     * layout), so copies of deleted docs lose their flags exactly as in
@@ -579,12 +496,8 @@ object QueriesStreaming {
     * this covers the streaming transport. */
   val q198StreamDedupDelete: Q = (s, dir) => {
     import s.implicits._
-    val file = s"$dir/documents.parquet"
-    val watch = streamableDir(dir, "documents.parquet", "q198_docs")
-    val schema = s.read.parquet(file).schema
-    val corpus = s.read.parquet(file)
-      .filter(graft.operators.Sampling.hashBucket($"doc_id", 10) < 8)
-      .select($"doc_id", $"text")
+    val delta = streamedArrivals(s, dir, "q198_docs")
+    val corpus = storeCorpus(s, dir)
     val p = s"q198_store_${new java.io.File(dir).getName.replace('.', '_')}"
     // session-owned lifecycle cache (the q142 contract, r14 verdict #2):
     // store build + tombstoning run ONCE per session; steady passes
@@ -599,27 +512,10 @@ object QueriesStreaming {
         corpus.filter($"doc_id" % 5 === 1).select($"doc_id"))
       path
     }
-    def arriving = s.readStream.schema(schema).parquet(watch)
-      .withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
-    val delta = arriving.filter($"b" >= 8).select($"doc_id", $"text")
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 7 === 0)
-        .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-      .unionByName(arriving.filter($"b" < 8 && $"doc_id" % 11 === 0)
-        .select(($"doc_id" + 300000L).as("doc_id"),
-          concat($"text", lit(" zz qq")).as("text")))
-      .unionByName(arriving.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
     val flags = graft.operators.TextDedup.ingestFlagsBucketed(
       delta, "doc_id", "text", p, store,
       shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4)
-    val name = s"q198_deldup_${System.nanoTime()}"
-    EventStreams.runMicroBatches(s)(flags.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete()).start()
-    )
-    s.table(name)
-      .groupBy($"dup_exact", $"dup_near")
-      .agg(count(lit(1)).as("n_docs"), sum($"id").as("id_sum"))
-      .orderBy($"dup_exact", $"dup_near")
+    streamVerdictClasses(s, flags, s"q198_deldup_${System.nanoTime()}")
   }
 
   // ---------------------------------------------------------------- q201

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 import graft.operators.{Curation, TextDedup}
@@ -17,14 +17,181 @@ import graft.operators.{Curation, TextDedup}
   *
   * All hash functions are md5-based so the DuckDB oracle reproduces
   * every value bit-for-bit (see TextDedup doc for the scale trade-off).
+  *
+  * The shared text-dedup gate parts open the object. On the engine
+  * side, [[plantedArrivals]] plants the dedup-ingest delta (fresh
+  * arrivals plus exact, perturbed and in-batch copies) for a text
+  * (`zzQq`) or a vector (`scaled101`) payload. On the oracle side:
+  * [[normSql]], [[md5Bits32Sql]] (the `hashBucket` decode),
+  * [[minhashMinsSql]]/[[bandHashesSql]]/[[agreeSumSql]] (the md5-lane
+  * MinHash), [[ingestSigCtes]], [[storeDeltaSigCtes]] and
+  * [[storeNearCtes]] (the store filter-then-verify step), and the
+  * `bkt`/`corpus`/`delta` bodies [[docBucketsSql]],
+  * [[storeCorpusSql]], [[plantedDeltaSql]] with their vector twins
+  * [[vecBucketsSql]] and [[plantedVecDeltaSql]]. The dedup-ingest
+  * gates here and in [[QueriesStreaming]] and [[QueriesPipeline]]
+  * build from them, and a new dedup gate should too.
   */
 object QueriesText {
   import Queries.Q
 
+  // ------------------------------------- shared text-dedup gate parts
+  // One copy each of the pieces the dedup and dedup-ingest gates (here
+  // and in QueriesStreaming, QueriesPipeline, QueriesSelect,
+  // QueriesCurate, QueriesScale and tools.SemStreamScale) build from.
+  // The vals sit above every gate: an object's vals initialise in
+  // source order.
+
   /** Normalization as a DuckDB SQL fragment — mirrors
-    * [[TextAnalysis.normalizeText]] exactly. Shared with the composed
-    * pipeline gate ([[QueriesPipeline]]). */
-  private[graft] val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+    * [[TextAnalysis.normalizeText]] exactly. The one copy every oracle
+    * text uses. */
+  private[graft] final val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+
+  /** [[TextAnalysis.qualityScore]] of `text` as a DuckDB expression,
+    * rounded to 4 places and aliased `q`. */
+  private[graft] val qualitySql: String =
+    s"""round(0.4 * least(
+       |        len(regexp_extract_all(lower(text), '\\b(the|and|of|is|to|a|in|that)\\b'))
+       |          / greatest(len(string_split($normSql, ' ')), 1.0) * 4.0, 1.0)
+       |      + 0.3 * least(len(string_split($normSql, ' ')) / 50.0, 1.0)
+       |      + 0.3 * (1.0 - least(
+       |          length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))
+       |            / greatest(length(text), 1.0) * 5.0, 1.0)), 4) AS q""".stripMargin
+
+  /** The first 32 bits of the md5 hex digest `hexExpr` as a DuckDB
+    * integer, decoded by digit-position arithmetic (DuckDB has no
+    * `conv()`): the oracle mirror of
+    * [[graft.operators.Sampling.hashBucket]] and of the md5-prefix
+    * token hashes. `joiner` separates the eight digit terms. */
+  private[graft] def md5Bits32Sql(hexExpr: String, joiner: String = " + "): String =
+    (1 to 8).map { p =>
+      s"(instr('0123456789abcdef', substr($hexExpr, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
+    }.mkString(joiner)
+
+  /** The k=8 md5-lane MinHash minima `h0`…`h7` over shingles `s`, the
+    * [[TextDedup]] signature scheme: four 32-bit lanes per md5 call,
+    * the second block salted with "1:". */
+  private[graft] val minhashMinsSql: String = (0 until 8).map { j =>
+    val src = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
+    s"min(substr($src, ${(j % 4) * 8 + 1}, 8)) AS h$j"
+  }.mkString(",\n    ")
+
+  /** The four band keys (2 rows per band) over `h0`…`h7`. */
+  private[graft] val bandHashesSql: String =
+    (0 until 4).map(b => s"md5(h${2 * b} || h${2 * b + 1})").mkString(", ")
+
+  /** Signature-lane agreement count between a delta row (`dm`) and a
+    * store row (`sm`) — the MinHash verification of
+    * [[TextDedup.ingestFlags]] (`minAgree` lanes). */
+  private[graft] val agreeSumSql: String = (0 until 8)
+    .map(j => s"(CASE WHEN dm.h$j = sm.h$j THEN 1 ELSE 0 END)").mkString("\n    + ")
+
+  /** The [[TextDedup.ingestFlags]] signature chain as prefixed CTEs
+    * over `src` `(doc_id, text)`: shingles → md5-lane minhash
+    * signature → band keys. */
+  private[graft] def ingestSigCtes(pre: String, src: String): String =
+    s"""${pre}shd AS (
+       |  SELECT DISTINCT id, s FROM (
+       |    SELECT doc_id AS id, unnest(list_transform(
+       |      generate_series(1, len(string_split($normSql, ' '))-4),
+       |      i -> array_to_string(list_slice(string_split($normSql, ' '), i, i+4), ' '))) AS s
+       |    FROM $src)),
+       |${pre}mh AS (
+       |  SELECT id, $minhashMinsSql
+       |  FROM ${pre}shd GROUP BY id),
+       |${pre}bands AS (
+       |  SELECT id, b, h FROM (
+       |    SELECT id, unnest([0, 1, 2, 3]) AS b, unnest([$bandHashesSql]) AS h
+       |    FROM ${pre}mh))""".stripMargin
+
+  /** The store's fingerprints `sfp` and the signature CTEs of the
+    * store `store` (prefix `s_`) and of the planted `delta` (`d_`). */
+  private[graft] def storeDeltaSigCtes(store: String): String =
+    s"""sfp AS (SELECT DISTINCT md5($normSql) AS fp FROM $store),
+       |${ingestSigCtes("s_", store)},
+       |${ingestSigCtes("d_", "delta")}""".stripMargin
+
+  /** The MinHash filter-then-verify step of [[TextDedup.ingestFlags]]
+    * over [[storeDeltaSigCtes]]: `cand` holds the (delta, store) pairs
+    * that share a band key, `near` the delta ids with a candidate that
+    * agrees on at least 4 of 8 lanes. */
+  private[graft] def storeNearCtes(cand: String, near: String): String =
+    s"""$cand AS (
+       |  SELECT DISTINCT d.id AS d_id, s.id AS s_id
+       |  FROM d_bands d JOIN s_bands s ON d.b = s.b AND d.h = s.h),
+       |$near AS (
+       |  SELECT DISTINCT c.d_id AS id
+       |  FROM $cand c JOIN d_mh dm ON dm.id = c.d_id JOIN s_mh sm ON sm.id = c.s_id
+       |  WHERE $agreeSumSql >= 4)""".stripMargin
+
+  /** `bkt` CTE body: every document with its hash bucket `bk` =
+    * hashBucket(doc_id, 10). */
+  private[graft] val docBucketsSql: String =
+    s"""SELECT doc_id, text, (${md5Bits32Sql("h")}) % 10 AS bk
+       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)""".stripMargin
+
+  /** `corpus` CTE body: the store side, buckets 0–7 of `bkt`. */
+  private[graft] val storeCorpusSql: String = "SELECT doc_id, text FROM bkt WHERE bk < 8"
+
+  /** Planted `delta` CTE body over `bkt` and `corpus`, the oracle twin
+    * of [[plantedArrivals]] with the ` zz qq` perturbation. */
+  private[graft] val plantedDeltaSql: String =
+    """  SELECT doc_id, text FROM bkt WHERE bk >= 8
+      |  UNION ALL SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id % 7 = 0
+      |  UNION ALL SELECT doc_id + 300000 AS doc_id, text || ' zz qq' AS text
+      |    FROM corpus WHERE doc_id % 11 = 0
+      |  UNION ALL SELECT doc_id + 400000 AS doc_id, text
+      |    FROM bkt WHERE bk >= 8 AND doc_id % 13 = 0""".stripMargin
+
+  /** `eb` CTE body: the embeddings with `vec_id < cap`, as `v` with
+    * their hash bucket `bk` = hashBucket(vec_id, 10). */
+  private[graft] def vecBucketsSql(cap: String): String =
+    s"""SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+       |         (${md5Bits32Sql("h")}) % 10 AS bk
+       |  FROM (SELECT vec_id, embedding,
+       |               md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings
+       |        WHERE vec_id < $cap)""".stripMargin
+
+  /** Planted `delta` rows over `eb`, the oracle twin of
+    * [[plantedArrivals]] with the ×1.01 perturbation. */
+  private[graft] val plantedVecDeltaSql: String =
+    """  SELECT vec_id AS id, v FROM eb WHERE bk >= 8
+      |  UNION ALL SELECT vec_id + 200000 AS id, v FROM eb
+      |    WHERE bk < 8 AND vec_id % 7 = 0
+      |  UNION ALL SELECT vec_id + 300000 AS id,
+      |    list_transform(v, x -> x * 1.01) AS v FROM eb
+      |    WHERE bk < 8 AND vec_id % 11 = 0
+      |  UNION ALL SELECT vec_id + 400000 AS id, v FROM eb
+      |    WHERE bk >= 8 AND vec_id % 13 = 0""".stripMargin
+
+  /** The text perturbation of a planted near copy: two tokens appended. */
+  private[graft] val zzQq: Column => Column = concat(_, lit(" zz qq"))
+
+  /** The vector perturbation of a planted near copy: ×1.01, which keeps
+    * every cosine. */
+  private[graft] val scaled101: Column => Column = transform(_, x => x * 1.01)
+
+  /** The planted arrivals of the dedup-ingest gates, drawn from `t`,
+    * which carries the id column `id`, the payload column `payload` and
+    * `b` = hashBucket(id, 10):
+    *   - fresh arrivals (`b >= 8`);
+    *   - exact copies of store rows (`b < 8`, `id % 7 = 0`, `+200000`);
+    *   - perturbed copies of store rows (`b < 8`, `id % 11 = 0`,
+    *     `+300000`, the payload through `perturb`);
+    *   - in-batch copies of fresh arrivals (`b >= 8`, `id % 13 = 0`,
+    *     `+400000`).
+    * Every copy's id is congruent mod 4 with its original's. The oracle
+    * twins are [[plantedDeltaSql]] and [[plantedVecDeltaSql]]; a gate
+    * unions its own extra lanes onto the result. */
+  private[graft] def plantedArrivals(t: DataFrame, id: String, payload: String,
+                                     perturb: Column => Column): DataFrame = {
+    val (i, b, p) = (col(id), col("b"), col(payload))
+    t.filter(b >= 8).select(i, p)
+      .unionByName(t.filter(b < 8 && i % 7 === 0).select((i + 200000L).as(id), p))
+      .unionByName(t.filter(b < 8 && i % 11 === 0)
+        .select((i + 300000L).as(id), perturb(p).as(payload)))
+      .unionByName(t.filter(b >= 8 && i % 13 === 0).select((i + 400000L).as(id), p))
+  }
 
   /** corpus = documents ∪ perturbed copy (Spark side). Shared with the
     * composed pipeline gate ([[QueriesPipeline]] plants the same
@@ -63,7 +230,12 @@ object QueriesText {
     s"""${pre}corpus AS (
        |  $corpusBody),
        |${pre}toks AS (SELECT doc_id AS id, string_split($normSql, ' ') AS w FROM ${pre}corpus),
-       |${pre}shd AS (
+       |${shinglesOfToksSql(pre)}""".stripMargin
+
+  /** The distinct 5-shingles `<pre>sh(id, s, n_shingles)` (via
+    * `<pre>shd`) of the token lists `<pre>toks(id, w)`. */
+  private def shinglesOfToksSql(pre: String): String =
+    s"""${pre}shd AS (
        |  SELECT DISTINCT id, s FROM (
        |    SELECT id, unnest(list_transform(generate_series(1, len(w)-4),
        |             i -> array_to_string(list_slice(w, i, i+4), ' '))) AS s
@@ -134,13 +306,7 @@ object QueriesText {
   val q25Sql: String =
     s"""WITH t AS (
        |  SELECT lang,
-       |    round(0.4 * least(
-       |        len(regexp_extract_all(lower(text), '\\b(the|and|of|is|to|a|in|that)\\b'))
-       |          / greatest(len(string_split($normSql, ' ')), 1.0) * 4.0, 1.0)
-       |      + 0.3 * least(len(string_split($normSql, ' ')) / 50.0, 1.0)
-       |      + 0.3 * (1.0 - least(
-       |          length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))
-       |            / greatest(length(text), 1.0) * 5.0, 1.0)), 4) AS q
+       |    $qualitySql
        |  FROM documents)
        |SELECT lang, count(*) AS n_docs, round(avg(q), 4) AS avg_quality,
        |       count(CASE WHEN q >= 0.5 THEN 1 END) AS n_good
@@ -191,11 +357,8 @@ object QueriesText {
       .orderBy($"doc_id")
   }
   val q27Sql: String = {
-    // h(t): first 32 md5 bits via digit-position arithmetic (no conv())
-    val tokenHash = (1 to 8).map { p =>
-      val mult = 1L << (4 * (8 - p))
-      s"(instr('0123456789abcdef', substr(md5(t), $p, 1)) - 1) * $mult"
-    }.mkString(" + ")
+    // h(t): first 32 md5 bits (md5Bits32Sql)
+    val tokenHash = md5Bits32Sql("md5(t)")
     s"""SELECT doc_id, md5($normSql) AS fp,
        |  list_reduce(
        |    list_prepend(0, list_transform(string_split($normSql, ' '),
@@ -278,20 +441,15 @@ object QueriesText {
   /** [[minhashCtesOver]] with every CTE name prefixed (the
     * [[shingleSqlPrefixed]] contract); `pre = ""` is byte-identical to
     * the q30/q58/q208 text. */
-  private[graft] def minhashCtesPrefixed(pre: String, corpusBody: String): String = {
-    val mins = (0 until 8).map { j =>
-      val src = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
-      s"min(substr($src, ${(j % 4) * 8 + 1}, 8)) AS h$j"
-    }.mkString(",\n    ")
-    val bandHashes = (0 until 4).map(b => s"md5(h${2 * b} || h${2 * b + 1})").mkString(", ")
+  private[graft] def minhashCtesPrefixed(pre: String, corpusBody: String): String =
     s"""${shingleSqlPrefixed(pre, corpusBody)},
        |${pre}mh AS (
-       |  SELECT id, $mins
+       |  SELECT id, $minhashMinsSql
        |  FROM ${pre}sh GROUP BY id),
        |${pre}bands AS (
        |  SELECT id, b, h FROM (
        |    SELECT id, unnest([0, 1, 2, 3]) AS b,
-       |           unnest([$bandHashes]) AS h
+       |           unnest([$bandHashesSql]) AS h
        |    FROM ${pre}mh)),
        |${pre}cand AS (
        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id
@@ -302,7 +460,6 @@ object QueriesText {
        |  FROM ${pre}cand c JOIN ${pre}sh x ON x.id = c.a_id
        |              JOIN ${pre}sh y ON y.id = c.b_id AND x.s = y.s
        |  GROUP BY 1, 2)""".stripMargin
-  }
 
   private def minhashCtes(perturb: Boolean): String =
     minhashCtesOver(corpusSql(perturb))
@@ -313,14 +470,11 @@ object QueriesText {
        |FROM inter WHERE i * 1.0 / (na + nb - i) >= 0.3
        |ORDER BY a_id, b_id""".stripMargin
 
-  /** Shared SimHash CTEs: token hash from md5 hex prefix (decoded with
-    * digit-position arithmetic — DuckDB has no conv()), 32 signed bit
+  /** Shared SimHash CTEs: token hash from md5 hex prefix (decoded by
+    * [[md5Bits32Sql]] — DuckDB has no conv()), 32 signed bit
     * votes, sign → bit. Mirrors [[TextDedup.simHash32]]. */
   private def simhashSql(corpusBody: String): String = {
-    val hexDigits = (1 to 8).map { p =>
-      val mult = 1L << (4 * (8 - p))
-      s"(instr('0123456789abcdef', substr(md5(tk), $p, 1)) - 1) * $mult"
-    }.mkString("\n        + ")
+    val hexDigits = md5Bits32Sql("md5(tk)", "\n        + ")
     val bitSums = (0 until 32).map(j =>
       s"sum(2 * ((h // ${1L << j}) % 2) - 1) AS s$j").mkString(",\n    ")
     val simBits = (0 until 32).map(j =>
@@ -395,13 +549,9 @@ object QueriesText {
         concat($"text", lit(" zz qq")).as("text")))
     Curation.funnel(triCorpus, "doc_id", "text")
   }
-  val q49Sql: String = {
-    // same md5-lane minhash + banding CTEs as q30 (k=8, 4 bands × 2)
-    val mins = (0 until 8).map { j =>
-      val src = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
-      s"min(substr($src, ${(j % 4) * 8 + 1}, 8)) AS h$j"
-    }.mkString(",\n    ")
-    val bandHashes = (0 until 4).map(b => s"md5(h${2 * b} || h${2 * b + 1})").mkString(", ")
+  val q49Sql: String =
+    // the shared md5-lane minima and band keys (minhashMinsSql,
+    // bandHashesSql: k=8, 4 bands × 2), as in q30
     s"""WITH corpus AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -411,35 +561,21 @@ object QueriesText {
        |scored AS (
        |  SELECT doc_id AS id, text,
        |    len(string_split($normSql, ' ')) AS n_ws,
-       |    round(0.4 * least(
-       |        len(regexp_extract_all(lower(text), '\\b(the|and|of|is|to|a|in|that)\\b'))
-       |          / greatest(len(string_split($normSql, ' ')), 1.0) * 4.0, 1.0)
-       |      + 0.3 * least(len(string_split($normSql, ' ')) / 50.0, 1.0)
-       |      + 0.3 * (1.0 - least(
-       |          length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))
-       |            / greatest(length(text), 1.0) * 5.0, 1.0)), 4) AS q
+       |    $qualitySql
        |  FROM corpus),
        |qual AS (SELECT * FROM scored WHERE q >= 0.5 AND n_ws >= 10),
        |ex AS (
        |  SELECT * FROM qual
        |  QUALIFY id = min(id) OVER (PARTITION BY md5($normSql))),
        |toks AS (SELECT id, string_split($normSql, ' ') AS w FROM ex),
-       |shd AS (
-       |  SELECT DISTINCT id, s FROM (
-       |    SELECT id, unnest(list_transform(generate_series(1, len(w)-4),
-       |             i -> array_to_string(list_slice(w, i, i+4), ' '))) AS s
-       |    FROM toks)),
-       |sh AS (
-       |  SELECT shd.id, shd.s, sz.n_shingles
-       |  FROM shd JOIN (SELECT id, count(*) AS n_shingles FROM shd GROUP BY id) sz
-       |    ON shd.id = sz.id),
+       |${shinglesOfToksSql("")},
        |mh AS (
-       |  SELECT id, $mins
+       |  SELECT id, $minhashMinsSql
        |  FROM sh GROUP BY id),
        |bands AS (
        |  SELECT id, b, h FROM (
        |    SELECT id, unnest([0, 1, 2, 3]) AS b,
-       |           unnest([$bandHashes]) AS h
+       |           unnest([$bandHashesSql]) AS h
        |    FROM mh)),
        |cand AS (
        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id
@@ -464,7 +600,6 @@ object QueriesText {
        |  UNION ALL
        |  SELECT 's4_neardup', count(*), CAST(coalesce(sum(n_ws), 0) AS BIGINT) FROM surv)
        |ORDER BY stage""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q56
   /** Quota data selection: the top-3 quality documents per source, via
@@ -489,13 +624,7 @@ object QueriesText {
   val q56Sql: String =
     s"""WITH t AS (
        |  SELECT source, doc_id,
-       |    round(0.4 * least(
-       |        len(regexp_extract_all(lower(text), '\\b(the|and|of|is|to|a|in|that)\\b'))
-       |          / greatest(len(string_split($normSql, ' ')), 1.0) * 4.0, 1.0)
-       |      + 0.3 * least(len(string_split($normSql, ' ')) / 50.0, 1.0)
-       |      + 0.3 * (1.0 - least(
-       |          length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))
-       |            / greatest(length(text), 1.0) * 5.0, 1.0)), 4) AS q
+       |    $qualitySql
        |  FROM documents),
        |r AS (
        |  SELECT source, doc_id, q,
@@ -525,24 +654,14 @@ object QueriesText {
       .orderBy($"doc_id")
   }
   val q57Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+    val digits = md5Bits32Sql("h")
     s"""WITH sp AS (
        |  SELECT doc_id,
        |    CASE WHEN ($digits) % 100 < 80 THEN 'train'
        |         WHEN ($digits) % 100 < 90 THEN 'val' ELSE 'test' END AS split
        |  FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
        |toks AS (SELECT doc_id AS id, string_split($normSql, ' ') AS w FROM documents),
-       |shd AS (
-       |  SELECT DISTINCT id, s FROM (
-       |    SELECT id, unnest(list_transform(generate_series(1, len(w)-4),
-       |             i -> array_to_string(list_slice(w, i, i+4), ' '))) AS s
-       |    FROM toks)),
-       |sh AS (
-       |  SELECT shd.id, shd.s, sz.n_shingles
-       |  FROM shd JOIN (SELECT id, count(*) AS n_shingles FROM shd GROUP BY id) sz
-       |    ON shd.id = sz.id),
+       |${shinglesOfToksSql("")},
        |train_sh AS (
        |  SELECT DISTINCT s FROM sh JOIN sp ON sh.id = sp.doc_id
        |  WHERE sp.split = 'train'),
@@ -568,7 +687,14 @@ object QueriesText {
     * computes the same closure by a completely different route — a
     * recursive CTE — so the gate proves the distributed fixpoint equals
     * true transitive reachability. */
-  val q58DedupClusters: Q = (s, dir) => {
+  val q58DedupClusters: Q = (s, dir) =>
+    dedupClusters(s, dir)(graft.operators.Components.connectedComponents(_, _, _))
+
+  /** q58/q96's cluster assignment: every corpus doc mapped to the
+    * minimum id of its near-dup component, as `components(edges, src,
+    * dst)` computes it over the q30 pair graph. */
+  private def dedupClusters(s: SparkSession, dir: String)(
+      components: (DataFrame, String, String) => DataFrame): DataFrame = {
     import s.implicits._
     val sh = TextDedup.shingleTable(corpus(s, dir, perturb = true), "doc_id", "text", 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -578,9 +704,7 @@ object QueriesText {
     val pairs = TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2, threshold = 0.3,
         maxBandDf = Some(1024))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val comps = graft.operators.Components
-      .connectedComponents(pairs, "a_id", "b_id")
-      .withColumnRenamed("id", "doc_id")
+    val comps = components(pairs, "a_id", "b_id").withColumnRenamed("id", "doc_id")
     corpus(s, dir, perturb = true).select($"doc_id")
       .join(comps, Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
@@ -607,10 +731,7 @@ object QueriesText {
     * scheme as the minhash lanes — 32 signed bit votes per lane,
     * packed into two 32-bit halves (portable: no sign-bit hazard). */
   private def simhash64Sql(corpusBody: String): String = {
-    def hexDigits(lane: String) = (1 to 8).map { p =>
-      val mult = 1L << (4 * (8 - p))
-      s"(instr('0123456789abcdef', substr(md5($lane), $p, 1)) - 1) * $mult"
-    }.mkString("\n        + ")
+    def hexDigits(lane: String) = md5Bits32Sql(s"md5($lane)", "\n        + ")
     def bitSums(h: String, pfx: String) = (0 until 32).map(j =>
       s"sum(2 * (($h // ${1L << j}) % 2) - 1) AS $pfx$j").mkString(",\n    ")
     def pack(pfx: String) = (0 until 32).map(j =>
@@ -662,22 +783,9 @@ object QueriesText {
     * oracle — the gate proves both distributed fixpoints equal true
     * transitive reachability, so a user can switch algorithms on graph
     * shape without a semantic change. */
-  val q96DedupClustersContraction: Q = (s, dir) => {
-    import s.implicits._
-    val sh = TextDedup.shingleTable(corpus(s, dir, perturb = true), "doc_id", "text", 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same canonical pair-table plan as q30/q58 → cache hit in-session
-    val pairs = TextDedup.minHashLshPairs(sh, k = 8, rowsPerBand = 2, threshold = 0.3,
-        maxBandDf = Some(1024))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val comps = graft.operators.Components
-      .connectedComponentsContraction(pairs, "a_id", "b_id")
-      .withColumnRenamed("id", "doc_id")
-    corpus(s, dir, perturb = true).select($"doc_id")
-      .join(comps, Seq("doc_id"), "left")
-      .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
-      .orderBy($"doc_id")
-  }
+  val q96DedupClustersContraction: Q = (s, dir) =>
+    dedupClusters(s, dir)(
+      graft.operators.Components.connectedComponentsContraction(_, _, _))
 
   // ---------------------------------------------------------------- q104
   /** Passage-level cross-document duplicate detection
@@ -723,7 +831,8 @@ object QueriesText {
     * its persisted dedup store — distinct fingerprints + MinHash
     * signatures ([[TextDedup.buildDedupStore]]) — and a new delta shard
     * is classified against it without ever re-reading corpus text. The
-    * delta is built to exercise every verdict lane deterministically:
+    * delta ([[plantedArrivals]], replayed by [[plantedDeltaSql]]) is
+    * built to exercise every verdict lane deterministically:
     * buckets 8–9 as the novel docs, exact copies of corpus docs
     * (doc_id ≡ 0 mod 7, shifted +200000) for `dup_exact`, perturbed
     * copies (≡ 0 mod 11, +300000, ' zz qq' suffix) for `dup_near`
@@ -742,68 +851,21 @@ object QueriesText {
     val base = Tables.documents(s, dir).select($"doc_id", $"text")
     val bkt = base.withColumn("b", graft.operators.Sampling.hashBucket($"doc_id", 10))
     val corpusDocs = bkt.filter($"b" < 8).select($"doc_id", $"text")
-    val delta = bkt.filter($"b" >= 8).select($"doc_id", $"text")
-      .unionByName(corpusDocs.filter($"doc_id" % 7 === 0)
-        .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-      .unionByName(corpusDocs.filter($"doc_id" % 11 === 0)
-        .select(($"doc_id" + 300000L).as("doc_id"),
-          concat($"text", lit(" zz qq")).as("text")))
-      .unionByName(bkt.filter($"b" >= 8 && $"doc_id" % 13 === 0)
-        .select(($"doc_id" + 400000L).as("doc_id"), $"text"))
+    val delta = plantedArrivals(bkt, "doc_id", "text", zzQq)
     val (storeFp, storeSig) =
       TextDedup.buildDedupStore(corpusDocs, "doc_id", "text", shingleN = 5, k = 8)
     TextDedup.dedupAgainstStore(delta, "doc_id", "text", storeFp, storeSig,
         shingleN = 5, k = 8, rowsPerBand = 2, minAgree = 4, maxBandDf = Some(1024))
       .orderBy($"id")
   }
-  val q107Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
-    // shingles → 8 md5-lane minima → 4 band keys, for one source CTE
-    def sigCtes(pre: String, src: String): String = {
-      val mins = (0 until 8).map { j =>
-        val m = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
-        s"min(substr($m, ${(j % 4) * 8 + 1}, 8)) AS h$j"
-      }.mkString(",\n    ")
-      val bandHashes = (0 until 4).map(b => s"md5(h${2 * b} || h${2 * b + 1})").mkString(", ")
-      s"""${pre}shd AS (
-         |  SELECT DISTINCT id, s FROM (
-         |    SELECT doc_id AS id, unnest(list_transform(
-         |      generate_series(1, len(string_split($normSql, ' '))-4),
-         |      i -> array_to_string(list_slice(string_split($normSql, ' '), i, i+4), ' '))) AS s
-         |    FROM $src)),
-         |${pre}mh AS (
-         |  SELECT id, $mins
-         |  FROM ${pre}shd GROUP BY id),
-         |${pre}bands AS (
-         |  SELECT id, b, h FROM (
-         |    SELECT id, unnest([0, 1, 2, 3]) AS b, unnest([$bandHashes]) AS h
-         |    FROM ${pre}mh))""".stripMargin
-    }
-    val agreeSum = (0 until 8)
-      .map(j => s"(CASE WHEN dm.h$j = sm.h$j THEN 1 ELSE 0 END)").mkString("\n    + ")
+  val q107Sql: String =
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, ($digits) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
-       |corpus AS (SELECT doc_id, text FROM bkt WHERE bk < 8),
+       |  $docBucketsSql),
+       |corpus AS ($storeCorpusSql),
        |delta AS (
-       |  SELECT doc_id, text FROM bkt WHERE bk >= 8
-       |  UNION ALL SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id % 7 = 0
-       |  UNION ALL SELECT doc_id + 300000 AS doc_id, text || ' zz qq' AS text
-       |    FROM corpus WHERE doc_id % 11 = 0
-       |  UNION ALL SELECT doc_id + 400000 AS doc_id, text
-       |    FROM bkt WHERE bk >= 8 AND doc_id % 13 = 0),
-       |sfp AS (SELECT DISTINCT md5($normSql) AS fp FROM corpus),
-       |${sigCtes("s_", "corpus")},
-       |${sigCtes("d_", "delta")},
-       |cand AS (
-       |  SELECT DISTINCT d.id AS d_id, s.id AS s_id
-       |  FROM d_bands d JOIN s_bands s ON d.b = s.b AND d.h = s.h),
-       |near AS (
-       |  SELECT DISTINCT c.d_id AS id
-       |  FROM cand c JOIN d_mh dm ON dm.id = c.d_id JOIN s_mh sm ON sm.id = c.s_id
-       |  WHERE $agreeSum >= 4),
+       |$plantedDeltaSql),
+       |${storeDeltaSigCtes("corpus")},
+       |${storeNearCtes("cand", "near")},
        |dfp AS (SELECT doc_id AS id, md5($normSql) AS fp FROM delta),
        |keepid AS (SELECT fp, min(id) AS keep_id FROM dfp GROUP BY fp)
        |SELECT f.id,
@@ -816,7 +878,6 @@ object QueriesText {
        |LEFT JOIN sfp sf ON f.fp = sf.fp
        |LEFT JOIN near nr ON f.id = nr.id
        |ORDER BY f.id""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q113
   /** Benchmark decontamination ([[TextDedup.decontaminate]]): train =
@@ -843,15 +904,11 @@ object QueriesText {
       .orderBy($"id")
   }
   val q113Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
     val shingles =
       s"""list_transform(generate_series(1, len(string_split($normSql, ' '))-4),
          |      i -> array_to_string(list_slice(string_split($normSql, ' '), i, i+4), ' '))""".stripMargin
     s"""WITH bkt AS (
-       |  SELECT doc_id, text, ($digits) % 10 AS bk
-       |  FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)),
+       |  $docBucketsSql),
        |ev AS (SELECT doc_id, text FROM bkt WHERE bk = 9),
        |train AS (
        |  SELECT doc_id, text FROM bkt WHERE bk < 9
@@ -1387,9 +1444,7 @@ object QueriesText {
   }
 
   val q126Sql: String = {
-    val digits = (1 to 8).map { p =>
-      s"(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
-    }.mkString(" + ")
+    val digits = md5Bits32Sql("md5(CAST(doc_id AS VARCHAR))")
     val applyRounds = (1 to 6).map { e =>
       s"""e$e AS MATERIALIZED (
          |  SELECT doc_id, list_transform(wss, s ->

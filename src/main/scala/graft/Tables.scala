@@ -14,9 +14,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Dimension tables small enough to broadcast at any realistic scale. */
-  val broadcastable: Set[String] = Set("region", "nation", "supplier")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

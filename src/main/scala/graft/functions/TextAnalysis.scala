@@ -170,21 +170,18 @@ object TextAnalysis {
     * to persist for corpora where Unicode spelling varies by source. */
   def fingerprintUnicode(c: Column): Column = md5(normalizeTextUnicode(c))
 
-  /** Polynomial rolling-hash fingerprint (Rabin–Karp shape) over the
-    * token stream: `fp = fold(tokens, 0, (acc, t) → (acc·31 + h(t)) mod
+  /** Polynomial rolling-hash fingerprint (Rabin–Karp shape) over a
+    * token array: `fp = fold(tokens, 0, (acc, t) → (acc·31 + h(t)) mod
     * (2³¹−1))` with `h(t)` the first 32 md5 bits. Order-sensitive —
     * unlike the content md5, two documents with the same words in a
     * different order fingerprint differently — and incremental, the
     * property a streaming ingest uses to fingerprint chunk-by-chunk.
     * The modulus keeps every intermediate below 2³⁶ so the same
-    * arithmetic is exact in any engine's 64-bit integers. */
-  def rollingFingerprint(c: Column): Column =
-    rollingFingerprintFromTokens(wsTokens(c))
-
-  /** [[rollingFingerprint]] over an already-materialized token array —
-    * use this form when the tokens column is staged in a prior
-    * projection, so the regex split runs once per row however many
-    * consumers it has (Catalyst does not CSE non-cheap expressions). */
+    * arithmetic is exact in any engine's 64-bit integers. Takes an
+    * already-materialized token array: stage the tokens column in a
+    * prior projection, so the regex split runs once per row however
+    * many consumers it has (Catalyst does not CSE non-cheap
+    * expressions). */
   def rollingFingerprintFromTokens(toks: Column): Column =
     aggregate(
       transform(toks, t =>

@@ -59,32 +59,11 @@ object SemStreamScale {
                            avgRecall: Double, secs: Double,
                            refits: Int = 0)
 
-  /** q211's planted-duplicate-face construction over `t`
-    * `(vec_id, v, b)` (b = hashBucket 10): organic fresh arrivals
-    * (`b >= 8`) plus exact (+200000) and cosine-scaled (+300000,
-    * ×1.01) copies of BASE members, and cross-batch exact (+2000002)
-    * and scaled (+3000002) copies of batch-0 fresh arrivals landing
-    * in batch 2 — dead only if batch 0's survivors joined the index.
-    * Offsets stay below the 10⁹ ScaleUp replica stride and above any
-    * per-replica organic id, so planted ⟺ `vec_id % 10⁹ ≥ 200000` at
-    * every probe scale. */
-  def arrivals(t: DataFrame): DataFrame = {
-    val scaled = transform(col("v"), x => x * 1.01)
-    t.filter(col("b") >= 8).select(col("vec_id"), col("v"))
-      .unionByName(t.filter(col("b") < 8 && col("vec_id") % 7 === 0)
-        .select((col("vec_id") + 200000L).as("vec_id"), col("v")))
-      .unionByName(t.filter(col("b") < 8 && col("vec_id") % 11 === 0)
-        .select((col("vec_id") + 300000L).as("vec_id"), scaled.as("v")))
-      .unionByName(t.filter(col("b") >= 8 && col("vec_id") % 4 === 0)
-        .select((col("vec_id") + 2000002L).as("vec_id"), col("v")))
-      .unionByName(t.filter(col("b") >= 8 && col("vec_id") % 4 === 0 &&
-          col("vec_id") % 3 === 0)
-        .select((col("vec_id") + 3000002L).as("vec_id"), scaled.as("v")))
-  }
-
-  /** Build the base store (`b < 8`, `buildK` coarse cells), stream the
-    * [[arrivals]] in 4 keyed micro-batches (`vec_id % 4` — the q207
-    * deterministic transport), per batch: intra-batch exact dedup →
+  /** Build the base store (`b < 8`, `buildK` coarse cells), stream
+    * q211's planted arrivals
+    * ([[graft.QueriesPipeline.semanticArrivals]], planted ⟺
+    * `vec_id % 10⁹ ≥ 200000`) in 4 keyed micro-batches (`vec_id % 4`
+    * — the q207 deterministic transport), per batch: intra-batch exact dedup →
     * screen vs the GROWING index (k=1, dup iff cos ≥ 0.8) → append
     * survivors → and, when `maxCellSize > 0`, drive every cell back
     * under the bound before the next batch. `maxCellSize = 0` runs
@@ -191,7 +170,7 @@ object SemStreamScale {
     if (maintained) tuneOverCurrentGrid()
     val staging = s"$scratch/staging"
     val stream = graft.QueriesStreaming.keyedMultiBatchStream(
-      spark, file, staging, d => arrivals(withB(d)), col("vec_id") % 4)
+      spark, file, staging, graft.QueriesPipeline.semanticArrivals, col("vec_id") % 4)
     val query = stream.writeStream
       .option("checkpointLocation", s"$staging/ckpt")
       .foreachBatch {
@@ -223,7 +202,7 @@ object SemStreamScale {
     val idx = idxF.localCheckpoint()
     val sizes = idx.groupBy(col("cluster")).count()
       .agg(count(lit(1)).as("cells"), max(col("count")).as("maxc")).head()
-    val plantedArrived = arrivals(withB(spark.read.parquet(file)))
+    val plantedArrived = graft.QueriesPipeline.semanticArrivals(spark.read.parquet(file))
       .filter(col("vec_id") % 1000000000L >= 200000L).count()
     val plantedIndexed = idx
       .filter(col("id") % 1000000000L >= 200000L).count()
@@ -301,7 +280,7 @@ object SemStreamScale {
     maintain() // the base build itself must respect the bound
     val staging = s"$scratch/staging"
     val stream = graft.QueriesStreaming.keyedMultiBatchStream(
-      spark, file, staging, d => arrivals(withB(d)), col("vec_id") % 4)
+      spark, file, staging, graft.QueriesPipeline.semanticArrivals, col("vec_id") % 4)
     val query = stream.writeStream
       .option("checkpointLocation", s"$staging/ckpt")
       .foreachBatch {
@@ -356,7 +335,7 @@ object SemStreamScale {
     val (gF, enF) = graft.operators.NswIndex.loadNsw(spark, nsw)
     val sizes = idx.groupBy(col("cluster")).count()
       .agg(count(lit(1)).as("cells"), max(col("count")).as("maxc")).head()
-    val plantedArrived = arrivals(withB(spark.read.parquet(file)))
+    val plantedArrived = graft.QueriesPipeline.semanticArrivals(spark.read.parquet(file))
       .filter(col("vec_id") % 1000000000L >= 200000L).count()
     val plantedIndexed = idx
       .filter(col("id") % 1000000000L >= 200000L).count()

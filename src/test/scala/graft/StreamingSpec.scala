@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
@@ -412,6 +413,54 @@ class StreamingSpec extends SparkSpec {
           (0L to 3L).map(marker).toSet
         // a replay of every batch id (a fresh checkpoint) runs no body
         run(s"$dir/staging2") shouldBe empty
+      }
+    }
+  }
+
+  describe("QueriesText.plantedArrivals") {
+    it("plants each lane's ids and payloads, the same for a batch frame and a stream") {
+      Scratch.withTempDir("planted_arrivals") { dir =>
+        // ids 0–31 are store rows (b < 8), 32–39 fresh arrivals (b 8, 9)
+        val base = (0L until 40L)
+          .map(i => (i, (i / 4).toInt, s"doc $i", Seq(i.toDouble, 1.0)))
+          .toDF("id", "b", "text", "v")
+        val fresh = 32L until 40L
+        val store = 0L until 32L
+        def expected[P](payload: Long => P, perturbed: Long => P): Seq[(Long, P)] =
+          (fresh.map(i => (i, payload(i))) ++
+            store.filter(_ % 7 == 0).map(i => (i + 200000L, payload(i))) ++
+            store.filter(_ % 11 == 0).map(i => (i + 300000L, perturbed(i))) ++
+            fresh.filter(_ % 13 == 0).map(i => (i + 400000L, payload(i))))
+            .sortBy(_._1)
+        val text = expected(i => s"doc $i", i => s"doc $i zz qq")
+        val vec = expected(i => Seq(i.toDouble, 1.0), i => Seq(i * 1.01, 1.01))
+        text.map(_._1) shouldBe (32L to 39L) ++
+          Seq(200000L, 200007L, 200014L, 200021L, 200028L) ++
+          Seq(300000L, 300011L, 300022L) ++ Seq(400039L)
+
+        def plantText(t: DataFrame) =
+          QueriesText.plantedArrivals(t, "id", "text", QueriesText.zzQq)
+        def plantVec(t: DataFrame) =
+          QueriesText.plantedArrivals(t, "id", "v", QueriesText.scaled101)
+        def texts(df: DataFrame) =
+          df.as[(Long, String)].collect().toSeq.sortBy(_._1)
+        def vecs(df: DataFrame) =
+          df.as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+        texts(plantText(base)) shouldBe text
+        vecs(plantVec(base)) shouldBe vec
+
+        // the same rows arriving as a two-file stream, one file a batch
+        base.filter($"id" < 20).coalesce(1).write.parquet(s"$dir/watch")
+        base.filter($"id" >= 20).coalesce(1).write.mode("append").parquet(s"$dir/watch")
+        def streamed(plant: DataFrame => DataFrame, name: String) = {
+          val arriving = spark.readStream.schema(base.schema)
+            .option("maxFilesPerTrigger", 1).parquet(s"$dir/watch")
+          EventStreams.runMicroBatches(spark)(plant(arriving).writeStream
+            .format("memory").queryName(name).start())
+          spark.table(name)
+        }
+        texts(streamed(plantText, "planted_text")) shouldBe text
+        vecs(streamed(plantVec, "planted_vec")) shouldBe vec
       }
     }
   }

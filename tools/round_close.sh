@@ -91,6 +91,29 @@ if [ -n "$CORPUS_LEAKS" ]; then
   echo "$CORPUS_LEAKS"
   exit 1
 fi
+# the dedup-ingest gates' md5 bucket decode, md5-lane minhash, text
+# normaliser and planted near copies live in QueriesText's shared
+# text-dedup gate parts (md5Bits32Sql, minhashMinsSql, normSql,
+# plantedArrivals) alone: a copy anywhere else in src/main fails the gate
+DEDUP_HELPER_LINES=$(cat <<'LINES'
+src/main/scala/graft/QueriesText.scala:      s"(instr('0123456789abcdef', substr($hexExpr, $p, 1)) - 1) * ${1L << (4 * (8 - p))}"
+src/main/scala/graft/QueriesText.scala:    val src = if (j / 4 == 0) "md5(s)" else "md5('1:' || s)"
+src/main/scala/graft/QueriesText.scala:  private[graft] final val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+src/main/scala/graft/QueriesText.scala:        .select((i + 300000L).as(id), perturb(p).as(payload)))
+LINES
+)
+DEDUP_LEAKS=$(grep -rnF --include='*.scala' -e "instr('0123456789abcdef'" \
+  -e "md5('1:' || s)" -e 'val normSql = """' -e '+ 300000L' src/main |
+  DEDUP_OK="$DEDUP_HELPER_LINES" awk '
+    BEGIN { n = split(ENVIRON["DEDUP_OK"], a, "\n"); for (i = 1; i <= n; i++) ok[a[i]] = 1 }
+    { f = $0; sub(/:.*/, "", f); l = $0; sub(/^[^:]*:[0-9]+:/, "", l)
+      if (!((f ":" l) in ok)) print }' || true)
+if [ -n "$DEDUP_LEAKS" ]; then
+  echo "FATAL: an md5 bucket decode, md5-lane minhash, normSql or planted +300000 copy" \
+    "outside QueriesText's shared text-dedup gate parts:"
+  echo "$DEDUP_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
@@ -105,8 +128,9 @@ grep '"metric"' target/bench_close.log > "bench_r${ROUND}_session.json"
 grep BENCH_SUMMARY target/bench_close.log
 # aim 2's size yardstick, read the same way every round
 echo "MAIN_SCALA_LINES $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
-# public src/main members no other file references (ROADMAP H)
-python3 tools/unreferenced_defs.py | head -1
+# public src/main members no other file references, and those nothing
+# references at all (ROADMAP H)
+python3 tools/unreferenced_defs.py | grep -E '^(UNREFERENCED|DEAD)_DEFS '
 PREV=$(ls bench_r*_session.json 2>/dev/null | sort -V | tail -2 | head -1)
 if [ -n "$PREV" ] && [ "$PREV" != "bench_r${ROUND}_session.json" ]; then
   echo "-- bench diff vs $PREV (host noise moves totals; read per-query pairs) --"
