@@ -131,10 +131,15 @@ object QueriesStreaming {
         round($"value_sum", 2).as("value_sum"))
       .orderBy($"user_id", $"start_ms")
   }
-  val q46Sql: String =
-    """WITH ev AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
+  val q46Sql: String = islandSessionSql(">")
+
+  /** The relational sessionize oracle of q46 and q80 (lag → break flag
+    * → running sum → group): a gap `breakOp` 12 h after its
+    * predecessor starts a new session. */
+  private def islandSessionSql(breakOp: String): String =
+    s"""WITH ev AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
       |g AS (SELECT user_id, ms, value,
-      |        CASE WHEN ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) > 43200000
+      |        CASE WHEN ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) $breakOp 43200000
       |             THEN 1 ELSE 0 END AS brk
       |      FROM ev),
       |sess AS (SELECT user_id, ms, value,
@@ -226,23 +231,11 @@ object QueriesStreaming {
         round($"value_sum", 2).as("value_sum"))
       .orderBy($"user_id", $"start_ms")
   }
-  /** Same island shape as q46's oracle but with a `>=` break: Spark's
-    * session windows are half-open `[ts, ts+gap)`, so an event EXACTLY
-    * gap after its predecessor starts a new session (the custom q46
-    * operator keeps it — the two agree except on exact-boundary data). */
-  val q80Sql: String =
-    """WITH ev AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
-      |g AS (SELECT user_id, ms, value,
-      |        CASE WHEN ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) >= 43200000
-      |             THEN 1 ELSE 0 END AS brk
-      |      FROM ev),
-      |sess AS (SELECT user_id, ms, value,
-      |           sum(brk) OVER (PARTITION BY user_id ORDER BY ms
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      |         FROM g)
-      |SELECT user_id, min(ms) AS start_ms, max(ms) AS end_ms,
-      |       count(*) AS n_events, round(sum(value), 2) AS value_sum
-      |FROM sess GROUP BY user_id, sid ORDER BY user_id, start_ms""".stripMargin
+  /** q46's island oracle with a `>=` break: Spark's session windows
+    * are half-open `[ts, ts+gap)`, so an event EXACTLY gap after its
+    * predecessor starts a new session (the custom q46 operator keeps
+    * it — the two agree except on exact-boundary data). */
+  val q80Sql: String = islandSessionSql(">=")
 
   // ---------------------------------------------------------------- q68
   /** Streaming exact dedup: the events FILE STREAM deduplicated on
@@ -880,24 +873,29 @@ object QueriesStreaming {
     Scratch.withTempDir("graft_q166") { base =>
       val stream = stagedMultiBatchStream(s, file, base,
         _.select($"source", $"n_chars".cast("double").as("x")))
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (batch: Dataset[Row], batchId: Long) =>
-            EventStreams.writeBatchIdempotent(
-              batch.toDF().groupBy(col("source"))
-                .agg(TDigest.digestAgg(col("x")).as("digest")),
-              batchId, store)
-        }
-        .start()
-      )
+      val store = sinkBatchesIdempotent(s, stream, base)(
+        _.groupBy(col("source")).agg(TDigest.digestAgg(col("x")).as("digest")))
       val docs = s.read.parquet(file)
         .select($"source", $"n_chars".cast("double").as("x"))
       QueriesScale.digestFlagReport(s,
         docs, s.read.parquet(store).select($"source", $"digest"))
     }
+  }
+
+  /** Runs `stream` to completion (checkpoint `base/ckpt`), appending
+    * each batch's `perBatch` aggregate to `base/store` through the
+    * idempotent batch sink ([[EventStreams.writeBatchIdempotent]]) —
+    * the sketch-store gates q166 and q172. Returns the store path. */
+  private def sinkBatchesIdempotent(s: SparkSession, stream: DataFrame, base: String)(
+      perBatch: DataFrame => DataFrame): String = {
+    val store = base + "/store"
+    EventStreams.runMicroBatches(s)(stream.writeStream
+      .option("checkpointLocation", base + "/ckpt")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        EventStreams.writeBatchIdempotent(perBatch(batch.toDF()), batchId, store)
+      }
+      .start())
+    store
   }
 
   // ---------------------------------------------------------------- q172
@@ -916,23 +914,12 @@ object QueriesStreaming {
     Scratch.withTempDir("graft_q172") { base =>
       val stream = stagedMultiBatchStream(s, file, base,
         _.select($"event_type", $"user_id"))
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (batch: Dataset[Row], batchId: Long) =>
-            EventStreams.writeBatchIdempotent(
-              batch.toDF()
-                .select(col("event_type"),
-                  expr("bitmap_bucket_number(user_id)").as("bkt"),
-                  expr("bitmap_bit_position(user_id)").as("pos"))
-                .groupBy(col("event_type"), col("bkt"))
-                .agg(expr("bitmap_construct_agg(pos)").as("bm")),
-              batchId, store)
-        }
-        .start()
-      )
+      val store = sinkBatchesIdempotent(s, stream, base)(
+        _.select(col("event_type"),
+            expr("bitmap_bucket_number(user_id)").as("bkt"),
+            expr("bitmap_bit_position(user_id)").as("pos"))
+          .groupBy(col("event_type"), col("bkt"))
+          .agg(expr("bitmap_construct_agg(pos)").as("bm")))
       QueriesScale.bitmapDistinctReport(s,
         s.read.parquet(store).select($"event_type", $"bkt", $"bm"))
     }
@@ -953,16 +940,11 @@ object QueriesStreaming {
     import s.implicits._
     val file = s"$dir/events.parquet"
     Scratch.withTempDir("graft_q173") { base =>
-      val stream = stagedMultiBatchStream(s, file, base,
-        _.select($"user_id", $"value"))
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
-        keyCols = Seq("user_id"),
+      val store = foldToAggStore(s,
+        stagedMultiBatchStream(s, file, base, _.select($"user_id", $"value")),
+        base, keyCols = Seq("user_id"),
         batchAggs = Seq(count(lit(1)).as("n"), sum($"value").as("v")),
-        mergeAggs = Seq(sum($"n").as("n"), sum($"v").as("v")),
-        store = store, checkpoint = ckpt)
-      )
+        mergeAggs = Seq(sum($"n").as("n"), sum($"v").as("v")))
       // the gate run itself must end with a clean store, not just the
       // specs' engineered states: StoreDoctor's aggstore audit (pure
       // layout inspection — marker/data-dir names) runs on every pass
@@ -983,6 +965,21 @@ object QueriesStreaming {
   val q173Sql: String =
     """SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS value_sum
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** Folds `stream` to completion into a
+    * [[EventStreams.materializedAggStore]] at `base/store` (checkpoint
+    * `base/ckpt`) — the stream → store → micro-batch run of the
+    * aggregate-store gates q173, q177, q215 and q217. Returns the
+    * store path. */
+  private def foldToAggStore(s: SparkSession, stream: DataFrame, base: String,
+                             keyCols: Seq[String],
+                             batchAggs: Seq[org.apache.spark.sql.Column],
+                             mergeAggs: Seq[org.apache.spark.sql.Column]): String = {
+    val store = base + "/store"
+    EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
+      keyCols, batchAggs, mergeAggs, store = store, checkpoint = base + "/ckpt"))
+    store
+  }
 
   // ---------------------------------------------------------------- q215
   /** TIME-TRAVEL reads of the materialized-view store
@@ -1014,35 +1011,48 @@ object QueriesStreaming {
     * nothing extra is written to keep it readable. */
   val q215AggTimeTravel: Q = (s, dir) => {
     import s.implicits._
-    val file = s"$dir/events.parquet"
     Scratch.withTempDir("graft_q215") { base =>
-      val stream = keyedMultiBatchStream(s, file, base,
-        _.select($"event_id", $"user_id",
-          round($"value" * 100).cast("long").as("cents")),
-        col("event_id") % 4)
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
-        keyCols = Seq("user_id"),
-        batchAggs = Seq(count(lit(1)).as("n"), sum($"cents").as("c")),
-        mergeAggs = Seq(sum($"n").as("n"), sum($"c").as("c")),
-        store = store, checkpoint = ckpt)
-      )
-      val gens = EventStreams.committedAggGenerations(store)
-      require(gens == Seq(0L, 1L, 2L, 3L),
-        s"q215: expected 4 committed generations, got $gens")
-      val perGen = gens.map { g =>
-        EventStreams.loadAggStoreAt(s, store, Some(g))
-          .agg(count(lit(1)).cast("long").as("n_users"),
-            sum($"n").cast("long").as("n_events"),
-            sum($"c").cast("long").as("cents"))
-          .select(lit(g).as("gen"), $"n_users", $"n_events", $"cents")
-      }.reduce(_ unionByName _)
+      val (store, gens) = keyedCentsAggStore(s, dir, base, "q215")
       val gensRow = Seq((-1L, gens.size.toLong, gens.sum, 0L))
         .toDF("gen", "n_users", "n_events", "cents")
-      perGen.unionByName(gensRow).orderBy($"gen")
+      generationTotals(s, store, gens).unionByName(gensRow).orderBy($"gen")
         .localCheckpoint() // 5 rows; pre-cleanup (store lives under base)
     }
+  }
+
+  /** The q215/q217 store: events staged one file per `event_id % 4`
+    * slice ([[keyedMultiBatchStream]]: batch k ≡ the key-k slice) and
+    * folded per user into `n` events and `c` integer cents (the q177
+    * precedent: exact across engines). Returns the store and its 4
+    * committed generations. */
+  private def keyedCentsAggStore(s: SparkSession, dir: String, base: String,
+                                 gate: String): (String, Seq[Long]) = {
+    import s.implicits._
+    val stream = keyedMultiBatchStream(s, s"$dir/events.parquet", base,
+      _.select($"event_id", $"user_id",
+        round($"value" * 100).cast("long").as("cents")),
+      col("event_id") % 4)
+    val store = foldToAggStore(s, stream, base, keyCols = Seq("user_id"),
+      batchAggs = Seq(count(lit(1)).as("n"), sum($"cents").as("c")),
+      mergeAggs = Seq(sum($"n").as("n"), sum($"c").as("c")))
+    val gens = EventStreams.committedAggGenerations(store)
+    require(gens == Seq(0L, 1L, 2L, 3L),
+      s"$gate: expected 4 committed generations, got $gens")
+    (store, gens)
+  }
+
+  /** One `(gen, n_users, n_events, cents)` row per generation of a
+    * [[keyedCentsAggStore]], each read AS OF its generation. */
+  private def generationTotals(s: SparkSession, store: String,
+                               gens: Seq[Long]): DataFrame = {
+    import s.implicits._
+    gens.map { g =>
+      EventStreams.loadAggStoreAt(s, store, Some(g))
+        .agg(count(lit(1)).cast("long").as("n_users"),
+          sum($"n").cast("long").as("n_events"),
+          sum($"c").cast("long").as("cents"))
+        .select(lit(g).as("gen"), $"n_users", $"n_events", $"cents")
+    }.reduce(_ unionByName _)
   }
   val q215Sql: String = {
     val perGen = (0 to 3).map { g =>
@@ -1095,35 +1105,14 @@ object QueriesStreaming {
     * until vacuum retires the history that needed it. */
   val q217AggRetraction: Q = (s, dir) => {
     import s.implicits._
-    val file = s"$dir/events.parquet"
     Scratch.withTempDir("graft_q217") { base =>
-      val stream = keyedMultiBatchStream(s, file, base,
-        _.select($"event_id", $"user_id",
-          round($"value" * 100).cast("long").as("cents")),
-        col("event_id") % 4)
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
-        keyCols = Seq("user_id"),
-        batchAggs = Seq(count(lit(1)).as("n"), sum($"cents").as("c")),
-        mergeAggs = Seq(sum($"n").as("n"), sum($"c").as("c")),
-        store = store, checkpoint = ckpt)
-      )
-      val gens = EventStreams.committedAggGenerations(store)
-      require(gens == Seq(0L, 1L, 2L, 3L),
-        s"q217: expected 4 committed generations, got $gens")
+      val (store, gens) = keyedCentsAggStore(s, dir, base, "q217")
       val nRetracted = EventStreams.retractFromAggStore(s, store,
-        s.read.parquet(file).filter($"user_id" % 7 === 3).select($"user_id"))
-      val perGen = gens.map { g =>
-        EventStreams.loadAggStoreAt(s, store, Some(g))
-          .agg(count(lit(1)).cast("long").as("n_users"),
-            sum($"n").cast("long").as("n_events"),
-            sum($"c").cast("long").as("cents"))
-          .select(lit(g).as("gen"), $"n_users", $"n_events", $"cents")
-      }.reduce(_ unionByName _)
+        s.read.parquet(s"$dir/events.parquet").filter($"user_id" % 7 === 3)
+          .select($"user_id"))
       val metaRow = Seq((-1L, nRetracted, gens.size.toLong, gens.sum))
         .toDF("gen", "n_users", "n_events", "cents")
-      perGen.unionByName(metaRow).orderBy($"gen")
+      generationTotals(s, store, gens).unionByName(metaRow).orderBy($"gen")
         .localCheckpoint() // 5 rows; pre-cleanup (store lives under base)
     }
   }
@@ -1168,14 +1157,10 @@ object QueriesStreaming {
       val stream = stagedMultiBatchStream(s, file, base,
         _.select($"event_type",
           round($"value" * 100).cast("long").as("cents")))
-      val store = base + "/store"
-      val ckpt = base + "/ckpt"
-      EventStreams.runMicroBatches(s)(EventStreams.materializedAggStore(stream,
+      val store = foldToAggStore(s, stream, base,
         keyCols = Seq("event_type", "cents"),
         batchAggs = Seq(count(lit(1)).as("cnt")),
-        mergeAggs = Seq(sum($"cnt").as("cnt")),
-        store = store, checkpoint = ckpt)
-      )
+        mergeAggs = Seq(sum($"cnt").as("cnt")))
       val freq = EventStreams.latestGeneration(s, store)
         .getOrElse(sys.error("q177: empty store"))
       val w = org.apache.spark.sql.expressions.Window

@@ -216,6 +216,11 @@ object IvfIndex {
       spark.read.parquet(s"$dir/index"))
   }
 
+  /** The centroid swap's scratch names ([[recoverCentroidSwap]]);
+    * either one left in the store dir is an interrupted swap. */
+  private[graft] val (centroidsTmp, centroidsOld) =
+    graft.sources.StoreFs.swapSiblings("centroids")
+
   /** Crash recovery for the [[splitOversizedCells]] centroid swap. The
     * swap sequence is: write `centroids__tmp` (complete) → rename live
     * → `__old` → rename `__tmp` → live → delete `__old`. The only state
@@ -230,8 +235,8 @@ object IvfIndex {
     val live = new org.apache.hadoop.fs.Path(s"$dir/centroids")
     val fs = live.getFileSystem(conf)
     if (!fs.exists(live)) {
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/centroids__tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/centroids__old")
+      val tmp = new org.apache.hadoop.fs.Path(s"$dir/$centroidsTmp")
+      val old = new org.apache.hadoop.fs.Path(s"$dir/$centroidsOld")
       if (fs.exists(tmp)) { fs.rename(tmp, live); fs.delete(old, true): Unit }
       else if (fs.exists(old)) fs.rename(old, live): Unit
     }
@@ -404,7 +409,7 @@ object IvfIndex {
     // path, then swap it in with renames — the slow write job never
     // has the live directory in a half-written state; a crash inside
     // the rename window is repaired by [[recoverCentroidSwap]]
-    val tmp = s"$dir/centroids__tmp"
+    val tmp = s"$dir/$centroidsTmp"
     centroids.write.mode("overwrite").parquet(tmp)
     Failpoints.hit("ivfsplit:after-centroid-tmp")
     fence() // last check before the live centroid table is replaced
@@ -412,7 +417,7 @@ object IvfIndex {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(conf)
     val live = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/centroids__old")
+    val old = new org.apache.hadoop.fs.Path(s"$dir/$centroidsOld")
     if (fs.exists(old)) fs.delete(old, true)
     fs.rename(live, old)
     Failpoints.hit("ivfsplit:mid-swap")

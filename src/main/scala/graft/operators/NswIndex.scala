@@ -410,27 +410,30 @@ object NswIndex {
     * [[ledgerPath]]); historic reads subtract them from the scrub
     * set. Append-only for the same crash-direction reason as the
     * ledger itself. */
-  private def droppedPath(nswDir: String): String =
-    s"$nswDir/tombstones_dropped"
+  private val droppedName = "tombstones_dropped"
 
-  /** [[graft.sources.StoreFs.committedParquet]] — the torn-append
-    * guard: a ledger dir holding only `_temporary` debris (a crash
-    * inside the [[deleteFromNsw]] append before any part file
-    * committed) reads as absent, which is the truthful state — no
-    * deletion intent committed, and the flat rewrite that FOLLOWS the
-    * append never ran either. Keeps [[vacuumNsw]] (invoked by every
-    * saveNsw commit), [[loadNswAt]] historic reads and the
-    * StoreDoctor audit degrading instead of wedging. */
-  private[graft] def committedParquet(spark: SparkSession,
-                                      path: String): Option[DataFrame] =
-    graft.sources.StoreFs.committedParquet(spark, path)
+  private def droppedPath(nswDir: String): String = s"$nswDir/$droppedName"
+
+  /** The committed revocation rows ([[droppedPath]]). */
+  private[graft] def revocations(spark: SparkSession,
+                                 nswDir: String): Option[DataFrame] =
+    graft.sources.StoreFs.committedParquet(spark, droppedPath(nswDir))
 
   /** The deletion ledger MINUS revoked entries — the effective scrub
-    * set every historic-read/vacuum/audit consumer shares. */
+    * set every historic-read/vacuum/audit consumer shares. Both tables
+    * are read through the torn-append guard
+    * ([[graft.sources.StoreFs.committedParquet]]): a ledger dir holding
+    * only `_temporary` debris (a crash inside the [[deleteFromNsw]]
+    * append before any part file committed) reads as absent, which is
+    * the truthful state — no deletion intent committed, and the flat
+    * rewrite that FOLLOWS the append never ran either. Keeps
+    * [[vacuumNsw]] (invoked by every saveNsw commit), [[loadNswAt]]
+    * historic reads and the StoreDoctor audit degrading instead of
+    * wedging. */
   private[graft] def effectiveLedger(spark: SparkSession,
                                      nswDir: String): Option[DataFrame] =
-    committedParquet(spark, ledgerPath(nswDir)).map { led =>
-      committedParquet(spark, droppedPath(nswDir)) match {
+    graft.sources.StoreFs.committedParquet(spark, ledgerPath(nswDir)).map { led =>
+      revocations(spark, nswDir) match {
         case None => led
         case Some(dropped) =>
           led.join(dropped, Seq("id", "deleted_at_gen"), "left_anti")
@@ -633,15 +636,14 @@ object NswIndex {
         graft.sources.StoreFs.tornParquetDebris(path)
       def release(): Unit = {
         graft.sources.StoreFs.deleteChild(dir, "tombstones")
-        graft.sources.StoreFs.deleteChild(dir, "tombstones_dropped")
+        graft.sources.StoreFs.deleteChild(dir, droppedName)
       }
       if (tornOnly(ledgerPath(dir))) release()
-      else if (committedParquet(spark, ledgerPath(dir)).isEmpty) {
+      else if (graft.sources.StoreFs.committedParquet(spark, ledgerPath(dir)).isEmpty) {
         // no ledger at all: a revocation table (or its torn debris)
         // without one is unreferenced — sweep it
-        if (tornOnly(droppedPath(dir)) ||
-            committedParquet(spark, droppedPath(dir)).isDefined)
-          graft.sources.StoreFs.deleteChild(dir, "tombstones_dropped")
+        if (tornOnly(droppedPath(dir)) || revocations(spark, dir).isDefined)
+          graft.sources.StoreFs.deleteChild(dir, droppedName)
       } else effectiveLedger(spark, dir).foreach { led =>
         val readable = committedNswGenerations(dir)
         if (readable.nonEmpty) {

@@ -549,20 +549,10 @@ object TextDedup {
       .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq(s"g$gen"))
 
-  /** Whether ANY generation descriptor exists for this store — the
-    * segmented-format marker: a store written (or ever appended) by
-    * the segmented layout always has one per committed generation, a
-    * true legacy pre-segmentation store has none. One glob. */
-  private def hasAnyDescriptor(pathPrefix: String): Boolean = {
-    val probe = new org.apache.hadoop.fs.Path(s"${pathPrefix}_g*_segments")
-    val fs = probe.getFileSystem(
-      graft.sources.StoreFs.of(pathPrefix)._1.getConf)
-    Option(fs.globStatus(probe)).exists(_.nonEmpty)
-  }
-
   /** [[segmentsOf]] for READ/CARRY paths: the descriptor-absent
     * fallback applies only to a true legacy store (no `_g*_segments`
-    * descriptor anywhere); a SEGMENTED store missing the requested
+    * descriptor anywhere — a segmented store always has one per
+    * committed generation); a SEGMENTED store missing the requested
     * generation's descriptor REFUSES — its segment set is unknowable,
     * and the lenient single-segment guess would silently drop every
     * carried segment (the exact silent-fallback hazard the
@@ -572,7 +562,7 @@ object TextDedup {
     graft.sources.StoreFs.readSmallFile(s"${pathPrefix}_g${gen}_segments")
       .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse {
-        if (hasAnyDescriptor(pathPrefix)) throw new IllegalStateException(
+        if (listDedupStore(pathPrefix).descriptors.nonEmpty) throw new IllegalStateException(
           s"generation $gen of segmented dedup store $pathPrefix has no " +
             s"${pathPrefix}_g${gen}_segments descriptor — its segment set " +
             "is unknowable (lost/deleted descriptor?); refusing to guess. " +
@@ -762,52 +752,69 @@ object TextDedup {
                        pathPrefix: String, keepLast: Int): Unit =
       withStoreLease(pathPrefix) {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val current = graft.sources.StoreFs.readManifest(s"${pathPrefix}_manifest")
-      .getOrElse(return)
-    val probe = new org.apache.hadoop.fs.Path(s"${pathPrefix}_g*_fp")
-    val fs = probe.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def glob(pattern: String): Seq[String] =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(pattern)))
-        .map(_.toSeq).getOrElse(Seq.empty).map(_.getPath.getName)
-    // Discover generations from the UNION of all three suffix globs
-    // (not just `_fp` — a vacuum that crashed after deleting a
-    // generation's fp dir would otherwise hide the bands/mh orphans
-    // from every later vacuum) plus the descriptor files (an append
+    val layout = listDedupStore(pathPrefix)
+    val current = layout.spine.head.getOrElse(return)
+    // Generations are the UNION of table and descriptor generations: a
+    // vacuum that crashed after deleting a generation's fp dir still
+    // leaves its bands/mh orphans to a later one, and an append
     // generation may own no tables under its own number once shared
-    // segments outlive the descriptor's deletion round).
-    val genRe = ".*_g(\\d+)_(?:fp|bands|mh)".r
-    val descRe = ".*_g(\\d+)_segments".r
-    val committed = (Seq("fp", "bands", "mh").flatMap { sfx =>
-      glob(s"${pathPrefix}_g*_$sfx")
-        .collect { case genRe(g) if g.toLong <= current => g.toLong }
-    } ++ glob(s"${pathPrefix}_g*_segments")
-      .collect { case descRe(g) if g.toLong <= current => g.toLong }
-    ).distinct.sorted
+    // segments outlive the descriptor's deletion round.
+    val committed = (layout.spine.committed ++ layout.descriptors.filter(_ <= current))
+      .distinct.sorted
     val keptSegs = committed.takeRight(keepLast)
       .flatMap(g => segmentsOf(pathPrefix, g)).toSet
     committed.dropRight(keepLast).foreach { g =>
       segmentsOf(pathPrefix, g).filterNot(keptSegs).foreach { seg =>
         Seq("fp", "bands", "mh").foreach { sfx =>
           spark.sql(s"DROP TABLE IF EXISTS ${namePrefix}_${seg}_$sfx")
-          fs.delete(
-            new org.apache.hadoop.fs.Path(s"${pathPrefix}_${seg}_$sfx"), true)
+          graft.sources.StoreFs.deleteChild(layout.dir, s"${layout.base}_${seg}_$sfx")
         }
       }
-      fs.delete(
-        new org.apache.hadoop.fs.Path(s"${pathPrefix}_g${g}_segments"), false)
+      graft.sources.StoreFs.deleteChild(layout.dir, s"${layout.base}_g${g}_segments")
     }
     // orphaned per-writer staging: any scratch dir not ours is a
     // crashed/usurped writer's pre-commit debris
     val myTok = graft.sources.StoreFs.scratchTag(s"${pathPrefix}__writer")
-    val scratchRe = ".*_g\\d+_(?:fp|bands|mh)__([a-zA-Z0-9]+)".r
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"${pathPrefix}_g*__*")))
-      .map(_.toSeq).getOrElse(Seq.empty).foreach { st =>
-        st.getPath.getName match {
-          case scratchRe(t) if !myTok.contains(t) =>
-            fs.delete(st.getPath, true): Unit
-          case _ => ()
-        }
-      }
+    layout.spine.scratch.foreach { case (name, tag) =>
+      if (!myTok.contains(tag)) graft.sources.StoreFs.deleteChild(layout.dir, name)
+    }
+  }
+
+  /** The on-disk layout of a bucketed dedup store (`pathPrefix` =
+    * `dir/base`, entries `<base>_*`): `spine` holds the manifest head,
+    * the generations with `_g<n>_{fp,bands,mh}` tables, the
+    * `_g<n>_<tbl>__<tag>` scratch dirs and the manifest-swap leftovers;
+    * `tables` each generation's table suffixes on disk; `descriptors`
+    * the generations with a `_g<n>_segments` descriptor. */
+  private[graft] final case class DedupLayout(dir: String, base: String,
+                                              spine: graft.sources.StoreFs.GenerationLayout,
+                                              tables: Map[Long, Set[String]],
+                                              descriptors: Seq[Long]) {
+    /** The tables segment `seg` (`g<k>`) has on disk. */
+    def tablesOf(seg: String): Set[String] =
+      seg.stripPrefix("g").toLongOption.flatMap(tables.get).getOrElse(Set.empty)
+  }
+
+  /** THE parse of a dedup store's layout, from one manifest read and
+    * one listing of the prefix's parent dir: [[vacuumDedupStore]],
+    * [[committedGenerations]] and StoreDoctor's audit all read it. */
+  private[graft] def listDedupStore(pathPrefix: String): DedupLayout = {
+    val path = new org.apache.hadoop.fs.Path(pathPrefix)
+    val (dir, base) = (path.getParent.toString, path.getName)
+    val names = graft.sources.StoreFs.childNames(dir)
+    val own = names.filter(_.startsWith(base + "_")).map(_.drop(base.length + 1))
+    val tableRe = "g(\\d+)_(fp|bands|mh)(?:__([a-zA-Z0-9]+))?".r
+    val descRe = "g(\\d+)_segments".r
+    val tables = own.collect { case tableRe(g, t, null) => (g.toLong, t) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val (tmp, old) = graft.sources.StoreFs.swapSiblings("manifest")
+    DedupLayout(dir, base,
+      graft.sources.StoreFs.GenerationLayout(
+        graft.sources.StoreFs.readManifest(s"${pathPrefix}_manifest"),
+        tables.keys.toSeq.sorted,
+        own.collect { case n @ tableRe(_, _, tag) if tag != null => (s"${base}_$n", tag) }.sorted,
+        Seq(tmp, old).filter(own.contains).map(n => s"${base}_$n")),
+      tables, own.collect { case descRe(g) => g.toLong }.sorted)
   }
 
   /** Generations of a bucketed dedup store that are READABLE — valid
@@ -815,38 +822,30 @@ object TextDedup {
     * committed at or below the manifest head, with a generation
     * descriptor on disk (plus the head itself for legacy
     * pre-segmentation stores, which never wrote one) and EVERY
-    * referenced segment's tables still present. Vacuum
+    * referenced segment's fp table still present. Vacuum
     * ([[vacuumDedupStore]]) deletes a dropped generation's descriptor
     * and any segment no retained generation references, so a
     * generation past the retention window drops out of this list —
     * `retainGenerations` on the mutation verbs is the retention dial.
-    * Metadata-only: one descriptor glob + one existence probe per
-    * segment, no table read. */
-  def committedGenerations(spark: SparkSession, pathPrefix: String): Seq[Long] = {
-    val head = graft.sources.StoreFs.readManifest(s"${pathPrefix}_manifest")
-      .getOrElse(return Seq.empty)
-    val probe = new org.apache.hadoop.fs.Path(s"${pathPrefix}_g*_segments")
-    val fs = probe.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val descRe = ".*_g(\\d+)_segments$".r
-    val allDesc = Option(fs.globStatus(probe)).map(_.toSeq)
-      .getOrElse(Seq.empty).map(_.getPath.toString)
-      .collect { case descRe(g) => g.toLong }
-    val withDesc = allDesc.filter(_ <= head)
-    // The head joins the candidate list WITHOUT a descriptor only on a
-    // true legacy pre-segmentation store (no descriptor anywhere) —
-    // for a segmented store, a head whose descriptor is lost has an
-    // UNKNOWABLE segment set, and reporting it readable would bless
-    // the same carry-segment-less guess [[segmentsOfStrict]] refuses
-    // (r16 ADVICE: the silent-fallback hazard the vacuumed-generation
-    // refusal exists to prevent).
-    val candidates =
-      if (allDesc.isEmpty) withDesc :+ head else withDesc
-    candidates.distinct.sorted.filter { g =>
-      segmentsOf(pathPrefix, g).forall { seg =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"${pathPrefix}_${seg}_fp"))
-      }
+    * Metadata-only: one listing plus one descriptor read per
+    * candidate, no table read. */
+  def committedGenerations(spark: SparkSession, pathPrefix: String): Seq[Long] =
+    readableGenerations(pathPrefix, listDedupStore(pathPrefix))
+
+  private[graft] def readableGenerations(pathPrefix: String,
+                                         layout: DedupLayout): Seq[Long] =
+    layout.spine.head.fold(Seq.empty[Long]) { head =>
+      // The head is a candidate WITHOUT a descriptor only on a true
+      // legacy pre-segmentation store (no descriptor anywhere) — for a
+      // segmented store, a head whose descriptor is lost has an
+      // UNKNOWABLE segment set, and reporting it readable would bless
+      // the same carry-segment-less guess [[segmentsOfStrict]] refuses
+      // (r16 ADVICE: the silent-fallback hazard the vacuumed-generation
+      // refusal exists to prevent).
+      val candidates =
+        if (layout.descriptors.isEmpty) Seq(head) else layout.descriptors.filter(_ <= head)
+      candidates.filter(g => segmentsOf(pathPrefix, g).forall(layout.tablesOf(_)("fp")))
     }
-  }
 
   /** [[ingestFlags]] with a BUCKETED store — the non-broadcast scale
     * variant for a store too large to ship to every task: resolves the

@@ -31,8 +31,21 @@ import org.apache.spark.sql.SparkSession
   * stores (two-tier, NSW) call it whole as [[commitGenerationDir]] and
   * share [[vacuumGenerationDirs]] and [[generationRoot]]; the dedup
   * store's prefix layout shares the staging and the manifest swap and
-  * keeps its own segment-aware vacuum. The marker-committed agg store
-  * and the flat IVF store use only the lease and marker helpers.
+  * keeps its own segment-aware vacuum. The flat IVF store uses only
+  * the lease and marker helpers.
+  *
+  * The agg store ([[graft.streaming.EventStreams.materializedAggStore]])
+  * stays marker-committed: its generation id is the stream's batch id,
+  * and a replayed batch must rewrite its own generation from the same
+  * predecessor. [[commitGenerationDir]] numbers generations head+1, so
+  * a batch replayed after its commit would become a new generation and
+  * fold its rows in twice.
+  *
+  * Each store family parses its on-disk layout in ONE listing that its
+  * vacuum, its readable-generation listing and its
+  * [[graft.tools.StoreDoctor]] audit all read: [[listGenerationDirs]]
+  * here for the dir-layout stores, `TextDedup.listDedupStore` and
+  * `EventStreams.listAggStore` for the other two.
   *
   * The Hadoop conf comes from the active Spark session when one exists
   * (so `fs.*` overrides like S3 credentials apply) and falls back to a
@@ -72,6 +85,12 @@ object StoreFs {
     fs.delete(new Path(p, name), true): Unit
   }
 
+  /** The two siblings an interrupted swap of `name` leaves beside it:
+    * the complete new copy and the old one moved aside. The manifest
+    * swap ([[writeFileAtomic]]) and the IVF centroid swap both stage
+    * through them. */
+  def swapSiblings(name: String): (String, String) = (name + "__tmp", name + "__old")
+
   /** Read a generation manifest: the file at `path` holding one long
     * (UTF-8 digits). Absent file = no committed generation. The head
     * read of the generational commit protocol (see the object doc),
@@ -97,8 +116,9 @@ object StoreFs {
     // manifest (first build, vacuum early-return, tombstone probe)
     // costs one extra exists() and still returns None immediately.
     once().orElse {
+      val (tmp, old) = swapSiblings(path)
       val inFlight =
-        try fs.exists(new Path(path + "__tmp")) || fs.exists(new Path(path + "__old"))
+        try fs.exists(new Path(tmp)) || fs.exists(new Path(old))
         catch { case _: java.io.IOException => false }
       if (inFlight) Thread.sleep(50)
       once()
@@ -156,33 +176,43 @@ object StoreFs {
   // ------------------------------------------------------------------
   // TIME-TRAVEL SURFACE — the shared half of the historic-read
   // contract all generational store families expose (dedup q212,
-  // two-tier q213, NSW q214): discover READABLE generations, refuse
-  // an unreadable one with the readable list and the retention
-  // remedy. Families with a dir-per-generation layout (two-tier ANN,
-  // NSW) share [[committedGenerationDirs]] verbatim; the dedup
-  // store's prefix/segment layout keeps its own listing (segment
-  // descriptors make readability more than a dir listing) but shares
-  // the refusal, so the three families cannot drift apart in either
-  // the discovery rule or the error contract.
+  // two-tier q213, NSW q214, agg q215): each family lists its READABLE
+  // generations from its layout listing, and all share the refusal of
+  // an unreadable one, so the error contract cannot drift per family.
   // ------------------------------------------------------------------
 
-  /** Generations of a DIR-PER-GENERATION store that are READABLE —
-    * committed `g<n>` children at or below the manifest head. A
-    * generation dir exists iff its fenced commit renamed it in whole
-    * ([[stageGenerationDir]]), so presence implies every table inside;
-    * in-flight scratch (`g<n>__<token>`) never matches the anchored
-    * pattern, and generations above the manifest (an in-flight
-    * writer's) are never listed. Metadata-only: one manifest read +
-    * one directory listing. Empty for a legacy flat or
-    * never-committed store. */
+  /** The on-disk layout of a DIR-PER-GENERATION store (two-tier ANN,
+    * NSW): the manifest `head`, the sorted `g<n>` generation dirs split
+    * at it (`committed` at or below, `aboveHead` an in-flight or
+    * crashed writer's — all of them with no manifest), the per-writer
+    * `(g<n>__<tag>, tag)` scratch dirs and the manifest-swap leftovers.
+    * The dedup store's listing fills the same shape. */
+  final case class GenerationLayout(head: Option[Long], gens: Seq[Long],
+                                    scratch: Seq[(String, String)],
+                                    swapLeftovers: Seq[String]) {
+    def committed: Seq[Long] = gens.filter(g => head.exists(g <= _))
+    def aboveHead: Seq[Long] = gens.filterNot(g => head.exists(g <= _))
+  }
+
+  /** THE parse of a dir-per-generation store's layout: one manifest
+    * read + one directory listing. A generation dir exists iff its
+    * fenced commit renamed it in whole ([[stageGenerationDir]]), so a
+    * committed `g<n>` holds every table; scratch (`g<n>__<tag>`) is
+    * never a generation. */
+  def listGenerationDirs(dir: String): GenerationLayout = {
+    val names = childNames(dir)
+    val genRe = "g(\\d+)(?:__([a-zA-Z0-9]+))?".r
+    val (tmp, old) = swapSiblings("manifest")
+    GenerationLayout(readManifest(s"$dir/manifest"),
+      names.collect { case genRe(g, null) => g.toLong }.sorted,
+      names.collect { case n @ genRe(_, tag) if tag != null => (n, tag) }.sorted,
+      Seq(tmp, old).filter(names.contains))
+  }
+
+  /** READABLE generations of a dir-per-generation store
+    * ([[listGenerationDirs]]); empty for a legacy flat store. */
   def committedGenerationDirs(dir: String): Seq[Long] =
-    readManifest(s"$dir/manifest") match {
-      case None => Seq.empty
-      case Some(cur) =>
-        val genRe = "^g(\\d+)$".r
-        childNames(dir)
-          .collect { case genRe(g) if g.toLong <= cur => g.toLong }.sorted
-    }
+    listGenerationDirs(dir).committed
 
   /** THE unreadable-generation refusal — one text for every store
     * family's time-travel read, so the error contract (what happened,
@@ -494,20 +524,6 @@ object StoreFs {
     }
   }
 
-  /** Sweep ORPHANED generation-scratch dirs (`g<n>__<tag>` children of
-    * `storeDir` left by a crashed or usurped writer) belonging to any
-    * token but the current writer's. Called from the stores' vacuum
-    * verbs under the lease. */
-  def sweepScratchDirs(storeDir: String, markerPath: String): Unit = {
-    val mine = scratchTag(markerPath)
-    val scratchRe = "g\\d+__([a-zA-Z0-9]+)".r
-    childNames(storeDir).foreach {
-      case name @ scratchRe(tag) if !mine.contains(tag) =>
-        deleteChild(storeDir, name)
-      case _ => ()
-    }
-  }
-
   /** The writer-lease bracket of a DIR-LAYOUT store (marker
     * `<dir>/__writer`) — what every mutation verb of the two-tier, NSW
     * and flat IVF stores wraps its read-modify-write in. Re-entrant, so
@@ -532,24 +548,26 @@ object StoreFs {
       gen
     }
 
-  /** Retention for a dir-per-generation store: drop all but the newest
-    * `keepLast` COMMITTED generations ([[committedGenerationDirs]]) and
-    * sweep orphaned scratch dirs ([[sweepScratchDirs]]). Generations
-    * above the manifest (an in-flight writer's) are never touched; a
-    * store with no manifest (never committed, or legacy flat layout)
-    * is left alone. Safe beside readers pinned to any RETAINED
-    * generation. Returns the head generation, None when nothing is
-    * committed. */
+  /** Retention for a dir-per-generation store ([[listGenerationDirs]]):
+    * drop all but the newest `keepLast` COMMITTED generations and sweep
+    * the orphaned scratch dirs of every writer but the current one (a
+    * crashed or usurped writer's). Generations above the manifest (an
+    * in-flight writer's) are never touched; a store with no manifest
+    * (never committed, or legacy flat layout) is left alone. Safe
+    * beside readers pinned to any RETAINED generation. Returns the
+    * head generation, None when nothing is committed. */
   def vacuumGenerationDirs(dir: String, keepLast: Int): Option[Long] =
     withStoreLease(dir) {
       require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-      val head = readManifest(s"$dir/manifest")
-      if (head.isDefined) {
-        committedGenerationDirs(dir).dropRight(keepLast)
-          .foreach(g => deleteChild(dir, s"g$g"))
-        sweepScratchDirs(dir, writerMarkerPath(dir))
+      val layout = listGenerationDirs(dir)
+      if (layout.head.isDefined) {
+        layout.committed.dropRight(keepLast).foreach(g => deleteChild(dir, s"g$g"))
+        val mine = scratchTag(writerMarkerPath(dir))
+        layout.scratch.foreach { case (name, tag) =>
+          if (!mine.contains(tag)) deleteChild(dir, name)
+        }
       }
-      head
+      layout.head
     }
 
   /** The root a read of a dir-per-generation store resolves: with no
@@ -611,7 +629,8 @@ object StoreFs {
   def writeFileAtomic(path: String, content: String): Unit = {
     assertLeasesStillHeld()
     val (fs, p) = of(path)
-    val tmp = new Path(path + "__tmp")
+    val (tmpPath, oldPath) = swapSiblings(path)
+    val tmp = new Path(tmpPath)
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -627,7 +646,7 @@ object StoreFs {
       case _: UnsupportedOperationException | _: java.io.FileNotFoundException |
           _: org.apache.hadoop.fs.UnsupportedFileSystemException
           if fs.exists(tmp) =>
-        val old = new Path(path + "__old")
+        val old = new Path(oldPath)
         val hadOld = fs.exists(p)
         if (hadOld) {
           fs.delete(old, false): Unit

@@ -431,7 +431,7 @@ object EventStreams {
         // IO goes through the Hadoop FS resolved from the store path
         // ([[graft.sources.StoreFs]]) so a non-local store (HDFS/S3)
         // keeps data and markers on the SAME filesystem.
-        graft.sources.StoreFs.touchMarker(store, s".gen_${batchId}_committed")
+        graft.sources.StoreFs.touchMarker(store, commitMarker(batchId))
         // KEY-COLUMN META, so [[retractFromAggStore]] can validate a
         // caller's key frame against the store's actual keys instead of
         // discovering a mis-shaped overlay at read time (which would
@@ -455,15 +455,38 @@ object EventStreams {
     * this scrubbed state, so the generation it commits is physically
     * key-free. */
   def latestGeneration(spark: SparkSession, store: String,
-                       before: Long = Long.MaxValue): Option[DataFrame] = {
-    val marker = "\\.gen_(\\d+)_committed".r
-    val gens = graft.sources.StoreFs.childNames(store).collect {
-      case marker(id) if id.toLong < before => id.toLong
-    }
-    if (gens.isEmpty) None
-    else Some(applyRetractions(spark, store, gens.max,
-      spark.read.parquet(s"$store/batch_id=${gens.max}")))
+                       before: Long = Long.MaxValue): Option[DataFrame] =
+    listAggStore(store).committed.filter(_ < before).lastOption
+      .map(g => readGeneration(spark, store, g))
+
+  /** The on-disk layout of a [[materializedAggStore]] store: the
+    * marker-committed generation ids and the `batch_id` data dir ids,
+    * both sorted. An unmarked data dir below the newest commit is torn
+    * crash debris; one at or above it is an in-flight batch. */
+  final case class AggLayout(committed: Seq[Long], dataDirs: Seq[Long]) {
+    def unmarked: Seq[Long] = dataDirs.filterNot(committed.contains)
   }
+
+  /** THE parse of a [[materializedAggStore]] store's layout, from one
+    * directory listing: [[latestGeneration]], [[committedAggGenerations]],
+    * [[retractFromAggStore]], [[vacuumGenerations]] and StoreDoctor's
+    * audit all read it. */
+  def listAggStore(store: String): AggLayout = {
+    val names = graft.sources.StoreFs.childNames(store)
+    val markerRe = "\\.gen_(\\d+)_committed".r
+    val dataRe = "batch_id=(\\d+)".r
+    AggLayout(names.collect { case markerRe(id) => id.toLong }.sorted,
+      names.collect { case dataRe(id) => id.toLong }.sorted)
+  }
+
+  /** The commit marker of generation `batchId` ([[listAggStore]] parses it). */
+  private def commitMarker(batchId: Long): String = s".gen_${batchId}_committed"
+
+  private def dataDir(batchId: Long): String = s"batch_id=$batchId"
+
+  /** Generation `g`'s snapshot minus the retraction overlay. */
+  private def readGeneration(spark: SparkSession, store: String, g: Long): DataFrame =
+    applyRetractions(spark, store, g, spark.read.parquet(s"$store/${dataDir(g)}"))
 
   /** The RETRACTION overlay of a [[materializedAggStore]] store — the
     * fourth store family's right-to-be-forgotten verb, closing the
@@ -536,14 +559,11 @@ object EventStreams {
     * the stream (stop it, or call between micro-batches) first. */
   def retractFromAggStore(spark: SparkSession, store: String,
                           keys: DataFrame): Long = {
-    val committed = committedAggGenerations(store)
-    require(committed.nonEmpty,
+    val layout = listAggStore(store)
+    require(layout.committed.nonEmpty,
       s"no committed generation at agg store $store — nothing to retract")
-    val newest = committed.last
-    val dataRe = "batch_id=(\\d+)".r
-    val inFlight = graft.sources.StoreFs.childNames(store)
-      .collect { case dataRe(id) => id.toLong }
-      .filter(id => id >= newest && !committed.contains(id)).sorted
+    val newest = layout.committed.last
+    val inFlight = layout.unmarked.filter(_ >= newest)
     require(inFlight.isEmpty,
       s"agg store $store has in-flight batch dir(s) " +
         s"batch_id=${inFlight.mkString(", batch_id=")} — that fold read " +
@@ -597,11 +617,8 @@ object EventStreams {
     * serves, not just the newest; torn unmarked dirs never qualify.
     * [[vacuumGenerations]] trims history — `keepLast` is the
     * retention dial. Metadata-only (one directory listing). */
-  def committedAggGenerations(store: String): Seq[Long] = {
-    val marker = "\\.gen_(\\d+)_committed".r
-    graft.sources.StoreFs.childNames(store)
-      .collect { case marker(id) => id.toLong }.sorted
-  }
+  def committedAggGenerations(store: String): Seq[Long] =
+    listAggStore(store).committed
 
   /** [[latestGeneration]] AS OF a retained generation — the
     * time-travel face of the materialized-view store: read the view's
@@ -627,8 +644,7 @@ object EventStreams {
         if (!readable.contains(g))
           graft.sources.StoreFs.unreadableGeneration(
             "agg store", store, g, readable)
-        applyRetractions(spark, store, g,
-          spark.read.parquet(s"$store/batch_id=$g"))
+        readGeneration(spark, store, g)
     }
 
   /** Retention for a [[materializedAggStore]] store: drop all but the
@@ -639,26 +655,19 @@ object EventStreams {
     * touches unmarked dirs at or above the newest committed id. */
   def vacuumGenerations(store: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must be ≥ 1, got $keepLast")
-    val names = graft.sources.StoreFs.childNames(store)
-    val marker = "\\.gen_(\\d+)_committed".r
-    val committed = names.collect { case marker(id) => id.toLong }.sorted
-    if (committed.isEmpty) return
-    val newest = committed.last
-    val keep = committed.takeRight(keepLast).toSet
-    committed.filterNot(keep).foreach { id =>
+    val layout = listAggStore(store)
+    if (layout.committed.isEmpty) return
+    val newest = layout.committed.last
+    val keep = layout.committed.takeRight(keepLast)
+    layout.committed.filterNot(keep.contains).foreach { id =>
       // marker FIRST: a crash mid-vacuum leaves an unmarked (invisible)
       // dir for the debris sweep, never a marked dir with missing data
-      graft.sources.StoreFs.deleteChild(store, s".gen_${id}_committed")
-      graft.sources.StoreFs.deleteChild(store, s"batch_id=$id")
+      graft.sources.StoreFs.deleteChild(store, commitMarker(id))
+      graft.sources.StoreFs.deleteChild(store, dataDir(id))
     }
-    val dataDir = "batch_id=(\\d+)".r
-    names.foreach { name =>
-      name match {
-        case dataDir(id) if id.toLong < newest && !keep.contains(id.toLong) =>
-          graft.sources.StoreFs.deleteChild(store, name) // torn debris below the committed watermark
-        case _ =>
-      }
-    }
+    // torn debris below the committed watermark
+    layout.unmarked.filter(_ < newest)
+      .foreach(id => graft.sources.StoreFs.deleteChild(store, dataDir(id)))
     // Release the retraction overlay once NO readable generation
     // predates any recorded retraction (every snapshot it could scrub
     // is gone and every retained one was folded post-retraction, so
@@ -670,8 +679,8 @@ object EventStreams {
       if (graft.sources.StoreFs.tornParquetDebris(retractionsPath(store)))
         graft.sources.StoreFs.deleteChild(store, "retractions")
       else retractionWatermark(spark, store).foreach { wm =>
-        val readable = committedAggGenerations(store)
-        if (readable.nonEmpty && readable.min >= wm)
+        // the retained generations are the readable ones now
+        if (keep.head >= wm)
           graft.sources.StoreFs.deleteChild(store, "retractions")
       }
     }

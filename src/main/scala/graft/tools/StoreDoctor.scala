@@ -37,6 +37,16 @@ import graft.sources.StoreFs
   *    generations: torn unmarked dirs, markers with missing data,
   *    vacuum-eligible history).
   *
+  * Each audit reads its family's one layout listing —
+  * [[StoreFs.listGenerationDirs]] (two-tier, NSW),
+  * [[graft.operators.TextDedup.listDedupStore]] (dedup),
+  * [[graft.streaming.EventStreams.listAggStore]] (aggstore) — the same
+  * parse the family's vacuum and readable-generation listing use, so
+  * the doctor holds no copy of any store's naming: it keeps only the
+  * findings. The manifest, in-flight, swap-leftover and scratch
+  * findings of the dir and dedup families come from one function
+  * ([[spineFindings]]).
+  *
   * CLI: `sbt "runMain graft.tools.StoreDoctor <family> <path...>"` —
   * prints one line per finding, exit 1 iff any `error` finding.
   */
@@ -59,8 +69,6 @@ object StoreDoctor {
 
   private def rows(spark: SparkSession, path: String): Long =
     spark.read.parquet(path).count()
-
-  private val genRe = "g(\\d+)".r
 
   /** The SHARED TIME-TRAVEL audit — one implementation of the
     * historic-read contract's doctor face for all four store families
@@ -124,61 +132,58 @@ object StoreDoctor {
     out.result()
   }
 
-  /** Audit the dir-style generational spine shared by the two-tier
-    * and NSW stores: manifest presence/agreement with on-disk `g<n>`
-    * children, expected tables inside the committed generation,
-    * in-flight (above-manifest) generations, and interrupted
-    * manifest-swap leftovers. Readable-history listing lives in the
-    * shared [[auditTimeTravel]], which both callers invoke. */
-  private def auditGenerationalDir(dir: String,
-                                   tables: Seq[String]): Seq[Finding] = {
+  /** The spine findings the dir-layout (two-tier, NSW) and dedup
+    * families share, read off the family's listing: manifest presence
+    * (generations on disk without one are a first-build crash),
+    * generations above the manifest (an in-flight or crashed writer),
+    * interrupted manifest-swap leftovers, and orphaned per-writer
+    * scratch ([[StoreFs.stageGenerationDir]]). Readable-history
+    * listing lives in the shared [[auditTimeTravel]]. */
+  private def spineFindings(store: String,
+                            layout: StoreFs.GenerationLayout): Seq[Finding] = {
+    def gens(gs: Seq[Long]) = gs.map("g" + _).mkString(", ")
     val out = Seq.newBuilder[Finding]
-    val children = StoreFs.childNames(dir)
-    val gens = children.collect { case genRe(g) => g.toLong }.sorted
-    val manifest = StoreFs.readManifest(s"$dir/manifest")
-    manifest match {
-      case None =>
-        if (gens.nonEmpty)
-          out += Finding(dir, "manifest", "error",
-            s"generation dirs ${gens.map("g" + _).mkString(", ")} exist but " +
-              "no committed manifest — a first-build crash; rebuild the " +
-              "store (readers correctly see it as absent)")
-        else
-          out += Finding(dir, "manifest", "info",
-            "no committed store at this path")
-      case Some(g) =>
-        val missing = tables.filterNot(t => exists(s"$dir/g$g/$t"))
-        if (missing.nonEmpty)
-          out += Finding(dir, "tables", "error",
-            s"committed generation g$g is missing ${missing.mkString(", ")} " +
-              "— the manifest points at an incomplete generation")
-        else
-          out += Finding(dir, "manifest", "ok",
-            s"committed generation g$g with ${tables.mkString(", ")}")
-        val inFlight = gens.filter(_ > g)
-        if (inFlight.nonEmpty)
-          out += Finding(dir, "generations", "warn",
-            s"uncommitted generation(s) ${inFlight.map("g" + _).mkString(", ")} " +
-              "above the manifest — an in-flight or crashed writer; the next " +
-              "commit overwrites them")
+    if (layout.head.isEmpty)
+      out += (if (layout.aboveHead.nonEmpty)
+        Finding(store, "manifest", "error",
+          s"generation(s) ${gens(layout.aboveHead)} exist but no committed " +
+            "manifest — a first-build crash; rebuild the store (readers " +
+            "correctly see it as absent)")
+      else Finding(store, "manifest", "info", "no committed store at this path"))
+    else if (layout.aboveHead.nonEmpty)
+      out += Finding(store, "generations", "warn",
+        s"uncommitted generation(s) ${gens(layout.aboveHead)} above the " +
+          "manifest — an in-flight or crashed writer; the next commit " +
+          "overwrites them")
+    layout.swapLeftovers.foreach { leftover =>
+      out += Finding(store, "manifest-swap", "warn",
+        s"$leftover present — an interrupted manifest swap " +
+          "(readManifest covers the window; the next commit cleans it up)")
     }
-    Seq("manifest__tmp", "manifest__old").filter(children.contains).foreach {
-      leftover =>
-        out += Finding(dir, "manifest-swap", "warn",
-          s"$leftover present — an interrupted manifest swap " +
-            "(readManifest covers the window; the next commit cleans it up)")
-    }
-    // per-writer generation staging left behind by a crashed or
-    // usurped writer ([[StoreFs.stageGenerationDir]])
-    val scratch = children.filter(_.matches("g\\d+__[a-zA-Z0-9]+")).sorted
+    val scratch = layout.scratch.map(_._1)
     if (scratch.nonEmpty)
-      out += Finding(dir, "scratch", "warn",
+      out += Finding(store, "scratch", "warn",
         s"${scratch.size} orphaned generation-scratch dir(s) " +
           s"(${scratch.mkString(", ")}) — uncommitted debris from a " +
           "crashed or usurped writer; the next mutation's vacuum sweeps " +
           "it, or delete the dir(s)")
     out.result()
   }
+
+  /** [[spineFindings]] of a dir-layout store plus the check that its
+    * committed generation holds every one of `tables`. */
+  private def auditGenerationDirs(dir: String, layout: StoreFs.GenerationLayout,
+                                  tables: Seq[String]): Seq[Finding] =
+    spineFindings(dir, layout) ++ layout.head.map { g =>
+      val missing = tables.filterNot(t => exists(s"$dir/g$g/$t"))
+      if (missing.nonEmpty)
+        Finding(dir, "tables", "error",
+          s"committed generation g$g is missing ${missing.mkString(", ")} " +
+            "— the manifest points at an incomplete generation")
+      else
+        Finding(dir, "manifest", "ok",
+          s"committed generation g$g with ${tables.mkString(", ")}")
+    }
 
   /** Audit the tuning surface shared by all three tuned stores: a
     * `tuning` table without its persisted `tuning_sample` cannot be
@@ -232,18 +237,10 @@ object StoreDoctor {
             "active writer; concurrent mutations refuse until it releases"))
     }
 
-  /** Tombstone weight vs live rows — flags compaction when the dead
-    * weight passes a quarter of the live store. */
-  private def tombstoneFinding(spark: SparkSession, store: String,
-                               tombPath: String, livePath: String,
-                               compactVerb: String,
-                               historyGens: Long): Seq[Finding] =
-    tombstoneFinding(spark, store, tombPath, Seq(livePath), compactVerb,
-      historyGens)
-
-  /** Multi-path variant: live weight summed over a segmented store's
-    * per-segment tables. `historyGens` counts readable generations
-    * besides the head: while it is positive a compact deliberately
+  /** Tombstone weight vs live rows (summed over `livePaths`, a
+    * segmented store's per-segment tables) — flags compaction when the
+    * dead weight passes a quarter of the live store. `historyGens`
+    * counts readable generations besides the head: while it is positive a compact deliberately
     * KEEPS the tombstone file (a historic read must not resurrect
     * deleted content), so the finding explains the retention instead
     * of recommending a compact that would not release it. */
@@ -271,14 +268,11 @@ object StoreDoctor {
 
   /** Audit a [[graft.operators.PqIndex.saveTwoTier]] store. */
   def auditTwoTier(spark: SparkSession, dir: String): Seq[Finding] = {
-    val spine = auditGenerationalDir(dir,
-      Seq("centroids", "codebooks", "codes", "full"))
-    val gen = StoreFs.readManifest(s"$dir/manifest")
-    val tomb = gen.toSeq.flatMap { g =>
-      tombstoneFinding(spark, dir, s"$dir/tombstones", s"$dir/g$g/full",
+    val layout = StoreFs.listGenerationDirs(dir)
+    val tomb = layout.head.toSeq.flatMap { g =>
+      tombstoneFinding(spark, dir, s"$dir/tombstones", Seq(s"$dir/g$g/full"),
         "PqIndex.compactTwoTier",
-        historyGens = math.max(0,
-          graft.operators.PqIndex.committedTwoTierGenerations(dir).size - 1))
+        historyGens = math.max(0, layout.committed.size - 1))
     }
     val drift =
       if (exists(s"$dir/tuning") && !exists(s"$dir/codebook_fit"))
@@ -287,9 +281,8 @@ object StoreDoctor {
             "tuneTwoTierNProbe writes it; until then refreshTwoTierTuning " +
             "cannot gate a refit recommendation"))
       else Seq.empty
-    spine ++
-      auditTimeTravel(dir, "two-tier store", gen,
-        graft.operators.PqIndex.committedTwoTierGenerations(dir)) ++
+    auditGenerationDirs(dir, layout, Seq("centroids", "codebooks", "codes", "full")) ++
+      auditTimeTravel(dir, "two-tier store", layout.head, layout.committed) ++
       tomb ++ drift ++ auditTuning(spark, dir) ++
       writerLeaseFinding(dir, StoreFs.writerMarkerPath(dir))
   }
@@ -310,8 +303,9 @@ object StoreDoctor {
       out += Finding(dir, "layout", "ok",
         s"centroids + ${StoreFs.childNames(s"$dir/index")
           .count(_.startsWith("cluster="))} cell partition(s)")
-    Seq("centroids__tmp", "centroids__old")
-      .filter(n => StoreFs.childNames(dir).contains(n)).foreach { leftover =>
+    val names = StoreFs.childNames(dir)
+    import graft.operators.IvfIndex.{centroidsOld, centroidsTmp}
+    Seq(centroidsTmp, centroidsOld).filter(names.contains).foreach { leftover =>
         out += Finding(dir, "centroid-swap", "warn",
           s"$leftover present — an interrupted splitOversizedCells swap; " +
             "IvfIndex.load rolls it forward/back automatically")
@@ -328,10 +322,9 @@ object StoreDoctor {
   def auditNsw(spark: SparkSession, flatDir: String,
                nswDir: String): Seq[Finding] = {
     val out = Seq.newBuilder[Finding]
-    out ++= auditGenerationalDir(nswDir, Seq("graph", "entries"))
-    out ++= auditTimeTravel(nswDir, "NSW store",
-      StoreFs.readManifest(s"$nswDir/manifest"),
-      graft.operators.NswIndex.committedNswGenerations(nswDir),
+    val layout = StoreFs.listGenerationDirs(nswDir)
+    out ++= auditGenerationDirs(nswDir, layout, Seq("graph", "entries"))
+    out ++= auditTimeTravel(nswDir, "NSW store", layout.head, layout.committed,
       overlay = graft.operators.NswIndex.effectiveLedger(spark, nswDir)
         .flatMap { led =>
           import org.apache.spark.sql.functions.{col, max}
@@ -374,8 +367,7 @@ object StoreDoctor {
           // is releasable) is the shared time-travel finding's job —
           // this one carries the family-specific counts
           val n = led.count()
-          val revoked = graft.operators.NswIndex
-            .committedParquet(spark, s"$nswDir/tombstones_dropped")
+          val revoked = graft.operators.NswIndex.revocations(spark, nswDir)
             .map(_.count()).getOrElse(0L)
           val rev = if (revoked > 0)
             s" ($revoked revoked by repairNsw — deletes verified never " +
@@ -389,8 +381,7 @@ object StoreDoctor {
     // flat∖graph divergence: cells present in the flat store but
     // absent from the committed graph (the mid-split crash window
     // repairNsw's cell diff exists for)
-    if (exists(s"$flatDir/index") &&
-        StoreFs.readManifest(s"$nswDir/manifest").isDefined) {
+    if (exists(s"$flatDir/index") && layout.head.isDefined) {
       import org.apache.spark.sql.functions.col
       val (_, indexed) = graft.operators.IvfIndex.load(spark, flatDir)
       val (graph, _) = graft.operators.NswIndex.loadNsw(spark, nswDir)
@@ -421,128 +412,85 @@ object StoreDoctor {
     * [[graft.operators.TextDedup.appendToDedupStoreBucketed]] adds
     * one). */
   def auditDedup(spark: SparkSession, pathPrefix: String): Seq[Finding] = {
+    import graft.operators.TextDedup
     val out = Seq.newBuilder[Finding]
-    val parent = new org.apache.hadoop.fs.Path(pathPrefix).getParent.toString
-    val base = new org.apache.hadoop.fs.Path(pathPrefix).getName
-    val tblRe = (java.util.regex.Pattern.quote(base) +
-      "_g(\\d+)_(fp|bands|mh)").r
-    val scratchRe = (java.util.regex.Pattern.quote(base) +
-      "_g(\\d+)_(?:fp|bands|mh)__[a-zA-Z0-9]+").r
-    val children = StoreFs.childNames(parent)
-    val byGen = children
-      .collect { case tblRe(g, t) => (g.toLong, t) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val manifest = StoreFs.readManifest(s"${pathPrefix}_manifest")
-    val all = Set("fp", "bands", "mh")
-    // pre-commit staging left by a crashed or usurped writer — never
-    // referenced by any committed generation
-    val scratch = children.collect { case n @ scratchRe(_) => n }.sorted
-    if (scratch.nonEmpty)
-      out += Finding(pathPrefix, "scratch", "warn",
-        s"${scratch.size} orphaned scratch dir(s) from a crashed or " +
-          s"usurped writer (${scratch.mkString(", ")}) — uncommitted " +
-          "debris; the next mutation's vacuum sweeps it, or delete the " +
-          "dir(s)")
-    manifest match {
-      case None =>
-        if (byGen.nonEmpty)
-          out += Finding(pathPrefix, "manifest", "error",
-            s"generation tables for g${byGen.keys.toSeq.sorted.mkString(", g")} " +
-              "exist but no committed manifest — a first-build crash; " +
-              "rebuild the store")
-        else
-          out += Finding(pathPrefix, "manifest", "info",
-            "no committed store at this prefix")
-      case Some(g) =>
-        // STRICT segment resolution (the read-path rule): a segmented
-        // store whose head descriptor is lost has an UNKNOWABLE
-        // segment set — the lenient fallback would audit it healthy
-        // with a carry-segment-less guess, hiding exactly the state
-        // the reads now refuse
-        val segsOrErr =
-          try Right(graft.operators.TextDedup.segmentsOfStrict(pathPrefix, g))
-          catch { case e: IllegalStateException => Left(e.getMessage) }
-        // in-flight tables depend only on the manifest, never on the
-        // segment set — checked under both branches below
-        val inFlight = byGen.keys.filter(_ > g).toSeq.sorted
-        if (inFlight.nonEmpty)
-          out += Finding(pathPrefix, "generations", "warn",
-            s"uncommitted generation table(s) at g${inFlight.mkString(", g")} " +
-              "above the manifest — an in-flight or crashed writer")
-        segsOrErr match {
-          case Left(msg) =>
-            // the head descriptor is lost: the segment set is
-            // UNKNOWABLE, so every segment-dependent sub-check
-            // (superseded history, segment count, tombstone weight,
-            // legacy-format scan) is skipped — a guessed set would
-            // report live carried segments as "superseded ...
-            // vacuum-eligible" and tempt an operator into deleting
-            // tables the head still depends on
-            out += Finding(pathPrefix, "manifest", "error", msg)
-          case Right(segs) =>
-            val readableGens =
-              graft.operators.TextDedup.committedGenerations(spark, pathPrefix)
-            out ++= auditTimeTravel(pathPrefix, "dedup store", Some(g),
-              readableGens)
-            // segments LIVE if any READABLE generation references them —
-            // not just the head: after a compact with retention ≥ 2 the
-            // retained pre-compact generation still reads through its
-            // own (pre-fold) segments, and flagging those vacuum-eligible
-            // would tempt an operator into breaking its historic reads
-            val segNums = (segs ++ readableGens.filter(_ != g).flatMap(h =>
-                graft.operators.TextDedup.segmentsOf(pathPrefix, h)))
-              .flatMap(s => s.stripPrefix("g").toLongOption).toSet
-            val missing = segs.filter { seg =>
-              seg.stripPrefix("g").toLongOption
-                .forall(n => byGen.getOrElse(n, Set.empty) != all)
+    val layout = TextDedup.listDedupStore(pathPrefix)
+    out ++= spineFindings(pathPrefix, layout.spine)
+    layout.spine.head.foreach { g =>
+      // STRICT segment resolution (the read-path rule): a segmented
+      // store whose head descriptor is lost has an UNKNOWABLE segment
+      // set — the lenient fallback would audit it healthy with a
+      // carry-segment-less guess, hiding exactly the state the reads
+      // refuse
+      val segsOrErr =
+        try Right(TextDedup.segmentsOfStrict(pathPrefix, g))
+        catch { case e: IllegalStateException => Left(e.getMessage) }
+      segsOrErr match {
+        case Left(msg) =>
+          // the head descriptor is lost: the segment set is UNKNOWABLE,
+          // so every segment-dependent sub-check (superseded history,
+          // segment count, tombstone weight, legacy-format scan) is
+          // skipped — a guessed set would report live carried segments
+          // as "superseded ... vacuum-eligible" and tempt an operator
+          // into deleting tables the head still depends on
+          out += Finding(pathPrefix, "manifest", "error", msg)
+        case Right(segs) =>
+          val readableGens = TextDedup.readableGenerations(pathPrefix, layout)
+          out ++= auditTimeTravel(pathPrefix, "dedup store", Some(g), readableGens)
+          // segments LIVE if any READABLE generation references them —
+          // not just the head: after a compact with retention ≥ 2 the
+          // retained pre-compact generation still reads through its own
+          // (pre-fold) segments, and flagging those vacuum-eligible
+          // would tempt an operator into breaking its historic reads
+          val segNums = (segs ++ readableGens.filter(_ != g).flatMap(h =>
+              TextDedup.segmentsOf(pathPrefix, h)))
+            .flatMap(_.stripPrefix("g").toLongOption).toSet
+          val missing = segs.filter(layout.tablesOf(_) != Set("fp", "bands", "mh"))
+          if (missing.nonEmpty)
+            out += Finding(pathPrefix, "tables", "error",
+              s"committed generation g$g references segment(s) " +
+                s"${missing.mkString(", ")} with missing or incomplete " +
+                "tables — the manifest points at an unreadable generation")
+          else
+            out += Finding(pathPrefix, "manifest", "ok",
+              s"committed generation g$g with fp, bands, mh across " +
+                s"${segs.size} segment(s)")
+          // read-side cost grows with the append chain: every ingest
+          // joins each segment's three tables
+          if (segs.size > 16)
+            out += Finding(pathPrefix, "segments", "warn",
+              s"${segs.size} segments — every classification joins each " +
+                "segment's tables; TextDedup.compactDedupStore folds them " +
+                "(or pass compactAfterSegments to the append)")
+          else if (segs.size > 1)
+            out += Finding(pathPrefix, "segments", "info",
+              s"${segs.size} segments from the append chain — " +
+                "compact-eligible (TextDedup.compactDedupStore)")
+          // tables below the manifest that are NOT live segments of the
+          // committed generation are superseded history
+          val history = layout.spine.committed.filter(n => n < g && !segNums.contains(n))
+          if (history.nonEmpty)
+            out += Finding(pathPrefix, "generations", "info",
+              s"${history.length} superseded committed generation(s) " +
+                s"(g${history.mkString(", g")}) retained — vacuum-eligible")
+          if (exists(s"${pathPrefix}_tombstones")) {
+            out ++= tombstoneFinding(spark, pathPrefix,
+              s"${pathPrefix}_tombstones",
+              segs.map(seg => s"${pathPrefix}_${seg}_fp"),
+              "TextDedup.compactDedupStore",
+              historyGens = math.max(0, readableGens.size - 1))
+            // legacy distinct-fp layout cannot honor tombstones
+            segs.foreach { seg =>
+              val fp = spark.read.parquet(s"${pathPrefix}_${seg}_fp")
+              if (!fp.columns.contains("s_id"))
+                out += Finding(pathPrefix, "format", "error",
+                  s"tombstones present but segment $seg's fp table is in " +
+                    "the legacy distinct-fingerprint layout (no s_id) — " +
+                    "deletes cannot be honored; rebuild with " +
+                    "writeDedupStoreBucketed")
             }
-            if (missing.nonEmpty)
-              out += Finding(pathPrefix, "tables", "error",
-                s"committed generation g$g references segment(s) " +
-                  s"${missing.mkString(", ")} with missing or incomplete " +
-                  "tables — the manifest points at an unreadable generation")
-            else
-              out += Finding(pathPrefix, "manifest", "ok",
-                s"committed generation g$g with fp, bands, mh across " +
-                  s"${segs.size} segment(s)")
-            // read-side cost grows with the append chain: every ingest
-            // joins each segment's three tables
-            if (segs.size > 16)
-              out += Finding(pathPrefix, "segments", "warn",
-                s"${segs.size} segments — every classification joins each " +
-                  "segment's tables; TextDedup.compactDedupStore folds them " +
-                  "(or pass compactAfterSegments to the append)")
-            else if (segs.size > 1)
-              out += Finding(pathPrefix, "segments", "info",
-                s"${segs.size} segments from the append chain — " +
-                  "compact-eligible (TextDedup.compactDedupStore)")
-            // tables below the manifest that are NOT live segments of
-            // the committed generation are superseded history
-            val history = byGen.keys
-              .filter(n => n < g && !segNums.contains(n)).toSeq.sorted
-            if (history.nonEmpty)
-              out += Finding(pathPrefix, "generations", "info",
-                s"${history.length} superseded committed generation(s) " +
-                  s"(g${history.mkString(", g")}) retained — vacuum-eligible")
-            if (exists(s"${pathPrefix}_tombstones")) {
-              out ++= tombstoneFinding(spark, pathPrefix,
-                s"${pathPrefix}_tombstones",
-                segs.map(seg => s"${pathPrefix}_${seg}_fp"),
-                "TextDedup.compactDedupStore",
-                historyGens = math.max(0, graft.operators.TextDedup
-                  .committedGenerations(spark, pathPrefix).size - 1))
-              // legacy distinct-fp layout cannot honor tombstones
-              segs.foreach { seg =>
-                val fp = spark.read.parquet(s"${pathPrefix}_${seg}_fp")
-                if (!fp.columns.contains("s_id"))
-                  out += Finding(pathPrefix, "format", "error",
-                    s"tombstones present but segment $seg's fp table is in " +
-                      "the legacy distinct-fingerprint layout (no s_id) — " +
-                      "deletes cannot be honored; rebuild with " +
-                      "writeDedupStoreBucketed")
-              }
-            }
-        }
+          }
+      }
     }
     out.result() ++
       writerLeaseFinding(pathPrefix, s"${pathPrefix}__writer")
@@ -556,24 +504,22 @@ object StoreDoctor {
     * an unmarked dir at/above the watermark is an in-flight writer. */
   def auditAggStore(spark: SparkSession, dir: String): Seq[Finding] = {
     val out = Seq.newBuilder[Finding]
-    val names = StoreFs.childNames(dir)
-    val markerRe = "\\.gen_(\\d+)_committed".r
-    val dataRe = "batch_id=(\\d+)".r
-    val committed = names.collect { case markerRe(id) => id.toLong }.sorted
-    val dataDirs = names.collect { case dataRe(id) => id.toLong }.toSet
-    if (committed.isEmpty && dataDirs.isEmpty) {
+    val layout = graft.streaming.EventStreams.listAggStore(dir)
+    val committed = layout.committed
+    def ids(gs: Seq[Long]) = gs.mkString("batch_id=", ", batch_id=", "")
+    if (committed.isEmpty && layout.dataDirs.isEmpty) {
       out += Finding(dir, "generations", "info",
         "no committed store at this path")
       return out.result()
     }
     if (committed.isEmpty)
       out += Finding(dir, "generations", "error",
-        s"data dir(s) batch_id=${dataDirs.toSeq.sorted.mkString(", batch_id=")} " +
-          "but no commit marker — a first-batch crash; the stream's replay " +
-          "rewrites them (readers correctly see no committed generation)")
+        s"data dir(s) ${ids(layout.dataDirs)} but no commit marker — a " +
+          "first-batch crash; the stream's replay rewrites them (readers " +
+          "correctly see no committed generation)")
     else {
       val newest = committed.last
-      val missingData = committed.filterNot(dataDirs)
+      val missingData = committed.filterNot(layout.dataDirs.contains)
       if (missingData.nonEmpty)
         out += Finding(dir, "generations", "error",
           s"commit marker(s) for batch ${missingData.mkString(", ")} have no " +
@@ -584,18 +530,16 @@ object StoreDoctor {
         out += Finding(dir, "generations", "ok",
           s"${committed.length} committed generation(s), newest batch_id=" +
             s"$newest, every marker backed by data")
-      val torn = (dataDirs -- committed.toSet).filter(_ < newest).toSeq.sorted
+      val (torn, inFlight) = layout.unmarked.partition(_ < newest)
       if (torn.nonEmpty)
         out += Finding(dir, "torn-writes", "warn",
-          s"unmarked data dir(s) batch_id=${torn.mkString(", batch_id=")} " +
-            "below the committed watermark — crash debris; " +
-            "vacuumGenerations sweeps them")
-      val inFlight = (dataDirs -- committed.toSet).filter(_ >= newest).toSeq.sorted
+          s"unmarked data dir(s) ${ids(torn)} below the committed " +
+            "watermark — crash debris; vacuumGenerations sweeps them")
       if (inFlight.nonEmpty)
         out += Finding(dir, "generations", "warn",
-          s"unmarked data dir(s) batch_id=${inFlight.mkString(", batch_id=")} " +
-            "at/above the watermark — an in-flight or crashed batch; its " +
-            "replay rewrites the dir and commits the marker")
+          s"unmarked data dir(s) ${ids(inFlight)} at/above the watermark — " +
+            "an in-flight or crashed batch; its replay rewrites the dir and " +
+            "commits the marker")
       out ++= auditTimeTravel(dir, "agg store", committed.lastOption,
         committed,
         overlay = graft.streaming.EventStreams

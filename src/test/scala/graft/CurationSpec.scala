@@ -43,7 +43,7 @@ class CurationSpec extends SparkSpec {
     }
 
     it("HTML input funnels correctly only after boilerplate stripping") {
-      import org.apache.spark.sql.functions.{col, length => slen}
+      import org.apache.spark.sql.functions.col
       // raw crawl page: nav + comments + script wrap the good prose
       val page =
         s"""<html><head><script>var nav=1;</script></head><body>

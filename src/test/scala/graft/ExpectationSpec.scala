@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Validation
 
 /** Pins for the one-pass declarative expectation runner the q164 gate

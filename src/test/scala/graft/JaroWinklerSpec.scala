@@ -11,9 +11,6 @@ import graft.plans.GraftFunctions
 class JaroWinklerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jw = (a: String, b: String) =>
-    call_function("jaro_winkler", lit(a), lit(b))
-
   describe("JaroWinkler expression") {
     it("matches the oracle kernel bit-for-bit on probe pairs") {
       GraftFunctions.register(spark)

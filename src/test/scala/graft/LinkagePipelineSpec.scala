@@ -8,7 +8,6 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.cli.LinkagePipeline
 import graft.operators.Validation

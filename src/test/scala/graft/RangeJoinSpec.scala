@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.RangeJoin
 
 /** RangeJoin: binned equi-join ≡ naive theta join, including bin

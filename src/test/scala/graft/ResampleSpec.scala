@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.functions._
 import graft.operators.Resample
 
 class ResampleSpec extends SparkSpec {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.{Linkage, Reports}
 
 /** Pins for the persisted-HLL lifecycle and sorted-neighborhood

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.tools.SemStreamScale
 
 /** The AT-SCALE posture of cumulative streaming semantic dedup

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.TDigest
 
 /** Error-bound and lifecycle pins for the mergeable t-digest

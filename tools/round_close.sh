@@ -114,6 +114,35 @@ if [ -n "$DEDUP_LEAKS" ]; then
   echo "$DEDUP_LEAKS"
   exit 1
 fi
+# each store family parses its on-disk layout in its own listing
+# (StoreFs.listGenerationDirs, TextDedup.listDedupStore,
+# EventStreams.listAggStore) and names its swap leftovers and overlay
+# tables once; StoreDoctor audits those listings and parses nothing
+# itself: a regex in StoreDoctor, or a layout literal anywhere else in
+# src/main, fails the gate
+LAYOUT_OWNER_LINES=$(cat <<'LINES'
+src/main/scala/graft/streaming/EventStreams.scala:    val markerRe = "\\.gen_(\\d+)_committed".r
+src/main/scala/graft/streaming/EventStreams.scala:    val dataRe = "batch_id=(\\d+)".r
+src/main/scala/graft/sources/StoreFs.scala:  def swapSiblings(name: String): (String, String) = (name + "__tmp", name + "__old")
+src/main/scala/graft/operators/NswIndex.scala:  private val droppedName = "tombstones_dropped"
+LINES
+)
+LAYOUT_LEAKS=$( {
+  grep -nE '\.r([^a-zA-Z0-9_]|$)|\.matches\(|Pattern\.quote' \
+    src/main/scala/graft/tools/StoreDoctor.scala | sed 's|^|src/main/scala/graft/tools/StoreDoctor.scala:|'
+  grep -rnF --include='*.scala' -e 'gen_(' -e 'batch_id=(' -e '__tmp"' \
+    -e '__old"' -e 'tombstones_dropped' src/main |
+    LAYOUT_OK="$LAYOUT_OWNER_LINES" awk '
+      BEGIN { n = split(ENVIRON["LAYOUT_OK"], a, "\n"); for (i = 1; i <= n; i++) ok[a[i]] = 1 }
+      { f = $0; sub(/:.*/, "", f); l = $0; sub(/^[^:]*:[0-9]+:/, "", l)
+        if (!((f ":" l) in ok)) print }'
+} || true)
+if [ -n "$LAYOUT_LEAKS" ]; then
+  echo "FATAL: a regex in StoreDoctor, or a store-layout literal (gen_(, batch_id=(," \
+    "__tmp\", __old\", tombstones_dropped) outside its family's listing:"
+  echo "$LAYOUT_LEAKS"
+  exit 1
+fi
 rm -rf target/verify_close
 SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 target/verify_close" \
